@@ -859,11 +859,7 @@ def q_cdc_out_chain(spark, sf_dir):
     from cdc_core_spark.lww import lww_reduce
 
     base = _scratch("chain", sf_dir)
-    # merge_mode pinned: read_changes requires MOR commits (cow rewrites
-    # raise by design), and this gate must hold even when the suite runs
-    # under CDC_MERGE_STRATEGY=cow-jvm/cow-arrow
-    eng = CdcEngine(spark, f"{base}/up", _replay_registry(), n_buckets=8,
-                    merge_mode="mor")
+    eng = CdcEngine(spark, f"{base}/up", _replay_registry(), n_buckets=8)
     eng.initial_load(_replay_initial(spark, sf_dir), schema_version="1.0")
     _run_replay_epochs(eng, _adapt_events(spark, sf_dir))
 
@@ -945,8 +941,7 @@ def q_incremental_rollup(spark, sf_dir):
     from cdc_core_spark.operators.rollup import IncrementalRollup
 
     base = _scratch("rollup", sf_dir)
-    eng = CdcEngine(spark, f"{base}/up", _replay_registry(), n_buckets=8,
-                    merge_mode="mor")
+    eng = CdcEngine(spark, f"{base}/up", _replay_registry(), n_buckets=8)
     eng.initial_load(_replay_initial(spark, sf_dir), schema_version="1.0")
     roll = IncrementalRollup.create(
         spark, eng.table, f"{base}/roll", ["lang"],

@@ -11,10 +11,10 @@ idiomatic Spark design:
   the version tuple ``(op_ts, event_seq)`` (reference: per-key single-threaded
   sharded executors, core/.../executor/BaseShardedExecutor.java:137-209, and
   ``version() == updatedTime`` LWW, persistence/.../model/BaseEntity.java:125-128);
-* keyed INSERT/UPDATE/DELETE upserts become a bucket-pruned copy-on-write
-  MERGE into an atomic-snapshot parquet table (reference: keyed
-  create/update/upsert/delete, persistence/.../AbstractDataStore.java:140-226,
-  and the atomic temp-file → commit writer, filesystem/.../Writer.java:43-127);
+* keyed INSERT/UPDATE/DELETE upserts become merge-on-read delta commits of
+  the per-key winners into a bucketed atomic-snapshot parquet table
+  (reference: keyed create/update/upsert/delete,
+  persistence/.../AbstractDataStore.java:140-226, and the atomic temp-file → commit writer, filesystem/.../Writer.java:43-127);
 * exactly-once is enforced with idempotent commit manifests keyed
   ``(checkpoint_epoch, partition_id)`` (reference: read/committed offset split,
   messaging/.../ReceiverOffset.java:30-61, + ZK ``OffsetStateManager``);

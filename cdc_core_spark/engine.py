@@ -10,8 +10,12 @@ equivalent is a driver epoch loop:
         split schema ops (op 0/1/2) → registry → metadata-only evolution
         split malformed → quarantine table              (DLQ, MessageProcessor.sendError)
         LWW-reduce valid events to per-key winners      (sharded-executor analog)
-        bucket-pruned copy-on-write MERGE into target   (keyed upsert/delete)
+        stage winners as a merge-on-read delta commit   (keyed upsert/delete)
         atomically commit snapshot + per-partition manifests  (exactly-once)
+
+Consecutive DDL-free epochs apply as one group — one Spark job, one
+snapshot (``apply_epoch_group``); a standalone ``apply_epoch`` is a group
+of one, so every commit takes the same path.
 
 Idempotence: re-running an epoch is a no-op — winners carry the same version
 tuple as the target rows they produced, and LWW max_by of identical rows is
@@ -29,7 +33,7 @@ from pyspark.sql import functions as F
 from cdc_core_spark import fsutil
 from cdc_core_spark.lake import (SnapshotTable, bucket_expr,
                                  field_projection, sql_type)
-from cdc_core_spark.lww import lww_reduce, lww_reduce_in_partition
+from cdc_core_spark.lww import lww_reduce
 from cdc_core_spark.registry import SchemaDef, SchemaRegistry, validate_evolution
 
 OP_INSERT, OP_UPDATE, OP_DELETE = 3, 4, 5
@@ -70,19 +74,17 @@ def _footer_stats(path: str, max_cols: tuple[str, ...]) -> tuple[int, int | None
     return (md.num_rows, *maxima)
 
 
-def _delta_footer_stats(root: str, new_files: list[dict], key_of):
-    """Shared accumulation for the manifest-from-footers closures (single-
-    epoch and grouped commit paths differ ONLY in the grouping key):
-    per ``key_of(file)``, the applied row count, footer watermarks, and the
-    staged write volume. One definition so a new manifest stat can never
-    drift between the two paths."""
+def _delta_footer_stats(root: str, new_files: list[dict]):
+    """Per staged ``(epoch, bucket)``: the applied row count, footer
+    watermarks, and the staged write volume — the manifest stats a delta
+    commit reads back from its own files instead of a counting scan."""
     applied: dict = {}
     max_ts: dict = {}
     max_seq: dict = {}
     wbytes: dict = {}
     wfiles: dict = {}
     for f in new_files:
-        k = key_of(f)
+        k = (f["epoch"], f["bucket"])
         rows, mts, mseq = _footer_stats(os.path.join(root, f["path"]),
                                         ("_op_ts", "_max_seq"))
         applied[k] = applied.get(k, 0) + rows
@@ -121,7 +123,7 @@ def valid_event_pred(key_cols: list[str] = ("repo", "path"),
 
 
 def _error_reason(key_cols: list[str] = ("repo", "path")):
-    """DLQ reason tag, null-safe on op (shared by both quarantine writers)."""
+    """DLQ reason tag, null-safe on op."""
     null_key = F.lit(False)
     for k in key_cols:
         null_key = null_key | F.col(k).isNull()
@@ -138,7 +140,7 @@ def _error_reason(key_cols: list[str] = ("repo", "path")):
 class CdcEngine:
     def __init__(self, spark: SparkSession, root: str, registry: SchemaRegistry,
                  entity: str = "source_repos", n_buckets: int = 16,
-                 salt: int | str | None = None, merge_mode: str | None = None,
+                 salt: int | str | None = None,
                  sort_order: list[str] | None = None,
                  zorder: list[str] | None = None,
                  bloom_filters: list[str] | None = None):
@@ -180,17 +182,6 @@ class CdcEngine:
         if salt is not None and not isinstance(salt, int) and salt != "auto":
             raise ValueError(f"salt must be an int, None or 'auto', got {salt!r}")
         self.salt = salt
-        # "mor" (merge-on-read deltas, default) | "cow-jvm" | "cow-arrow".
-        # Validated HERE: an unrecognized value (a typo'd env var) would
-        # otherwise silently fall through apply_epoch's mode checks into a
-        # copy-on-write rewrite per epoch — a confusing failure far from
-        # the actual mistake
-        self.merge_mode = merge_mode or os.environ.get("CDC_MERGE_STRATEGY", "mor")
-        if self.merge_mode not in ("mor", "cow-jvm", "cow-arrow"):
-            raise ValueError(
-                f"unknown merge_mode {self.merge_mode!r} (from the "
-                "merge_mode argument or CDC_MERGE_STRATEGY): expected "
-                "'mor', 'cow-jvm' or 'cow-arrow'")
         self.table = SnapshotTable(os.path.join(root, "target"))
         self.errors_dir = os.path.join(root, "errors")
         # sort_order is recorded at CREATION — on an existing table it
@@ -312,17 +303,12 @@ class CdcEngine:
                                 props={**base_props, "initial_loaded": True})
 
     # -------------------------------------------------------- schema evolution
-    def _apply_schema_ops(self, events: DataFrame,
-                          schema_rows: list | None = None) -> SchemaDef:
+    def _apply_schema_ops(self, schema_rows: list) -> SchemaDef:
         """In-band DDL path (op codes 0/1/2, AvroChangeType.isSchemaChange,
         entity/.../model/AvroChangeType.java:40-49): route to the registry and
-        apply as a metadata-only evolution commit before the data MERGE.
-        ``schema_rows`` lets the replay loop pass pre-collected DDL events for
+        apply as a metadata-only evolution commit before the data commit.
+        ``schema_rows`` are the DDL events ``_epoch_prestats`` collected for
         all epochs at once (one scan job instead of one per epoch)."""
-        if schema_rows is None:
-            schema_rows = (events.filter(F.col("op").isin(*SCHEMA_OPS))
-                           .select("schema_version", "event_seq")
-                           .orderBy("event_seq").collect())
         cur = self.current_schema
         for row in schema_rows:
             new = self.registry.get(self.entity, row["schema_version"])
@@ -351,15 +337,13 @@ class CdcEngine:
         return choose_lww_salt(ev, key_cols)
 
     # ----------------------------------------------------------- event intake
-    def _normalize_events(self, events: DataFrame, sdef: SchemaDef,
-                          extra_cols: tuple[str, ...] = ()) -> DataFrame:
+    def _normalize_events(self, events: DataFrame, sdef: SchemaDef) -> DataFrame:
         """Project raw events onto the current schema: alias-map renamed
         payload columns (old writers → new name), cast (covers widening),
         null-fill added columns; attach the version columns (the storage
-        bucket is computed on the WINNER set by each caller — attaching it
-        per raw event here would be a dead expression).
-        ``extra_cols`` pass through untouched (e.g. checkpoint_epoch for the
-        group-commit path)."""
+        bucket is computed on the WINNER set — attaching it per raw event
+        here would be a dead expression). ``checkpoint_epoch`` passes
+        through untouched: winners reduce per (epoch, key)."""
         # the projection itself is THE shared lake.field_projection — the
         # LWW merge depends on events being projected identically to stored
         # files, so the alias/coalesce/cast logic must have one definition
@@ -367,168 +351,87 @@ class CdcEngine:
         cols.append(F.col("op").cast("int").alias("op"))
         cols.append(F.col("op_ts").cast("bigint").alias("_op_ts"))
         cols.append(F.col("event_seq").cast("bigint").alias("_event_seq"))
-        cols.extend(F.col(c) for c in extra_cols)
+        cols.append(F.col("checkpoint_epoch"))
         return events.select(cols)
 
     # ------------------------------------------------------------- epoch apply
-    def apply_epoch(self, events: DataFrame, epoch: int,
-                    err_stats: dict[int, int] | None = None,
-                    schema_rows: list | None = None,
-                    read_stats: dict[int, int] | None = None) -> list[dict]:
-        """Process one epoch end-to-end and atomically commit. Returns the
-        manifest rows written (one per touched storage bucket = partition_id).
+    def _epoch_prestats(self, scope: DataFrame, epochs: list[int]):
+        """The per-epoch inputs of ``apply_epoch_group`` for every epoch in
+        ``scope`` (events carrying ``checkpoint_epoch``), in one pass each
+        instead of one per epoch: the in-band DDL rows, and the lineage
+        pre-stats — valid reads AND malformed counts per bucket, from one
+        count-only scan column-pruned to key cols + op + epoch. Malformed
+        events are written to the DLQ here too: malformed-ness is
+        state-independent, so routing needs no per-epoch loop, and the
+        dynamic partition overwrite keeps re-runs idempotent without
+        clobbering other epochs' DLQ. Returns ``(schema_by_epoch,
+        read_by_epoch, err_by_epoch)``."""
+        schema_by_epoch: dict[int, list] = {e: [] for e in epochs}
+        for r in (scope.filter(F.col("op").isin(*SCHEMA_OPS))
+                  .select("checkpoint_epoch", "schema_version", "event_seq")
+                  .orderBy("event_seq").collect()):
+            schema_by_epoch[r["checkpoint_epoch"]].append(r)
 
-        The replay loop passes pre-collected ``err_stats`` (per-bucket
-        malformed counts) and ``schema_rows`` (in-band DDL events); without
-        ``read_stats`` the epoch then costs two Spark jobs: (1) materialize
-        the LWW winners (which carry their own lineage stats —
-        ``with_stats``), and (2) the single-shuffle merge+write. Direct
-        callers (tests, streaming) may omit them and pay the per-epoch scans
-        instead.
+        key_cols, cc = self._pred_args(scope)
+        vpred = valid_event_pred(key_cols, cc)
+        # bucket_expr is total on null keys (xxhash64 skips nulls); keys
+        # CAST to their declared types so these stats bucket exactly like
+        # the normalized winners (raw event files may carry narrower
+        # physical types — see bucket_expr's cast_types contract). Key
+        # TYPES are stable across the stream: widening a key would change
+        # the whole storage bucketing and requires an explicit re-bucket
+        ktypes = {f["name"]: f["type"]
+                  for f in self.table.latest_meta().fields
+                  if f["name"] in key_cols}
+        nb = bucket_expr(key_cols, self.n_buckets, cast_types=ktypes)
+        data = scope.filter(~F.coalesce(F.col("op"), F.lit(-1)).isin(*SCHEMA_OPS))
+        stat_rows = (data.withColumn("_bucket", nb).withColumn("_ok", vpred)
+                     .groupBy("checkpoint_epoch", "_bucket", "_ok")
+                     .agg(F.count(F.lit(1)).alias("n")).collect())
+        err_by_epoch: dict[int, dict[int, int]] = {e: {} for e in epochs}
+        read_by_epoch: dict[int, dict[int, int]] = {e: {} for e in epochs}
+        n_err = 0
+        for r in stat_rows:
+            tgt = read_by_epoch if r["_ok"] else err_by_epoch
+            tgt[r["checkpoint_epoch"]][r["_bucket"]] = r["n"]
+            n_err += 0 if r["_ok"] else r["n"]
+        if n_err:
+            # DLQ: original event + reason (reference: error messages
+            # re-tagged mode=Error, MessageProcessor.sendError); the epoch
+            # is the partition DIRECTORY, never a column in the files
+            (data.filter(~vpred).withColumn("error_reason", _error_reason(key_cols))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .options(**fsutil.parquet_write_options())
+             .partitionBy("checkpoint_epoch").parquet(self.errors_dir))
+        return schema_by_epoch, read_by_epoch, err_by_epoch
 
-        ``read_stats`` (per-bucket valid-event counts, precomputed by the
-        replay loop in one count-only job for ALL epochs) upgrades the
-        merge-on-read path to exactly ONE Spark job per epoch: the remaining
-        manifest stats — events_applied, (max_op_ts, max_event_seq)
-        watermark — are read from the staged parquet FOOTERS of the delta
-        write itself (num_rows + column min/max statistics), so the separate
-        winners-materialize job disappears. Values are identical to the
-        two-job path: every valid event folds into its key's winner, and the
-        winner's ``_max_seq``/``_op_ts`` maxima per bucket are exactly the
-        footer maxima of the staged columns."""
-        t0 = time.monotonic()
+    def apply_epoch(self, events: DataFrame, epoch: int) -> list[dict]:
+        """Process one epoch end-to-end and atomically commit: a group of
+        one through ``apply_epoch_group``, with its DDL rows, pre-stats and
+        DLQ write from the same helper the replay loop uses. This is the
+        path of streaming ``foreachBatch``, ``flow``, ``s3_events`` and
+        ``reprocess_errors``. ``epoch`` overrides any ``checkpoint_epoch``
+        the events carry (the stream envelope has one). Returns the
+        manifest rows written (one per touched storage bucket =
+        partition_id)."""
         self._sync_buckets()
-        sdef = self._apply_schema_ops(events, schema_rows=schema_rows)
-        key_cols = sdef.key_cols()
-        payload_cols = [f["name"] for f in sdef.fields if f["name"] not in key_cols]
-
-        data = events.filter(~F.coalesce(F.col("op"), F.lit(-1)).isin(*SCHEMA_OPS))
-        kc, cc = self._pred_args(events)
-        vpred = valid_event_pred(kc, cc)
-        valid = data.filter(vpred)
-
-        if err_stats is None:
-            # standalone path: one aggregation job for malformed lineage.
-            # bucket_expr is already total on null keys (xxhash64 skips null
-            # inputs); keys are CAST to their declared types before hashing
-            # because the write side buckets after _normalize_events' casts
-            # and xxhash64 hashes int vs bigint differently — a raw-typed
-            # hash would put stats in buckets the data never lands in
-            ktypes = {f["name"]: f["type"] for f in sdef.fields
-                      if f["name"] in key_cols}
-            nb = bucket_expr(key_cols, self.n_buckets, cast_types=ktypes)
-            err_stats = {
-                r["_bucket"]: r["n"] for r in
-                (data.filter(~vpred).withColumn("_bucket", nb)
-                 .groupBy("_bucket").agg(F.count(F.lit(1)).alias("n")).collect())
-            }
-            if sum(err_stats.values()) > 0:
-                self._quarantine(data.filter(~vpred), epoch)
-
-        ev = self._normalize_events(valid, sdef)
-
-        # LWW winners. The same aggregation carries per-key lineage
-        # (_n_events, _max_seq), so every manifest stat — events_read,
-        # events_applied, (max_op_ts, max_event_seq) watermark — comes from
-        # the winner rows with no separate stats scan.
-        winners = lww_reduce(ev, key_cols, payload_cols + ["op"],
-                             salt=self._effective_salt(ev, key_cols),
-                             with_stats=True)
-        winners = winners.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
-
-        if read_stats is not None and self.merge_mode == "mor":
-            # Single-job fast path: stage+commit the delta (keeping _max_seq
-            # for the footer watermark), then derive per-bucket manifests
-            # from the staged footers + precomputed read/err counts.
-            delta = (winners.drop("_n_events")
-                     .withColumn("_deleted", F.col("op") == OP_DELETE).drop("op"))
-
-            def manifests_from_footers(new_files: list[dict]) -> list[dict]:
-                applied, max_ts, max_seq, wbytes, wfiles = \
-                    _delta_footer_stats(self.table.root, new_files,
-                                        lambda f: f["bucket"])
-                stats = {
-                    b: {"_bucket": b, "events_applied": applied[b],
-                        "events_read": read_stats.get(b, 0),
-                        "max_op_ts": max_ts.get(b), "max_event_seq": max_seq.get(b),
-                        "bytes_written": wbytes[b], "files_written": wfiles[b]}
-                    for b in applied
-                }
-                return self._manifest_rows(epoch, stats, err_stats, t0)
-
-            snap = self.table.commit_delta(delta, epoch=epoch,
-                                           manifests=manifests_from_footers)
-            return snap.manifests
-
-        # Job 1 — materialize winners (persisted); ONE collect on the cache
-        # yields every per-bucket manifest stat. (An observe/CollectMetrics
-        # fusion into the write job was measured SLOWER — n_buckets×4
-        # conditional aggregates per row cost more than one cached job.)
-        # persist released in the finally: a failed stats collect or commit
-        # (concurrent-writer CAS, task failure) must not pin the cached
-        # winner set in executor memory — a long-running foreachBatch driver
-        # retrying failed microbatches would leak one cache per failure
-        winners.persist()
-        try:
-            return self._apply_epoch_committed(
-                winners, epoch, err_stats, key_cols, payload_cols, t0)
-        finally:
-            winners.unpersist()
-
-    def _apply_epoch_committed(self, winners, epoch, err_stats, key_cols,
-                               payload_cols, t0):
-        stat_rows = (winners.groupBy("_bucket")
-                     .agg(F.count(F.lit(1)).alias("events_applied"),
-                          F.sum("_n_events").alias("events_read"),
-                          F.max("_op_ts").alias("max_op_ts"),
-                          F.max("_max_seq").alias("max_event_seq"))
-                     .collect())
-        read_stats = {r["_bucket"]: r for r in stat_rows}
-        touched = sorted(read_stats)
-        manifests = self._manifest_rows(epoch, read_stats, err_stats, t0)
-
-        mode = self.merge_mode
-        if mode == "mor":
-            # Job 2 (merge-on-read, default — the 10^10-event shape): append
-            # the winner set as bucket-tagged DELTA files — O(epoch) write,
-            # no table rewrite. Reads LWW-fold base+deltas; compact()
-            # re-bases. DELETE winners become tombstone rows — they must keep
-            # out-versioning late duplicate redeliveries of older events in
-            # future epochs (exactly-once under at-least-once delivery).
-            delta = (winners.drop("_n_events", "_max_seq")
-                     .withColumn("_deleted", F.col("op") == OP_DELETE).drop("op"))
-            self.table.commit_delta(delta, epoch=epoch, manifests=manifests)
-            return manifests
-
-        # Job 2 (copy-on-write): rewrite touched buckets as merged base files.
-        base = (self.table.read(self.spark, buckets=touched, with_internal_cols=True)
-                .withColumn("op", F.when(F.col("_deleted"), F.lit(OP_DELETE))
-                                   .otherwise(F.lit(OP_UPDATE)))
-                .drop("_deleted")
-                .withColumn("_bucket", bucket_expr(key_cols, self.n_buckets)))
-        union = base.unionByName(winners.drop("_n_events", "_max_seq"))
-        if mode == "cow-arrow":
-            # single-shuffle: shuffle by storage bucket (pure function of
-            # the key), Arrow-batched in-partition fold
-            merged = lww_reduce_in_partition(
-                union.repartition(max(len(touched), 1), "_bucket"), key_cols)
-            pre_part = True
-        else:  # cow-jvm
-            merged = lww_reduce(union, key_cols, payload_cols + ["op"])
-            merged = merged.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
-            pre_part = False
-        merged = merged.withColumn("_deleted", F.col("op") == OP_DELETE).drop("op")
-        self.table.commit_merge(merged, touched, epoch=epoch, manifests=manifests,
-                                pre_partitioned=pre_part)
-        return manifests
+        events = events.withColumn("checkpoint_epoch", F.lit(epoch))
+        schema_by_epoch, read_by_epoch, err_by_epoch = \
+            self._epoch_prestats(events, [epoch])
+        return self.apply_epoch_group(events, [epoch], err_by_epoch,
+                                      read_by_epoch,
+                                      schema_rows=schema_by_epoch[epoch])
 
     def apply_epoch_group(self, events: DataFrame, epochs: list[int],
                           err_by_epoch: dict[int, dict[int, int]],
                           read_by_epoch: dict[int, dict[int, int]],
-                          schema_rows: list | None = None) -> list[dict]:
-        """GROUP COMMIT: apply several epochs in ONE Spark job + ONE atomic
-        snapshot (merge-on-read only; ``events`` must carry
-        ``checkpoint_epoch`` restricted to ``epochs``).
+                          schema_rows: list) -> list[dict]:
+        """Apply one or more epochs in ONE Spark job + ONE atomic
+        merge-on-read snapshot — the engine's only epoch-apply path
+        (``events`` must carry ``checkpoint_epoch`` restricted to
+        ``epochs``; the per-bucket counts and the DDL rows of the group's
+        first epoch come from ``_epoch_prestats``).
 
         Every Spark job pays a constant planning/scheduling cost that doesn't
         parallelize — measured ~1.2s/epoch at local[4] on the 20M-event
@@ -537,43 +440,45 @@ class CdcEngine:
         it (the reference acks a whole poll batch per ``receiver.commit()``,
         MessageProcessor.java:195-214 — same batching, one level up).
 
-        Semantics are unchanged: winners reduce per (epoch, key), the staged
-        delta keeps one layer per epoch (``checkpoint_epoch=<e>/_bucket=<b>``),
-        manifests stay per (epoch, bucket) with footer-derived watermarks,
-        and the read path LWW-folds layers as before — so the converged
-        state and every LOGICAL manifest value (events read/applied/error,
-        watermarks) are bit-identical to the one-job-per-epoch path; the
-        physical write-volume columns (bytes_written / files_written) may
-        differ, because one grouped staging job lays files out differently
-        than N per-epoch jobs. In-band DDL may appear only at the FIRST
-        epoch of a group (the replay loop enforces this by starting a new
-        group at every DDL-carrying epoch)."""
+        Winners reduce per (epoch, key) with their ``_max_seq`` lineage in
+        the same aggregation; the staged delta keeps one layer per epoch
+        (``checkpoint_epoch=<e>/_bucket=<b>``). DELETE winners become
+        tombstone rows — they must keep out-versioning late duplicate
+        redeliveries of older events in future epochs (exactly-once under
+        at-least-once delivery). Manifests stay per (epoch, bucket):
+        events_applied and the (max_op_ts, max_event_seq) watermark are read
+        from the staged parquet FOOTERS of the write itself, events_read and
+        events_error from the pre-stats. So the converged state and every
+        LOGICAL manifest value are identical however the epochs are grouped;
+        the physical write-volume columns (bytes_written / files_written)
+        may differ, because one grouped staging job lays files out
+        differently than N per-epoch jobs. In-band DDL may appear only at
+        the FIRST epoch of a group (the replay loop enforces this by
+        starting a new group at every DDL-carrying epoch)."""
         t0 = time.monotonic()
         self._sync_buckets()
-        sdef = self._apply_schema_ops(events, schema_rows=schema_rows)
+        sdef = self._apply_schema_ops(schema_rows)
         key_cols = sdef.key_cols()
         payload_cols = [f["name"] for f in sdef.fields if f["name"] not in key_cols]
 
         data = events.filter(~F.coalesce(F.col("op"), F.lit(-1)).isin(*SCHEMA_OPS))
         kc, cc = self._pred_args(events)
         valid = data.filter(valid_event_pred(kc, cc))
-        ev = self._normalize_events(valid, sdef, extra_cols=("checkpoint_epoch",))
+        ev = self._normalize_events(valid, sdef)
         winners = lww_reduce(ev, ["checkpoint_epoch"] + key_cols,
                              payload_cols + ["op"],
                              salt=self._effective_salt(ev, key_cols),
                              with_stats=True)
-        winners = winners.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
-        delta = (winners.drop("_n_events")
+        delta = (winners.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
                  .withColumn("_deleted", F.col("op") == OP_DELETE).drop("op"))
 
         def manifests_from_footers(new_files: list[dict]) -> list[dict]:
             applied, max_ts, max_seq, wbytes, wfiles = \
-                _delta_footer_stats(self.table.root, new_files,
-                                    lambda f: (f["epoch"], f["bucket"]))
+                _delta_footer_stats(self.table.root, new_files)
             out: list[dict] = []
             for e in epochs:
                 stats = {
-                    b: {"_bucket": b, "events_applied": applied[(ep, b)],
+                    b: {"events_applied": applied[(ep, b)],
                         "events_read": read_by_epoch.get(e, {}).get(b, 0),
                         "max_op_ts": max_ts.get((ep, b)),
                         "max_event_seq": max_seq.get((ep, b)),
@@ -583,10 +488,9 @@ class CdcEngine:
                 }
                 rows = self._manifest_rows(e, stats, err_by_epoch.get(e, {}), t0)
                 if not rows:
-                    # an EMPTY epoch inside a group still needs a committed
-                    # record (the single-epoch path marks it via the
-                    # snapshot's epoch field; here only the last epoch gets
-                    # that) — emit a zero marker row, partition_id=-1 like
+                    # an EMPTY epoch still needs a committed record (the
+                    # snapshot's epoch field names only the group's last
+                    # epoch) — emit a zero marker row, partition_id=-1 like
                     # the initial-load convention, so committed_epochs()
                     # sees it and resume stays a no-op
                     rows = [{"checkpoint_epoch": e, "partition_id": -1,
@@ -607,42 +511,23 @@ class CdcEngine:
         wall_ms = int((time.monotonic() - t0) * 1000)
         rows = []
         for b in sorted(set(read_stats) | set(err_stats)):
-            rs = read_stats.get(b)
-            if rs is not None and not isinstance(rs, dict):
-                # the CoW stats path collects Spark Rows; the MOR footer
-                # path builds dicts — normalize so the optional
-                # write-volume keys can default uniformly
-                rs = rs.asDict()
+            rs = read_stats.get(b, {})
+            mts, mseq = rs.get("max_op_ts"), rs.get("max_event_seq")
             rows.append({
                 "checkpoint_epoch": epoch, "partition_id": b,
-                "events_read": int(rs["events_read"]) if rs else 0,
-                "events_applied": int(rs["events_applied"]) if rs else 0,
+                "events_read": int(rs.get("events_read", 0)),
+                "events_applied": int(rs.get("events_applied", 0)),
                 "events_error": int(err_stats.get(b, 0)),
-                "max_op_ts": int(rs["max_op_ts"]) if rs and rs["max_op_ts"] is not None else -1,
-                "max_event_seq": int(rs["max_event_seq"]) if rs and rs["max_event_seq"] is not None else -1,
+                "max_op_ts": -1 if mts is None else int(mts),
+                "max_event_seq": -1 if mseq is None else int(mseq),
                 "wall_ms": wall_ms,
-                # write-amplification lineage: bytes/files this epoch's MOR
-                # delta commit staged for the partition (0 on rows whose
-                # commit path doesn't stage per-bucket deltas: quarantine-
-                # only buckets, copy-on-write modes, initial load)
-                "bytes_written": int(rs.get("bytes_written", 0)) if rs else 0,
-                "files_written": int(rs.get("files_written", 0)) if rs else 0,
+                # write-amplification lineage: bytes/files the MOR delta
+                # commit staged for the partition (0 on quarantine-only
+                # buckets and the initial load)
+                "bytes_written": int(rs.get("bytes_written", 0)),
+                "files_written": int(rs.get("files_written", 0)),
             })
         return rows
-
-    def _quarantine(self, bad: DataFrame, epoch: int) -> None:
-        """DLQ: original event + reason, per-epoch overwrite (idempotent rerun).
-        Reference: error messages re-tagged mode=Error with correlation id
-        (MessageProcessor.sendError, BaseKafkaProducer keyed send)."""
-        # strip any in-event checkpoint_epoch column (the streaming EVENT
-        # envelope carries one): the quarantine epoch is the DIRECTORY name,
-        # and a stale in-file copy would contradict it for any non-Spark
-        # reader of the DLQ files (Spark shadows it; pyarrow/DuckDB don't)
-        out = bad.drop("checkpoint_epoch").withColumn(
-            "error_reason", _error_reason(self._pred_args(bad)[0]))
-        (out.write.mode("overwrite")
-            .options(**fsutil.parquet_write_options())
-            .parquet(os.path.join(self.errors_dir, f"checkpoint_epoch={epoch}")))
 
     # ------------------------------------------------------------------ replay
     def replay(self, events_path: str, source_df: DataFrame | None = None,
@@ -861,65 +746,19 @@ class CdcEngine:
             return
         beat("running")
         scope = events.filter(F.col("checkpoint_epoch").isin(todo))
-
-        # One scan for ALL in-band DDL events of the run (vs one per epoch)
-        schema_by_epoch: dict[int, list] = {e: [] for e in todo}
-        for r in (scope.filter(F.col("op").isin(*SCHEMA_OPS))
-                  .select("checkpoint_epoch", "schema_version", "event_seq")
-                  .orderBy("event_seq").collect()):
-            schema_by_epoch[r["checkpoint_epoch"]].append(r)
-
-        # One count-only scan for ALL epochs' lineage pre-stats (valid reads
-        # AND malformed counts per bucket — column-pruned to key cols + op +
-        # epoch, no payload). Malformed-ness is state-independent, so DLQ
-        # routing doesn't need to ride inside the per-epoch loop either.
-        # Dynamic partition overwrite keeps re-runs idempotent without
-        # clobbering other epochs' DLQ. With these in hand each MOR epoch
-        # costs exactly ONE Spark job (see apply_epoch read_stats path).
-        key_cols = self._key_cols()
-        kc, cc = self._pred_args(events)
-        vpred = valid_event_pred(kc, cc)
-        # bucket_expr is total on null keys (xxhash64 skips nulls); keys
-        # CAST to their declared types so these stats bucket exactly like
-        # the normalized winners (raw event files may carry narrower
-        # physical types — see bucket_expr's cast_types contract). Key
-        # TYPES are stable across the stream: widening a key would change
-        # the whole storage bucketing and requires an explicit re-bucket
-        ktypes = {f["name"]: f["type"]
-                  for f in self.table.latest_meta().fields
-                  if f["name"] in key_cols}
-        nb = bucket_expr(key_cols, self.n_buckets, cast_types=ktypes)
-        data = scope.filter(~F.coalesce(F.col("op"), F.lit(-1)).isin(*SCHEMA_OPS))
-        stat_rows = (data.withColumn("_bucket", nb).withColumn("_ok", vpred)
-                     .groupBy("checkpoint_epoch", "_bucket", "_ok")
-                     .agg(F.count(F.lit(1)).alias("n")).collect())
-        err_by_epoch: dict[int, dict[int, int]] = {e: {} for e in todo}
-        read_by_epoch: dict[int, dict[int, int]] = {e: {} for e in todo}
-        n_err = 0
-        for r in stat_rows:
-            tgt = read_by_epoch if r["_ok"] else err_by_epoch
-            tgt[r["checkpoint_epoch"]][r["_bucket"]] = r["n"]
-            n_err += 0 if r["_ok"] else r["n"]
-        if n_err:
-            bad = data.filter(~vpred)
-            (bad.withColumn("error_reason", _error_reason(kc))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .options(**fsutil.parquet_write_options())
-             .partitionBy("checkpoint_epoch").parquet(self.errors_dir))
+        schema_by_epoch, read_by_epoch, err_by_epoch = \
+            self._epoch_prestats(scope, todo)
 
         # Group consecutive DDL-free epochs into one job+commit each
         # (apply_epoch_group). A DDL-carrying epoch starts a new group (its
         # DDL must apply before its own and all later data); compact_every
         # caps group length so the compaction cadence — and thus the delta
-        # fold depth bound — is preserved. Only the merge-on-read mode has a
-        # grouped path; cow modes stay per-epoch.
+        # fold depth bound — is preserved; group_commit=False caps it at 1.
         groups: list[list[int]] = []
         cur: list[int] = []
-        cap = compact_every or len(todo)
+        cap = (compact_every or len(todo)) if group_commit else 1
         for e in todo:
-            if cur and (schema_by_epoch[e] or len(cur) >= cap
-                        or not (group_commit and self.merge_mode == "mor")):
+            if cur and (schema_by_epoch[e] or len(cur) >= cap):
                 groups.append(cur)
                 cur = []
             cur.append(e)
@@ -928,15 +767,9 @@ class CdcEngine:
 
         applied = 0
         for g in groups:
-            if len(g) == 1:
-                batch = events.filter(F.col("checkpoint_epoch") == g[0])
-                self.apply_epoch(batch, g[0], err_stats=err_by_epoch[g[0]],
-                                 schema_rows=schema_by_epoch[g[0]],
-                                 read_stats=read_by_epoch[g[0]])
-            else:
-                batch = events.filter(F.col("checkpoint_epoch").isin(g))
-                self.apply_epoch_group(batch, g, err_by_epoch, read_by_epoch,
-                                       schema_rows=schema_by_epoch[g[0]])
+            batch = events.filter(F.col("checkpoint_epoch").isin(g))
+            self.apply_epoch_group(batch, g, err_by_epoch, read_by_epoch,
+                                   schema_rows=schema_by_epoch[g[0]])
             prev_applied, applied = applied, applied + len(g)
             beat("running", ep=g[-1])
             if compact_every and applied // compact_every > prev_applied // compact_every:
@@ -1067,10 +900,6 @@ class CdcEngine:
 
     # ------------------------------------------------------------------- reads
     def read_final(self, columns: list[str] | None = None) -> DataFrame:
-        # the JVM shuffle fold, not table.read_aligned: measured at local[N]
-        # the exchange is an in-memory copy and always beats the aligned
-        # path's Python->JVM Arrow transfer (see read_aligned's docstring
-        # for the numbers and the cluster regime where that flips).
         # ``columns`` prunes the projection into the scan (a .select on the
         # result cannot — the MOR fold blocks Catalyst column pruning).
         return self.table.read(self.spark, columns=columns)
@@ -1094,8 +923,8 @@ class CdcEngine:
         """Per-(epoch, partition) lineage ledger. ``bytes_written`` /
         ``files_written`` are the MOR delta commit's staged write volume —
         the write-amplification signal an operator trends against
-        ``events_applied`` to size ``compact_every`` (0 on copy-on-write /
-        initial-load / quarantine-only rows)."""
+        ``events_applied`` to size ``compact_every`` (0 on initial-load,
+        quarantine-only and empty-epoch marker rows)."""
         # default the write-volume fields: manifests committed by older
         # builds (or hand-written in tests) may predate them
         rows = [{"bytes_written": 0, "files_written": 0, **r}

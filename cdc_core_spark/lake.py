@@ -10,10 +10,13 @@ the reference implements by hand):
    (filesystem/.../Writer.java:43-127, FileSystem.java:909-943). A crash
    between staging and publish leaves unreferenced orphans; readers only ever
    see the last published snapshot.
-2. **Bucketed layout + bucket-pruned copy-on-write** — rows are hash-bucketed
-   by key ``pmod(xxhash64(repo, path), n_buckets)``; a MERGE only rewrites
-   buckets that received changes and carries the rest forward by reference.
-   At 10^10-event scale this is what bounds merge I/O to the touched subset.
+2. **Bucketed layout + merge-on-read deltas** — rows are hash-bucketed by
+   key ``pmod(xxhash64(repo, path), n_buckets)``; every engine epoch commit
+   appends bucket-tagged DELTA files (``commit_delta_grouped``) that reads
+   LWW-fold over the base, and a copy-on-write rewrite (``commit_merge``:
+   initial load, compaction, maintenance) only rewrites the buckets it
+   touches and carries the rest forward by reference. At 10^10-event scale
+   this is what bounds commit I/O to the touched subset.
 3. **Metadata-only schema evolution** — each commit records the schema its
    files were written under (``schema_id``); column add / rename / widen
    changes only snapshot metadata, and reads normalize every file group to
@@ -770,171 +773,6 @@ class SnapshotTable:
         if not with_internal_cols:
             out = out.filter(~F.col("_deleted"))
         return out.select(*out_cols)
-
-    def read_aligned(self, spark: SparkSession, buckets: list[int] | None = None,
-                     snap: Snapshot | None = None,
-                     with_internal_cols: bool = False,
-                     columns: list[str] | None = None) -> DataFrame:
-        """Bucket-aligned merge-on-read: semantically identical to ``read``
-        but the LWW fold happens WITHOUT a shuffle.
-
-        ``read``'s fold must ``groupBy(key)`` — a full exchange of every
-        payload byte — because Spark cannot know the files are already
-        key-clustered. But they are: every file lives under exactly one
-        ``_bucket = pmod(xxhash64(key), n_buckets)`` partition, so no key
-        ever spans buckets. This scan exploits that: ONE task per storage
-        bucket reads that bucket's base+delta files directly (pyarrow) and
-        folds them in place in pure Arrow (C++-side sort + hash_last).
-        It is the stand-in for Iceberg's storage-partitioned scan over a
-        ``bucket(N, key)`` partition spec (SPARK-37377) — the same
-        no-shuffle claim the real backend gets from KeyGroupedPartitioning.
-
-        **NOT the default — measured, and it loses at local[N].** On the
-        20M-event scale fixture (32 buckets, local[32], warm) the shuffle
-        fold reads+folds in ~4.4-6.0 s while this path takes ~5.6-11.9 s;
-        bucket-pruned to 2 buckets the gap persists (1.6 s vs 3.0 s). In
-        local mode the "exchange" the aligned scan eliminates is an
-        in-memory copy between threads of one JVM — nearly free — while the
-        aligned path pays a real cost the shuffle fold never does: every
-        payload byte crosses the Python-worker→JVM Arrow IPC boundary once.
-        The regime where the trade flips is a real cluster whose exchange
-        serializes over the network (each byte then moves
-        scan→map→NETWORK→reduce for the shuffle fold vs storage→one local
-        fold here); that cannot be measured in this sandbox, so the engine
-        defaults to the measured winner (``read``) and exposes this as an
-        explicit choice. ``CdcEngine.read_final`` uses ``read``.
-
-        Scale shape: parallelism = bucket count and per-task memory =
-        bucket payload, both governed by ``n_buckets`` — the SAME bounds as
-        the cow-arrow merge task, so any table the engine can merge it can
-        aligned-read. The plan is one tiny spec scan + mapInArrow: plan
-        size is O(1) in bucket count (a spec ROW per bucket, not a plan
-        branch per bucket — a unioned-branches variant was measured
-        pathological in Catalyst analysis beyond a few dozen buckets).
-
-        Falls back to ``read`` when the selection has no delta layers (a
-        compacted table reads faster as a plain vectorized JVM scan), or
-        when the table root is remote (the worker-side pyarrow reader binds
-        to POSIX paths; a real Iceberg backend replaces this path outright).
-
-        Tie-break caveat shared with every merge mode: duplicate
-        ``(key, _op_ts, _event_seq)`` rows with DIFFERENT payloads have no
-        defined winner here just as ``max_by`` has none — the engine never
-        commits such rows (duplicate deliveries carry identical payloads).
-        """
-        from cdc_core_spark import fsutil
-
-        snap = snap or self.latest()
-        files = snap.files
-        if buckets is not None:
-            bset = set(buckets)
-            files = [f for f in files if f["bucket"] in bset]
-        has_delta = any(f.get("kind", "base") == "delta" for f in files)
-        if not files or not has_delta or fsutil._is_remote(self.root):
-            return self.read(spark, buckets=buckets, snap=snap,
-                             with_internal_cols=with_internal_cols,
-                             columns=columns)
-
-        fields, out_names = _projected_fields(snap, columns)
-        aliases = snap.aliases
-        key_cols = list(snap.key_cols)
-        out_cols = out_names + \
-            (list(INTERNAL_COLS) if with_internal_cols else [])
-        tmap = {f["name"]: f["type"] for f in fields}
-        ddl = ", ".join(
-            [f'{n} {sql_type(tmap[n])}' for n in out_names]
-            + ([f"{c} {t}" for c, t in INTERNAL_COLS.items()]
-               if with_internal_cols else []))
-        keep_internal = with_internal_cols
-        root = self.root
-
-        by_bucket: dict[int, list[str]] = {}
-        for f in files:
-            by_bucket.setdefault(f["bucket"], []).append(
-                os.path.join(root, f["path"]))
-        specs = [(json.dumps(paths),) for _, paths in sorted(by_bucket.items())]
-        # parallelize with one slice per bucket → exactly one bucket per
-        # task (hash-repartition could collide two buckets onto one task —
-        # still correct, keys never interleave, but needlessly skewed)
-        spec_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(specs, len(specs)), "spec string")
-
-        def gen(batches):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            def fold(tab):
-                # pure-Arrow mirror of the cow-arrow merge's in-partition
-                # fold (lww_reduce_in_partition), staying C++-side with no
-                # pandas round-trip: version-sort with nulls FIRST (a null
-                # version must lose, as in max_by over the version struct),
-                # then last-row-per-key with skip_nulls=False — the default
-                # 'last' SKIPS nulls, which would resurrect an older row's
-                # value into a winner whose column is legitimately null.
-                # Tie-break (duplicate versions) may differ from the pandas
-                # fold in row order only; the engine never commits duplicate
-                # versions with differing payloads, and read-vs-read_aligned
-                # equality is pinned by tests on full replay histories.
-                idx = pc.sort_indices(
-                    tab, sort_keys=[("_op_ts", "ascending"),
-                                    ("_event_seq", "ascending")],
-                    null_placement="at_start")
-                tab = tab.take(idx)
-                others = [c for c in tab.schema.names if c not in key_cols]
-                opts = pc.ScalarAggregateOptions(skip_nulls=False)
-                order = tab.schema.names
-                g = tab.group_by(key_cols, use_threads=False).aggregate(
-                    [(c, "last", opts) for c in others])
-                # output layout is [key_cols..., <c>_last for others...] —
-                # rename POSITIONALLY (suffix-stripping would corrupt a
-                # payload column whose real name ends in "_last"), then
-                # restore the projection's column order so the next file's
-                # table concatenates
-                return g.rename_columns(key_cols + others).select(order)
-
-            target = pa.schema(
-                [(c, _arrow_type(t)) for c, t in
-                 ([(n, tmap[n]) for n in out_names]
-                  + (list(zip(INTERNAL_COLS, ["long", "long", "boolean"]))
-                     if keep_internal else []))])
-            # physical columns worth reading: the projected fields under
-            # their current OR historical (alias) names, plus the version/
-            # tombstone columns the fold needs — intersected per file with
-            # what that file actually has, so the parquet reader skips the
-            # pruned columns' pages entirely (the I/O half of the pushdown;
-            # the Spark path gets the same effect from ReadSchema)
-            wanted = {f["name"] for f in fields} | set(INTERNAL_COLS)
-            for old, new in aliases.items():
-                if new in tmap:
-                    wanted.add(old)
-            for b in batches:
-                for spec in b.column(0).to_pylist():
-                    acc = None
-                    for path in json.loads(spec):
-                        pf = pq.ParquetFile(path)
-                        cols = [c for c in pf.schema_arrow.names
-                                if c in wanted]
-                        tab = _arrow_projection(pf.read(columns=cols),
-                                                fields, aliases)
-                        both = tab if acc is None else pa.concat_tables(
-                            [acc, tab])
-                        # incremental per-file fold: memory stays
-                        # O(winners-in-bucket + one file), same bound as
-                        # the cow-arrow merge task's per-batch fold
-                        acc = fold(both)
-                    if acc is None or not acc.num_rows:
-                        continue
-                    if not keep_internal:
-                        # mirror read()'s ~_deleted: keep strictly-False
-                        # rows (nulls drop, like Spark's NULL-is-not-true)
-                        acc = acc.filter(pc.equal(acc.column("_deleted"),
-                                                  False))
-                        if not acc.num_rows:
-                            continue
-                    yield from acc.select(out_cols).cast(target).to_batches()
-
-        return spec_df.mapInArrow(gen, schema=ddl)
 
     # ---------------- write / commit ----------------
     def commit_merge(self, df: DataFrame, touched_buckets: list[int],
@@ -2250,14 +2088,15 @@ class SnapshotTable:
           — committed with ``maintenance=True``, state-preserving by
           construction): a physical rewrite, not a logical change —
           contributes no rows and is skipped;
-        * **logical rewrite** (a copy-on-write engine epoch or docstore
-          upsert committed via ``commit_merge`` without the maintenance
-          flag): its changes are folded into rewritten base files and
-          CANNOT be recovered incrementally, so skipping would silently
-          lose data downstream — this RAISES by default. Pass
+        * **logical rewrite** (a docstore upsert, or an engine epoch an
+          older copy-on-write build committed, via ``commit_merge`` without
+          the maintenance flag): its changes are folded into rewritten base
+          files and CANNOT be recovered incrementally, so skipping would
+          silently lose data downstream — this RAISES by default. Pass
           ``on_logical_rewrite="skip"`` only when the consumer re-reads
-          full state across such commits; CDC-out pipelines should commit
-          logical changes in MOR mode (``merge_mode='mor'``).
+          full state across such commits. Engine epochs always commit MOR
+          deltas; tables written by older builds in copy-on-write mode can
+          still carry such commits.
 
         A ``rollback()`` commit in range ALWAYS raises under the default
         (and under ``strict``) regardless of its file delta — its "changes"
@@ -2332,8 +2171,8 @@ class SnapshotTable:
                         f"{doc.get('epoch')!r}, {len(doc.get('manifests') or [])}"
                         " manifests) committed copy-on-write: its changes are"
                         " folded into rewritten base files and cannot be read"
-                        " incrementally. Commit logical changes in MOR mode"
-                        " (merge_mode='mor') for CDC-out, or pass"
+                        " incrementally. Commit logical changes as MOR deltas"
+                        " (commit_delta) for CDC-out, or pass"
                         " on_logical_rewrite='skip' if the consumer re-reads"
                         " full state across this commit.")
                 continue
@@ -2370,9 +2209,9 @@ class ChangelogCursor:
     ``None`` when nothing new was committed; a MAINTENANCE-rewrite-only
     window (pure compaction) advances the cursor and returns an empty frame,
     so consumers never re-deliver across it. A LOGICAL rewrite in the window
-    (copy-on-write epoch / docstore upsert) raises through ``poll`` rather
-    than silently dropping its changes — see ``read_changes``; pass
-    ``on_logical_rewrite="skip"`` to opt out.
+    (docstore upsert, or an older build's copy-on-write epoch) raises
+    through ``poll`` rather than silently dropping its changes — see
+    ``read_changes``; pass ``on_logical_rewrite="skip"`` to opt out.
 
     Delivery contract: the returned DataFrame is LAZY, so advancing the
     cursor before the consumer has acted on it would be at-MOST-once under
@@ -2456,8 +2295,7 @@ def _projected_fields(snap, columns: list[str] | None):
     set is ``key_cols ∪ columns`` in snapshot declaration order (the MOR
     fold groups on the keys, so they are always read), the output is exactly
     ``columns`` in caller order (keys only if asked for). ``None`` → the
-    full schema. Shared by ``read`` and ``read_aligned`` so the two paths
-    can never disagree on projection semantics."""
+    full schema."""
     names = list(snap.field_names())
     if columns is None:
         return snap.fields, names
@@ -2470,8 +2308,7 @@ def _projected_fields(snap, columns: list[str] | None):
             "(internal columns are selected via with_internal_cols)")
     if len(set(columns)) != len(columns):
         # a duplicated output name would produce an ambiguous frame that
-        # fails far downstream (and the aligned path's Arrow select rejects
-        # it outright) — fail at the API boundary instead
+        # fails far downstream — fail at the API boundary instead
         raise ValueError(f"duplicate columns in projection: {columns!r}")
     keep = set(columns) | set(snap.key_cols)
     return [f for f in snap.fields if f["name"] in keep], list(columns)
@@ -2510,88 +2347,3 @@ def _normalize(df: DataFrame, fields: list[dict], aliases: dict) -> DataFrame:
         default = F.lit(False) if typ == "boolean" else F.lit(None)
         cols.append((F.col(vc) if vc in present else default).cast(typ).alias(vc))
     return df.select(cols)
-
-
-def _arrow_type(logical: str):
-    """Arrow dtype of a logical field type — the pyarrow mirror of
-    ``sql_type``, used by the bucket-aligned read's worker-side projection."""
-    import pyarrow as pa
-    return {
-        "boolean": pa.bool_(), "short": pa.int16(),
-        "int": pa.int32(), "integer": pa.int32(), "long": pa.int64(),
-        "float": pa.float32(), "double": pa.float64(),
-        "string": pa.string(), "binary": pa.binary(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-    }[logical.lower()]
-
-
-def _arrow_logical(t) -> str | None:
-    """Logical name of an Arrow type, for widening validation."""
-    import pyarrow as pa
-    for logical in ("boolean", "short", "int", "long", "float", "double",
-                    "string", "binary", "timestamp"):
-        if t == _arrow_type(logical):
-            return logical
-    if pa.types.is_large_string(t):
-        return "string"          # same logical type, wider offsets
-    if pa.types.is_large_binary(t):
-        return "binary"
-    return None
-
-
-def _arrow_projection(tab, fields: list[dict], aliases: dict):
-    """``field_projection`` + INTERNAL_COLS defaults, re-expressed over a
-    pyarrow Table — the worker-side half of ``SnapshotTable.read_aligned``.
-
-    Semantics are pinned to the Spark version: alias-map rename with
-    coalesce when several candidates are present, null-fill missing
-    columns, cast limited to the registry's legal numeric WIDENING lattice
-    (plus identity). Any cast outside that lattice raises — the Spark path
-    would apply Spark-cast semantics there, and silently diverging is worse
-    than failing loudly on a table no legal evolution history can produce."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from cdc_core_spark.registry import WIDENING
-
-    present = set(tab.schema.names)
-    inv: dict[str, list[str]] = {}
-    for old, new in aliases.items():
-        inv.setdefault(new, []).append(old)
-    n = tab.num_rows
-
-    def cast_to(col, target, name):
-        if col.type == target:
-            return col
-        src, dst = _arrow_logical(col.type), _arrow_logical(target)
-        if src == dst or (src, dst) in WIDENING:
-            return pc.cast(col, target, safe=False)
-        raise ValueError(
-            f"read_aligned: column {name!r} stored as {col.type} cannot be "
-            f"normalized to {target} — not a legal schema widening")
-
-    cols, names = [], []
-    for f in fields:
-        name, target = f["name"], _arrow_type(f["type"])
-        candidates = ([name] if name in present else []) + \
-            [o for o in inv.get(name, []) if o in present]
-        if candidates:
-            arrs = [cast_to(tab.column(c), target, name) for c in candidates]
-            col = arrs[0] if len(arrs) == 1 else pc.coalesce(*arrs)
-        else:
-            col = pa.nulls(n, target)
-        cols.append(col)
-        names.append(name)
-    for vc, sqlt in INTERNAL_COLS.items():
-        target = _arrow_type({"bigint": "long", "boolean": "boolean"}[sqlt])
-        if vc in present:
-            # present columns pass through cast-only, like the Spark path —
-            # a stored null _deleted stays null (and is then dropped by the
-            # ~_deleted filter exactly as read() drops it)
-            col = cast_to(tab.column(vc), target, vc)
-        elif sqlt == "boolean":
-            col = pc.fill_null(pa.nulls(n, target), False)
-        else:
-            col = pa.nulls(n, target)
-        cols.append(col)
-        names.append(vc)
-    return pa.table(dict(zip(names, cols)))

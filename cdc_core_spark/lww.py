@@ -30,9 +30,6 @@ Tie-break totality: the version struct compares ``op_ts`` first then
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,36 +45,32 @@ def lww_reduce(events: DataFrame, key_cols: list[str],
     ``salt`` enables the explicit two-stage skew path (None = rely on
     Spark's built-in partial aggregation).
 
-    ``with_stats`` additionally emits per-key lineage columns in the SAME
-    aggregation (no extra scan job): ``_n_events`` (valid events reduced into
-    this winner) and ``_max_seq`` (max event_seq seen — NOT necessarily the
-    winner's seq under out-of-order op_ts). Winner op_ts is already the key's
-    max op_ts (first component of the lexicographic version max).
+    ``with_stats`` additionally emits the per-key lineage column ``_max_seq``
+    in the SAME aggregation (no extra scan job): the max event_seq seen —
+    NOT necessarily the winner's seq under out-of-order op_ts. Winner op_ts
+    is already the key's max op_ts (first component of the lexicographic
+    version max). Together they give the epoch commit's manifest watermark.
     """
     ver = F.struct(*[F.col(c) for c in VERSION_ORDER])
     pay = F.struct(*[F.col(c) for c in VERSION_ORDER + tuple(payload_cols)])
     if salt is None:
         aggs = [F.max_by(pay, ver).alias("_w")]
         if with_stats:
-            aggs += [F.count(F.lit(1)).alias("_n_events"),
-                     F.max("_event_seq").alias("_max_seq")]
+            aggs.append(F.max("_event_seq").alias("_max_seq"))
         won = events.groupBy(*key_cols).agg(*aggs)
     else:
         salted = events.withColumn(
             "_salt", F.pmod(F.xxhash64(*VERSION_ORDER), F.lit(salt)))
         aggs1 = [F.max_by(pay, ver).alias("_w")]
         if with_stats:
-            aggs1 += [F.count(F.lit(1)).alias("_n_events"),
-                      F.max("_event_seq").alias("_max_seq")]
+            aggs1.append(F.max("_event_seq").alias("_max_seq"))
         stage1 = salted.groupBy(*key_cols, "_salt").agg(*aggs1)
         ver1 = F.struct(F.col("_w._op_ts"), F.col("_w._event_seq"))
         aggs2 = [F.max_by(F.col("_w"), ver1).alias("_w")]
         if with_stats:
-            aggs2 += [F.sum("_n_events").alias("_n_events"),
-                      F.max("_max_seq").alias("_max_seq")]
+            aggs2.append(F.max("_max_seq").alias("_max_seq"))
         won = stage1.groupBy(*key_cols).agg(*aggs2)
-    extra = ["_n_events", "_max_seq"] if with_stats else []
-    return won.select(*key_cols, "_w.*", *extra)
+    return won.select(*key_cols, "_w.*", *(["_max_seq"] if with_stats else []))
 
 
 def choose_lww_salt(events: DataFrame, key_cols: list[str],
@@ -125,59 +118,3 @@ def lww_reduce_adaptive(events: DataFrame, key_cols: list[str],
     salt = choose_lww_salt(events, key_cols, **probe_kwargs)
     return lww_reduce(events, key_cols, payload_cols, salt=salt,
                       with_stats=with_stats)
-
-
-def lww_reduce_in_partition(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Per-partition LWW reduce via an Arrow-batched incremental fold.
-
-    Requires every row of a key to live in one partition (e.g. after
-    ``repartition(n, "_bucket")`` where ``_bucket`` is a pure function of the
-    key). This replaces the second full-table shuffle of the merge path: the
-    union of target-state and epoch winners is shuffled ONCE by storage
-    bucket and reduced in place, so the MERGE is a single-shuffle job.
-
-    The fold is associative: each Arrow batch is concatenated with the
-    winners-so-far and re-reduced, bounding memory at O(distinct keys in
-    partition) instead of O(partition).
-
-    mapInArrow + ArrowDtype-backed pandas, NOT plain mapInPandas: the
-    default Arrow→pandas conversion turns an int64 column containing ANY
-    null into float64 (numpy has no nullable int), silently rounding values
-    ≥ 2^53 on the way through — and a schema evolution that ADDs a bigint
-    column guarantees nulls in old base rows, so after one evolution every
-    cow-arrow merge would corrupt snowflake-scale ids while the max_by
-    paths return them exactly. ArrowDtype columns keep the original Arrow
-    buffers (and exact int64) end to end — the same reason the Avro codec
-    uses mapInArrow.
-    """
-    cols = df.columns
-    schema = df.schema
-
-    def reduce_partition(batches):
-        import pyarrow as pa
-        acc = None
-        in_schema = None
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            if in_schema is None:
-                in_schema = b.schema
-            pdf = (pa.Table.from_batches([b])
-                   .to_pandas(types_mapper=pd.ArrowDtype))
-            both = pdf if acc is None else pd.concat([acc, pdf],
-                                                     ignore_index=True)
-            # na_position='first' + dropna=False: pandas sorts NA LAST and
-            # drops null group keys by default — either would silently make
-            # this fold diverge from Spark's max_by (null version loses,
-            # null keys form their own group) on the other merge paths.
-            # (SnapshotTable.read_aligned's pure-Arrow fold mirrors the same
-            # two rules; read-vs-read_aligned equality tests pin them.)
-            both = both.sort_values(["_op_ts", "_event_seq"], kind="stable",
-                                    na_position="first")
-            acc = (both.groupby(key_cols, as_index=False, sort=False,
-                                dropna=False).tail(1))
-        if acc is not None:
-            out = pa.Table.from_pandas(acc[cols], preserve_index=False)
-            yield from out.cast(in_schema).to_batches()
-
-    return df.mapInArrow(reduce_partition, schema=schema)

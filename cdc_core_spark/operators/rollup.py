@@ -34,8 +34,9 @@ re-scanning the base table per refresh:
   itself is persisted in table props, so ``load()`` needs no re-declaration.
 * **MOR upstream required.** ``read_changes`` raises on logical
   copy-on-write rewrites by design (their changes are folded into rewritten
-  base files and cannot be recovered incrementally) — commit upstream
-  logical changes in ``merge_mode='mor'``; maintenance rewrites
+  base files and cannot be recovered incrementally) — engine epochs always
+  commit MOR deltas, so only a hand-made logical ``commit_merge`` (or an
+  older copy-on-write build's epoch) upstream trips it; maintenance rewrites
   (compaction, re-bucket, tombstone expiry) are state-preserving and skip
   cleanly mid-range.
 

@@ -116,7 +116,7 @@ def main() -> None:
         "array scan per probe row) and at par on shallow dimensions in "
         "LOCAL mode, where the exchange it removes is only an in-JVM "
         "copy — its real win (no probe-side network shuffle) exists on a "
-        "real cluster, same caveat as lake.read_aligned. The default "
+        "real cluster. The default "
         "max_history=64 guard turns the deep-history misuse into a loud "
         "error; this probe raises it deliberately to measure the penalty")
     with open(os.path.join(REPO, "TEMPORAL_PROBE.json"), "w") as f:

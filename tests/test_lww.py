@@ -58,23 +58,6 @@ def test_salted_equals_unsalted(spark):
         assert _winners(df, salt=salt) == base, f"salt={salt} changed results"
 
 
-def test_in_partition_fold_matches_maxby_on_nulls(spark):
-    """cow-arrow's pandas fold must agree with Spark max_by semantics: a
-    null version LOSES (nulls-first sort) and null-key rows survive as
-    their own group (dropna=False)."""
-    from cdc_core_spark.lww import lww_reduce, lww_reduce_in_partition
-
-    ddl = ("k string, payload string, _op_ts long, _event_seq long, "
-           "_deleted boolean")
-    rows = [("a", "old", 5, 1, False), ("a", "nullver", None, None, False),
-            (None, "nullkey", 7, 2, False)]
-    df = spark.createDataFrame(rows, ddl).repartition(1)
-    folded = {r["k"]: r["payload"]
-              for r in lww_reduce_in_partition(df, ["k"]).collect()}
-    viaagg = {r["k"]: r["payload"]
-              for r in lww_reduce(df, ["k"], ["payload", "_deleted"]).collect()}
-    assert folded == viaagg == {"a": "old", None: "nullkey"}
-
 def test_adaptive_salt_probe_and_equivalence(spark):
     """choose_lww_salt: a dominant hot key (>= threshold share) triggers
     salting, a uniform stream does not, and an undersized sample never
@@ -106,21 +89,21 @@ def test_adaptive_salt_probe_and_equivalence(spark):
         assert got == want
 
 
-def test_lww_in_partition_exact_bigints_past_2_53_with_nulls(spark):
-    """The cow-arrow fold must not round int64 values >= 2^53: the default
-    Arrow->pandas conversion coerces a nullable int64 column to float64
-    (numpy has no nullable int), and a post-evolution base always carries
-    nulls in the added column. ArrowDtype keeps the exact buffers."""
-    from cdc_core_spark.lww import lww_reduce_in_partition
+def test_with_stats_emits_max_seq_lineage(spark):
+    """with_stats adds exactly one lineage column, ``_max_seq``: the max
+    event_seq seen per key, which under out-of-order op_ts is NOT the
+    winner's own seq. Salted and plain reductions agree on it."""
+    from cdc_core_spark.lww import lww_reduce
 
-    big = (1 << 53) + 1            # not representable as float64
-    rows = [("r", "a", None, 100, 1),
-            ("r", "a", big, 200, 2),      # winner carries the huge id
-            ("r", "b", big + 2, 50, 3)]
-    df = (spark.createDataFrame(
-              rows, "repo string, path string, ext_id long, "
-                    "_op_ts long, _event_seq long")
-          .repartition(2, "repo", "path"))
-    got = {(r["repo"], r["path"]): r["ext_id"]
-           for r in lww_reduce_in_partition(df, ["repo", "path"]).collect()}
-    assert got == {("r", "a"): big, ("r", "b"): big + 2}
+    rows = [("r", "a", "late-ts", 300, 1),   # winner: max op_ts, low seq
+            ("r", "a", "early", 100, 9),     # max seq, loses on op_ts
+            ("r", "b", "only", 50, 4)]
+    df = _df(spark, rows)
+    for salt in (None, 4):
+        out = lww_reduce(df, ["repo", "path"], ["v"], salt=salt,
+                         with_stats=True)
+        assert out.columns == ["repo", "path", "_op_ts", "_event_seq", "v",
+                               "_max_seq"]
+        got = {(r["path"], r["v"], r["_event_seq"], r["_max_seq"])
+               for r in out.collect()}
+        assert got == {("a", "late-ts", 1, 9), ("b", "only", 4, 4)}

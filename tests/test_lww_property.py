@@ -17,7 +17,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from cdc_core_spark.lww import lww_reduce, lww_reduce_in_partition
+from cdc_core_spark.lww import lww_reduce
 
 DDL = "repo string, path string, v string, _op_ts long, _event_seq long"
 
@@ -83,10 +83,3 @@ def test_lww_partition_invariant(spark, rows, nparts):
     got = {(r["repo"], r["path"]): (r["_op_ts"], r["_event_seq"])
            for r in out.collect()}
     assert got == py_oracle(rows)
-
-    # the Arrow in-partition fold variant must agree too
-    pre = df.repartition(nparts, "repo", "path")
-    out2 = lww_reduce_in_partition(pre, ["repo", "path"])
-    got2 = {(r["repo"], r["path"]): (r["_op_ts"], r["_event_seq"])
-            for r in out2.collect()}
-    assert got2 == py_oracle(rows)

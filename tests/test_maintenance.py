@@ -187,23 +187,27 @@ def test_read_changes_rebuilds_state_incrementally(spark, t1, registry, tmp_path
 
 
 def test_read_changes_raises_on_logical_rewrite(spark, t1, registry, tmp_path):
-    """A copy-on-write engine epoch commits a rewrite WITH an epoch: its
-    changes are folded into rewritten base files, so silently skipping it
-    (the pre-fix behavior) would lose data for every CDC-out consumer.
-    Default now raises with remediation; on_logical_rewrite='skip' is the
-    explicit opt-out; a pure-maintenance rewrite (compact, epoch=None)
-    still skips silently."""
+    """A logical copy-on-write commit — an epoch committed by rewriting its
+    buckets (as older copy-on-write builds applied epochs) — folds its
+    changes into rewritten base files, so silently skipping it would lose
+    data for every CDC-out consumer. Default raises with remediation;
+    on_logical_rewrite='skip' is the explicit opt-out; a pure-maintenance
+    rewrite (compact, epoch=None) still skips silently."""
     import pytest
 
-    from cdc_core_spark.lake import ChangelogCursor
+    from cdc_core_spark.lake import ChangelogCursor, bucket_expr
 
-    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8,
-                    merge_mode="cow-jvm")
+    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     eng.replay(f'{t1["dir"]}/change_events', source_df=src, epochs=[0, 1])
     t = eng.table
     base_v = t.latest().version
-    eng.replay(f'{t1["dir"]}/change_events', epochs=[2, 3])
+    # rewrite EVERY bucket under epoch 2, so the commit genuinely removes
+    # files (a merge that only adds files stays incrementally readable)
+    snap = t.latest()
+    df = (t.read(spark, with_internal_cols=True)
+          .withColumn("_bucket", bucket_expr(snap.key_cols, snap.n_buckets)))
+    t.commit_merge(df, list(range(snap.n_buckets)), epoch=2, manifests=[])
 
     with pytest.raises(ValueError, match="LOGICAL rewrite"):
         t.read_changes(spark, base_v)

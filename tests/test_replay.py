@@ -8,6 +8,8 @@ oracle that applies events sequentially in (op_ts, event_seq) order per key.
 
 from __future__ import annotations
 
+import pytest
+
 from cdc_core_spark.engine import CdcEngine
 from cdc_core_spark.oracle import expected_quarantine_count
 
@@ -136,18 +138,6 @@ def test_manifest_stats_survive_narrow_key_types(spark, tmp_path):
     assert got == {7: "v1", 9: "v2"}
 
 
-def test_merge_mode_validated_at_construction(spark, tmp_path, monkeypatch):
-    """A typo'd CDC_MERGE_STRATEGY must fail at engine construction, not
-    silently run every epoch as a copy-on-write rewrite."""
-    import pytest
-
-    with pytest.raises(ValueError, match="mor-delta"):
-        CdcEngine(spark, str(tmp_path / "x"), None, merge_mode="mor-delta")
-    monkeypatch.setenv("CDC_MERGE_STRATEGY", "MOR")
-    with pytest.raises(ValueError, match="MOR"):
-        CdcEngine(spark, str(tmp_path / "y"), None)
-
-
 def test_null_op_quarantined_consistently(spark, tmp_path):
     """A null op must land in the DLQ AND the error count — on both the
     standalone apply_epoch path and the replay fast path (the predicate is
@@ -215,11 +205,21 @@ def test_manifest_lineage(spark, t1, registry, tmp_path):
     assert set(data_mf["checkpoint_epoch"].unique()) == set(range(8))
 
 
-def test_mor_epoch_is_one_spark_job(spark, t1, registry, tmp_path):
-    """PERF CONTRACT: with pre-computed stats, a merge-on-read epoch costs
-    exactly ONE Spark job (the staged delta write; manifests come from
-    parquet footers). Guards the engine's headline scaling property against
-    regressions that sneak extra jobs into the epoch loop."""
+#: Spark jobs of a standalone apply_epoch on t1 epoch 1 at default AQE
+#: (8 buckets, 8 shuffle partitions): DDL collect, lineage pre-stats
+#: collect, DLQ write, and the grouped delta write. Measured: 8 (8-9 over
+#: epochs 1-3).
+STANDALONE_EPOCH_JOBS = 8
+
+
+def test_epoch_apply_job_counts(spark, t1, registry, tmp_path):
+    """PERF CONTRACT, two parts. (1) With the epoch's inputs pre-counted
+    (``_epoch_prestats``), the grouped merge-on-read write is exactly ONE
+    Spark action — the staged delta write; manifests come from parquet
+    footers. (2) A standalone ``apply_epoch`` — the streaming, flow and
+    s3_events path — launches no more jobs than measured on the single
+    apply path. Guards the per-commit job floor against regressions that
+    sneak extra jobs into the epoch path."""
     from pyspark.sql import functions as F
 
     eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
@@ -227,28 +227,35 @@ def test_mor_epoch_is_one_spark_job(spark, t1, registry, tmp_path):
     eng.initial_load(src)
     events = spark.read.parquet(f'{t1["dir"]}/change_events')
     batch = events.filter(F.col("checkpoint_epoch") == 0)
-    kc = eng._key_cols()
-    from cdc_core_spark.engine import valid_event_pred
-    from cdc_core_spark.lake import bucket_expr
-    stats = (batch.filter(valid_event_pred(kc))
-             .withColumn("_b", bucket_expr(kc, 8))
-             .groupBy("_b").count().collect())
-    read_stats = {r["_b"]: r["count"] for r in stats}
+    schema_by_epoch, read_by_epoch, err_by_epoch = \
+        eng._epoch_prestats(batch, [0])
 
     sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group, False)
+        try:
+            fn()
+            return sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup(None, None, False)
+
     # AQE splits one action into a job per shuffle stage; count ACTIONS by
-    # disabling it for the window (the contract is one action per epoch)
+    # disabling it for the window (the contract is one action per group)
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup("one_job_epoch", "epoch apply", False)
     try:
-        eng.apply_epoch(batch, 0, err_stats={}, schema_rows=[],
-                        read_stats=read_stats)
-        jobs = sc.statusTracker().getJobIdsForGroup("one_job_epoch")
+        jobs = jobs_of("grouped_write", lambda: eng.apply_epoch_group(
+            batch, [0], err_by_epoch, read_by_epoch,
+            schema_rows=schema_by_epoch[0]))
     finally:
-        sc.setJobGroup(None, None, False)
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    assert len(jobs) == 1, f"epoch took {len(jobs)} jobs: {jobs}"
+    assert len(jobs) == 1, f"grouped write took {len(jobs)} jobs: {jobs}"
+
+    jobs = jobs_of("standalone_epoch", lambda: eng.apply_epoch(
+        events.filter(F.col("checkpoint_epoch") == 1), 1))
+    assert len(jobs) <= STANDALONE_EPOCH_JOBS, \
+        f"standalone apply_epoch took {len(jobs)} jobs: {jobs}"
 
 
 def test_errors_df_clean_run_schema(spark, t1, registry, tmp_path):
@@ -355,10 +362,7 @@ def test_manifest_write_volume_matches_staged_bytes(spark, t1, registry,
     MOR-delta write volume: their totals must equal the byte/file counts of
     the delta files the snapshot references (write-amplification lineage an
     operator trends against events_applied to size compact_every)."""
-    # merge_mode pinned: the assertion requires delta files, and the suite
-    # supports running under CDC_MERGE_STRATEGY=cow-jvm/cow-arrow
-    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8,
-                    merge_mode="mor")
+    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     eng.replay(f'{t1["dir"]}/change_events', source_df=src)
 
@@ -373,3 +377,76 @@ def test_manifest_write_volume_matches_staged_bytes(spark, t1, registry,
     # block_deltas exposes the same per-file sizes
     bd = {d["path"]: d for d in eng.table.block_deltas()}
     assert all(bd[f["path"]]["bytes"] == f["bytes"] for f in deltas)
+
+
+@pytest.fixture(scope="module")
+def replayed(spark, t1, registry, tmp_path_factory):
+    eng = CdcEngine(spark, str(tmp_path_factory.mktemp("replayed")),
+                    registry, n_buckets=8)
+    src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
+    eng.replay(f'{t1["dir"]}/change_events', source_df=src)
+    return eng
+
+
+def _assert_df_equal(a, b):
+    assert a.columns == b.columns
+    assert a.schema == b.schema
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
+def test_columns_projection_pruned_and_equal(spark, replayed):
+    """``columns=`` must (a) return values identical to a post-hoc select on
+    the full read — across the evolved ADD+RENAME+WIDEN history, so the
+    restricted fields list still drives alias/widen normalization — and
+    (b) actually prune the Spark scan: the MOR fold's max_by struct blocks
+    Catalyst column pruning, which is the whole reason the parameter
+    exists, so ReadSchema must not contain the unprojected wide column."""
+    import re
+
+    t = replayed.table
+    cols = ["path", "language", "rev"]   # key + renamed + widened
+    _assert_df_equal(t.read(spark).select(*cols), t.read(spark, columns=cols))
+
+    plan = t.read(spark, columns=cols)._jdf.queryExecution() \
+        .executedPlan().toString()
+    schemas = re.findall(r"ReadSchema: (\S+)", plan)
+    assert schemas and all("content" not in s for s in schemas), plan
+
+    with pytest.raises(ValueError, match="unknown columns"):
+        t.read(spark, columns=["language", "no_such_col"])
+    with pytest.raises(ValueError, match="non-empty"):
+        t.read(spark, columns=[])
+
+
+def test_count_final_equals_full_fold_count(spark, replayed):
+    """count_final's keys-only projected fold must agree with the full
+    fold's count on a history containing tombstones and multi-epoch
+    re-deliveries — the cases where a metadata count would be wrong."""
+    assert replayed.count_final() == replayed.read_final().count()
+
+
+def test_fold_keeps_null_payload_of_winner(spark, tmp_path):
+    """The winner's OWN null must survive the MOR fold: a newer delta with
+    a null payload beats an older non-null one."""
+    import pandas as pd
+    from cdc_core_spark.lake import SnapshotTable
+
+    fields = [{"name": "repo", "type": "string"},
+              {"name": "path", "type": "string"},
+              {"name": "content", "type": "string"}]
+    t = SnapshotTable.create(str(tmp_path / "nulls"), fields,
+                             ["repo", "path"], n_buckets=2)
+    mk = lambda rows: spark.createDataFrame(
+        pd.DataFrame(rows), schema=("repo string, path string, content string, "
+                                    "_op_ts bigint, _event_seq bigint, "
+                                    "_deleted boolean, _bucket int"))
+    t.commit_delta(mk([{"repo": "r", "path": "p", "content": "old",
+                        "_op_ts": 1, "_event_seq": 1, "_deleted": False,
+                        "_bucket": 0}]), epoch=0, manifests=[])
+    t.commit_delta(mk([{"repo": "r", "path": "p", "content": None,
+                        "_op_ts": 2, "_event_seq": 2, "_deleted": False,
+                        "_bucket": 0}]), epoch=1, manifests=[])
+    got = t.read(spark).toPandas()
+    assert len(got) == 1
+    assert got["content"].isna().all()   # null wins, not "old"

@@ -51,8 +51,7 @@ def test_rollup_tracks_engine_replay_per_epoch(spark, t1, registry, tmp_path):
     """Refresh after EVERY epoch of the t1 replay (through the add-column,
     rename and int→long widen DDLs) and compare against the direct
     aggregate each time — the incremental state never drifts."""
-    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8,
-                    merge_mode="mor")
+    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     eng.replay(f'{t1["dir"]}/change_events', source_df=src, epochs=[])
     roll = IncrementalRollup.create(spark, eng.table, str(tmp_path / "r"),
