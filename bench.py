@@ -128,9 +128,9 @@ def bench_replay(spark, fxdir: str, runs: int = 3,
 
 def bench_skew_defense(spark, fxdir: str) -> dict:
     """SURVEY §7 risk 5 evidence: LWW over the hot-repo event log via
-    (a) row_number window (naive — sorts the hot partition),
-    (b) max_by aggregation (map-side partial combine), and
-    (c) explicit two-stage salted aggregation. Same results, different shuffles."""
+    (a) row_number window (naive — sorts the hot partition) and
+    (b) max_by aggregation (map-side partial combine, the engine's plan).
+    Same results, different shuffles."""
     from pyspark.sql import Window, functions as F
     from cdc_core_spark.lww import lww_reduce
 
@@ -147,9 +147,6 @@ def bench_skew_defense(spark, fxdir: str) -> dict:
     t0 = time.monotonic()
     lww_reduce(ev, ["repo", "path"], ["content"]).write.format("noop").mode("overwrite").save()
     out["max_by_agg_sec"] = round(time.monotonic() - t0, 3)
-    t0 = time.monotonic()
-    lww_reduce(ev, ["repo", "path"], ["content"], salt=8).write.format("noop").mode("overwrite").save()
-    out["salted_two_stage_sec"] = round(time.monotonic() - t0, 3)
     return out
 
 

@@ -29,59 +29,17 @@ from __future__ import annotations
 import json
 import os
 import socket
-import tempfile
 import time
 import uuid
 
+from cdc_core_spark.fsutil import _atomic_write_text_local
+
 
 def _atomic_write_json(path: str, doc, exclusive: bool = False) -> None:
-    """Temp-file + fsync + rename + dir-fsync JSON publish — THE single copy
-    of this pattern (lake's snapshot/sidecar/retention-ledger writes import
-    it too). The fsyncs matter: without fsync-before-rename a power loss can
-    leave a 0-byte/torn file at the FINAL path (rename is metadata-atomic
-    but data pages may not have hit disk), which would permanently wedge
-    every snapshot-log read; the directory fsync makes the rename itself
-    durable. Tmp debris from an exception mid-dump is removed — and the
-    temp name is "_"-prefixed so debris a SIGKILL leaves behind (cleanup
-    never runs) is invisible to Spark directory scans: some callers (the
-    text-index sidecar) publish INTO a directory Spark reads as parquet,
-    where an unhidden temp file would brick every subsequent read.
-
-    ``exclusive=True`` publishes via ``os.link`` (hard link fails with
-    EEXIST if the destination exists) instead of rename (which silently
-    REPLACES) — the compare-and-swap the snapshot log's version contention
-    relies on: two writers racing to the same v{N}.json must leave exactly
-    one committed and one FileExistsError, never a clobbered commit."""
-    d = os.path.dirname(path)
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix="_", suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        if exclusive:
-            try:
-                os.link(tmp, path)
-            except OSError as e:
-                import errno
-                if e.errno == errno.EEXIST:
-                    raise FileExistsError(path) from None
-                raise
-            os.remove(tmp)
-        else:
-            os.rename(tmp, path)
-    except BaseException:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-        raise
-    dfd = os.open(d, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
+    """Durable JSON publish: ``json.dumps`` through the one local
+    durable-write primitive (``fsutil._atomic_write_text_local`` — fsyncs,
+    hidden temp name, debris cleanup, ``exclusive`` link-CAS)."""
+    _atomic_write_text_local(path, json.dumps(doc), exclusive=exclusive)
 
 
 # --------------------------------------------------------------- heartbeat

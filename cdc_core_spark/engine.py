@@ -140,7 +140,6 @@ def _error_reason(key_cols: list[str] = ("repo", "path")):
 class CdcEngine:
     def __init__(self, spark: SparkSession, root: str, registry: SchemaRegistry,
                  entity: str = "source_repos", n_buckets: int = 16,
-                 salt: int | str | None = None,
                  sort_order: list[str] | None = None,
                  zorder: list[str] | None = None,
                  bloom_filters: list[str] | None = None):
@@ -171,17 +170,6 @@ class CdcEngine:
         # — equality row-group skipping where clustering can't reach.
         # Composes with either clustering prop.
         self.bloom_filters = list(bloom_filters) if bloom_filters else None
-        # None = plain single-stage max_by (right default: partial agg
-        # already collapses hot keys map-side), int = always salt that wide,
-        # "auto" = decide per applied batch from lww.choose_lww_salt's
-        # sampled key-histogram probe (salting an unskewed stream costs
-        # 2.7×, measured — BENCH skew_defense — so auto only salts when one
-        # key holds ≥ half the batch). With group-commit the probe runs once
-        # per DDL-free epoch RUN, not per epoch, so its one sampled
-        # aggregation job amortizes across the backlog being drained.
-        if salt is not None and not isinstance(salt, int) and salt != "auto":
-            raise ValueError(f"salt must be an int, None or 'auto', got {salt!r}")
-        self.salt = salt
         self.table = SnapshotTable(os.path.join(root, "target"))
         self.errors_dir = os.path.join(root, "errors")
         # sort_order is recorded at CREATION — on an existing table it
@@ -324,18 +312,6 @@ class CdcEngine:
             cur = new
         return cur
 
-    def _effective_salt(self, ev: DataFrame,
-                        key_cols: list[str]) -> int | None:
-        """Resolve the configured ``salt`` for one applied batch: pass ints
-        and None through; ``"auto"`` runs the sampled hot-key probe
-        (``lww.choose_lww_salt``) on the batch about to be reduced — the
-        probe-triggered switch that removes the caller-knob footgun (salted
-        two-stage costs 2.7× when skew is absent, measured)."""
-        if self.salt != "auto":
-            return self.salt
-        from cdc_core_spark.lww import choose_lww_salt
-        return choose_lww_salt(ev, key_cols)
-
     # ----------------------------------------------------------- event intake
     def _normalize_events(self, events: DataFrame, sdef: SchemaDef) -> DataFrame:
         """Project raw events onto the current schema: alias-map renamed
@@ -466,9 +442,7 @@ class CdcEngine:
         valid = data.filter(valid_event_pred(kc, cc))
         ev = self._normalize_events(valid, sdef)
         winners = lww_reduce(ev, ["checkpoint_epoch"] + key_cols,
-                             payload_cols + ["op"],
-                             salt=self._effective_salt(ev, key_cols),
-                             with_stats=True)
+                             payload_cols + ["op"], with_stats=True)
         delta = (winners.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
                  .withColumn("_deleted", F.col("op") == OP_DELETE).drop("op"))
 

@@ -1,6 +1,6 @@
 """Scheme-aware small-file IO for store sidecars (_ivf_centroids.json,
 _index_meta.json): scheme-less paths use local POSIX IO (atomic temp +
-rename via coordination._atomic_write_json's contract), scheme'd paths
+rename via ``_atomic_write_text_local``), scheme'd paths
 (``s3a://``, ``hdfs://``, ``file:/``…) go through the Hadoop FileSystem
 API on the driver — the stores themselves are written by Spark, so a
 sidecar that only worked on the local filesystem would strand a
@@ -145,7 +145,28 @@ def write_text(spark, path: str, text: str) -> None:
         raise IOError(f"rename {path}.tmp -> {path} failed")
 
 
-def _atomic_write_text_local(path: str, text: str) -> None:
+def _atomic_write_text_local(path: str, text: str,
+                             exclusive: bool = False) -> None:
+    """Temp-file + fsync + rename + dir-fsync publish of ``text`` — THE
+    single copy of the local durable-write pattern (coordination's
+    ``_atomic_write_json``, and through it lake's snapshot/sidecar/
+    retention-ledger writes, call it). The fsyncs matter: without
+    fsync-before-rename a power loss can leave a 0-byte/torn file at the
+    FINAL path (rename is metadata-atomic but data pages may not have hit
+    disk), which would permanently wedge every snapshot-log read; the
+    directory fsync makes the rename itself durable. Tmp debris from an
+    exception mid-write is removed — and the temp name is "_"-prefixed so
+    debris a SIGKILL leaves behind (cleanup never runs) is invisible to
+    Spark directory scans: some callers (the text-index sidecar) publish
+    INTO a directory Spark reads as parquet, where an unhidden temp file
+    would brick every subsequent read.
+
+    ``exclusive=True`` publishes via ``os.link`` (hard link fails with
+    EEXIST if the destination exists) instead of rename (which silently
+    REPLACES) — the compare-and-swap the snapshot log's version contention
+    relies on: two writers racing to the same v{N}.json must leave exactly
+    one committed and one FileExistsError, never a clobbered commit."""
+    import errno
     import tempfile
     # a bare filename has dirname '' — makedirs('') raises; '.' is the CWD
     d = os.path.dirname(path) or "."
@@ -156,7 +177,16 @@ def _atomic_write_text_local(path: str, text: str) -> None:
             f.write(text)
             f.flush()
             os.fsync(f.fileno())
-        os.rename(tmp, path)
+        if exclusive:
+            try:
+                os.link(tmp, path)
+            except OSError as e:
+                if e.errno == errno.EEXIST:
+                    raise FileExistsError(path) from None
+                raise
+            os.remove(tmp)
+        else:
+            os.rename(tmp, path)
     except BaseException:
         try:
             os.remove(tmp)

@@ -116,21 +116,32 @@ _AUTO_BROADCAST_MAX_ROWS = 1_000_000
 _AUTO_BROADCAST_MAX_DEPTH = 16
 
 
-def choose_asof_plan(right: DataFrame, keys: Sequence[str]) -> bool:
-    """Probe-based plan pick for ``asof_join(broadcast="auto")`` — the same
-    pattern as ``lww.choose_lww_salt``: measure the cheap thing, decide,
-    let the caller override. Returns True for the broadcast plan.
+def choose_asof_plan(right: DataFrame, keys: Sequence[str],
+                     max_history: int = 64) -> bool:
+    """Probe-based plan pick for ``asof_join(broadcast="auto")``: measure
+    the cheap thing (size, then per-key depth), decide, let the caller
+    override. Returns True for the broadcast plan.
 
     Cost: the size gate is a ``limit(N+1).count()`` — Spark stops scanning
     at N+1 rows, so a 10^10-row right side pays O(threshold), not a full
     scan; only a right side that passed the size gate (≤1M rows) pays the
-    per-key depth aggregation."""
+    per-key depth aggregation.
+
+    A keyless (global) right side is ONE history: the window plan cannot
+    run it (one-task sort), and the broadcast plan refuses a history deeper
+    than ``max_history``. Past that depth no plan fits, so the probe raises
+    here rather than route to a plan whose error points at the other."""
     n = right.limit(_AUTO_BROADCAST_MAX_ROWS + 1).count()
     if n > _AUTO_BROADCAST_MAX_ROWS:
         return False
     if not keys:
-        # global as-of: the window plan cannot run it (one-task sort);
-        # small histories broadcast, oversized ones must be refused loudly
+        if n > max_history:
+            raise ValueError(
+                f"asof_join: a keyless (global) as-of against {n} right "
+                f"rows is one history deeper than max_history="
+                f"{max_history}; the broadcast plan caps history depth and "
+                "the window plan needs a key — add a coarse bucket key to "
+                "`on` or use range_join")
         return True
     depth = (right.groupBy(*keys).count()
              .agg(F.max("count").alias("d")).first()["d"])
@@ -196,9 +207,17 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
     dimensions get the no-probe-shuffle plan without the caller having to
     know. Pass ``broadcast=False``/``True`` to skip the probe jobs and
     force a plan (e.g. inside loops where the dimension shape is known).
+    The probe is EAGER: under ``"auto"`` building the plan runs 1-2 Spark
+    jobs over the right side, and the join later re-executes it. A
+    nondeterministic right side (``sample``, ``rand``, a source that
+    changes between reads) can therefore be probed on different rows than
+    it is joined on, and the plan picked for the probed rows may be wrong
+    for the joined ones — ``persist()`` such a right side first, or pass
+    ``broadcast`` explicitly. A keyless ``on=[]`` right side deeper than
+    ``max_history`` rows raises at probe time: no plan can run it.
     """
     if broadcast == "auto":
-        broadcast = choose_asof_plan(right, list(on))
+        broadcast = choose_asof_plan(right, list(on), max_history)
     if broadcast:
         return _asof_join_broadcast(left, right, on, left_ts, right_ts,
                                     direction=direction, tolerance=tolerance,

@@ -97,7 +97,14 @@ def smtp_send(messages: DataFrame, host: str, port: int = 25, *,
 
     Size the partition count to the relay's concurrency budget
     (``messages.repartition(n)``): n partitions = n concurrent SMTP
-    connections."""
+    connections.
+
+    Delivery is AT-LEAST-ONCE. A connection-level failure fails the task,
+    and Spark's task retry re-runs the whole partition, so messages the
+    relay already accepted before the failure are sent again. For
+    at-most-once, run the send action with ``spark.task.maxFailures=1``;
+    for effectively-once, stamp a stable ``Message-ID`` (derived from the
+    correlation id) and dedupe on it at the relay."""
 
     def _send(batches: Iterator) -> Iterator:
         import smtplib

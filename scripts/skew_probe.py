@@ -1,22 +1,22 @@
-"""Hot-key skew probe — measured evidence for the north rule's "salted
-repartitioning on (repo, path) to defuse hot-repo skew" requirement.
+"""Hot-key skew probe — measured evidence for the north rule's requirement
+that hot-repo skew be handled explicitly.
 
 Synthesizes a deliberately PATHOLOGICAL change-event distribution (one
-(repo, path) key carries ~25% of all events — far beyond a realistic
-hot-repo tail) and times the three LWW reduction strategies the engine
-ships:
+(repo, path) key carries a swept share of all events — far beyond a
+realistic hot-repo tail) and times two LWW reduction plans:
 
   window   row_number() over (partition by key order by version desc) —
            the naive plan: every hot-key row lands in ONE task's sort
-  max_by   algebraic aggregate (engine default): map-side partial combine
-           collapses the hot key to one candidate row PER MAP TASK before
-           the shuffle, so the reducer sees O(n_tasks) rows, not O(n_hot)
-  salted   explicit two-stage (hash-salt pre-reduce, then final combine) —
-           the fallback for reductions that are not single-row-algebraic
+  max_by   algebraic aggregate (the engine's only LWW plan): map-side
+           partial combine collapses the hot key to one candidate row PER
+           MAP TASK before the shuffle, so the reducer sees O(n_tasks) rows,
+           not O(n_hot)
 
-All three produce identical winners (asserted via a content checksum; the
+Both produce identical winners (asserted via a content checksum; the
 generator makes (op_ts, event_seq) unique per key so ties cannot hide a
-strategy bug). Writes SKEW_PROBE.json at the repo root.
+plan bug). An explicit salted two-stage reduce used to be the third plan;
+it lost to max_by at every hot share (BASELINE.md skew row) and was removed.
+Writes SKEW_PROBE.json at the repo root.
 
     python scripts/skew_probe.py [n_events] [n_keys] [hot_permille_sweep]
 
@@ -106,19 +106,10 @@ def probe_one(spark, n_events: int, n_keys: int, hot_pm: int,
     timed("window_row_number_sec", win_df)
     timed("max_by_agg_sec",
           lambda: lww_reduce(ev, ["repo", "path"], ["content"]))
-    timed("salted_two_stage_sec",
-          lambda: lww_reduce(ev, ["repo", "path"], ["content"], salt=cpus))
 
     c_max = crc(lww_reduce(ev, ["repo", "path"], ["content"]))
-    c_salt = crc(lww_reduce(ev, ["repo", "path"], ["content"], salt=cpus))
     c_win = crc(win_df())
-    assert c_max == c_salt == c_win, "strategies disagree on LWW winners"
-
-    # what the engine's salt="auto" knob would decide on this cell — the
-    # sampled hot-key probe salts only when one key holds >= half the batch
-    # (threshold rationale in lww.choose_lww_salt)
-    from cdc_core_spark.lww import choose_lww_salt
-    auto_decision = choose_lww_salt(ev, ["repo", "path"])
+    assert c_max == c_win, "plans disagree on LWW winners"
 
     # STRUCTURAL skew metrics — deterministic, host-noise-free, and the
     # numbers that actually transfer to a 1000-executor cluster:
@@ -135,7 +126,6 @@ def probe_one(spark, n_events: int, n_keys: int, hot_pm: int,
     ev.unpersist()
     return {"hot_permille": hot_pm, "hot_key_rows": hot_rows,
             "hot_share": round(hot_rows / n_events, 4),
-            "auto_salt_decision": auto_decision,
             "timings_sec": results, "winners_checksum_equal": True,
             "reduce_rows_at_hot_task": {
                 "window_plain_shuffle": max_part,
@@ -169,12 +159,10 @@ def main() -> None:
             "grow linearly with hot volume), while max_by's map-side "
             "partial combine delivers one candidate per map task — a "
             "10^4-10^5x per-task reduction at these hot shares, and the "
-            "reason max_by is the engine's default LWW plan: on a real "
-            "cluster the straggler, not bandwidth, is the ceiling. "
-            "salted two-stage pays stage-1 output O(distinct_keys x salt): "
-            "cheap when one hot key dominates, expensive on mostly-cold "
-            "keys — the fallback shape reserved for reductions that are "
-            "not single-row-algebraic, not the default"),
+            "reason max_by is the engine's LWW plan: on a real cluster the "
+            "straggler, not bandwidth, is the ceiling. max_by over the "
+            "version struct is algebraic, so partial aggregation always "
+            "applies and no runtime skew switch is needed"),
     }
     with open(os.path.join(REPO, "SKEW_PROBE.json"), "w") as f:
         json.dump(out, f, indent=2)

@@ -1,5 +1,5 @@
-"""Unit tests for the LWW reduction: ties, out-of-order, duplicate delivery,
-salt invariance (SURVEY.md §5.2)."""
+"""Unit tests for the LWW reduction: ties, out-of-order, duplicate delivery
+(SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
@@ -12,8 +12,8 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, schema=DDL)
 
 
-def _winners(df, salt=None):
-    out = lww_reduce(df, ["repo", "path"], ["v"], salt=salt)
+def _winners(df):
+    out = lww_reduce(df, ["repo", "path"], ["v"])
     return {(r["repo"], r["path"]): (r["v"], r["_op_ts"], r["_event_seq"])
             for r in out.collect()}
 
@@ -46,64 +46,17 @@ def test_duplicate_delivery_collapses(spark):
     assert _winners(df)[("r", "a")] == ("x", 100, 1)
 
 
-def test_salted_equals_unsalted(spark):
-    rows = []
-    for k in range(20):
-        for i in range(15):
-            rows.append(("hot" if k < 3 else f"r{k}", f"p{k}",
-                         f"v{k}-{i}", 1000 + (i * 13) % 7 * 10, k * 100 + i))
-    df = _df(spark, rows)
-    base = _winners(df)
-    for salt in (1, 2, 8, 64):
-        assert _winners(df, salt=salt) == base, f"salt={salt} changed results"
-
-
-def test_adaptive_salt_probe_and_equivalence(spark):
-    """choose_lww_salt: a dominant hot key (>= threshold share) triggers
-    salting, a uniform stream does not, and an undersized sample never
-    does; lww_reduce_adaptive equals plain lww_reduce on both shapes."""
-    from cdc_core_spark.lww import (choose_lww_salt, lww_reduce,
-                                    lww_reduce_adaptive)
-
-    uniform = _df(spark, [(f"r{k}", f"p{k}", f"v{i}", 100 + i, k * 100 + i)
-                          for k in range(40) for i in range(50)])
-    hot = _df(spark, [("hot", "p", f"v{i}", 100 + i, i)
-                      for i in range(1600)]
-              + [(f"r{k}", f"p{k}", "v", 100, 10_000 + k)
-                 for k in range(400)])
-
-    # sample the whole stream so the tiny fixtures carry signal
-    kw = dict(sample_fraction=1.0, min_sample_rows=100)
-    assert choose_lww_salt(uniform, ["repo", "path"], **kw) is None
-    assert choose_lww_salt(hot, ["repo", "path"], **kw) == 16
-    # undersized sample: not enough signal to justify the 2.7x exception
-    assert choose_lww_salt(hot, ["repo", "path"], sample_fraction=1.0,
-                           min_sample_rows=10_000) is None
-
-    for df in (uniform, hot):
-        want = {tuple(r) for r in
-                lww_reduce(df, ["repo", "path"], ["v"]).collect()}
-        got = {tuple(r) for r in
-               lww_reduce_adaptive(df, ["repo", "path"], ["v"],
-                                   **kw).collect()}
-        assert got == want
-
-
 def test_with_stats_emits_max_seq_lineage(spark):
     """with_stats adds exactly one lineage column, ``_max_seq``: the max
     event_seq seen per key, which under out-of-order op_ts is NOT the
-    winner's own seq. Salted and plain reductions agree on it."""
-    from cdc_core_spark.lww import lww_reduce
-
+    winner's own seq."""
     rows = [("r", "a", "late-ts", 300, 1),   # winner: max op_ts, low seq
             ("r", "a", "early", 100, 9),     # max seq, loses on op_ts
             ("r", "b", "only", 50, 4)]
     df = _df(spark, rows)
-    for salt in (None, 4):
-        out = lww_reduce(df, ["repo", "path"], ["v"], salt=salt,
-                         with_stats=True)
-        assert out.columns == ["repo", "path", "_op_ts", "_event_seq", "v",
-                               "_max_seq"]
-        got = {(r["path"], r["v"], r["_event_seq"], r["_max_seq"])
-               for r in out.collect()}
-        assert got == {("a", "late-ts", 1, 9), ("b", "only", 4, 4)}
+    out = lww_reduce(df, ["repo", "path"], ["v"], with_stats=True)
+    assert out.columns == ["repo", "path", "_op_ts", "_event_seq", "v",
+                           "_max_seq"]
+    got = {(r["path"], r["v"], r["_event_seq"], r["_max_seq"])
+           for r in out.collect()}
+    assert got == {("a", "late-ts", 1, 9), ("b", "only", 4, 4)}

@@ -118,3 +118,19 @@ def test_smtp_send_receipts_and_delivery(spark, smtp_server):
     # the delivered bytes parse back to the composed message
     body = next(b for _, rs, b in inbox if rs == ["user4@x.test"])
     assert b"body of message 4" in body
+
+
+def test_smtp_send_relay_down_raises(spark):
+    """A relay that is down is a connection-level failure: the send action
+    raises instead of returning receipts (``ok=false`` receipts are only
+    for per-message refusals)."""
+    import socket
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]     # closed on exit: nothing listens here
+    msgs = render_messages(_outbox(spark), to_col="to", subject_col="subj",
+                           body_col="body", from_addr="eng@cdc.test",
+                           correlation_col="cid")
+    with pytest.raises(Exception, match="ConnectionRefusedError"):
+        smtp_send(msgs.coalesce(1), "127.0.0.1", port,
+                  timeout_sec=5).collect()

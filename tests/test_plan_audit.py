@@ -101,10 +101,25 @@ def test_lww_is_partial_max_by_single_shuffle(spark):
                   F.monotonically_increasing_id().alias("_event_seq"),
                   F.col("event_type")))
     from cdc_core_spark.lww import lww_reduce
-    p = plan(lww_reduce(ev, ["k"], ["event_type"]))
-    assert "partial_max_by" in p          # map-side combine before the shuffle
     import re
-    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1  # exactly one shuffle
+    # the engine's own call shape (CdcEngine.apply_epoch_group): per-(epoch,
+    # key) winners plus the _max_seq lineage column. The map-side combine is
+    # the only hot-key defense, so both aggregates must stay partial
+    engine_ev = (ev.withColumn("checkpoint_epoch", F.col("k") % 3)
+                 .withColumn("op", F.lit(4)))
+    engine_shape = lww_reduce(engine_ev, ["checkpoint_epoch", "k"],
+                              ["event_type", "op"], with_stats=True)
+    for df, partials in ((lww_reduce(ev, ["k"], ["event_type"]),
+                          ["partial_max_by"]),
+                         (engine_shape, ["partial_max_by", "partial_max("])):
+        p = plan(df)
+        exchanges = list(re.finditer(r"\(\d+\) Exchange\n", p))
+        assert len(exchanges) == 1                    # exactly one shuffle
+        # map-side combine BEFORE the shuffle: formatted details list nodes
+        # leaf-first, so a partial aggregate placed after a key repartition
+        # (the hot key shipped whole to one task) would follow the Exchange
+        for agg in partials:
+            assert 0 <= p.find(agg) < exchanges[0].start(), agg
 
 
 def test_no_row_python_udf_in_package_source():

@@ -26,36 +26,6 @@ def test_replay_matches_oracle(spark, t1, registry, tmp_path):
     assert eng.errors_df().count() == expected_quarantine_count(t1["fx"].change_events)
 
 
-def test_replay_salted_matches_oracle(spark, t1, registry, tmp_path):
-    """Salting must never change results (SURVEY §7 risk 5) — full replay with
-    the two-stage salted LWW path enabled."""
-    eng = CdcEngine(spark, str(tmp_path / "eng"), registry, n_buckets=8, salt=7)
-    src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
-    eng.replay(f'{t1["dir"]}/change_events', source_df=src)
-    got = eng.read_final_with_sha().toPandas()
-    assert_final_equal(got, t1["expected"])
-
-
-def test_replay_auto_salt_matches_oracle(spark, t1, registry, tmp_path):
-    """salt="auto" routes every applied batch through the sampled hot-key
-    probe (lww.choose_lww_salt) — on the standard (unskewed) fixture the
-    probe must pick the plain max_by path and the final state must equal
-    the oracle bit-for-bit; the knob itself rejects anything that isn't an
-    int, None or 'auto' at construction (a typo'd string would otherwise
-    silently behave as auto-off)."""
-    import pytest
-
-    with pytest.raises(ValueError, match="salt"):
-        CdcEngine(spark, str(tmp_path / "bad"), registry, salt="yes")
-
-    eng = CdcEngine(spark, str(tmp_path / "eng"), registry, n_buckets=8,
-                    salt="auto")
-    src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
-    eng.replay(f'{t1["dir"]}/change_events', source_df=src)
-    got = eng.read_final_with_sha().toPandas()
-    assert_final_equal(got, t1["expected"])
-
-
 def test_schema_evolved_final_schema(spark, t1, registry, tmp_path):
     """After the three in-band episodes the target exposes v2.1: size_bytes
     added, lang renamed to language, rev widened to long (values > 2^31)."""

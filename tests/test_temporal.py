@@ -403,7 +403,8 @@ def test_asof_auto_plan_choice(spark):
     """broadcast="auto" (the default) picks broadcast ONLY for a small AND
     shallow right side: deep per-key histories get the window plan, so the
     measured 50x-misuse shape (TEMPORAL_PROBE.json) is unreachable without
-    an explicit broadcast=True opt-in."""
+    an explicit broadcast=True opt-in; a keyless history too deep for
+    either plan raises at probe time."""
     from cdc_core_spark.operators.temporal import choose_asof_plan
 
     shallow = spark.createDataFrame(pd.DataFrame(
@@ -426,6 +427,20 @@ def test_asof_auto_plan_choice(spark):
         {"k": [0], "ts": [39.0], "lid": [0]}))
     got = asof_join(left0, deep, ["k"], "ts").toPandas()
     assert got["rv"][0] == 39.0
+    # keyless: the whole right side is ONE history. Within max_history it
+    # broadcasts; deeper, no plan fits (the window plan needs a key), so
+    # the probe raises a keyless-specific error naming the ways out rather
+    # than route to the broadcast guard, whose message points at the
+    # window plan
+    gleft = spark.createDataFrame(pd.DataFrame({"ts": [2.5], "lid": [0]}))
+    gdeep = spark.createDataFrame(pd.DataFrame(
+        {"ts": np.arange(80, dtype="float64"),
+         "rate": np.arange(80, dtype="float64")}))
+    got = asof_join(gleft, gdeep, [], "ts", max_history=128).toPandas()
+    assert got["rate"][0] == 2.0
+    with pytest.raises(ValueError,
+                       match=r"keyless.*coarse bucket key.*range_join"):
+        asof_join(gleft, gdeep, [], "ts")
 
 
 def test_asof_tolerance_boundary_exact_micros(spark):
