@@ -74,6 +74,18 @@ def _footer_stats(path: str, max_cols: tuple[str, ...]) -> tuple[int, int | None
     return (md.num_rows, *maxima)
 
 
+def _manifest_row(epoch: int, partition_id: int, **vals) -> dict:
+    """One commit-manifest row — the exactly-once ledger record per
+    (epoch, storage bucket = partition_id). Counts, wall and write volume
+    default to 0, the (max_op_ts, max_event_seq) watermark to -1."""
+    row = {"checkpoint_epoch": epoch, "partition_id": partition_id,
+           "events_read": 0, "events_applied": 0, "events_error": 0,
+           "max_op_ts": -1, "max_event_seq": -1, "wall_ms": 0,
+           "bytes_written": 0, "files_written": 0}
+    row.update(vals)
+    return row
+
+
 def _delta_footer_stats(root: str, new_files: list[dict]):
     """Per staged ``(epoch, bucket)``: the applied row count, footer
     watermarks, and the staged write volume — the manifest stats a delta
@@ -281,10 +293,7 @@ class CdcEngine:
             # evaluated post-write: the row count rides the write job's
             # observe metrics instead of a separate counting scan
             n = 0 if empty_source else int(obs.get["n"])
-            return [{"checkpoint_epoch": -1, "partition_id": -1, "events_read": n,
-                     "events_applied": n, "events_error": 0, "max_op_ts": -1,
-                     "max_event_seq": -1, "wall_ms": 0,
-                     "bytes_written": 0, "files_written": 0}]
+            return [_manifest_row(-1, -1, events_read=n, events_applied=n)]
 
         self.table.commit_merge(df, list(range(self.n_buckets)), epoch=None,
                                 manifests=manifest,
@@ -467,12 +476,8 @@ class CdcEngine:
                     # epoch) — emit a zero marker row, partition_id=-1 like
                     # the initial-load convention, so committed_epochs()
                     # sees it and resume stays a no-op
-                    rows = [{"checkpoint_epoch": e, "partition_id": -1,
-                             "events_read": 0, "events_applied": 0,
-                             "events_error": 0, "max_op_ts": -1,
-                             "max_event_seq": -1,
-                             "wall_ms": int((time.monotonic() - t0) * 1000),
-                             "bytes_written": 0, "files_written": 0}]
+                    rows = [_manifest_row(
+                        e, -1, wall_ms=int((time.monotonic() - t0) * 1000))]
                 out.extend(rows)
             return out
 
@@ -487,27 +492,25 @@ class CdcEngine:
         for b in sorted(set(read_stats) | set(err_stats)):
             rs = read_stats.get(b, {})
             mts, mseq = rs.get("max_op_ts"), rs.get("max_event_seq")
-            rows.append({
-                "checkpoint_epoch": epoch, "partition_id": b,
-                "events_read": int(rs.get("events_read", 0)),
-                "events_applied": int(rs.get("events_applied", 0)),
-                "events_error": int(err_stats.get(b, 0)),
-                "max_op_ts": -1 if mts is None else int(mts),
-                "max_event_seq": -1 if mseq is None else int(mseq),
-                "wall_ms": wall_ms,
+            rows.append(_manifest_row(
+                epoch, b,
+                events_read=int(rs.get("events_read", 0)),
+                events_applied=int(rs.get("events_applied", 0)),
+                events_error=int(err_stats.get(b, 0)),
+                max_op_ts=-1 if mts is None else int(mts),
+                max_event_seq=-1 if mseq is None else int(mseq),
+                wall_ms=wall_ms,
                 # write-amplification lineage: bytes/files the MOR delta
                 # commit staged for the partition (0 on quarantine-only
                 # buckets and the initial load)
-                "bytes_written": int(rs.get("bytes_written", 0)),
-                "files_written": int(rs.get("files_written", 0)),
-            })
+                bytes_written=int(rs.get("bytes_written", 0)),
+                files_written=int(rs.get("files_written", 0))))
         return rows
 
     # ------------------------------------------------------------------ replay
     def replay(self, events_path: str, source_df: DataFrame | None = None,
                schema_version: str = "1.0", epochs: list[int] | None = None,
-               compact_every: int | None = None,
-               group_commit: bool = True, lease: bool = True,
+               compact_every: int | None = None, lease: bool = True,
                transform=None,
                background_compact: int | None = None,
                refresh_stats: bool = False) -> None:
@@ -568,7 +571,7 @@ class CdcEngine:
             th.start()
             try:
                 self.replay(events_path, source_df, schema_version, epochs,
-                            compact_every, group_commit, lease,
+                            compact_every, lease,
                             transform=transform)
             finally:
                 stop.set()
@@ -586,8 +589,7 @@ class CdcEngine:
             lock = coord.ProcessLock(self.root, owner=self.entity).acquire()
             try:
                 self._replay_locked(events_path, source_df, schema_version,
-                                    epochs, compact_every, group_commit,
-                                    transform=transform,
+                                    epochs, compact_every, transform=transform,
                                     beat=lambda st, ep=None, err=None:
                                     (coord.write_heartbeat(self.root,
                                                            self.entity, st,
@@ -601,8 +603,7 @@ class CdcEngine:
                 lock.release()
         else:
             self._replay_locked(events_path, source_df, schema_version,
-                                epochs, compact_every, group_commit,
-                                transform=transform,
+                                epochs, compact_every, transform=transform,
                                 beat=lambda st, ep=None, err=None: None)
         if refresh_stats:
             self.refresh_stats()
@@ -694,7 +695,7 @@ class CdcEngine:
 
     def _replay_locked(self, events_path: str, source_df: DataFrame | None,
                        schema_version: str, epochs: list[int] | None,
-                       compact_every: int | None, group_commit: bool,
+                       compact_every: int | None,
                        beat, transform=None) -> None:
         if (not self.table.exists()
                 or not self.table.latest_meta().props.get("initial_loaded")):
@@ -727,10 +728,10 @@ class CdcEngine:
         # (apply_epoch_group). A DDL-carrying epoch starts a new group (its
         # DDL must apply before its own and all later data); compact_every
         # caps group length so the compaction cadence — and thus the delta
-        # fold depth bound — is preserved; group_commit=False caps it at 1.
+        # fold depth bound — is preserved.
         groups: list[list[int]] = []
         cur: list[int] = []
-        cap = (compact_every or len(todo)) if group_commit else 1
+        cap = compact_every or len(todo)
         for e in todo:
             if cur and (schema_by_epoch[e] or len(cur) >= cap):
                 groups.append(cur)

@@ -33,9 +33,8 @@ def parquet_codec() -> str:
     with a caller-built SparkSession: a session-level
     ``spark.sql.parquet.compression.codec`` default would silently revert
     engine state to snappy for every user who didn't copy our session
-    helper. ``CDC_PARQUET_CODEC`` overrides (e.g. ``snappy`` for a
-    CPU-starved cluster whose storage is free)."""
-    return os.environ.get("CDC_PARQUET_CODEC", "zstd")
+    helper."""
+    return "zstd"
 
 
 def parquet_zstd_level() -> str:

@@ -39,10 +39,9 @@ SnapshotTable call     Iceberg operation                           notes
 ``create``             ``Catalog.createTable`` + bucket partition  bucketing
                        spec ``bucket(N, repo, path)``              identical
 ``commit_delta``       ``Transaction.newAppend().appendFile(...)`` MOR delta
-                       + snapshot-summary props for the manifest   = Iceberg
-                       rows                                        v2 MOR
-``commit_delta_``      one ``Transaction`` appending all epochs'   same
-``grouped``            files with merged summary props             atomicity
+(group form            + snapshot-summary props for the manifest   = Iceberg
+``commit_delta_        rows; one epoch or a group of epochs is     v2 MOR
+grouped``)             the same single append transaction
 ``commit_merge``       ``newRewrite()/RewriteFiles`` (replace      CoW merge
                        touched-bucket files, carry rest)
 ``commit_metadata``    ``updateSchema().addColumn/renameColumn/``  metadata-
@@ -217,8 +216,7 @@ class SnapshotTable:
     #: list is split into a sidecar manifest-list file (the Iceberg
     #: snapshot→manifest-list→manifest shape, one level deep). Keeps the
     #: per-commit metadata write O(1)-ish instead of O(total files) json in
-    #: one document at 10^6-file scale. Overridable per instance (tests) or
-    #: via CDC_INLINE_FILES_MAX.
+    #: one document at 10^6-file scale. Overridable per instance (tests).
     INLINE_FILES_MAX = 4096
 
     def __init__(self, root: str, ref: str | None = None):
@@ -236,8 +234,7 @@ class SnapshotTable:
         self.ref = ref
         self._fork_cache: int | None = None
         self.data_dir = os.path.join(root, "data")
-        self.inline_files_max = int(
-            os.environ.get("CDC_INLINE_FILES_MAX", self.INLINE_FILES_MAX))
+        self.inline_files_max = self.INLINE_FILES_MAX
         # committed-epochs cache: (snapshot basenames tuple, epoch set);
         # see committed_epochs() for the invalidation contract
         self._epochs_cache: tuple[tuple[str, ...], set[int]] | None = None
@@ -552,7 +549,7 @@ class SnapshotTable:
         # that created it (rollbacks re-add old files — first-seen keeps
         # the original attribution, matching block_deltas)
         seen: set[str] = set()
-        groups: dict[tuple, list[str]] = {}
+        found: list[dict] = []
         snap_paths = self._snapshot_paths()
         for i, p in enumerate(snap_paths):
             s = self._load_snapshot(p)
@@ -570,41 +567,30 @@ class SnapshotTable:
                 seen.add(f["path"])
                 if f["bucket"] != b or skip_maint:
                     continue
-                abs_path = os.path.join(self.root, f["path"])
-                if not os.path.exists(abs_path):
+                if not os.path.exists(os.path.join(self.root, f["path"])):
                     continue  # swept from disk — beyond retention
-                groups.setdefault(
-                    (f["schema_id"], f.get("epoch", s.epoch), s.version),
-                    []).append(abs_path)
+                found.append({**f, "epoch": f.get("epoch", s.epoch),
+                              "version": s.version})
 
         out_names = [f["name"] for f in snap.fields]
-        parts = []
-        for (sid, epoch, version), paths in sorted(groups.items(),
-                                                   key=lambda kv: kv[0][2]):
-            df = _read_group(spark, snap.schemas, sid, paths)
-            df = _normalize(df, snap.fields, snap.aliases)
-            for k in snap.key_cols:
-                df = df.filter(F.col(k) == F.lit(key[k]))
-            parts.append(df.select(
-                *out_names,
-                F.when(F.col("_deleted"), F.lit("D")).otherwise(
-                    F.lit("U")).alias("op"),
-                F.lit(epoch).cast("bigint").alias("epoch"),
-                F.lit(version).cast("bigint").alias("version"),
-                F.col("_op_ts").alias("op_ts"),
-                F.col("_event_seq").alias("event_seq")))
-        if not parts:
+        out = _scan(spark, self.root, snap, found, tags=("epoch", "version"))
+        if out is None:
             # tmap already holds SQL types (probe DDL above)
             ddl_out = ", ".join(
                 [f"{n} {tmap[n]}" for n in out_names]
                 + ["op string", "epoch bigint", "version bigint",
                    "op_ts bigint", "event_seq bigint"])
             return spark.createDataFrame([], schema=ddl_out)
-        out = parts[0]
-        for q in parts[1:]:
-            out = out.unionByName(q)
-        return out.orderBy("version", F.col("epoch").asc_nulls_first(),
-                           "op_ts", "event_seq")
+        for k in snap.key_cols:
+            out = out.filter(F.col(k) == F.lit(key[k]))
+        return out.select(
+            *out_names,
+            F.when(F.col("_deleted"), F.lit("D")).otherwise(
+                F.lit("U")).alias("op"),
+            "epoch", "version",
+            F.col("_op_ts").alias("op_ts"),
+            F.col("_event_seq").alias("event_seq")).orderBy(
+            "version", F.col("epoch").asc_nulls_first(), "op_ts", "event_seq")
 
     def inspect(self, spark: SparkSession, kind: str = "history") -> DataFrame:
         """Metadata tables as DataFrames — the Iceberg inspection surface
@@ -753,19 +739,8 @@ class SnapshotTable:
                 + ([f"{c} {t}" for c, t in INTERNAL_COLS.items()] if with_internal_cols else [])
             )
             return spark.createDataFrame([], schema=ddl)
-        parts = []
-        by_schema: dict[str, list[str]] = {}
-        has_delta = False
-        for f in files:
-            by_schema.setdefault(f["schema_id"], []).append(os.path.join(self.root, f["path"]))
-            has_delta = has_delta or f.get("kind", "base") == "delta"
-        for sid, paths in by_schema.items():
-            df = _read_group(spark, snap.schemas, sid, paths)
-            parts.append(_normalize(df, fields, snap.aliases))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if has_delta:
+        out = _scan(spark, self.root, snap, files, fields=fields)
+        if any(f.get("kind", "base") == "delta" for f in files):
             from cdc_core_spark.lww import lww_reduce
             payload = [f["name"] for f in fields
                        if f["name"] not in snap.key_cols]
@@ -780,16 +755,13 @@ class SnapshotTable:
                      new_fields: list[dict] | None = None,
                      new_aliases: dict | None = None,
                      props: dict | None = None,
-                     pre_partitioned: bool = False,
                      n_buckets: int | None = None,
                      maintenance: bool = False,
                      sort_cols: list[str] | None = None,
                      base: Snapshot | None = None) -> Snapshot:
         """Copy-on-write commit: stage new files for ``touched_buckets`` from
         ``df`` (must carry ``_bucket``), carry all other buckets forward by
-        reference, publish atomically. ``pre_partitioned`` skips the
-        by-bucket repartition when the caller already shuffled by ``_bucket``
-        (avoids a redundant full-table exchange). ``manifests`` may be a
+        reference, publish atomically. ``manifests`` may be a
         list, or a zero-arg callable evaluated after the stage write and
         before the publish (same contract as ``commit_delta`` — lets callers
         derive manifest stats from ``df.observe`` metrics of the write job
@@ -850,8 +822,7 @@ class SnapshotTable:
         new_files: list[dict] = []
         if touched_buckets:
             new_files = self._stage_files(df, stage_abs, ["_bucket"],
-                                          len(touched_buckets),
-                                          pre_partitioned, sid, None,
+                                          len(touched_buckets), sid, None,
                                           sort_cols=sort_cols, snap=prev)
         touched = set(touched_buckets)
         manifest_rows = manifests() if callable(manifests) else manifests
@@ -933,8 +904,7 @@ class SnapshotTable:
         return self._occ_publish(prev, stage_abs, rebuild)
 
     def _stage_files(self, df: DataFrame, stage_abs: str,
-                     partition_cols: list[str], n_partitions: int,
-                     pre_partitioned: bool, sid: str,
+                     partition_cols: list[str], n_partitions: int, sid: str,
                      kind: str | None,
                      sort_cols: list[str] | None = None,
                      snap: "Snapshot | None" = None) -> list[dict]:
@@ -957,8 +927,7 @@ class SnapshotTable:
         ``partitionBy`` writer's required ordering is already satisfied —
         otherwise FileFormatWriter injects its own (non-stable) sort on the
         partition columns alone and destroys the key clustering."""
-        staged = df if pre_partitioned else df.repartition(
-            max(n_partitions, 1), *partition_cols)
+        staged = df.repartition(max(n_partitions, 1), *partition_cols)
         if sort_cols:
             # entries may be names OR computed Column expressions (the
             # zorder path sorts by an interleaved z-value that never
@@ -1099,9 +1068,18 @@ class SnapshotTable:
                     "concurrently — duplicate writer on one table")
 
     def commit_delta(self, df: DataFrame, epoch: int | None,
-                     manifests,
-                     pre_partitioned: bool = False,
-                     base: Snapshot | None = None) -> Snapshot:
+                     manifests, base: Snapshot | None = None) -> Snapshot:
+        """Merge-on-read commit of ONE epoch (or of none: ``epoch=None``):
+        a group of one through ``commit_delta_grouped``, the single
+        delta-staging body. ``df`` holds per-key LWW winners carrying
+        ``_bucket`` + internal cols; without a ``checkpoint_epoch`` column
+        they stage as one ``_bucket=<b>`` layer."""
+        return self.commit_delta_grouped(
+            df, [] if epoch is None else [epoch], manifests, base=base)
+
+    def commit_delta_grouped(self, df: DataFrame, epochs: list[int],
+                             manifests,
+                             base: Snapshot | None = None) -> Snapshot:
         """Merge-on-read commit: stage ``df`` (per-key LWW winners carrying
         ``_bucket`` + internal cols) as DELTA files and keep every existing
         file — per-epoch write cost is O(epoch winners), not O(table). The
@@ -1111,77 +1089,46 @@ class SnapshotTable:
         table per batch; CopyOnWrite via ``commit_merge`` remains for
         compaction and maintenance).
 
+        GROUP COMMIT: the winners of SEVERAL epochs stage in ONE write job
+        and publish as a single atomic snapshot. When ``df`` carries a
+        ``checkpoint_epoch`` column (restricted to ``epochs``) the layout
+        is ``checkpoint_epoch=<e>/_bucket=<b>``, so every epoch keeps its
+        own delta layer; otherwise it is ``_bucket=<b>``. Each Spark job
+        carries a constant planning/scheduling cost that doesn't
+        parallelize; replaying a deep backlog of small epochs
+        one-job-per-epoch pays it per epoch (measured ~1.2s/epoch at
+        local[4] on the 20M-event fixture — the dominant scaling-efficiency
+        loss). Grouping DDL-free epoch runs into one job amortizes it, the
+        same way the reference consumer acks a whole poll batch at once
+        (``receiver.commit()`` per batch, not per message,
+        MessageProcessor.java:195-214). A crash before publish leaves every
+        epoch of the group uncommitted and the rerun re-applies the group
+        idempotently; ``committed_epochs`` reports all epochs via the
+        per-epoch manifest rows.
+
         ``manifests`` may be a list, or a callable evaluated after the stage
         write and before the snapshot publish — called with the staged file
         list (each ``{path, bucket, ...}``, paths relative to the table
         root) so the caller can derive manifest stats from ``df.observe``
         metrics or the staged parquet footers of the very same job, making
-        an epoch cost exactly ONE Spark job.
+        a commit cost exactly ONE Spark job.
 
         Deltas are purely ADDITIVE, so a commit that loses the version CAS
         to a concurrent writer rebases automatically (new head's files +
         these delta files) — ingest never fails because maintenance or
         another entity's writer got there first. The only conflicts are
         structural: a concurrent re-bucket (these files' bucket ids are
-        stale) or a duplicate writer committing the same epoch."""
+        stale) or a duplicate writer committing one of the same epochs."""
         prev = base if base is not None else self.latest()
         sid = _sid_for(prev, prev.fields)
         stage_abs = os.path.join(self.root, "data",
                                  f"delta-{uuid.uuid4().hex[:12]}")
-        new_files = self._stage_files(df, stage_abs, ["_bucket"],
-                                      prev.n_buckets // 2, pre_partitioned,
-                                      sid, "delta", snap=prev)
-        manifest_rows = manifests(new_files) if callable(manifests) else manifests
-        our_epochs = [epoch] if epoch is not None else []
-
-        def rebuild(b: Snapshot) -> Snapshot:
-            if b is not prev:
-                self._rebase_guard(prev, b, our_epochs, "delta rebase")
-            schemas_b = dict(b.schemas)
-            schemas_b.setdefault(sid, prev.fields)
-            return Snapshot(version=b.version + 1, epoch=epoch,
-                            n_buckets=b.n_buckets, key_cols=b.key_cols,
-                            fields=b.fields, aliases=b.aliases,
-                            schemas=schemas_b, files=b.files + new_files,
-                            manifests=manifest_rows, parent=b.version,
-                            props=b.props)
-
-        return self._occ_publish(prev, stage_abs, rebuild)
-
-    def commit_delta_grouped(self, df: DataFrame, epochs: list[int],
-                             manifests,
-                             pre_partitioned: bool = False,
-                             base: Snapshot | None = None) -> Snapshot:
-        """GROUP-COMMIT merge-on-read: stage the winners of SEVERAL epochs in
-        ONE write job — partitioned ``checkpoint_epoch=<e>/_bucket=<b>`` so
-        every epoch keeps its own delta layer — and publish a single atomic
-        snapshot covering the whole group.
-
-        Why: each Spark job carries a constant planning/scheduling cost that
-        doesn't parallelize; replaying a deep backlog of small epochs
-        one-job-per-epoch pays it per epoch (measured ~1.2s/epoch at
-        local[4] on the 20M-event fixture — the dominant scaling-efficiency
-        loss). Grouping DDL-free epoch runs into one job amortizes it, the
-        same way the reference consumer acks a whole poll batch at once
-        (``receiver.commit()`` per batch, not per message,
-        MessageProcessor.java:195-214).
-
-        Atomicity/resume: the group commits as one snapshot; a crash before
-        publish leaves every epoch of the group uncommitted and the rerun
-        re-applies the group idempotently. ``committed_epochs`` reports all
-        epochs via the per-epoch manifest rows. ``df`` must carry a
-        ``checkpoint_epoch`` column restricted to ``epochs``.
-
-        Additive like ``commit_delta``: losing the version CAS rebases the
-        whole group over the new head (same structural conflicts)."""
-        prev = base if base is not None else self.latest()
-        sid = _sid_for(prev, prev.fields)
-        stage_abs = os.path.join(self.root, "data",
-                                 f"delta-{uuid.uuid4().hex[:12]}")
+        partition_cols = (["checkpoint_epoch", "_bucket"]
+                          if "checkpoint_epoch" in df.columns else ["_bucket"])
         new_files = self._stage_files(
-            df, stage_abs, ["checkpoint_epoch", "_bucket"],
+            df, stage_abs, partition_cols,
             max(prev.n_buckets // 2, 1) * max(len(epochs), 1),
-            pre_partitioned, sid, "delta", snap=prev)
+            sid, "delta", snap=prev)
         manifest_rows = manifests(new_files) if callable(manifests) else manifests
 
         def rebuild(b: Snapshot) -> Snapshot:
@@ -2117,7 +2064,7 @@ class SnapshotTable:
                 f"from_version {from_version} > to_version {to_snap.version}")
         prev_paths = {f["path"] for f in self.snapshot(from_version).files}
         change_cols = [("_change_version", "bigint"), ("_change_op", "string")]
-        parts: list[DataFrame] = []
+        added_all: list[dict] = []
         for v in range(from_version + 1, to_snap.version + 1):
             doc_path = self._doc_path(v)
             if not os.path.exists(doc_path):
@@ -2176,26 +2123,15 @@ class SnapshotTable:
                         " on_logical_rewrite='skip' if the consumer re-reads"
                         " full state across this commit.")
                 continue
-            if not added:
-                continue
-            by_schema: dict[str, list[str]] = {}
-            for f in added:
-                by_schema.setdefault(f["schema_id"], []).append(
-                    os.path.join(self.root, f["path"]))
-            for sid, ps in by_schema.items():
-                df = _normalize(_read_group(spark, to_snap.schemas, sid, ps),
-                                to_snap.fields, to_snap.aliases)
-                parts.append(df.withColumn("_change_version",
-                                           F.lit(v).cast("bigint")))
-        if not parts:
+            added_all.extend({**f, "_change_version": v} for f in added)
+        out = _scan(spark, self.root, to_snap, added_all,
+                    tags=("_change_version",))
+        if out is None:
             ddl = ", ".join(
                 [f'{f["name"]} {sql_type(f["type"])}' for f in to_snap.fields]
                 + [f"{c} {t}" for c, t in INTERNAL_COLS.items()]
                 + [f"{c} {t}" for c, t in change_cols])
             return spark.createDataFrame([], schema=ddl)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
         return out.withColumn(
             "_change_op",
             F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")))
@@ -2336,6 +2272,33 @@ def _read_group(spark: SparkSession, schemas: dict, sid: str,
         [f'{f["name"]} {sql_type(f["type"])}' for f in flds]
         + [f"{c} {t}" for c, t in INTERNAL_COLS.items()])
     return spark.read.schema(ddl).parquet(*paths)
+
+
+def _scan(spark: SparkSession, root: str, snap: Snapshot, files: list[dict],
+          fields: list[dict] | None = None,
+          tags: tuple[str, ...] = ()) -> DataFrame | None:
+    """THE file-scan body of every table read: group ``files`` (records
+    with table-relative ``path`` and ``schema_id``) by write-time schema,
+    read each group with its stored schema (``_read_group``), normalize it
+    onto ``fields`` (default: the snapshot's full schema) and union the
+    groups. Each record key named in ``tags`` also splits the groups and
+    comes back as a bigint literal column of that name (the changelog's
+    version, the key history's epoch and version). ``None`` when
+    ``files`` is empty, so each caller builds its own typed empty frame."""
+    groups: dict[tuple, list[str]] = {}
+    for f in files:
+        groups.setdefault((f["schema_id"], *(f[t] for t in tags)),
+                          []).append(os.path.join(root, f["path"]))
+    out = None
+    for (sid, *vals), paths in groups.items():
+        df = _normalize(_read_group(spark, snap.schemas, sid, paths),
+                        fields if fields is not None else snap.fields,
+                        snap.aliases)
+        if tags:
+            df = df.select("*", *[F.lit(v).cast("bigint").alias(t)
+                                  for t, v in zip(tags, vals)])
+        out = df if out is None else out.unionByName(df)
+    return out
 
 
 def _normalize(df: DataFrame, fields: list[dict], aliases: dict) -> DataFrame:

@@ -27,12 +27,13 @@ Contract parity with ``lake.SnapshotTable``:
   partition overwrite would silently delete the other. Identity-partitioning
   the engine's bucket makes ``overwritePartitions`` replace exactly the
   touched-bucket set, byte-for-byte the SnapshotTable rule.
-* **commit_delta / commit_delta_grouped** → ``writeTo(...).append()`` with
-  ``snapshot-property.cdc.epoch`` / ``.cdc.manifests`` summary props — the
-  exactly-once ledger rides Iceberg snapshot summaries exactly as it rides
-  our snapshot JSON docs. Group commits carry every epoch's manifest rows
-  in one snapshot; ``committed_epochs`` folds per-row ``checkpoint_epoch``
-  exactly like ``SnapshotTable._fold_epochs``.
+* **commit_delta_grouped** (and ``commit_delta``, its group of one) →
+  ``writeTo(...).append()`` with ``snapshot-property.cdc.epoch`` /
+  ``.cdc.manifests`` summary props — the exactly-once ledger rides Iceberg
+  snapshot summaries exactly as it rides our snapshot JSON docs. A group
+  commit carries every epoch's manifest rows in one snapshot;
+  ``committed_epochs`` folds per-row ``checkpoint_epoch`` exactly like
+  ``SnapshotTable._fold_epochs``.
 * **commit_merge** → ``overwritePartitions()`` (the bucket-pruned
   copy-on-write: only ``_bucket`` partitions present in ``df`` are
   replaced, the rest carried by reference).
@@ -280,25 +281,23 @@ class IcebergSnapshotTable:
         return int(row[0]["snapshot_id"]) if row else None
 
     def commit_delta(self, df: DataFrame, epoch: int | None,
-                     manifests, pre_partitioned: bool = False,
-                     base=None) -> _IcebergCommit:
-        """MOR delta: one atomic append snapshot, epoch + manifest rows in
-        the snapshot summary (Transaction.newAppend + summary props).
-        ``pre_partitioned`` is accepted for signature parity; Iceberg's
-        fanout writer makes the pre-shuffle an optimization, not a
-        requirement. ``base`` (the lake's optimistic-concurrency pin) is
-        accepted for parity and unused: Iceberg's commit loop retries
-        appends against the fresh head natively (``commit.retry.*``), the
-        exact behavior ``SnapshotTable``'s delta rebase reimplements."""
-        self._writer(df, epoch, manifests).append()
-        return _IcebergCommit(self._last_snapshot_id(), epoch, manifests)
+                     manifests, base=None) -> _IcebergCommit:
+        """MOR delta of one epoch: a group of one through
+        ``commit_delta_grouped``, as in ``SnapshotTable``."""
+        return self.commit_delta_grouped(
+            df, [] if epoch is None else [epoch], manifests, base=base)
 
     def commit_delta_grouped(self, df: DataFrame, epochs: list[int],
-                             manifests, pre_partitioned: bool = False,
-                             base=None) -> _IcebergCommit:
-        """Group-commit MOR: several epochs' winners in ONE append snapshot;
+                             manifests, base=None) -> _IcebergCommit:
+        """MOR delta: one atomic append snapshot for one epoch or a group
+        of them, with the last epoch + every epoch's manifest rows in the
+        snapshot summary (Transaction.newAppend + summary props);
         per-epoch committedness is recovered from the manifest rows'
-        ``checkpoint_epoch`` (same fold rule as SnapshotTable)."""
+        ``checkpoint_epoch`` (same fold rule as SnapshotTable). ``base``
+        (the lake's optimistic-concurrency pin) is accepted for parity and
+        unused: Iceberg's commit loop retries appends against the fresh
+        head natively (``commit.retry.*``), the exact behavior
+        ``SnapshotTable``'s delta rebase reimplements."""
         last = epochs[-1] if epochs else None
         self._writer(df, last, manifests).append()
         return _IcebergCommit(self._last_snapshot_id(), last, manifests)
@@ -308,7 +307,6 @@ class IcebergSnapshotTable:
                      new_fields: list[dict] | None = None,
                      new_aliases: dict | None = None,
                      props: dict | None = None,
-                     pre_partitioned: bool = False,
                      n_buckets: int | None = None,
                      maintenance: bool = False,
                      sort_cols: list[str] | None = None,

@@ -53,7 +53,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_core_spark.lake import (INTERNAL_COLS, Snapshot, SnapshotTable,
+from cdc_core_spark.lake import (Snapshot, SnapshotTable, _normalize,
                                  bucket_expr, sql_type)
 
 _SUPPORTED = ("count", "sum", "avg", "min", "max")
@@ -327,7 +327,9 @@ class IncrementalRollup:
             .distinct().collect()})  # O(n_buckets) driver metadata
         pre_all = self.source.read(spark, buckets=pre_bkts, snap=base_snap,
                                    with_internal_cols=True)
-        pre_all = self._normalize_to(pre_all, to_snap, with_internal=True)
+        # lift onto the to-version schema: alias renames, columns added
+        # since base_v as NULL, widening casts
+        pre_all = _normalize(pre_all, to_snap.fields, to_snap.aliases)
         changed_keys = winners.select(*src_keys).distinct()
         pre_all = (pre_all.join(changed_keys, on=src_keys, how="inner")
                    .localCheckpoint(eager=False))
@@ -354,26 +356,6 @@ class IncrementalRollup:
             *self._delta_aggs(self._stored_types(roll)))
 
         return self._merge_delta(spark, delta, to_snap, to_v, roll)
-
-    def _normalize_to(self, df: DataFrame, to_snap: Snapshot,
-                      with_internal: bool = False) -> DataFrame:
-        """Lift a base-version frame to the to-version logical schema:
-        apply renames recorded in the to-version alias map (old → new),
-        add columns that did not exist yet as NULL, cast widened types."""
-        renames = {old: new for old, new in to_snap.aliases.items()
-                   if old in df.columns and old != new
-                   and new not in df.columns}
-        if renames:
-            df = df.withColumnsRenamed(renames)
-        for f in to_snap.fields:
-            t = sql_type(f["type"])
-            if f["name"] not in df.columns:
-                df = df.withColumn(f["name"], F.lit(None).cast(t))
-            else:
-                df = df.withColumn(f["name"], F.col(f["name"]).cast(t))
-        keep = to_snap.field_names() + (list(INTERNAL_COLS)
-                                        if with_internal else [])
-        return df.select(*keep)
 
     def _merge_delta(self, spark: SparkSession, delta: DataFrame,
                      to_snap: Snapshot, to_v: int, roll: Snapshot) -> Snapshot:

@@ -44,7 +44,7 @@ def route_replay(
 
     ``engines`` maps target-entity name → its ``CdcEngine``; ``sources``
     optionally maps the same names to initial-load DataFrames. Extra
-    ``replay_kw`` (``compact_every``, ``group_commit``, ``lease``, a caller
+    ``replay_kw`` (``compact_every``, ``lease``, a caller
     ``transform`` — composed AFTER the routing filter) pass through to each
     engine's ``replay``.
     """

@@ -11,9 +11,10 @@ engine's per-epoch costs must stay FLAT in backlog depth:
   snapshot publish each, so job count and snapshot-log growth follow DDL
   boundaries (4 episodes here), not epoch count — 32x more epochs must
   not mean 32x more jobs;
-* per-epoch mode (group_commit=False) quantifies the fixed per-job cost
-  group-commit removes, and its per-epoch manifest walls expose any
-  superlinear driver-side metadata growth (first-N vs last-N means);
+* per-epoch mode (one ``apply_epoch`` commit per epoch, the streaming
+  path) quantifies the fixed per-job cost group-commit removes, and its
+  per-epoch manifest walls expose any superlinear driver-side metadata
+  growth (first-N vs last-N means);
 * periodic incremental compaction (compact_every) bounds the MOR fold
   depth so the final read does not degrade with backlog depth;
 * the final state CRC is IDENTICAL across every variant — re-batching
@@ -68,8 +69,25 @@ def remap_epochs(src_events: str, out_dir: str, n_epochs: int) -> None:
         f.write("ok")
 
 
+def apply_per_epoch(eng, events_path: str, src,
+                    compact_every: int | None = None) -> None:
+    """One ``apply_epoch`` commit per epoch, in epoch order, with an
+    incremental compaction every ``compact_every`` applied epochs (the
+    cadence ``replay(compact_every=)`` keeps)."""
+    from pyspark.sql import functions as F
+    from cdc_core_spark.engine import _list_epochs
+
+    eng.initial_load(src)
+    events = eng.spark.read.parquet(events_path)
+    for i, e in enumerate(_list_epochs(events_path), start=1):
+        eng.apply_epoch(events.filter(F.col("checkpoint_epoch") == e), e)
+        if compact_every and i % compact_every == 0:
+            eng.compact(min_delta_files=1)
+
+
 def run_variant(spark, events_path: str, src, label: str,
-                **replay_kw) -> dict:
+                per_epoch: bool = False,
+                compact_every: int | None = None) -> dict:
     from cdc_core_spark.engine import CdcEngine
     from cdc_core_spark.oracle import state_crc
     from cdc_core_spark.registry import SchemaRegistry
@@ -80,7 +98,10 @@ def run_variant(spark, events_path: str, src, label: str,
     shutil.rmtree(root, ignore_errors=True)
     eng = CdcEngine(spark, root, reg, n_buckets=32)
     t0 = time.monotonic()
-    eng.replay(events_path, source_df=src, **replay_kw)
+    if per_epoch:
+        apply_per_epoch(eng, events_path, src, compact_every)
+    else:
+        eng.replay(events_path, source_df=src, compact_every=compact_every)
     t1 = time.monotonic()
     final = eng.read_final_with_sha()
     crc = state_crc(final)
@@ -135,10 +156,10 @@ def main() -> None:
         run_variant(spark, deep_events, src,
                     f"epochs{n_epochs}_group_commit"),
         run_variant(spark, deep_events, src,
-                    f"epochs{n_epochs}_per_epoch", group_commit=False),
+                    f"epochs{n_epochs}_per_epoch", per_epoch=True),
         run_variant(spark, deep_events, src,
                     f"epochs{n_epochs}_per_epoch_compact_every32",
-                    group_commit=False, compact_every=32),
+                    per_epoch=True, compact_every=32),
     ]
     crcs = {v["state_crc"] for v in variants}
     assert len(crcs) == 1, f"re-batching changed the result! {crcs}"

@@ -248,8 +248,7 @@ def test_engine_matches_model_under_random_schedule(spark, registry, tmp_path, s
     chunks = [epochs[:cut[0]], epochs[cut[0]:cut[1]], epochs[cut[1]:]]
 
     for chunk in chunks:
-        eng.replay(events_path, source_df=src_df, epochs=chunk,
-                   group_commit=bool(rng.integers(0, 2)), lease=False)
+        eng.replay(events_path, source_df=src_df, epochs=chunk, lease=False)
         act = rng.integers(0, 5)
         if act == 0:   # redelivery of the whole chunk → exactly-once noop
             eng.replay(events_path, source_df=src_df, epochs=chunk, lease=False)

@@ -1,8 +1,12 @@
 """Outbound mail sink: MIME composition + partition-wise SMTP delivery
 against an in-process RFC-5321 server (no broker in the sandbox — the
 server speaks the real wire protocol, so smtplib's full client path is
-exercised end-to-end including multi-connection parallel delivery and
-per-recipient refusals)."""
+exercised end-to-end including multi-connection parallel delivery,
+per-recipient refusals and a relay that drops the connection).
+
+The server's behaviour is keyed by recipient: ``reject@`` gets a
+permanent 550, ``busy@`` a transient 451, and ``drop@`` makes the relay
+close the socket without replying."""
 
 from __future__ import annotations
 
@@ -36,6 +40,10 @@ class _SmtpHandler(socketserver.StreamRequestHandler):
                 addr = cmd.split(":", 1)[1].strip().strip("<>")
                 if addr.startswith("reject@"):
                     self.wfile.write(b"550 mailbox unavailable\r\n")
+                elif addr.startswith("busy@"):
+                    self.wfile.write(b"451 try again later\r\n")
+                elif addr.startswith("drop@"):
+                    return          # hang up mid-transaction
                 else:
                     rcpts.append(addr)
                     self.wfile.write(b"250 ok\r\n")
@@ -72,12 +80,16 @@ def smtp_server():
     srv.server_close()
 
 
-def _outbox(spark, n=6):
+def _outbox(spark, n=6, special=None):
+    """``n`` messages to ``user<i>@x.test``, except the ids in ``special``
+    (id → address; default: id 2 goes to ``reject@``)."""
+    special = {2: "reject@x.test"} if special is None else special
+    to = F.concat(F.lit("user"), F.col("id"), F.lit("@x.test"))
+    for i, addr in special.items():
+        to = F.when(F.col("id") == i, F.lit(addr)).otherwise(to)
     return spark.range(n).select(
         F.concat(F.lit("c"), F.col("id")).alias("cid"),
-        F.when(F.col("id") == 2, F.lit("reject@x.test"))
-         .otherwise(F.concat(F.lit("user"), F.col("id"),
-                             F.lit("@x.test"))).alias("to"),
+        to.alias("to"),
         F.concat(F.lit("subject "), F.col("id"),
                  F.lit(" — naïve ünïcode")).alias("subj"),
         F.concat(F.lit("body of message "), F.col("id")).alias("body"))
@@ -101,18 +113,22 @@ def test_render_messages_valid_mime(spark):
 
 def test_smtp_send_receipts_and_delivery(spark, smtp_server):
     host, port = smtp_server.server_address
-    msgs = render_messages(_outbox(spark), to_col="to", subject_col="subj",
+    outbox = _outbox(spark, n=7,
+                     special={2: "reject@x.test", 6: "busy@x.test"})
+    msgs = render_messages(outbox, to_col="to", subject_col="subj",
                            body_col="body", from_addr="eng@cdc.test",
                            correlation_col="cid")
     # 2 partitions = 2 concurrent SMTP connections (the pooled shape)
     receipts = smtp_send(msgs.repartition(2), host, port).collect()
     by_cid = {r["correlation_id"]: r for r in receipts}
-    assert len(receipts) == 6
+    assert len(receipts) == 7
     assert not by_cid["c2"]["ok"] and by_cid["c2"]["smtp_code"] == 550
+    # a transient refusal is a receipt too, with the relay's own code
+    assert not by_cid["c6"]["ok"] and by_cid["c6"]["smtp_code"] == 451
     assert all(by_cid[f"c{i}"]["ok"] for i in (0, 1, 3, 4, 5))
     with smtp_server.lock:
         inbox = list(smtp_server.inbox)
-    assert len(inbox) == 5                      # refused one never DATA'd
+    assert len(inbox) == 5                      # refused ones never DATA'd
     tos = sorted(r for _, rs, _ in inbox for r in rs)
     assert tos == [f"user{i}@x.test" for i in (0, 1, 3, 4, 5)]
     # the delivered bytes parse back to the composed message
@@ -134,3 +150,20 @@ def test_smtp_send_relay_down_raises(spark):
     with pytest.raises(Exception, match="ConnectionRefusedError"):
         smtp_send(msgs.coalesce(1), "127.0.0.1", port,
                   timeout_sec=5).collect()
+
+
+def test_smtp_send_relay_drop_raises(spark, smtp_server):
+    """A relay that drops the connection AFTER accepting a message is a
+    connection-level failure: the send action raises, it does not return
+    receipts for the messages that happened to get through."""
+    host, port = smtp_server.server_address
+    msgs = render_messages(_outbox(spark, n=3, special={1: "drop@x.test"}),
+                           to_col="to", subject_col="subj", body_col="body",
+                           from_addr="eng@cdc.test", correlation_col="cid")
+    with pytest.raises(Exception, match="SMTPServerDisconnected"):
+        smtp_send(msgs.coalesce(1), host, port, timeout_sec=5).collect()
+    with smtp_server.lock:
+        inbox = list(smtp_server.inbox)
+    # the relay had accepted c0 before it hung up on c1 (a task retry, if
+    # the session allows one, re-sends it: the documented at-least-once)
+    assert inbox and all(rs == ["user0@x.test"] for _, rs, _ in inbox)

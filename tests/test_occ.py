@@ -48,11 +48,24 @@ def _delta_df(spark, rows, op_ts):
             .withColumn("_bucket", bucket_expr(["k"], NB)))
 
 
-def _commit(spark, t, rows, op_ts, epoch, base=None):
-    return t.commit_delta(_delta_df(spark, rows, op_ts), epoch=epoch,
-                          manifests=[{"checkpoint_epoch": epoch,
-                                      "partition_id": 0, "n_events": len(rows)}],
-                          base=base)
+def _commit(spark, t, rows, op_ts, epoch, base=None,
+            entry="commit_delta"):
+    """One delta commit of ``rows`` as ``epoch``, through ``commit_delta``
+    or — with a ``checkpoint_epoch`` column, as the engine's group commit
+    stages it — through ``commit_delta_grouped`` as a group of one."""
+    df = _delta_df(spark, rows, op_ts)
+    manifests = [{"checkpoint_epoch": epoch, "partition_id": 0,
+                  "n_events": len(rows)}]
+    if entry == "commit_delta_grouped":
+        return t.commit_delta_grouped(
+            df.withColumn("checkpoint_epoch", F.lit(epoch)), [epoch],
+            manifests, base=base)
+    return t.commit_delta(df, epoch=epoch, manifests=manifests, base=base)
+
+
+#: both delta-commit entry points must keep the same rebase rules
+DELTA_ENTRIES = pytest.mark.parametrize(
+    "entry", ["commit_delta", "commit_delta_grouped"])
 
 
 def _state(spark, t) -> dict:
@@ -69,18 +82,26 @@ def _referenced_stages(t) -> set:
     return {f["path"].split("/")[1] for f in t.latest().files}
 
 
-def test_delta_rebases_over_concurrent_delta(spark, tmp_path):
+@DELTA_ENTRIES
+def test_delta_rebases_over_concurrent_delta(spark, tmp_path, entry):
     t1, t2 = _mk(tmp_path), SnapshotTable(str(tmp_path))
     _commit(spark, t1, [(1, 10, False), (2, 20, False)], 100, epoch=0)
 
     base = t1.latest()                       # victim loads head...
     _commit(spark, t2, [(3, 30, False)], 200, epoch=1)   # ...interloper lands
-    snap = _commit(spark, t1, [(1, 11, False)], 300, epoch=2, base=base)
+    snap = _commit(spark, t1, [(1, 11, False)], 300, epoch=2, base=base,
+                   entry=entry)
 
     # the rebased snapshot parents the INTERLOPER's version, not base's
     assert snap.parent == base.version + 1
     assert snap.version == base.version + 2
     assert t1.committed_epochs() == {0, 1, 2}
+    # the staged layout follows the frame: an epoch layer only when it
+    # carries checkpoint_epoch
+    mid = {f["path"] for f in t1.snapshot(base.version + 1).files}
+    ours = [f for f in snap.files if f["path"] not in mid]
+    assert ours and all(f.get("epoch") == (
+        2 if entry == "commit_delta_grouped" else None) for f in ours)
     # state equals serial application of all three epochs
     assert _state(spark, t1) == {1: 11, 2: 20, 3: 30}
 
@@ -204,7 +225,8 @@ def test_rebucket_conflicts_with_any_concurrent_commit(spark, tmp_path):
     assert _state(spark, t2)[9] == 90   # interloper survived
 
 
-def test_duplicate_epoch_conflicts(spark, tmp_path):
+@DELTA_ENTRIES
+def test_duplicate_epoch_conflicts(spark, tmp_path, entry):
     """Two lease-less writers applying the SAME epoch: the CAS loser must
     refuse to rebase (it would double-apply the epoch)."""
     t1, t2 = _mk(tmp_path), SnapshotTable(str(tmp_path))
@@ -212,7 +234,8 @@ def test_duplicate_epoch_conflicts(spark, tmp_path):
     base = t1.latest()
     _commit(spark, t2, [(2, 20, False)], 200, epoch=1)
     with pytest.raises(CommitConflictError, match="epoch"):
-        _commit(spark, t1, [(2, 20, False)], 200, epoch=1, base=base)
+        _commit(spark, t1, [(2, 20, False)], 200, epoch=1, base=base,
+                entry=entry)
     assert t1.committed_epochs() == {0, 1}
     assert _stage_dirs(tmp_path) == _referenced_stages(t1)
 
