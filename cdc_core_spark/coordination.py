@@ -16,9 +16,10 @@ can never both commit the same snapshot version. The lease below is
 therefore an EFFICIENCY device (a second driver fails fast instead of
 computing a doomed commit) plus an ops surface (who owns the table, since
 when), which is exactly what remains of leader election once commits are
-CAS-atomic. On a POSIX/NFS/object-store-with-preconditions filesystem the
-atomic primitive is ``O_CREAT | O_EXCL``; swapping in a ZK recipe keeps the
-same API.
+CAS-atomic. The lease doc is published through the same exclusive
+hard-link CAS the snapshot log uses (``fsutil.publish_local(...,
+exclusive=True)``), so the lock file is either absent or a complete,
+fsynced doc; swapping in a ZK recipe keeps the same API.
 
 Heartbeats are one tiny driver-side JSON write per epoch group — noise even
 at 10^10-event scale (epochs are seconds to minutes of cluster work each).
@@ -32,14 +33,7 @@ import socket
 import time
 import uuid
 
-from cdc_core_spark.fsutil import _atomic_write_text_local
-
-
-def _atomic_write_json(path: str, doc, exclusive: bool = False) -> None:
-    """Durable JSON publish: ``json.dumps`` through the one local
-    durable-write primitive (``fsutil._atomic_write_text_local`` — fsyncs,
-    hidden temp name, debris cleanup, ``exclusive`` link-CAS)."""
-    _atomic_write_text_local(path, json.dumps(doc), exclusive=exclusive)
+from cdc_core_spark import fsutil
 
 
 # --------------------------------------------------------------- heartbeat
@@ -53,7 +47,8 @@ def write_heartbeat(root: str, name: str, state: str,
     doc = {"name": name, "state": state, "epoch": epoch, "error": error,
            "pid": os.getpid(), "host": socket.gethostname(),
            "timestamp_ms": int(time.time() * 1000)}
-    _atomic_write_json(os.path.join(root, "_heartbeat", f"{name}.json"), doc)
+    fsutil._atomic_write_json(
+        os.path.join(root, "_heartbeat", f"{name}.json"), doc)
     return doc
 
 
@@ -87,8 +82,9 @@ class LockHeldError(RuntimeError):
 class ProcessLock:
     """Single-writer lease over a table root (DistributedLock analog).
 
-    ``O_CREAT | O_EXCL`` makes lock-file creation atomic; the file carries
-    owner identity and a TTL so a crashed holder's lease can be broken
+    The lease doc is published complete with an exclusive CAS (one
+    acquirer wins, the rest see ``FileExistsError``); it carries owner
+    identity and a TTL so a crashed holder's lease can be broken
     (``steal_stale=True``) once it stops renewing — the same liveness-based
     takeover a ZK ephemeral node gives, without requiring a coordinator.
     Correctness does NOT depend on this lock (see module docstring): the
@@ -117,10 +113,12 @@ class ProcessLock:
             return None  # racing release/steal — treat as free
 
     def acquire(self) -> "ProcessLock":
-        os.makedirs(os.path.dirname(self.path), exist_ok=True)
         for attempt in (0, 1):
+            self._token = uuid.uuid4().hex
             try:
-                fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                fsutil._atomic_write_json(
+                    self.path, self._doc(acquired_ms=int(time.time() * 1000)),
+                    exclusive=True)
             except FileExistsError:
                 holder = self._holder()
                 now = int(time.time() * 1000)
@@ -131,19 +129,20 @@ class ProcessLock:
                 ttl = int((holder or {}).get("ttl_ms") or self.ttl_ms)
                 if holder is None:
                     # unreadable/vanished lock: a racing steal's remove→
-                    # create window, another acquirer mid-initial-write, or
-                    # a writer that CRASHED mid-initial-write (empty/torn
-                    # doc left behind forever). The doc carries no readable
-                    # acquired_ms, so judge staleness by file mtime: a
-                    # fresh mtime means a live racer (retry, fail closed);
-                    # an mtime older than our own ttl means nobody is
-                    # mid-write — remove the husk or every future acquire
-                    # would raise LockHeldError until manual cleanup
+                    # publish window, or a torn doc that this module's
+                    # complete-doc publish never leaves but an external
+                    # tool or an older build (create, then write) can. The
+                    # doc carries no readable acquired_ms, so judge
+                    # staleness by file mtime: a fresh mtime means a live
+                    # racer (retry, fail closed); an mtime older than our
+                    # own ttl means nobody is mid-write — remove the husk
+                    # or every future acquire would raise LockHeldError
+                    # until manual cleanup
                     try:
                         mtime_ms = int(os.stat(self.path).st_mtime * 1000)
                     except FileNotFoundError:
                         if attempt == 0:
-                            continue  # racer's window — retry the create
+                            continue  # racer's window — retry the publish
                         raise LockHeldError(self.path, {})
                     if self.steal_stale and now - mtime_ms > self.ttl_ms:
                         try:
@@ -175,9 +174,12 @@ class ProcessLock:
                 if holder is not None:
                     holder["_age_ms"] = age
                 raise LockHeldError(self.path, holder or {})
-            self._token = uuid.uuid4().hex
-            with os.fdopen(fd, "w") as f:
-                json.dump(self._doc(acquired_ms=int(time.time() * 1000)), f)
+            except BaseException:
+                # the publish may fail after its link landed: a lease this
+                # acquire never returns must not strand the table for a TTL
+                self._held = True
+                self.release()
+                raise
             self._held = True
             return self
         raise LockHeldError(self.path, self._holder() or {})
@@ -207,8 +209,8 @@ class ProcessLock:
             holder["_age_ms"] = int(time.time() * 1000) - int(
                 holder.get("acquired_ms", 0) or 0)
             raise LockHeldError(self.path, holder)
-        _atomic_write_json(self.path,
-                           self._doc(acquired_ms=int(time.time() * 1000)))
+        fsutil._atomic_write_json(
+            self.path, self._doc(acquired_ms=int(time.time() * 1000)))
 
     def release(self) -> None:
         """Remove the lock only if it is still OURS — a holder whose lease

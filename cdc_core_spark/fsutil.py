@@ -1,19 +1,25 @@
-"""Scheme-aware small-file IO for store sidecars (_ivf_centroids.json,
-_index_meta.json): scheme-less paths use local POSIX IO (atomic temp +
-rename via ``_atomic_write_text_local``), scheme'd paths
-(``s3a://``, ``hdfs://``, ``file:/``…) go through the Hadoop FileSystem
-API on the driver — the stores themselves are written by Spark, so a
-sidecar that only worked on the local filesystem would strand a
-cell-partitioned IVF store or a term-bucketed text index written to object
-storage without its codebook/metadata (the 100-TB deployment shape).
-
-Driver-side only and small (a few KB of JSON) — never row data.
+"""The durable-write module — the ONE place that publishes a file or a
+directory (the reference's temp-file → ``Writer.commit()`` rule,
+filesystem/.../Writer.java:43-127). ``publish_local`` is the local
+primitive every local durable write goes through (snapshot docs, lake
+sidecars, lease, heartbeats, stats, remote-sync fetches), so one
+monkeypatch intercepts them all. ``write_text``/``write_json`` publish
+small sidecars on any scheme: scheme'd paths (``s3a://``, ``file:/``…) go
+through the Hadoop FileSystem API on the driver, because the stores next
+to them are written by Spark to any filesystem. ``publish_generation``
+publishes those Spark-written stores (text index, IVF) as a fresh
+``g<n>/`` directory plus an atomic sidecar naming it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
+import tempfile
+from pathlib import Path
+from typing import Callable
 
 
 def _is_remote(path: str) -> bool:
@@ -107,12 +113,12 @@ def read_text(spark, path: str) -> str:
 
 
 def write_text(spark, path: str, text: str) -> None:
-    """Publish a small text file. Local paths get the full atomic temp +
-    fsync + rename contract; Hadoop paths write a ``.tmp`` sibling then
-    rename (atomic on HDFS; on S3A the rename is copy+delete — fine for a
-    sidecar whose readers tolerate the previous version, documented)."""
+    """Publish a small text file. Local paths go through ``publish_local``;
+    Hadoop paths write a ``.tmp`` sibling then rename (atomic on HDFS; on
+    S3A the rename is copy+delete — fine for a sidecar whose readers
+    tolerate the previous version, documented)."""
     if not _is_remote(path):
-        _atomic_write_text_local(path, text)
+        publish_local(path, text)
         return
     fs, jpath, jvm = _hadoop(spark, path)
     tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
@@ -144,45 +150,48 @@ def write_text(spark, path: str, text: str) -> None:
         raise IOError(f"rename {path}.tmp -> {path} failed")
 
 
-def _atomic_write_text_local(path: str, text: str,
-                             exclusive: bool = False) -> None:
-    """Temp-file + fsync + rename + dir-fsync publish of ``text`` — THE
-    single copy of the local durable-write pattern (coordination's
-    ``_atomic_write_json``, and through it lake's snapshot/sidecar/
-    retention-ledger writes, call it). The fsyncs matter: without
-    fsync-before-rename a power loss can leave a 0-byte/torn file at the
-    FINAL path (rename is metadata-atomic but data pages may not have hit
-    disk), which would permanently wedge every snapshot-log read; the
-    directory fsync makes the rename itself durable. Tmp debris from an
-    exception mid-write is removed — and the temp name is "_"-prefixed so
-    debris a SIGKILL leaves behind (cleanup never runs) is invisible to
-    Spark directory scans: some callers (the text-index sidecar) publish
-    INTO a directory Spark reads as parquet, where an unhidden temp file
-    would brick every subsequent read.
+def _fsync(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def publish_local(path: str, fill: str | Callable[[str], None],
+                  exclusive: bool = False) -> None:
+    """Temp-file + fsync + rename + dir-fsync publish — THE single copy of
+    the local durable-write pattern. ``fill`` is the text to write, or a
+    callback that writes the temp file given its path (a remote-sync
+    fetch). The fsyncs matter: without fsync-before-rename a power loss
+    can leave a 0-byte/torn file at the FINAL path (rename is
+    metadata-atomic but data pages may not have hit disk), which would
+    permanently wedge every snapshot-log read; the directory fsync makes
+    the rename itself durable. Tmp debris from an exception mid-write is
+    removed — and the temp name is "_"-prefixed so debris a SIGKILL leaves
+    behind (cleanup never runs) is invisible to Spark directory scans:
+    some callers publish INTO a directory Spark reads as parquet, where an
+    unhidden temp file would brick every subsequent read.
 
     ``exclusive=True`` publishes via ``os.link`` (hard link fails with
     EEXIST if the destination exists) instead of rename (which silently
     REPLACES) — the compare-and-swap the snapshot log's version contention
-    relies on: two writers racing to the same v{N}.json must leave exactly
-    one committed and one FileExistsError, never a clobbered commit."""
-    import errno
-    import tempfile
+    and the writer lease rely on: two writers racing to the same name must
+    leave exactly one published and one FileExistsError, never a clobbered
+    doc."""
     # a bare filename has dirname '' — makedirs('') raises; '.' is the CWD
     d = os.path.dirname(path) or "."
     os.makedirs(d, exist_ok=True)
     fd, tmp = tempfile.mkstemp(dir=d, prefix="_", suffix=".tmp")
+    os.close(fd)
     try:
-        with os.fdopen(fd, "w") as f:
-            f.write(text)
-            f.flush()
-            os.fsync(f.fileno())
+        if isinstance(fill, str):
+            Path(tmp).write_text(fill)
+        else:
+            fill(tmp)
+        _fsync(tmp)
         if exclusive:
-            try:
-                os.link(tmp, path)
-            except OSError as e:
-                if e.errno == errno.EEXIST:
-                    raise FileExistsError(path) from None
-                raise
+            os.link(tmp, path)  # EEXIST raises FileExistsError
             os.remove(tmp)
         else:
             os.rename(tmp, path)
@@ -192,11 +201,12 @@ def _atomic_write_text_local(path: str, text: str,
         except OSError:
             pass
         raise
-    dfd = os.open(d, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
+    _fsync(d)
+
+
+def _atomic_write_json(path: str, doc, exclusive: bool = False) -> None:
+    """Durable local JSON publish (``publish_local`` of ``json.dumps``)."""
+    publish_local(path, json.dumps(doc), exclusive=exclusive)
 
 
 def exists(spark, path: str) -> bool:
@@ -210,8 +220,9 @@ def sidecar_path(store_path: str, name: str) -> str:
     """Scheme-neutral ``<store>/<name>`` textual join for sidecar files
     next to a Spark-written store — os.path.join would be fine locally but
     this keeps scheme'd URIs (s3a://…, hdfs://…) untouched. THE single
-    definition (IVF centroids, text-index metadata) so the join idiom
-    can't drift between stores."""
+    definition (IVF centroids, text-index metadata, their ``g<n>``
+    generation directories) so the join idiom can't drift between
+    stores."""
     return (store_path if store_path.endswith("/") else store_path + "/") + name
 
 
@@ -221,3 +232,37 @@ def read_json(spark, path: str):
 
 def write_json(spark, path: str, doc) -> None:
     write_text(spark, path, json.dumps(doc))
+
+
+def publish_generation(spark, path: str, sidecar: str, doc: dict,
+                       write: Callable[[str], None]) -> None:
+    """``write(<path>/g<n>)`` lands the data in a fresh directory, then the
+    sidecar is published atomically with ``gen: n`` (the commit point),
+    then every other ``g<k>`` directory is removed by name. A crash before
+    the commit point leaves the old generation live (the next publish
+    overwrites the half-written ``g<n>``); a crash after it leaves the new
+    one live plus debris the next publish removes."""
+    side = sidecar_path(path, sidecar)
+    gen = read_json(spark, side)["gen"] + 1 if exists(spark, side) else 1
+    live = f"g{gen}"
+    write(sidecar_path(path, live))
+    write_json(spark, side, {**doc, "gen": gen})
+
+    def stale(name: str) -> bool:
+        return name != live and re.fullmatch(r"g\d+", name) is not None
+
+    if not _is_remote(path):
+        for n in filter(stale, os.listdir(path)):
+            shutil.rmtree(os.path.join(path, n))
+        return
+    fs, jpath, _ = _hadoop(spark, path)
+    for st in fs.listStatus(jpath):
+        if stale(st.getPath().getName()):
+            fs.delete(st.getPath(), True)
+
+
+def live_generation(spark, path: str, sidecar: str) -> tuple[dict, str]:
+    """The store's sidecar doc and its live data directory
+    ``<path>/g<gen>``."""
+    doc = read_json(spark, sidecar_path(path, sidecar))
+    return doc, sidecar_path(path, f"g{doc['gen']}")

@@ -5,8 +5,10 @@ lakehouse layer with the three properties the CDC sink needs (all of which
 the reference implements by hand):
 
 1. **Atomic commits** — data files are staged first, then a single JSON
-   snapshot file is published via write-temp + ``os.rename`` (atomic on
-   POSIX). Mirrors the reference's temp-file → ``commit()`` atomic writer
+   snapshot file is published by an exclusive hard-link CAS
+   (``fsutil.publish_local(..., exclusive=True)``: fsynced temp file,
+   ``link`` that fails if the version exists, directory fsync). Mirrors the
+   reference's temp-file → ``commit()`` atomic writer
    (filesystem/.../Writer.java:43-127, FileSystem.java:909-943). A crash
    between staging and publish leaves unreferenced orphans; readers only ever
    see the last published snapshot.
@@ -105,12 +107,10 @@ import json
 import os
 import random
 import shutil
-import tempfile
 import time
 import uuid
 
 from cdc_core_spark import fsutil
-from cdc_core_spark.coordination import _atomic_write_json
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -675,13 +675,14 @@ class SnapshotTable:
             # binding, so uniqueness makes the loser's sidecar harmless
             # debris (the expire-time sweep collects unreferenced ones)
             ref = f"v{snap.version:012d}-files-{uuid.uuid4().hex[:8]}.json"
-            _atomic_write_json(os.path.join(self.log_dir, ref), snap.files)
+            fsutil._atomic_write_json(os.path.join(self.log_dir, ref),
+                                      snap.files)
             doc["files"] = {"ref": ref, "n": len(snap.files)}
         # exclusive=True is the version CAS itself: a rename-based publish
         # silently REPLACES an existing v{N}.json, so two lease-less writers
         # racing the same version could both "succeed" with one commit
         # (files, manifests, epoch) vanishing from the chain
-        _atomic_write_json(path, doc, exclusive=True)
+        fsutil._atomic_write_json(path, doc, exclusive=True)
         if self._epochs_cache is not None:
             # fold our own commit into the cache incrementally — the hot
             # streaming path never re-reads the snapshot log
@@ -790,22 +791,30 @@ class SnapshotTable:
             raise ValueError(
                 "table props carry BOTH sort_order and zorder — they are "
                 "competing clustering layouts; keep exactly one")
-        if maintenance and sort_cols is None and prev.props.get("sort_order"):
-            # EVERY maintenance rewrite honors the table's sort_order prop
-            # (compact, tombstone expiry, future rewrites) — otherwise a
-            # maintenance pass would silently un-cluster the buckets that
-            # sorted compaction paid to cluster. Hot-path (non-maintenance)
-            # commits stay sort-free by design. Alias-remapped: the prop
-            # keeps creation-time names across renames.
-            sort_cols = [prev.aliases.get(c, c)
-                         for c in prev.props["sort_order"]]
-        elif maintenance and sort_cols is None and prev.props.get("zorder"):
-            # same contract for the zorder prop, except the sort key is the
-            # ONE interleaved z-value expression (zorder.py) — costs one
-            # stats agg job over the rewrite input, nothing on the hot path
-            from cdc_core_spark.zorder import zorder_column
-            sort_cols = [zorder_column(
-                df, [prev.aliases.get(c, c) for c in prev.props["zorder"]])]
+        if maintenance and sort_cols is None:
+            # EVERY maintenance rewrite (compact, tombstone expiry) honors
+            # the clustering prop, or it would silently un-cluster what
+            # compaction paid for; hot-path commits stay sort-free. The
+            # prop keeps creation-time names: remap through the alias map
+            # so a renamed clustering column can't brick maintenance
+            names = set(prev.field_names())
+            for prop in ("sort_order", "zorder"):
+                cols = [prev.aliases.get(c, c)
+                        for c in prev.props.get(prop) or []]
+                bad = [c for c in cols if c not in names]
+                if bad:
+                    raise ValueError(
+                        f"{prop} prop names unknown columns {bad!r} — "
+                        f"table schema has {sorted(names)}")
+                if cols and prop == "sort_order":
+                    sort_cols = cols
+                elif cols:
+                    # the sort key is the ONE interleaved z-value
+                    # expression (zorder.py, which validates the column
+                    # count) — costs one stats agg job over the rewrite
+                    # input, nothing on the hot path
+                    from cdc_core_spark.zorder import zorder_column
+                    sort_cols = [zorder_column(df, cols)]
         rebucket = n_buckets is not None and n_buckets != prev.n_buckets
         out_buckets = n_buckets if n_buckets is not None else prev.n_buckets
         if rebucket and set(touched_buckets) != set(range(out_buckets)):
@@ -1002,46 +1011,50 @@ class SnapshotTable:
         must be pure metadata (no Spark jobs): the staged data files are
         written once, only the snapshot document is rebuilt per attempt."""
         base = prev
-        for attempt in range(self.OCC_MAX_RETRIES + 1):
-            try:
-                snap = rebuild(base)
-                self._publish(snap)
-                return snap
-            except CommitConflictError:
-                if stage_abs:
-                    shutil.rmtree(stage_abs, ignore_errors=True)
-                raise
-            except FileExistsError:
-                newest = self.latest()
-                if newest.version <= base.version:
-                    # v{base+1}.json exists yet the newest doc is not newer:
-                    # an out-of-sequence external write — not rebasable
-                    if stage_abs:
-                        shutil.rmtree(stage_abs, ignore_errors=True)
-                    raise
-                if attempt >= 2:
-                    # observability at scale: steady rebases are normal for
-                    # one background maintainer, but a writer repeatedly
-                    # losing the CAS means real multi-writer contention the
-                    # operator should know about before the retry budget
-                    # (OCC_MAX_RETRIES) turns it into CommitConflictError
-                    import warnings
-                    warnings.warn(
-                        f"commit under {self.log_dir} lost the version CAS "
-                        f"{attempt + 1} times (now rebasing v{base.version}"
-                        f"->v{newest.version}); concurrent writers are "
-                        "contending on this table", RuntimeWarning,
-                        stacklevel=2)
-                base = newest
-                if attempt:  # first retry is free — contention is usually 2 writers
-                    time.sleep(random.uniform(
-                        0, min(self.OCC_RETRY_BACKOFF_S * (1 << attempt), 1.0)))
-        if stage_abs:
-            shutil.rmtree(stage_abs, ignore_errors=True)
-        raise CommitConflictError(
-            f"lost the version CAS {self.OCC_MAX_RETRIES + 1} times in a "
-            f"row under {self.log_dir} — giving up; too many concurrent "
-            "writers on one table")
+        try:
+            for attempt in range(self.OCC_MAX_RETRIES + 1):
+                try:
+                    snap = rebuild(base)
+                    self._publish(snap)
+                    return snap
+                except FileExistsError:
+                    newest = self.latest()
+                    if newest.version <= base.version:
+                        # v{base+1}.json exists yet the newest doc is not
+                        # newer: an out-of-sequence external write — not
+                        # rebasable
+                        raise
+                    if attempt >= 2:
+                        # observability at scale: steady rebases are normal
+                        # for one background maintainer, but a writer
+                        # repeatedly losing the CAS means real multi-writer
+                        # contention the operator should know about before
+                        # the retry budget (OCC_MAX_RETRIES) turns it into
+                        # CommitConflictError
+                        import warnings
+                        warnings.warn(
+                            f"commit under {self.log_dir} lost the version "
+                            f"CAS {attempt + 1} times (now rebasing "
+                            f"v{base.version}->v{newest.version}); "
+                            "concurrent writers are contending on this "
+                            "table", RuntimeWarning, stacklevel=2)
+                    base = newest
+                    # first retry is free — contention is usually 2 writers
+                    if attempt:
+                        time.sleep(random.uniform(
+                            0, min(self.OCC_RETRY_BACKOFF_S * (1 << attempt),
+                                   1.0)))
+            raise CommitConflictError(
+                f"lost the version CAS {self.OCC_MAX_RETRIES + 1} times in a "
+                f"row under {self.log_dir} — giving up; too many concurrent "
+                "writers on one table")
+        except (CommitConflictError, FileExistsError):
+            # both prove our snapshot was NOT published, so the staged
+            # files are garbage; any other error may come after the doc
+            # landed, where deleting them would corrupt a committed snapshot
+            if stage_abs:
+                shutil.rmtree(stage_abs, ignore_errors=True)
+            raise
 
     def _rebase_guard(self, prev: Snapshot, b: Snapshot,
                       epochs: list[int], what: str) -> None:
@@ -1207,7 +1220,8 @@ class SnapshotTable:
         """Single choke point for snapshot-JSON reads (tests count calls
         through it to assert the committed-epochs cache really caches).
         A torn/empty doc gets a remediation message instead of a bare
-        JSONDecodeError: with fsync-before-rename in ``_atomic_write_json``
+        JSONDecodeError: every snapshot doc is published complete and
+        fsynced through ``fsutil.publish_local`` (exclusive link-CAS), so
         this indicates an EXTERNAL writer or filesystem fault, and the fix
         (restore the doc or expire past it) is not guessable from the
         stack trace alone."""
@@ -1281,8 +1295,8 @@ class SnapshotTable:
         os.makedirs(d, exist_ok=True)
         # exclusive: two drivers racing create_branch must not silently
         # share a branch forked at different heads
-        _atomic_write_json(os.path.join(d, "base.json"),
-                           {"fork_version": head}, exclusive=True)
+        fsutil._atomic_write_json(os.path.join(d, "base.json"),
+                                  {"fork_version": head}, exclusive=True)
         return SnapshotTable(self.root, ref=name)
 
     def branch(self, name: str) -> "SnapshotTable":
@@ -1361,10 +1375,10 @@ class SnapshotTable:
                 dst = os.path.join(self.log_dir, files["ref"])
                 if not os.path.exists(dst):   # ref names are writer-unique
                     with open(src) as f:
-                        _atomic_write_json(dst, json.load(f))
+                        fsutil._atomic_write_json(dst, json.load(f))
             target = os.path.join(self.log_dir, f"v{v:012d}.json")
             try:
-                _atomic_write_json(target, doc, exclusive=True)
+                fsutil._atomic_write_json(target, doc, exclusive=True)
             except FileExistsError:
                 if self._load_snapshot_doc(target) == doc:
                     continue   # already published (rerun / crash resume)
@@ -1455,8 +1469,8 @@ class SnapshotTable:
                 "expired)")
         d = os.path.join(self.main_log_dir, "tags")
         os.makedirs(d, exist_ok=True)
-        _atomic_write_json(os.path.join(d, f"{name}.json"),
-                           {"version": v}, exclusive=True)
+        fsutil._atomic_write_json(os.path.join(d, f"{name}.json"),
+                                  {"version": v}, exclusive=True)
         return v
 
     def tags(self) -> dict[str, int]:
@@ -1816,10 +1830,10 @@ class SnapshotTable:
                 floor = e
         overrides = {str(self._doc_version(p)): info[p][1]
                      for p in retained if info[p][1] is not None}
-        _atomic_write_json(os.path.join(self.log_dir, "expired-base.json"),
-                           {"epochs": sorted(eps), "manifests": manifests,
-                            "clock_floor_ms": floor,
-                            "eff_overrides": overrides})
+        fsutil._atomic_write_json(
+            os.path.join(self.log_dir, "expired-base.json"),
+            {"epochs": sorted(eps), "manifests": manifests,
+             "clock_floor_ms": floor, "eff_overrides": overrides})
         for rel in dead:
             try:
                 os.remove(os.path.join(self.root, rel))
@@ -1949,35 +1963,6 @@ class SnapshotTable:
         nb = n_buckets or prev.n_buckets
         key_cols = prev.key_cols
 
-        def _prop_cols(prop: str) -> list[str] | None:
-            cols = prev.props.get(prop)
-            if not cols:
-                return None
-            # a RENAME evolution updates fields but the prop keeps the
-            # creation-time names — remap old→new through the cumulative
-            # alias map so a renamed clustering column can't brick
-            # maintenance
-            cols = [prev.aliases.get(c, c) for c in cols]
-            names = set(prev.field_names())
-            bad = [c for c in cols if c not in names]
-            if bad:
-                raise ValueError(
-                    f"{prop} prop names unknown columns {bad!r} — "
-                    f"table schema has {sorted(names)}")
-            if prop == "zorder":
-                from cdc_core_spark.zorder import validate_zorder_cols
-                validate_zorder_cols(cols)
-            return cols
-
-        sort_cols = _prop_cols("sort_order")
-        zorder_cols = _prop_cols("zorder")
-
-        def _sort_key(df):
-            if zorder_cols:
-                from cdc_core_spark.zorder import zorder_column
-                return [zorder_column(df, zorder_cols)]
-            return sort_cols
-
         if nb == prev.n_buckets and (min_delta_files is not None
                                      or min_delta_bytes is not None):
             from collections import Counter
@@ -2004,14 +1989,12 @@ class SnapshotTable:
                             snap=prev)
                   .withColumn("_bucket", bucket_expr(key_cols, nb)))
             self.commit_merge(df, todo, epoch=None, manifests=[],
-                              maintenance=True, sort_cols=_sort_key(df),
-                              base=prev)
+                              maintenance=True, base=prev)
             return
         df = (self.read(spark, with_internal_cols=True, snap=prev)
               .withColumn("_bucket", bucket_expr(key_cols, nb)))
         self.commit_merge(df, list(range(nb)), epoch=None, manifests=[],
-                          n_buckets=nb, maintenance=True,
-                          sort_cols=_sort_key(df), base=prev)
+                          n_buckets=nb, maintenance=True, base=prev)
 
     # ---------------- incremental changelog read ----------------
     def read_changes(self, spark: SparkSession, from_version: int,

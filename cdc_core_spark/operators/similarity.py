@@ -171,6 +171,15 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, query: list[float],
     return cosine_topk(cand, id_col, vec_col, query, k)
 
 
+_CENTROIDS = "_ivf_centroids.json"
+
+
+def _live_store(spark, path: str) -> tuple[np.ndarray, str]:
+    """The stored codebook and the live generation's data directory."""
+    doc, live = fsutil.live_generation(spark, path, _CENTROIDS)
+    return np.array(doc["centroids"], dtype=np.float64), live
+
+
 def ivf_write(df: DataFrame, id_col: str, vec_col: str, path: str,
               n_cells: int = 16, centroids: np.ndarray | None = None,
               refine_iters: int = 0) -> np.ndarray:
@@ -181,7 +190,12 @@ def ivf_write(df: DataFrame, id_col: str, vec_col: str, path: str,
     full scan. The one-off assignment write is amortized over all queries —
     at 100 TB this is the difference between an ANN index and a scan.
     Centroids ride a ``_ivf_centroids.json`` sidecar (underscore-prefixed →
-    invisible to Spark readers)."""
+    invisible to Spark readers).
+
+    Published by ``fsutil.publish_generation`` (cells in a fresh
+    ``g<n>/``, then the sidecar naming it), so a crash leaves the store
+    entirely old or entirely new — never new cells behind old centroids —
+    on any scheme fsutil speaks."""
     if centroids is None:
         centroids = deterministic_centroids(df, vec_col, n_cells, id_col)
     if refine_iters:
@@ -191,14 +205,10 @@ def ivf_write(df: DataFrame, id_col: str, vec_col: str, path: str,
         centroids = kmeans_refine(df, id_col, vec_col, centroids,
                                   refine_iters)
     assigned = df.join(ivf_assign(df, id_col, vec_col, centroids), id_col)
-    (assigned.write.partitionBy("cell").mode("overwrite")
-     .options(**fsutil.parquet_write_options()).parquet(path))
-    # scheme-aware sidecar publish: the store itself is written by Spark to
-    # any filesystem — a local-only codebook write would strand an
-    # object-store IVF layout without its centroids (fsutil routes s3a/hdfs
-    # paths through the Hadoop FileSystem API)
-    fsutil.write_json(df.sparkSession, fsutil.sidecar_path(path, "_ivf_centroids.json"),
-                      centroids.tolist())
+    fsutil.publish_generation(
+        df.sparkSession, path, _CENTROIDS, {"centroids": centroids.tolist()},
+        lambda d: (assigned.write.partitionBy("cell").mode("overwrite")
+                   .options(**fsutil.parquet_write_options()).parquet(d)))
     return centroids
 
 
@@ -206,8 +216,8 @@ def ivf_append(df: DataFrame, id_col: str, vec_col: str, path: str,
                check_disjoint: bool = False) -> None:
     """Extend a cell-partitioned IVF store with new vectors: assign against
     the STORED centroids (the codebook stays fixed — standard IVF append
-    semantics) and append into the matching ``cell=`` directories, so
-    queries prune exactly as before. Cost is one GEMM assignment pass over
+    semantics) and append into the live generation's ``cell=`` directories,
+    so queries prune exactly as before. Cost is one GEMM assignment pass over
     the new vectors only — never a re-layout of the existing store.
     Because the codebook does not learn from appends, distribution drift in
     the incoming vectors slowly decays recall; the repair is a periodic
@@ -220,12 +230,9 @@ def ivf_append(df: DataFrame, id_col: str, vec_col: str, path: str,
     verifies with a semi-join over the stored ids (one id-column scan);
     it is also the safe re-run mode after a crashed append, where a blind
     retry of a half-committed batch is exactly how duplicates happen."""
-    centroids = np.array(
-        fsutil.read_json(df.sparkSession, fsutil.sidecar_path(path, "_ivf_centroids.json")),
-        dtype=np.float64)
+    centroids, live = _live_store(df.sparkSession, path)
     if check_disjoint:
-        spark = df.sparkSession
-        existing = spark.read.parquet(path).select(id_col).distinct()
+        existing = df.sparkSession.read.parquet(live).select(id_col).distinct()
         dup = (df.select(id_col).distinct()
                .join(existing, id_col, "left_semi").limit(1).collect())
         if dup:
@@ -235,7 +242,7 @@ def ivf_append(df: DataFrame, id_col: str, vec_col: str, path: str,
                 "rebuild with ivf_write (or exclude stored ids) instead")
     assigned = df.join(ivf_assign(df, id_col, vec_col, centroids), id_col)
     (assigned.write.partitionBy("cell").mode("append")
-     .options(**fsutil.parquet_write_options()).parquet(path))
+     .options(**fsutil.parquet_write_options()).parquet(live))
 
 
 def ivf_probe_scan(spark, path: str, query: list[float],
@@ -246,13 +253,11 @@ def ivf_probe_scan(spark, path: str, query: list[float],
     turns into directory pruning, so only ~nprobe/n_cells of the files are
     read (assert via ``input_file_name()`` on this frame; the top-k result
     downstream loses file provenance at its exchange)."""
-    centroids = np.array(
-        fsutil.read_json(spark, fsutil.sidecar_path(path, "_ivf_centroids.json")),
-        dtype=np.float64)
+    centroids, live = _live_store(spark, path)
     q = np.asarray(query, dtype=np.float64)
     d = ((centroids - q[None, :]) ** 2).sum(axis=1)
     probe = [int(c) for c in d.argsort()[:nprobe]]
-    return spark.read.parquet(path).filter(F.col("cell").isin(probe))
+    return spark.read.parquet(live).filter(F.col("cell").isin(probe))
 
 
 def ivf_topk_stored(spark, path: str, id_col: str, vec_col: str,

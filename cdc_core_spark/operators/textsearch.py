@@ -31,6 +31,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_core_spark import fsutil
 from cdc_core_spark.operators.dedup import tokens
 
 
@@ -171,16 +172,13 @@ def _write_bucketed(index: DataFrame, path: str, n_buckets: int,
     the probed buckets too."""
     bucketed = index.withColumn(
         "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-    from cdc_core_spark import fsutil
     (bucketed.repartition(n_buckets, "term_bucket")
      .sortWithinPartitions("term", "doc")
      .write.partitionBy("term_bucket").mode(mode)
      .options(**fsutil.parquet_write_options()).parquet(path))
 
 
-def _meta_path(path: str) -> str:
-    from cdc_core_spark import fsutil
-    return fsutil.sidecar_path(path, "_index_meta.json")
+_META = "_index_meta.json"
 
 
 def write_text_index(index: DataFrame, path: str, n_buckets: int = 64) -> None:
@@ -188,21 +186,22 @@ def write_text_index(index: DataFrame, path: str, n_buckets: int = 64) -> None:
     storage layout that makes a query a directory-pruned read: the probed
     terms hash to a handful of buckets, so the scan touches ~|terms|/n_buckets
     of the index files instead of all of them (the Solr-shard analog, and the
-    same shape as ``similarity.ivf_write``). Bucket count rides a
-    ``_index_meta.json`` sidecar (underscore-prefixed → invisible to Spark)."""
-    from cdc_core_spark import fsutil
+    same shape as ``similarity.ivf_write``). Bucket count and corpus doc
+    count ride a ``_index_meta.json`` sidecar.
 
-    # materialize once: the write AND the doc-count job below both consume
-    # the (tokenize + explode + groupBy) plan
+    Published by ``fsutil.publish_generation`` (postings in a fresh
+    ``g<n>/``, then the sidecar naming it): a crash leaves the old index
+    or the new one answering, never a mix, on any scheme fsutil speaks."""
+    # materialize once: the doc-count job AND the write both consume the
+    # (tokenize + explode + groupBy) plan
     index = index.localCheckpoint(eager=False)
-    _write_bucketed(index, path, n_buckets, "overwrite")
     # corpus doc count rides the sidecar so tfidf queries never pay a
-    # full-index countDistinct pass (one extra job HERE, at write time).
-    # fsutil: sidecar IO is scheme-aware, so an index written to object
-    # storage keeps its metadata next to it
+    # full-index countDistinct pass (one extra job HERE, at write time)
     n_docs = index.select(F.count_distinct("doc")).first()[0]
-    fsutil.write_json(index.sparkSession, _meta_path(path),
-                      {"n_buckets": n_buckets, "n_docs": n_docs})
+    fsutil.publish_generation(
+        index.sparkSession, path, _META,
+        {"n_buckets": n_buckets, "n_docs": n_docs},
+        lambda d: _write_bucketed(index, d, n_buckets, "overwrite"))
 
 
 def append_text_index(index: DataFrame, path: str,
@@ -211,10 +210,10 @@ def append_text_index(index: DataFrame, path: str,
     the growing-corpus maintenance path: cost is one shuffle over the new
     postings only, never a rebuild of the existing layout (at 100 TB a
     full index rebuild per ingest batch is the anti-pattern this exists to
-    avoid). Appended files land inside the same term-hash bucket
-    directories (the sidecar's ``n_buckets`` keys the hash, so old and new
-    files agree), query-side directory pruning is unchanged, and each new
-    file is term-clustered for row-group pruning exactly like the
+    avoid). Appended files land inside the live generation's term-hash
+    bucket directories (the sidecar's ``n_buckets`` keys the hash, so old
+    and new files agree), query-side directory pruning is unchanged, and
+    each new file is term-clustered for row-group pruning exactly like the
     originals. Searching after an append is equal to searching a full
     rebuild — asserted in tests and exercised by the ``text_search`` gate.
 
@@ -226,7 +225,7 @@ def append_text_index(index: DataFrame, path: str,
     monotonic ingest ids).
 
     Crash semantics: the ``n_docs`` sidecar updates AFTER the postings
-    land (atomic temp + rename). A crash between the two leaves the count
+    land (atomic publish). A crash between the two leaves the count
     stale-low — tfidf scores deflate uniformly (``ln(N/df)`` with a
     smaller N) until repaired — and the batch's postings possibly
     half-committed. Recovery from a crashed append is therefore NOT a
@@ -235,10 +234,8 @@ def append_text_index(index: DataFrame, path: str,
     n_terms_matched contract). Re-run with ``check_disjoint=True`` (any
     already-landed doc raises, telling you this batch needs the rebuild
     path) or rebuild via ``write_text_index``."""
-    from cdc_core_spark import fsutil
-
     spark = index.sparkSession
-    meta = fsutil.read_json(spark, _meta_path(path))
+    meta, live = fsutil.live_generation(spark, path, _META)
     n_buckets = int(meta["n_buckets"])
     # materialize once: the disjointness probe, the doc-count job, and the
     # write all consume the same (tokenize + explode + groupBy) plan — the
@@ -246,7 +243,7 @@ def append_text_index(index: DataFrame, path: str,
     # checkpoint runs it once and every action after reads the result
     index = index.localCheckpoint(eager=False)
     if check_disjoint:
-        existing = spark.read.parquet(path).select("doc").distinct()
+        existing = spark.read.parquet(live).select("doc").distinct()
         dup = (index.select("doc").distinct()
                .join(existing, "doc", "left_semi").limit(1).collect())
         if dup:
@@ -256,55 +253,33 @@ def append_text_index(index: DataFrame, path: str,
                 "frequencies; rebuild with write_text_index (or exclude "
                 "already-indexed docs) instead")
     n_new = index.select(F.count_distinct("doc")).first()[0]
-    _write_bucketed(index, path, n_buckets, "append")
+    _write_bucketed(index, live, n_buckets, "append")
     meta["n_docs"] = int(meta["n_docs"]) + int(n_new)
-    fsutil.write_json(spark, _meta_path(path), meta)
+    fsutil.write_json(spark, fsutil.sidecar_path(path, _META), meta)
 
 
 def compact_text_index(spark, path: str) -> None:
     """Maintenance rewrite for an append-grown index (the Solr ``optimize``
     analog): every bucket's accumulated small files are rewritten into one
     term-clustered file per bucket, restoring the row-group pruning quality
-    a long append history erodes. Postings, bucket layout, and the
-    ``n_docs`` sidecar are unchanged — search results are identical before
-    and after (tested), only the file inventory shrinks.
+    a long append history erodes. Postings, bucket layout, and ``n_docs``
+    are unchanged — search results are identical before and after
+    (tested), only the file inventory shrinks and the sidecar's ``gen``
+    advances by one.
 
-    Swap protocol: the rewrite lands in a sibling temp directory, then two
-    ``os.rename`` calls exchange it with the live index. Renames are atomic
-    individually but the pair is not — a reader can hit a missing-path
-    error in the microseconds between them, and a crash between them
-    leaves the live index at ``<path>.old`` (recovery: rename it back).
-    Run it in a maintenance window, like the lake compaction it mirrors;
-    an always-online variant belongs to a snapshot-versioned layout
-    (SnapshotTable), not a plain directory index."""
-    import json
-    import os
-    import shutil
-
-    from cdc_core_spark.coordination import _atomic_write_json
-    from cdc_core_spark.fsutil import _is_remote
-
-    if _is_remote(path):
-        raise NotImplementedError(
-            "compact_text_index's directory-swap protocol needs a POSIX "
-            "rename; for an object-store index, rewrite to a NEW path with "
-            "write_text_index and repoint readers")
-    with open(os.path.join(path, "_index_meta.json")) as f:
-        meta = json.load(f)
+    Same generation publish as ``write_text_index``, so a crash leaves the
+    index answering exactly as before. Readers that resolved the old
+    generation lose it when its directory is removed — run it in a
+    maintenance window, like the lake compaction it mirrors."""
+    meta, live = fsutil.live_generation(spark, path, _META)
     n_buckets = int(meta["n_buckets"])
-    tmp = path.rstrip("/") + ".compact.tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
     # route through the shared layout writer (recomputing term_bucket from
     # term — deterministic hash, so values are identical) so the three
     # write paths can never drift apart
-    _write_bucketed(spark.read.parquet(path).drop("term_bucket"),
-                    tmp, n_buckets, "overwrite")
-    _atomic_write_json(os.path.join(tmp, "_index_meta.json"), meta)
-    old = path.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    fsutil.publish_generation(
+        spark, path, _META, meta,
+        lambda d: _write_bucketed(spark.read.parquet(live).drop("term_bucket"),
+                                  d, n_buckets, "overwrite"))
 
 
 def probe_index_scan(spark, path: str, terms: list[str]) -> DataFrame:
@@ -312,14 +287,14 @@ def probe_index_scan(spark, path: str, terms: list[str]) -> DataFrame:
     terms → their hash buckets (computed by the same JVM xxhash64 the writer
     used, via a one-row-per-term probe job — tiny, justified) → a
     partition-column IN-filter Catalyst turns into directory pruning."""
-    from cdc_core_spark import fsutil
-    n_buckets = fsutil.read_json(spark, _meta_path(path))["n_buckets"]
+    meta, live = fsutil.live_generation(spark, path, _META)
+    n_buckets = meta["n_buckets"]
     norm, _unsat = _normalize_terms(terms)
     probe = spark.createDataFrame([(t,) for t in norm], "term string")
     buckets = sorted({r["b"] for r in probe.select(
         F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b")
     ).collect()})
-    return (spark.read.parquet(path)
+    return (spark.read.parquet(live)
             .filter(F.col("term_bucket").isin(buckets)))
 
 
@@ -332,10 +307,9 @@ def search_text_stored(spark, path: str, terms: list[str], mode: str = "any",
     ``scoring="tfidf"`` reads the corpus doc count from the index sidecar
     (the pruned scan can't see other buckets' docs, and counting them would
     defeat the pruning)."""
-    from cdc_core_spark import fsutil
     pruned = probe_index_scan(spark, path, terms).drop("term_bucket")
     n_docs = None
     if scoring == "tfidf":
-        n_docs = fsutil.read_json(spark, _meta_path(path))["n_docs"]
+        n_docs = fsutil.live_generation(spark, path, _META)[0]["n_docs"]
     return search_text(pruned, terms, mode=mode, limit=limit,
                        scoring=scoring, n_docs=n_docs)

@@ -19,15 +19,16 @@ The Spark-first split is different from the reference's, on purpose:
 * **Protocol stores (SFTP) ARE synced.** No Hadoop connector exists, so
   the reference's download-to-cache shape is the right one: an incremental
   ``sync_remote_dir`` pulls new/changed files into a local/shared staging
-  directory with atomic renames, and Spark reads the staging dir. The
+  directory with atomic publishes, and Spark reads the staging dir. The
   backend is pluggable; ``LocalBackend`` is the tested in-sandbox stand-in
   and ``SftpBackend`` binds to paramiko when installed (import-gated —
   this container ships none).
 
 Sync semantics (RemoteFsCache analog): a JSON state doc remembers each
 synced file's ``(size, mtime)``; unchanged files are skipped, changed files
-re-fetched, every fetch lands in a temp name and is renamed into place so a
-crash never leaves a half-written file visible to the Spark scan.
+re-fetched, every fetch lands through ``fsutil.publish_local`` (hidden temp
+name, fsync, rename) so a crash never leaves a half-written file visible to
+the Spark scan, and a file the state doc records is on disk.
 """
 
 from __future__ import annotations
@@ -35,11 +36,10 @@ from __future__ import annotations
 import fnmatch
 import json
 import os
-import tempfile
 from dataclasses import dataclass
 from typing import Callable, Iterable
 
-from cdc_core_spark.coordination import _atomic_write_json
+from cdc_core_spark import fsutil
 
 # ------------------------------------------------------------ URI resolution
 
@@ -187,9 +187,11 @@ def sync_remote_dir(backend, staging_dir: str,
       RESERVED: a remote file with that exact relpath is refused loudly
       (it would be clobbered by the state republish and silently never
       delivered);
-    * each fetch writes a temp name then ``os.rename``s into place, so a
-      crashed sync never exposes a partial file to the Spark scan that
-      reads the staging dir (the Writer.java temp→commit rule);
+    * each fetch lands through ``fsutil.publish_local`` (hidden temp name,
+      fsync, rename, dir fsync), so a crashed sync never exposes a partial
+      file to the Spark scan that reads the staging dir (the Writer.java
+      temp→commit rule), and the state doc never records a file whose
+      bytes a power loss could still take back;
     * the state doc is republished atomically every ``state_every`` landed
       files and in a ``finally`` on every exit, so a raised fetch error
       still re-fetches at most the in-flight file (per-file republish
@@ -218,36 +220,17 @@ def sync_remote_dir(backend, staging_dir: str,
             if state.get(e.relpath) == [e.size, e.mtime]:
                 continue
             dest = os.path.join(staging_dir, e.relpath)
-            os.makedirs(os.path.dirname(dest) or staging_dir, exist_ok=True)
-            # "_" prefix: Spark scans ignore _/. -prefixed files, so even a
-            # SIGKILL'd fetch (cleanup never runs) or a scan concurrent with a
-            # sync can never read a half-written temp as data
-            fd, tmp = tempfile.mkstemp(dir=os.path.dirname(dest), prefix="_",
-                                       suffix=".tmp")
-            os.close(fd)
-            try:
-                backend.fetch(e.relpath, tmp)
-                os.rename(tmp, dest)
-            except BaseException:
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-                raise
+            fsutil.publish_local(
+                dest, lambda tmp: backend.fetch(e.relpath, tmp))
             state[e.relpath] = [e.size, e.mtime]
             fetched.append(e.relpath)
             dirty += 1
             if dirty >= max(state_every, 1):
-                _atomic_write_json(state_path, state)
+                fsutil._atomic_write_json(state_path, state)
                 dirty = 0
             if on_file is not None:
                 on_file(dest)
     finally:
-        # flush on EVERY exit — success, batch boundary or a raised fetch
-        # error — so a crash refetches at most the in-flight file (the old
-        # per-file guarantee) while the happy path writes the doc only
-        # every state_every files. Only a SIGKILL (no finally) can cost a
-        # refetch window of up to state_every already-landed files.
-        if dirty:
-            _atomic_write_json(state_path, state)
+        if dirty:  # flush on EVERY exit (see the state_every bullet above)
+            fsutil._atomic_write_json(state_path, state)
     return fetched

@@ -173,8 +173,7 @@ def _compute_buckets(spark: SparkSession, table: SnapshotTable, snap,
 def _publish(table: SnapshotTable, doc: dict) -> dict:
     existing = latest_stats_doc(table)
     doc["stats_version"] = (existing["stats_version"] + 1) if existing else 0
-    fsutil._atomic_write_text_local(
-        _doc_path(table, doc["stats_version"]), json.dumps(doc))
+    fsutil._atomic_write_json(_doc_path(table, doc["stats_version"]), doc)
     return doc
 
 

@@ -10,6 +10,14 @@ from pyspark.sql import functions as F
 from cdc_core_spark.operators import dedup, multimodal, similarity, text
 
 
+def _live_dir(path: str, sidecar: str) -> str:
+    """A generation-published store's live data directory, as its sidecar
+    names it."""
+    import json
+    with open(f"{path}/{sidecar}") as f:
+        return f"{path}/g{json.load(f)['gen']}"
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
@@ -399,7 +407,8 @@ def test_ivf_stored_partition_pruning(spark, tmp_path):
     cells_read = {f.split("cell=")[1].split("/")[0] for f in read_files}
     assert len(cells_read) <= 3
     total_cells = {d.split("cell=")[1] for d in
-                   _glob.glob(path + "/cell=*")}
+                   _glob.glob(_live_dir(path, "_ivf_centroids.json")
+                              + "/cell=*")}
     assert len(total_cells) > 3  # pruning actually skipped cells
 
     inplan = similarity.ivf_topk(df, "vec_id", "embedding", q, k=10,
@@ -445,7 +454,8 @@ def test_text_index_stored_bucket_pruning(spark, tmp_path):
                     for f in read_files}
     assert len(buckets_read) <= 2  # ≤ one bucket per probed term
     import glob as _glob
-    assert len(_glob.glob(path + "/term_bucket=*")) > 2  # pruning skipped dirs
+    assert len(_glob.glob(_live_dir(path, "_index_meta.json")
+                          + "/term_bucket=*")) > 2  # pruning skipped dirs
 
     for mode in ("any", "all"):
         stored = ts.search_text_stored(spark, path, ["merge", "alpha"],
@@ -494,6 +504,7 @@ def test_text_index_append_equals_rebuild(spark, tmp_path):
         F.input_file_name().alias("f")).distinct().collect()}
     assert len({f.split("term_bucket=")[1].split("/")[0]
                 for f in read}) == 1
+    assert all(_live_dir(path, "_index_meta.json") + "/" in f for f in read)
 
     with pytest.raises(ValueError, match="already"):
         ts.append_text_index(ts.build_text_index(new, "doc_id", "text"),
@@ -503,9 +514,11 @@ def test_text_index_append_equals_rebuild(spark, tmp_path):
 def test_text_index_compact_restores_single_file_buckets(spark, tmp_path):
     """compact_text_index (the Solr-optimize analog) must collapse an
     append-grown bucket's file pile to ONE term-clustered file per bucket
-    with search results and the n_docs sidecar bit-identical."""
+    with search results and the sidecar identical except its generation,
+    which advances by exactly one."""
     import glob
     import json
+    import os
 
     from cdc_core_spark.operators import textsearch as ts
 
@@ -520,7 +533,8 @@ def test_text_index_compact_restores_single_file_buckets(spark, tmp_path):
                              path)
     def bucket_files():
         return {b: len(glob.glob(b + "/*.parquet"))
-                for b in glob.glob(path + "/term_bucket=*")}
+                for b in glob.glob(_live_dir(path, "_index_meta.json")
+                                   + "/term_bucket=*")}
     assert max(bucket_files().values()) >= 3      # append piled up files
 
     before = ts.search_text_stored(spark, path, ["merge", "alpha"],
@@ -532,8 +546,12 @@ def test_text_index_compact_restores_single_file_buckets(spark, tmp_path):
     after = ts.search_text_stored(spark, path, ["merge", "alpha"],
                                   scoring="tfidf").collect()
     assert [tuple(r) for r in after] == [tuple(r) for r in before]
-    assert json.load(open(path + "/_index_meta.json")) == meta_before
-    assert not glob.glob(path + ".old") and not glob.glob(path + ".compact.tmp")
+    meta_after = json.load(open(path + "/_index_meta.json"))
+    gen = meta_after.pop("gen")
+    assert gen == meta_before.pop("gen") + 1
+    assert meta_after == meta_before
+    # only the live generation remains next to the sidecar
+    assert sorted(os.listdir(path)) == ["_index_meta.json", f"g{gen}"]
 
 
 def test_ivf_append_equals_full_store(spark, tmp_path):
@@ -964,6 +982,8 @@ def test_fsutil_hadoop_scheme_roundtrip(spark, tmp_path):
     exercised in-sandbox via file:/ (LocalFileSystem), the same code path
     s3a/hdfs take; scheme-less paths stay on atomic POSIX IO. The stored
     text index works end-to-end over a file:/ URI."""
+    import os
+
     from cdc_core_spark import fsutil
     from cdc_core_spark.operators import textsearch as ts
 
@@ -981,11 +1001,18 @@ def test_fsutil_hadoop_scheme_roundtrip(spark, tmp_path):
     uri = f"file://{tmp_path}/tidx"
     ts.write_text_index(ts.build_text_index(df, "doc_id", "text"),
                         uri, n_buckets=4)
-    got = ts.search_text_stored(spark, uri, ["merge"], scoring="tfidf")
     want = ts.search_text(ts.build_text_index(df, "doc_id", "text"),
-                          ["merge"], scoring="tfidf", n_docs=60)
-    assert [tuple(r) for r in got.collect()] == \
-        [tuple(r) for r in want.collect()]
+                          ["merge"], scoring="tfidf", n_docs=60).collect()
+    got = ts.search_text_stored(spark, uri, ["merge"], scoring="tfidf")
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want]
+    # the generation publish (new g<n>, sidecar, stale-generation removal)
+    # runs through the Hadoop FileSystem API too
+    ts.compact_text_index(spark, uri)
+    got = ts.search_text_stored(spark, uri, ["merge"], scoring="tfidf")
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want]
+    # (LocalFileSystem adds hidden .crc checksum siblings)
+    assert sorted(n for n in os.listdir(tmp_path / "tidx")
+                  if not n.startswith(".")) == ["_index_meta.json", "g2"]
 
 
 def test_stratified_sample_exact_excludes_null_ids(spark):
