@@ -13,9 +13,11 @@ equivalent is a driver epoch loop:
         stage winners as a merge-on-read delta commit   (keyed upsert/delete)
         atomically commit snapshot + per-partition manifests  (exactly-once)
 
-Consecutive DDL-free epochs apply as one group — one Spark job, one
-snapshot (``apply_epoch_group``); a standalone ``apply_epoch`` is a group
-of one, so every commit takes the same path.
+Consecutive DDL-free epochs apply as one group — one Spark job, one delta
+layer, one snapshot (``apply_epoch_group``); a standalone ``apply_epoch`` is
+a group of one, so every commit takes the same path. Every logical manifest
+value comes from the one pre-stats scan (``_epoch_prestats``), never from
+reading the staged files back.
 
 Idempotence: re-running an epoch is a no-op — winners carry the same version
 tuple as the target rows they produced, and LWW max_by of identical rows is
@@ -56,24 +58,6 @@ def _list_epochs(events_path: str) -> list[int] | None:
     return sorted(int(os.path.basename(d).split("=")[1]) for d in dirs)
 
 
-def _footer_stats(path: str, max_cols: tuple[str, ...]) -> tuple[int, int | None, int | None]:
-    """(num_rows, max(col) per requested column) from parquet footer metadata —
-    driver-side, no Spark job. Spark always writes int64 min/max statistics."""
-    import pyarrow.parquet as pq
-    md = pq.ParquetFile(path).metadata
-    name_to_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-    maxima: list[int | None] = []
-    for col in max_cols:
-        idx = name_to_idx[col]
-        best = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is not None and st.has_min_max:
-                best = st.max if best is None else max(best, st.max)
-        maxima.append(best)
-    return (md.num_rows, *maxima)
-
-
 def _manifest_row(epoch: int, partition_id: int, **vals) -> dict:
     """One commit-manifest row — the exactly-once ledger record per
     (epoch, storage bucket = partition_id). Counts, wall and write volume
@@ -84,29 +68,6 @@ def _manifest_row(epoch: int, partition_id: int, **vals) -> dict:
            "bytes_written": 0, "files_written": 0}
     row.update(vals)
     return row
-
-
-def _delta_footer_stats(root: str, new_files: list[dict]):
-    """Per staged ``(epoch, bucket)``: the applied row count, footer
-    watermarks, and the staged write volume — the manifest stats a delta
-    commit reads back from its own files instead of a counting scan."""
-    applied: dict = {}
-    max_ts: dict = {}
-    max_seq: dict = {}
-    wbytes: dict = {}
-    wfiles: dict = {}
-    for f in new_files:
-        k = (f["epoch"], f["bucket"])
-        rows, mts, mseq = _footer_stats(os.path.join(root, f["path"]),
-                                        ("_op_ts", "_max_seq"))
-        applied[k] = applied.get(k, 0) + rows
-        wbytes[k] = wbytes.get(k, 0) + f.get("bytes", 0)
-        wfiles[k] = wfiles.get(k, 0) + 1
-        if mts is not None:
-            max_ts[k] = max(max_ts.get(k, mts), mts)
-        if mseq is not None:
-            max_seq[k] = max(max_seq.get(k, mseq), mseq)
-    return applied, max_ts, max_seq, wbytes, wfiles
 
 
 def valid_event_pred(key_cols: list[str] = ("repo", "path"),
@@ -328,7 +289,7 @@ class CdcEngine:
         null-fill added columns; attach the version columns (the storage
         bucket is computed on the WINNER set — attaching it per raw event
         here would be a dead expression). ``checkpoint_epoch`` passes
-        through untouched: winners reduce per (epoch, key)."""
+        through as an int: winners reduce per (epoch, key) and store it."""
         # the projection itself is THE shared lake.field_projection — the
         # LWW merge depends on events being projected identically to stored
         # files, so the alias/coalesce/cast logic must have one definition
@@ -336,7 +297,7 @@ class CdcEngine:
         cols.append(F.col("op").cast("int").alias("op"))
         cols.append(F.col("op_ts").cast("bigint").alias("_op_ts"))
         cols.append(F.col("event_seq").cast("bigint").alias("_event_seq"))
-        cols.append(F.col("checkpoint_epoch"))
+        cols.append(F.col("checkpoint_epoch").cast("int"))
         return events.select(cols)
 
     # ------------------------------------------------------------- epoch apply
@@ -344,27 +305,36 @@ class CdcEngine:
         """The per-epoch inputs of ``apply_epoch_group`` for every epoch in
         ``scope`` (events carrying ``checkpoint_epoch``), in one pass each
         instead of one per epoch: the in-band DDL rows, and the lineage
-        pre-stats — valid reads AND malformed counts per bucket, from one
-        count-only scan column-pruned to key cols + op + epoch. Malformed
-        events are written to the DLQ here too: malformed-ness is
-        state-independent, so routing needs no per-epoch loop, and the
-        dynamic partition overwrite keeps re-runs idempotent without
-        clobbering other epochs' DLQ. Returns ``(schema_by_epoch,
-        read_by_epoch, err_by_epoch)``."""
+        pre-stats — every logical manifest value per (epoch, bucket) from
+        one scan column-pruned to key cols + op + versions + epoch. Valid
+        events give ``events_read``, ``events_applied`` (distinct keys: the
+        reduce keeps one winner per (epoch, key)) and the
+        ``(max_op_ts, max_event_seq)`` watermark (the max-op_ts event wins
+        its key, so these are the winners' maxima too); malformed ones give
+        the error counts. Malformed events are written to the DLQ here too:
+        malformed-ness is state-independent, so routing needs no per-epoch
+        loop, and the dynamic partition overwrite keeps re-runs idempotent
+        without clobbering other epochs' DLQ. Returns ``(schema_by_epoch,
+        read_by_epoch, err_by_epoch)``; ``read_by_epoch[e][b]`` holds the
+        valid-event manifest values as ``_manifest_row`` keywords."""
         schema_by_epoch: dict[int, list] = {e: [] for e in epochs}
-        for r in (scope.filter(F.col("op").isin(*SCHEMA_OPS))
-                  .select("checkpoint_epoch", "schema_version", "event_seq")
-                  .orderBy("event_seq").collect()):
+        # a handful of rows: sorted here, not by a range-partitioned sort
+        ddl_rows = (scope.filter(F.col("op").isin(*SCHEMA_OPS))
+                    .select("checkpoint_epoch", "schema_version", "event_seq")
+                    .collect())
+        for r in sorted(ddl_rows, key=lambda r: (r["event_seq"] is not None,
+                                                 r["event_seq"])):
             schema_by_epoch[r["checkpoint_epoch"]].append(r)
 
         key_cols, cc = self._pred_args(scope)
         vpred = valid_event_pred(key_cols, cc)
         # bucket_expr is total on null keys (xxhash64 skips nulls); keys
-        # CAST to their declared types so these stats bucket exactly like
-        # the normalized winners (raw event files may carry narrower
-        # physical types — see bucket_expr's cast_types contract). Key
-        # TYPES are stable across the stream: widening a key would change
-        # the whole storage bucketing and requires an explicit re-bucket
+        # CAST to their declared types so these stats bucket and count
+        # exactly like the normalized winners (raw event files may carry
+        # narrower physical types — see bucket_expr's cast_types
+        # contract). Key TYPES are stable across the stream: widening a
+        # key would change the whole storage bucketing and requires an
+        # explicit re-bucket
         ktypes = {f["name"]: f["type"]
                   for f in self.table.latest_meta().fields
                   if f["name"] in key_cols}
@@ -372,14 +342,26 @@ class CdcEngine:
         data = scope.filter(~F.coalesce(F.col("op"), F.lit(-1)).isin(*SCHEMA_OPS))
         stat_rows = (data.withColumn("_bucket", nb).withColumn("_ok", vpred)
                      .groupBy("checkpoint_epoch", "_bucket", "_ok")
-                     .agg(F.count(F.lit(1)).alias("n")).collect())
+                     .agg(F.count(F.lit(1)).alias("n"),
+                          F.count_distinct(*[F.col(k).cast(sql_type(ktypes[k]))
+                                             for k in key_cols])
+                          .alias("keys"),
+                          F.max(F.col("op_ts").cast("bigint")).alias("mts"),
+                          F.max(F.col("event_seq").cast("bigint"))
+                          .alias("mseq"))
+                     .collect())
         err_by_epoch: dict[int, dict[int, int]] = {e: {} for e in epochs}
-        read_by_epoch: dict[int, dict[int, int]] = {e: {} for e in epochs}
+        read_by_epoch: dict[int, dict[int, dict]] = {e: {} for e in epochs}
         n_err = 0
         for r in stat_rows:
-            tgt = read_by_epoch if r["_ok"] else err_by_epoch
-            tgt[r["checkpoint_epoch"]][r["_bucket"]] = r["n"]
-            n_err += 0 if r["_ok"] else r["n"]
+            e, b = r["checkpoint_epoch"], r["_bucket"]
+            if r["_ok"]:
+                read_by_epoch[e][b] = {
+                    "events_read": r["n"], "events_applied": r["keys"],
+                    "max_op_ts": r["mts"], "max_event_seq": r["mseq"]}
+            else:
+                err_by_epoch[e][b] = r["n"]
+                n_err += r["n"]
         if n_err:
             # DLQ: original event + reason (reference: error messages
             # re-tagged mode=Error, MessageProcessor.sendError); the epoch
@@ -410,13 +392,13 @@ class CdcEngine:
 
     def apply_epoch_group(self, events: DataFrame, epochs: list[int],
                           err_by_epoch: dict[int, dict[int, int]],
-                          read_by_epoch: dict[int, dict[int, int]],
+                          read_by_epoch: dict[int, dict[int, dict]],
                           schema_rows: list) -> list[dict]:
         """Apply one or more epochs in ONE Spark job + ONE atomic
         merge-on-read snapshot — the engine's only epoch-apply path
         (``events`` must carry ``checkpoint_epoch`` restricted to
-        ``epochs``; the per-bucket counts and the DDL rows of the group's
-        first epoch come from ``_epoch_prestats``).
+        ``epochs``; the per-(epoch, bucket) manifest values and the DDL
+        rows of the group's first epoch come from ``_epoch_prestats``).
 
         Every Spark job pays a constant planning/scheduling cost that doesn't
         parallelize — measured ~1.2s/epoch at local[4] on the 20M-event
@@ -425,21 +407,21 @@ class CdcEngine:
         it (the reference acks a whole poll batch per ``receiver.commit()``,
         MessageProcessor.java:195-214 — same batching, one level up).
 
-        Winners reduce per (epoch, key) with their ``_max_seq`` lineage in
-        the same aggregation; the staged delta keeps one layer per epoch
-        (``checkpoint_epoch=<e>/_bucket=<b>``). DELETE winners become
-        tombstone rows — they must keep out-versioning late duplicate
-        redeliveries of older events in future epochs (exactly-once under
-        at-least-once delivery). Manifests stay per (epoch, bucket):
-        events_applied and the (max_op_ts, max_event_seq) watermark are read
-        from the staged parquet FOOTERS of the write itself, events_read and
-        events_error from the pre-stats. So the converged state and every
-        LOGICAL manifest value are identical however the epochs are grouped;
-        the physical write-volume columns (bytes_written / files_written)
-        may differ, because one grouped staging job lays files out
-        differently than N per-epoch jobs. In-band DDL may appear only at
-        the FIRST epoch of a group (the replay loop enforces this by
-        starting a new group at every DDL-carrying epoch)."""
+        Winners reduce per (epoch, key) and stage as ONE delta layer per
+        commit (``_bucket=<b>``), each row keeping its epoch in the stored
+        ``checkpoint_epoch`` column. DELETE winners become tombstone rows —
+        they must keep out-versioning late duplicate redeliveries of older
+        events in future epochs (exactly-once under at-least-once
+        delivery). Manifests stay per (epoch, bucket): every logical value
+        (events_read/applied/error and the (max_op_ts, max_event_seq)
+        watermark) comes from the pre-stats, so the converged state and
+        the logical manifests are identical however the epochs are
+        grouped. The physical write volume (bytes_written / files_written)
+        is per bucket for the whole group: it rides the bucket's row in the
+        group's last epoch that applied events to it, 0 on the others.
+        In-band DDL may appear only at the FIRST epoch of a group (the
+        replay loop enforces this by starting a new group at every
+        DDL-carrying epoch)."""
         t0 = time.monotonic()
         self._sync_buckets()
         sdef = self._apply_schema_ops(schema_rows)
@@ -451,61 +433,38 @@ class CdcEngine:
         valid = data.filter(valid_event_pred(kc, cc))
         ev = self._normalize_events(valid, sdef)
         winners = lww_reduce(ev, ["checkpoint_epoch"] + key_cols,
-                             payload_cols + ["op"], with_stats=True)
+                             payload_cols + ["op"])
         delta = (winners.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
                  .withColumn("_deleted", F.col("op") == OP_DELETE).drop("op"))
 
-        def manifests_from_footers(new_files: list[dict]) -> list[dict]:
-            applied, max_ts, max_seq, wbytes, wfiles = \
-                _delta_footer_stats(self.table.root, new_files)
-            out: list[dict] = []
+        def manifests(new_files: list[dict]) -> list[dict]:
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            volume: dict[int, tuple[int, int]] = {}
+            for f in new_files:
+                nbytes, nfiles = volume.get(f["bucket"], (0, 0))
+                volume[f["bucket"]] = (nbytes + f["bytes"], nfiles + 1)
+            rows = {}
             for e in epochs:
-                stats = {
-                    b: {"events_applied": applied[(ep, b)],
-                        "events_read": read_by_epoch.get(e, {}).get(b, 0),
-                        "max_op_ts": max_ts.get((ep, b)),
-                        "max_event_seq": max_seq.get((ep, b)),
-                        "bytes_written": wbytes[(ep, b)],
-                        "files_written": wfiles[(ep, b)]}
-                    for (ep, b) in applied if ep == e
-                }
-                rows = self._manifest_rows(e, stats, err_by_epoch.get(e, {}), t0)
-                if not rows:
-                    # an EMPTY epoch still needs a committed record (the
-                    # snapshot's epoch field names only the group's last
-                    # epoch) — emit a zero marker row, partition_id=-1 like
-                    # the initial-load convention, so committed_epochs()
-                    # sees it and resume stays a no-op
-                    rows = [_manifest_row(
-                        e, -1, wall_ms=int((time.monotonic() - t0) * 1000))]
-                out.extend(rows)
-            return out
+                read, err = read_by_epoch.get(e, {}), err_by_epoch.get(e, {})
+                rows[e] = [_manifest_row(e, b, **read.get(b, {}),
+                                         events_error=err.get(b, 0),
+                                         wall_ms=wall_ms)
+                           for b in sorted(set(read) | set(err))]
+            for e in reversed(epochs):
+                for r in rows[e]:
+                    if r["events_applied"] and r["partition_id"] in volume:
+                        r["bytes_written"], r["files_written"] = \
+                            volume.pop(r["partition_id"])
+            # an EMPTY epoch still needs a committed record (the snapshot's
+            # epoch field names only the group's last epoch) — a zero
+            # marker row, partition_id=-1 like the initial-load convention,
+            # so committed_epochs() sees it and resume stays a no-op
+            return [r for e in epochs
+                    for r in rows[e] or [_manifest_row(e, -1, wall_ms=wall_ms)]]
 
         snap = self.table.commit_delta_grouped(delta, epochs,
-                                               manifests=manifests_from_footers)
+                                               manifests=manifests)
         return snap.manifests
-
-    def _manifest_rows(self, epoch: int, read_stats: dict, err_stats: dict,
-                       t0: float) -> list[dict]:
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        rows = []
-        for b in sorted(set(read_stats) | set(err_stats)):
-            rs = read_stats.get(b, {})
-            mts, mseq = rs.get("max_op_ts"), rs.get("max_event_seq")
-            rows.append(_manifest_row(
-                epoch, b,
-                events_read=int(rs.get("events_read", 0)),
-                events_applied=int(rs.get("events_applied", 0)),
-                events_error=int(err_stats.get(b, 0)),
-                max_op_ts=-1 if mts is None else int(mts),
-                max_event_seq=-1 if mseq is None else int(mseq),
-                wall_ms=wall_ms,
-                # write-amplification lineage: bytes/files the MOR delta
-                # commit staged for the partition (0 on quarantine-only
-                # buckets and the initial load)
-                bytes_written=int(rs.get("bytes_written", 0)),
-                files_written=int(rs.get("files_written", 0))))
-        return rows
 
     # ------------------------------------------------------------------ replay
     def replay(self, events_path: str, source_df: DataFrame | None = None,
@@ -898,8 +857,11 @@ class CdcEngine:
         """Per-(epoch, partition) lineage ledger. ``bytes_written`` /
         ``files_written`` are the MOR delta commit's staged write volume —
         the write-amplification signal an operator trends against
-        ``events_applied`` to size ``compact_every`` (0 on initial-load,
-        quarantine-only and empty-epoch marker rows)."""
+        ``events_applied`` to size ``compact_every``. A group commit stages
+        one layer per bucket for all its epochs, so a bucket's volume sits
+        on its row in the group's last epoch that applied events to it (0
+        on that bucket's other rows, and on initial-load, quarantine-only
+        and empty-epoch marker rows); per-bucket sums are exact."""
         # default the write-volume fields: manifests committed by older
         # builds (or hand-written in tests) may predate them
         rows = [{"bytes_written": 0, "files_written": 0, **r}

@@ -78,8 +78,8 @@ grouped``)             the same single append transaction
 
 Nothing in the engine calls a primitive Iceberg lacks; the only behavioral
 delta is that Iceberg's manifests track column stats per file (we keep
-footer-derived stats in commit manifests instead), which only makes scan
-pruning better after the swap.
+the writer's pre-stats scan values in commit manifests instead), which only
+makes scan pruning better after the swap.
 
 Commit concurrency follows Iceberg's optimistic model (commit-retry +
 validation, ``CommitFailedException``/``ValidationException``): every
@@ -125,6 +125,9 @@ from pyspark.sql import functions as F
 # SchemaManager.java:382-387.)
 VERSION_COLS = ("_op_ts", "_event_seq")
 INTERNAL_COLS = {"_op_ts": "bigint", "_event_seq": "bigint", "_deleted": "boolean"}
+# a delta row's committing epoch, stored by the engine's group commit (one
+# file layer holds several epochs' winners); read only by key_history
+EPOCH_COL = "checkpoint_epoch"
 
 _TYPES = {
     "boolean": "boolean", "short": "smallint", "int": "int", "integer": "int",
@@ -505,8 +508,10 @@ class SnapshotTable:
         skipped silently, and — as in ``block_deltas`` after
         ``expire_snapshots`` — a still-live file committed BEFORE the
         oldest retained snapshot is attributed to that snapshot (its true
-        transaction id was expired with the metadata; per-file ``epoch``
-        entries, where present, keep the epoch exact).
+        transaction id was expired with the metadata; a row's stored
+        ``checkpoint_epoch`` — or, in files staged before the one-layer
+        group commit, the file record's ``epoch`` — keeps the epoch
+        exact).
 
         Maintenance rewrites (compaction/re-bucket/expiry) re-materialize
         the same logical row, so they are excluded unless
@@ -573,7 +578,8 @@ class SnapshotTable:
                               "version": s.version})
 
         out_names = [f["name"] for f in snap.fields]
-        out = _scan(spark, self.root, snap, found, tags=("epoch", "version"))
+        out = _scan(spark, self.root, snap, found, tags=("epoch", "version"),
+                    row_epoch=True)
         if out is None:
             # tmap already holds SQL types (probe DDL above)
             ddl_out = ", ".join(
@@ -587,7 +593,9 @@ class SnapshotTable:
             *out_names,
             F.when(F.col("_deleted"), F.lit("D")).otherwise(
                 F.lit("U")).alias("op"),
-            "epoch", "version",
+            F.coalesce(F.col(EPOCH_COL).cast("bigint"),
+                       F.col("epoch")).alias("epoch"),
+            "version",
             F.col("_op_ts").alias("op_ts"),
             F.col("_event_seq").alias("event_seq")).orderBy(
             "version", F.col("epoch").asc_nulls_first(), "op_ts", "event_seq")
@@ -602,7 +610,10 @@ class SnapshotTable:
         pre-timestamp docs (null ``committed_at_ms``) are well-typed.
 
         kinds — ``history``: one row per retained snapshot;
-        ``files``: the newest snapshot's live data files;
+        ``files``: the newest snapshot's live data files (``epoch`` is
+        NULL for delta files staged by the one-layer group commit — their
+        rows store the epoch, see ``key_history`` — and set only on files
+        staged before it);
         ``block_deltas``: per-file add/remove lifecycle (block_deltas());
         ``refs``: current head + branches (at fork version) + tags;
         ``stats``: per-column merged table statistics from the latest
@@ -715,7 +726,7 @@ class SnapshotTable:
         normalized (alias/rename, missing → null, cast-widen) before a
         unionByName — this is how rename + int→long widen stay metadata-only.
 
-        **Merge-on-read**: when the selection contains delta files (per-epoch
+        **Merge-on-read**: when the selection contains delta files (per-commit
         winner sets committed without rewriting the base — the Iceberg-v2
         delete-file analog), the union is LWW-folded per key so the latest
         version wins; ``compact()`` materializes the fold back into base
@@ -830,7 +841,7 @@ class SnapshotTable:
                                  f"commit-{uuid.uuid4().hex[:12]}")
         new_files: list[dict] = []
         if touched_buckets:
-            new_files = self._stage_files(df, stage_abs, ["_bucket"],
+            new_files = self._stage_files(df, stage_abs,
                                           len(touched_buckets), sid, None,
                                           sort_cols=sort_cols, snap=prev)
         touched = set(touched_buckets)
@@ -913,17 +924,15 @@ class SnapshotTable:
         return self._occ_publish(prev, stage_abs, rebuild)
 
     def _stage_files(self, df: DataFrame, stage_abs: str,
-                     partition_cols: list[str], n_partitions: int, sid: str,
-                     kind: str | None,
+                     n_partitions: int, sid: str, kind: str | None,
                      sort_cols: list[str] | None = None,
                      snap: "Snapshot | None" = None) -> list[dict]:
-        """THE shared stage-write + file-walk used by every commit flavor
-        (delta, grouped delta, merge): write ``df`` partitioned by
-        ``partition_cols`` under ``stage_abs`` and return one record per
-        staged parquet (paths relative to the table root; ``_bucket=`` →
-        ``bucket``, ``checkpoint_epoch=`` → ``epoch``). One definition so
-        the staged layout and record shape can never drift between the
-        commit paths.
+        """THE shared stage-write used by every commit flavor (delta,
+        merge): write ``df`` as one ``_bucket=<b>`` layer under
+        ``stage_abs`` and return one record per staged parquet
+        (``{path, bucket, schema_id, bytes[, kind]}``, paths relative to
+        the table root). One definition so the staged layout and record
+        shape can never drift between the commit paths.
 
         ``sort_cols`` adds a task-local ``sortWithinPartitions`` between the
         shuffle and the write (Iceberg write ``sort-order`` analog): rows
@@ -932,57 +941,46 @@ class SnapshotTable:
         skip non-matching groups for pushed-down key predicates — the file-
         level half of that pruning already comes from bucketing; this is
         the within-file half. No extra shuffle: the sort happens inside the
-        write task. The partition columns are prefixed onto the sort so the
+        write task. ``_bucket`` is prefixed onto the sort so the
         ``partitionBy`` writer's required ordering is already satisfied —
         otherwise FileFormatWriter injects its own (non-stable) sort on the
-        partition columns alone and destroys the key clustering."""
-        staged = df.repartition(max(n_partitions, 1), *partition_cols)
+        partition column alone and destroys the key clustering."""
+        staged = df.repartition(max(n_partitions, 1), "_bucket")
         if sort_cols:
             # entries may be names OR computed Column expressions (the
             # zorder path sorts by an interleaved z-value that never
             # materializes as a stored column)
             staged = staged.sortWithinPartitions(
-                *partition_cols, *[c for c in sort_cols
-                                   if not isinstance(c, str)
-                                   or c not in partition_cols])
-        # bloom_filters prop rides EVERY commit flavor (delta, grouped,
-        # merge): equality row-group skipping inside the hot path's
-        # unsorted delta files is the whole point. Creation-time names,
-        # alias-remapped; columns absent from this frame (e.g. a pre-ADD
-        # write-time schema) are simply not built by parquet-mr.
+                "_bucket", *[c for c in sort_cols
+                             if not isinstance(c, str) or c != "_bucket"])
+        # bloom_filters prop rides EVERY commit flavor (delta, merge):
+        # equality row-group skipping inside the hot path's unsorted delta
+        # files is the whole point. Creation-time names, alias-remapped;
+        # columns absent from this frame (e.g. a pre-ADD write-time
+        # schema) are simply not built by parquet-mr.
         # `snap` is the caller's already-loaded parent snapshot — never
         # re-read the log (each latest() also resolves the manifest-list
         # sidecar, pure redundant I/O per hot-path commit)
         snap = snap if snap is not None else self.latest()
         bloom = [snap.aliases.get(c, c)
                  for c in snap.props.get("bloom_filters", [])] or None
-        (staged.write.partitionBy(*partition_cols)
+        (staged.write.partitionBy("_bucket")
          .options(**fsutil.parquet_write_options(
              bloom_cols=bloom,
              bloom_ndv=snap.props.get("bloom_ndv")))
          .mode("overwrite").parquet(stage_abs))
-        key_of = {"_bucket": "bucket", "checkpoint_epoch": "epoch"}
         new_files: list[dict] = []
-
-        def walk(d: str, depth: int, extra: dict) -> None:
-            if depth == len(partition_cols):
-                for f in glob.glob(os.path.join(d, "*.parquet")):
-                    # size recorded per file (Iceberg manifests carry
-                    # file_size_in_bytes): feeds write-amplification metrics
-                    # in commit manifests and size-aware maintenance — one
-                    # stat() per staged file, during the walk we do anyway
-                    rec = {"path": os.path.relpath(f, self.root), **extra,
-                           "schema_id": sid, "bytes": os.path.getsize(f)}
-                    if kind is not None:
-                        rec["kind"] = kind
-                    new_files.append(rec)
-                return
-            col = partition_cols[depth]
-            for sub in glob.glob(os.path.join(d, f"{col}=*")):
-                walk(sub, depth + 1, {**extra,
-                     key_of[col]: int(os.path.basename(sub).split("=")[1])})
-
-        walk(stage_abs, 0, {})
+        for f in glob.glob(os.path.join(stage_abs, "_bucket=*", "*.parquet")):
+            # size recorded per file (Iceberg manifests carry
+            # file_size_in_bytes): feeds write-amplification metrics in
+            # commit manifests and size-aware maintenance
+            rec = {"path": os.path.relpath(f, self.root),
+                   "bucket": int(os.path.basename(os.path.dirname(f))
+                                 .split("=")[1]),
+                   "schema_id": sid, "bytes": os.path.getsize(f)}
+            if kind is not None:
+                rec["kind"] = kind
+            new_files.append(rec)
         return new_files
 
     #: bounded CAS retries before a commit gives up as a conflict — losing
@@ -1085,8 +1083,8 @@ class SnapshotTable:
         """Merge-on-read commit of ONE epoch (or of none: ``epoch=None``):
         a group of one through ``commit_delta_grouped``, the single
         delta-staging body. ``df`` holds per-key LWW winners carrying
-        ``_bucket`` + internal cols; without a ``checkpoint_epoch`` column
-        they stage as one ``_bucket=<b>`` layer."""
+        ``_bucket`` + internal cols; they stage as one ``_bucket=<b>``
+        layer."""
         return self.commit_delta_grouped(
             df, [] if epoch is None else [epoch], manifests, base=base)
 
@@ -1103,10 +1101,11 @@ class SnapshotTable:
         compaction and maintenance).
 
         GROUP COMMIT: the winners of SEVERAL epochs stage in ONE write job
-        and publish as a single atomic snapshot. When ``df`` carries a
-        ``checkpoint_epoch`` column (restricted to ``epochs``) the layout
-        is ``checkpoint_epoch=<e>/_bucket=<b>``, so every epoch keeps its
-        own delta layer; otherwise it is ``_bucket=<b>``. Each Spark job
+        as ONE ``_bucket=<b>`` layer and publish as a single atomic
+        snapshot, so file count and fold depth grow with commits, not
+        epochs. A ``checkpoint_epoch`` column in ``df`` (restricted to
+        ``epochs``) is stored as a plain data column: ``key_history`` reads
+        each row's epoch from it. Each Spark job
         carries a constant planning/scheduling cost that doesn't
         parallelize; replaying a deep backlog of small epochs
         one-job-per-epoch pays it per epoch (measured ~1.2s/epoch at
@@ -1121,10 +1120,9 @@ class SnapshotTable:
 
         ``manifests`` may be a list, or a callable evaluated after the stage
         write and before the snapshot publish — called with the staged file
-        list (each ``{path, bucket, ...}``, paths relative to the table
-        root) so the caller can derive manifest stats from ``df.observe``
-        metrics or the staged parquet footers of the very same job, making
-        a commit cost exactly ONE Spark job.
+        list (each ``{path, bucket, bytes, ...}``, paths relative to the
+        table root) so the caller can record the write volume of the very
+        same job.
 
         Deltas are purely ADDITIVE, so a commit that loses the version CAS
         to a concurrent writer rebases automatically (new head's files +
@@ -1136,12 +1134,9 @@ class SnapshotTable:
         sid = _sid_for(prev, prev.fields)
         stage_abs = os.path.join(self.root, "data",
                                  f"delta-{uuid.uuid4().hex[:12]}")
-        partition_cols = (["checkpoint_epoch", "_bucket"]
-                          if "checkpoint_epoch" in df.columns else ["_bucket"])
-        new_files = self._stage_files(
-            df, stage_abs, partition_cols,
-            max(prev.n_buckets // 2, 1) * max(len(epochs), 1),
-            sid, "delta", snap=prev)
+        new_files = self._stage_files(df, stage_abs,
+                                      max(prev.n_buckets // 2, 1), sid,
+                                      "delta", snap=prev)
         manifest_rows = manifests(new_files) if callable(manifests) else manifests
 
         def rebuild(b: Snapshot) -> Snapshot:
@@ -2234,7 +2229,7 @@ def _projected_fields(snap, columns: list[str] | None):
 
 
 def _read_group(spark: SparkSession, schemas: dict, sid: str,
-                paths: list[str]) -> DataFrame:
+                paths: list[str], row_epoch: bool = False) -> DataFrame:
     """Read one write-time schema group with an EXPLICIT schema built from
     the snapshot's stored per-``schema_id`` field list + the engine's
     system columns — the physical layout every engine write produces.
@@ -2247,36 +2242,42 @@ def _read_group(spark: SparkSession, schemas: dict, sid: str,
     schema, so inference is information we paid for twice. Parquet
     resolution is by NAME (column order in the file is irrelevant);
     pre-upgrade snapshot docs without a stored schema for ``sid`` fall
-    back to inference."""
+    back to inference. ``row_epoch`` adds the stored ``EPOCH_COL`` (NULL
+    in files without it)."""
     flds = (schemas or {}).get(sid)
     if flds is None:
         return spark.read.parquet(*paths)
     ddl = ", ".join(
         [f'{f["name"]} {sql_type(f["type"])}' for f in flds]
-        + [f"{c} {t}" for c, t in INTERNAL_COLS.items()])
+        + [f"{c} {t}" for c, t in INTERNAL_COLS.items()]
+        + ([f"{EPOCH_COL} int"] if row_epoch else []))
     return spark.read.schema(ddl).parquet(*paths)
 
 
 def _scan(spark: SparkSession, root: str, snap: Snapshot, files: list[dict],
           fields: list[dict] | None = None,
-          tags: tuple[str, ...] = ()) -> DataFrame | None:
+          tags: tuple[str, ...] = (),
+          row_epoch: bool = False) -> DataFrame | None:
     """THE file-scan body of every table read: group ``files`` (records
     with table-relative ``path`` and ``schema_id``) by write-time schema,
     read each group with its stored schema (``_read_group``), normalize it
     onto ``fields`` (default: the snapshot's full schema) and union the
     groups. Each record key named in ``tags`` also splits the groups and
     comes back as a bigint literal column of that name (the changelog's
-    version, the key history's epoch and version). ``None`` when
-    ``files`` is empty, so each caller builds its own typed empty frame."""
+    version, the key history's epoch and version). ``row_epoch`` also
+    keeps each row's stored ``EPOCH_COL`` (NULL where a file has none).
+    ``None`` when ``files`` is empty, so each caller builds its own typed
+    empty frame."""
     groups: dict[tuple, list[str]] = {}
     for f in files:
         groups.setdefault((f["schema_id"], *(f[t] for t in tags)),
                           []).append(os.path.join(root, f["path"]))
     out = None
     for (sid, *vals), paths in groups.items():
-        df = _normalize(_read_group(spark, snap.schemas, sid, paths),
+        df = _normalize(_read_group(spark, snap.schemas, sid, paths,
+                                    row_epoch),
                         fields if fields is not None else snap.fields,
-                        snap.aliases)
+                        snap.aliases, row_epoch)
         if tags:
             df = df.select("*", *[F.lit(v).cast("bigint").alias(t)
                                   for t, v in zip(tags, vals)])
@@ -2284,12 +2285,15 @@ def _scan(spark: SparkSession, root: str, snap: Snapshot, files: list[dict],
     return out
 
 
-def _normalize(df: DataFrame, fields: list[dict], aliases: dict) -> DataFrame:
+def _normalize(df: DataFrame, fields: list[dict], aliases: dict,
+               row_epoch: bool = False) -> DataFrame:
     """Project any historical file schema onto the current logical schema:
-    rename via alias map, null-fill missing columns, cast (covers widening)."""
+    rename via alias map, null-fill missing columns, cast (covers widening).
+    ``row_epoch`` keeps ``EPOCH_COL`` (NULL when absent)."""
     present = set(df.columns)
     cols = field_projection(present, fields, aliases)
-    for vc, typ in INTERNAL_COLS.items():
+    internal = {**INTERNAL_COLS, **({EPOCH_COL: "int"} if row_epoch else {})}
+    for vc, typ in internal.items():
         default = F.lit(False) if typ == "boolean" else F.lit(None)
         cols.append((F.col(vc) if vc in present else default).cast(typ).alias(vc))
     return df.select(cols)

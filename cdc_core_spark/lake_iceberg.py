@@ -64,9 +64,9 @@ semantics identical; table-level ``props`` map onto Iceberg table
 properties, a separate metadata commit — benign because the engine's props
 are idempotent markers), but it is not yet a drop-in ``engine.table``. Two
 engine conveniences are explicitly out of scope and rejected loudly rather
-than mis-handled: callable ``manifests`` (the engine's footer-stats fast
-path derives stats from OUR staged files; Iceberg manages its own files, so
-stats must be materialized pre-commit — pass a list), and in-commit
+than mis-handled: callable ``manifests`` (the engine's callable records
+the write volume of OUR staged files; Iceberg manages its own files, so
+manifest rows must be materialized pre-commit — pass a list), and in-commit
 re-bucketing (``n_buckets=`` on ``commit_merge``; Iceberg evolves partition
 specs via ``ALTER TABLE ... REPLACE PARTITION FIELD`` + a rewrite, a
 maintenance flow, not a merge flag).
@@ -239,7 +239,7 @@ class IcebergSnapshotTable:
         if callable(manifests):
             raise TypeError(
                 "IcebergSnapshotTable does not accept callable manifests: "
-                "the footer-stats fast path derives stats from "
+                "the engine's callable records the write volume of "
                 "SnapshotTable's OWN staged files, which Iceberg manages "
                 "internally — materialize the manifest rows before the "
                 "commit and pass a list (module docstring, Scope)")

@@ -37,22 +37,11 @@ VERSION_ORDER = ("_op_ts", "_event_seq")
 
 
 def lww_reduce(events: DataFrame, key_cols: list[str],
-               payload_cols: list[str],
-               with_stats: bool = False) -> DataFrame:
+               payload_cols: list[str]) -> DataFrame:
     """Reduce to one winner row per key: the max-(op_ts, event_seq) event.
 
-    ``events`` must carry ``_op_ts``/``_event_seq`` version columns.
-
-    ``with_stats`` additionally emits the per-key lineage column ``_max_seq``
-    in the SAME aggregation (no extra scan job): the max event_seq seen —
-    NOT necessarily the winner's seq under out-of-order op_ts. Winner op_ts
-    is already the key's max op_ts (first component of the lexicographic
-    version max). Together they give the epoch commit's manifest watermark.
-    """
+    ``events`` must carry ``_op_ts``/``_event_seq`` version columns."""
     ver = F.struct(*[F.col(c) for c in VERSION_ORDER])
     pay = F.struct(*[F.col(c) for c in VERSION_ORDER + tuple(payload_cols)])
-    aggs = [F.max_by(pay, ver).alias("_w")]
-    if with_stats:
-        aggs.append(F.max("_event_seq").alias("_max_seq"))
-    won = events.groupBy(*key_cols).agg(*aggs)
-    return won.select(*key_cols, "_w.*", *(["_max_seq"] if with_stats else []))
+    won = events.groupBy(*key_cols).agg(F.max_by(pay, ver).alias("_w"))
+    return won.select(*key_cols, "_w.*")

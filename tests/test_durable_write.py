@@ -184,15 +184,96 @@ def _ivf_write(tmp_path, request, crash):
                  crash, same_answers=False)
 
 
-PROTOCOLS = {"lease": (_lease, 1), "sync": (_sync, 8),
-             "write_text_index": (_write_text_index, 1),
-             "compact_text_index": (_compact_text_index, 1),
-             "ivf_write": (_ivf_write, 1)}
+def _engine_crash(tmp_path, request, crash, run):
+    """Shared delta-protocol check on the t1 fixture: ``run(engine, t1)``
+    drives every epoch from whatever state the table is in; it is
+    interrupted once by the crash, then rerun by a fresh engine (a
+    restarted process). The rerun must reach the oracle state with an exact
+    epoch ledger, no retained snapshot may reference a missing file, and
+    the orphan sweep must leave only referenced stage directories."""
+    from cdc_core_spark.engine import CdcEngine
+    from tests.conftest import assert_final_equal
+    spark, t1, registry = (request.getfixturevalue(n)
+                           for n in ("spark", "t1", "registry"))
+    root = str(tmp_path / "e")
+    with crash:
+        run(CdcEngine(spark, root, registry, n_buckets=4), t1)
+    eng = CdcEngine(spark, root, registry, n_buckets=4)
+    run(eng, t1)
+    assert_final_equal(eng.read_final_with_sha().toPandas(), t1["expected"])
+    t = eng.table
+    assert t.committed_epochs() == set(_t1_epochs(t1))
+    referenced = set()
+    for p in t._snapshot_paths():
+        for f in t._load_snapshot(p).files:
+            assert os.path.exists(os.path.join(t.root, f["path"])), f
+            referenced.add(f["path"].split(os.sep)[1])
+    t.remove_orphan_files(grace_s=0)
+    assert set(os.listdir(t.data_dir)) == referenced
+
+
+def _t1_epochs(t1) -> list[int]:
+    return sorted(int(d.split("=")[1]) for d in
+                  os.listdir(os.path.join(t1["dir"], "change_events"))
+                  if d.startswith("checkpoint_epoch="))
+
+
+def _run_replay(eng, t1):
+    """Grouped replay under the writer lease (lease, heartbeats, renewals,
+    the initial load, DDL commits and group commits all publish)."""
+    src = eng.spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
+    eng.replay(f'{t1["dir"]}/change_events', source_df=src)
+
+
+def _run_apply_epoch(eng, t1):
+    """One standalone ``apply_epoch`` per epoch (the streaming path), after
+    the initial load, skipping what the ledger already holds."""
+    from pyspark.sql import functions as F
+    spark = eng.spark
+    if not (eng.table.exists()
+            and eng.table.latest_meta().props.get("initial_loaded")):
+        eng.initial_load(
+            spark.read.parquet(f'{t1["dir"]}/source_repos.parquet'))
+    events = spark.read.parquet(f'{t1["dir"]}/change_events')
+    done = eng.table.committed_epochs()
+    for e in _t1_epochs(t1):
+        if e not in done:
+            eng.apply_epoch(events.filter(F.col("checkpoint_epoch") == e), e)
+
+
+def _replay(tmp_path, request, crash):
+    _engine_crash(tmp_path, request, crash, _run_replay)
+
+
+def _apply_epoch(tmp_path, request, crash):
+    _engine_crash(tmp_path, request, crash, _run_apply_epoch)
+
+
+# The two delta protocols make 22 (replay) and 13 (apply_epoch) durable
+# calls on t1 with 4 buckets, and each case replays t1 up to twice, so k is
+# sampled to fit the Tier-1 budget: one of each kind of write.
+# replay: 1 lease acquire, 3 initial-load commit, 5 lease renew, 6 first
+# group commit, 9 DDL commit, 10 the group commit right after it, 22 the
+# final renew; heartbeats (4, 7, ...) sit just before a renew and unwind
+# the same way.
+# apply_epoch: 1 table create (the rerun finishes a half-created table),
+# 3 first epoch commit, 13 the last epoch's commit; its initial load and
+# mid-stream commits crash the same way as replay's 3 and 10.
+REPLAY_KS = (1, 3, 5, 6, 9, 10, 22)
+APPLY_EPOCH_KS = (1, 3, 13)
+
+PROTOCOLS = {"lease": (_lease, [1]), "sync": (_sync, range(1, 9)),
+             "write_text_index": (_write_text_index, [1]),
+             "compact_text_index": (_compact_text_index, [1]),
+             "ivf_write": (_ivf_write, [1]),
+             # sampled k: see the comment above
+             "replay": (_replay, REPLAY_KS),
+             "apply_epoch": (_apply_epoch, APPLY_EPOCH_KS)}
 
 
 @pytest.mark.parametrize("protocol,k,when", [
-    (p, k, when) for p, (_, n) in PROTOCOLS.items()
-    for k in range(1, n + 1) for when in ("before", "after")])
+    (p, k, when) for p, (_, ks) in PROTOCOLS.items()
+    for k in ks for when in ("before", "after")])
 def test_crash_at_publish_then_rerun(protocol, k, when, tmp_path, request):
     PROTOCOLS[protocol][0](tmp_path, request, crash_at(k, when))
 

@@ -8,6 +8,7 @@ the resume point (MessageProcessor.doRun seek logic, :144-193).
 
 from __future__ import annotations
 
+import collections
 import glob
 import os
 
@@ -134,6 +135,14 @@ def test_group_commit_equivalence(spark, t1, registry, tmp_path):
     assert mc.equals(mb)
     assert c.table.committed_epochs() == b.table.committed_epochs()
     assert len(b.table._snapshot_paths()) < len(c.table._snapshot_paths())
+    # one delta layer per group commit, not per epoch: no bucket holds
+    # more live delta files than the grouped replay made data commits
+    groups = sum(any(m["checkpoint_epoch"] >= 0 for m in
+                     b.table._load_snapshot(p).manifests)
+                 for p in b.table._snapshot_paths())
+    per_bucket = collections.Counter(
+        f["bucket"] for f in b.table.latest().files if f.get("kind") == "delta")
+    assert per_bucket and max(per_bucket.values()) <= groups < len(epochs)
 
     # resume semantics: rerunning the grouped replay is a full no-op
     v_before = b.table.latest().version

@@ -171,3 +171,105 @@ def test_key_history_oldest_retained_is_maintenance(spark, t1, registry,
                    & (F.col("path") == key["path"])).toPandas())
     assert hist["content"].tolist() == cur["content"].tolist()
     assert hist["op"].tolist() == ["U"]
+
+
+def _to_epoch_layer_layout(table) -> int:
+    """Rewrite every delta file of ``table`` into the layout group commits
+    staged before the one-layer change: one ``checkpoint_epoch=<e>/
+    _bucket=<b>/`` file per (epoch, bucket), the epoch in the path and in
+    the file record's ``epoch`` key instead of a stored column, plus the
+    ``_max_seq`` lineage column. Every snapshot doc is rewritten to match.
+    Returns the number of old-layout files written."""
+    import glob
+    import json
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    moved: dict[str, list[dict]] = {}
+    for f in table.latest().files:
+        if f.get("kind") != "delta":
+            continue
+        src = os.path.join(table.root, f["path"])
+        data = pq.read_table(src)
+        stage = os.path.dirname(os.path.dirname(f["path"]))
+        recs = []
+        for e in sorted(set(data.column("checkpoint_epoch").to_pylist())):
+            part = (data.filter(pc.equal(data["checkpoint_epoch"], e))
+                    .drop_columns(["checkpoint_epoch"]))
+            part = part.append_column("_max_seq", part["_event_seq"])
+            rel = os.path.join(stage, f"checkpoint_epoch={e}",
+                               f"_bucket={f['bucket']}",
+                               os.path.basename(f["path"]))
+            os.makedirs(os.path.join(table.root, os.path.dirname(rel)),
+                        exist_ok=True)
+            pq.write_table(part, os.path.join(table.root, rel))
+            recs.append({**f, "path": rel, "epoch": e,
+                         "bytes": os.path.getsize(
+                             os.path.join(table.root, rel))})
+        moved[f["path"]] = recs
+        os.remove(src)
+    for doc_path in glob.glob(os.path.join(table.log_dir, "v*.json")):
+        with open(doc_path) as fh:
+            doc = json.load(fh)
+        assert isinstance(doc["files"], list)   # no manifest-list sidecar
+        doc["files"] = [r for f in doc["files"]
+                        for r in moved.get(f["path"], [f])]
+        with open(doc_path, "w") as fh:
+            json.dump(doc, fh)
+    return sum(len(v) for v in moved.values())
+
+
+def test_epoch_layer_layout_stays_readable(spark, t1, registry, tmp_path):
+    """A table whose older delta files use the per-epoch layer layout
+    (epoch in the path and file record, ``_max_seq`` column) keeps reading
+    exactly like one written at the one-layer layout after new epochs
+    commit over it: final state, key_history epochs on old and new rows,
+    read_changes and compaction."""
+    evdir = f'{t1["dir"]}/change_events'
+    src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
+    epochs = sorted(t1["fx"].change_events["checkpoint_epoch"].unique()
+                    .tolist())
+    first, rest = epochs[:len(epochs) // 2], epochs[len(epochs) // 2:]
+    engines = {}
+    for name in ("old", "new"):
+        eng = CdcEngine(spark, str(tmp_path / name), registry, n_buckets=4)
+        eng.replay(evdir, source_df=src, epochs=first)
+        if name == "old":
+            assert _to_epoch_layer_layout(eng.table) > 0
+            eng = CdcEngine(spark, str(tmp_path / name), registry,
+                            n_buckets=4)
+        eng.replay(evdir, epochs=rest)
+        engines[name] = eng
+    old, new = engines["old"], engines["new"]
+    old_files = [f for f in old.table.latest().files if "epoch" in f]
+    assert old_files and all("checkpoint_epoch=" in f["path"]
+                             for f in old_files)
+
+    def same(a, b):
+        assert a.columns == b.columns
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+    same(old.read_final(), new.read_final())
+    v0 = min(h["version"] for h in new.table.history()
+             if h["n_files"] and h["epoch"] is None)
+    same(old.table.read_changes(spark, v0), new.table.read_changes(spark, v0))
+
+    # a key with committed versions in both halves: old and new rows
+    ev = _valid_events(t1["fx"])
+    span = ev.groupby(["repo", "path"])["checkpoint_epoch"].agg(["min", "max"])
+    repo, path = span[(span["min"] < rest[0]) & (span["max"] >= rest[0])].index[0]
+    key = {"repo": repo, "path": path}
+    hist = old.table.key_history(spark, key).toPandas()
+    pd.testing.assert_frame_equal(
+        hist, new.table.key_history(spark, key).toPandas())
+    applied = hist[hist["op_ts"] != -1]
+    assert applied["epoch"].tolist() == \
+        _winners_per_epoch(ev, repo, path)["checkpoint_epoch"].tolist()
+    assert min(applied["epoch"]) in first and max(applied["epoch"]) in rest
+
+    for eng in (old, new):
+        eng.compact()
+    same(old.read_final(), new.read_final())
+    assert old.count_final() == len(t1["expected"])

@@ -148,9 +148,9 @@ def test_merge_overwrites_only_touched_buckets(spark, ice):
 
 
 def test_callable_manifests_rejected_loudly(spark):
-    """Sandbox-runnable (no jars touched): the engine's footer-stats fast
-    path passes a CALLABLE — the adapter must reject it with guidance, not
-    json.dumps a function into a snapshot property."""
+    """Sandbox-runnable (no jars touched): the engine's write-volume
+    manifests are a CALLABLE — the adapter must reject it with guidance,
+    not json.dumps a function into a snapshot property."""
     t = IcebergSnapshotTable(spark, "ice.db.unused")
     t.key_cols = ["repo"]
     t.n_buckets = 4

@@ -44,19 +44,3 @@ def test_duplicate_delivery_collapses(spark):
     out = lww_reduce(df, ["repo", "path"], ["v"])
     assert out.count() == 1
     assert _winners(df)[("r", "a")] == ("x", 100, 1)
-
-
-def test_with_stats_emits_max_seq_lineage(spark):
-    """with_stats adds exactly one lineage column, ``_max_seq``: the max
-    event_seq seen per key, which under out-of-order op_ts is NOT the
-    winner's own seq."""
-    rows = [("r", "a", "late-ts", 300, 1),   # winner: max op_ts, low seq
-            ("r", "a", "early", 100, 9),     # max seq, loses on op_ts
-            ("r", "b", "only", 50, 4)]
-    df = _df(spark, rows)
-    out = lww_reduce(df, ["repo", "path"], ["v"], with_stats=True)
-    assert out.columns == ["repo", "path", "_op_ts", "_event_seq", "v",
-                           "_max_seq"]
-    got = {(r["path"], r["v"], r["_event_seq"], r["_max_seq"])
-           for r in out.collect()}
-    assert got == {("a", "late-ts", 1, 9), ("b", "only", 4, 4)}

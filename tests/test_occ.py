@@ -96,12 +96,16 @@ def test_delta_rebases_over_concurrent_delta(spark, tmp_path, entry):
     assert snap.parent == base.version + 1
     assert snap.version == base.version + 2
     assert t1.committed_epochs() == {0, 1, 2}
-    # the staged layout follows the frame: an epoch layer only when it
-    # carries checkpoint_epoch
+    # one _bucket layer either way: no file record carries an epoch; the
+    # grouped entry's rows store checkpoint_epoch as a data column
     mid = {f["path"] for f in t1.snapshot(base.version + 1).files}
     ours = [f for f in snap.files if f["path"] not in mid]
-    assert ours and all(f.get("epoch") == (
-        2 if entry == "commit_delta_grouped" else None) for f in ours)
+    assert ours and all("epoch" not in f for f in ours)
+    if entry == "commit_delta_grouped":
+        stored = spark.read.parquet(
+            *[os.path.join(str(tmp_path), f["path"]) for f in ours])
+        assert [r[0] for r in stored.select("checkpoint_epoch")
+                .distinct().collect()] == [2]
     # state equals serial application of all three epochs
     assert _state(spark, t1) == {1: 11, 2: 20, 3: 30}
 

@@ -175,18 +175,18 @@ def test_manifest_lineage(spark, t1, registry, tmp_path):
     assert set(data_mf["checkpoint_epoch"].unique()) == set(range(8))
 
 
-#: Spark jobs of a standalone apply_epoch on t1 epoch 1 at default AQE
-#: (8 buckets, 8 shuffle partitions): DDL collect, lineage pre-stats
-#: collect, DLQ write, and the grouped delta write. Measured: 8 (8-9 over
-#: epochs 1-3).
+#: Spark jobs of a standalone apply_epoch on t1 at default AQE (8 buckets,
+#: 8 shuffle partitions): DDL collect, lineage pre-stats collect, DLQ
+#: write, and the grouped delta write. Measured: 8 on every epoch 0-7,
+#: DDL-carrying ones included (the DDL collect has no sort).
 STANDALONE_EPOCH_JOBS = 8
 
 
 def test_epoch_apply_job_counts(spark, t1, registry, tmp_path):
     """PERF CONTRACT, two parts. (1) With the epoch's inputs pre-counted
     (``_epoch_prestats``), the grouped merge-on-read write is exactly ONE
-    Spark action — the staged delta write; manifests come from parquet
-    footers. (2) A standalone ``apply_epoch`` — the streaming, flow and
+    Spark action — the staged delta write; every logical manifest value
+    comes from the pre-stats. (2) A standalone ``apply_epoch`` — the streaming, flow and
     s3_events path — launches no more jobs than measured on the single
     apply path. Guards the per-commit job floor against regressions that
     sneak extra jobs into the epoch path."""
@@ -222,10 +222,16 @@ def test_epoch_apply_job_counts(spark, t1, registry, tmp_path):
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     assert len(jobs) == 1, f"grouped write took {len(jobs)} jobs: {jobs}"
 
-    jobs = jobs_of("standalone_epoch", lambda: eng.apply_epoch(
-        events.filter(F.col("checkpoint_epoch") == 1), 1))
-    assert len(jobs) <= STANDALONE_EPOCH_JOBS, \
-        f"standalone apply_epoch took {len(jobs)} jobs: {jobs}"
+    # a DDL-free epoch, then the first DDL-carrying one, applied in order
+    ev = t1["fx"].change_events
+    ddl_epoch = int(ev[ev["op"].isin([0, 1, 2])]["checkpoint_epoch"].min())
+    assert ddl_epoch > 1
+    for e in range(1, ddl_epoch + 1):
+        jobs = jobs_of(f"standalone_epoch_{e}", lambda: eng.apply_epoch(
+            events.filter(F.col("checkpoint_epoch") == e), e))
+        if e in (1, ddl_epoch):
+            assert len(jobs) <= STANDALONE_EPOCH_JOBS, \
+                f"standalone apply_epoch {e} took {len(jobs)} jobs: {jobs}"
 
 
 def test_errors_df_clean_run_schema(spark, t1, registry, tmp_path):

@@ -186,9 +186,14 @@ def test_property_roundtrip_random_members():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    name_st = st.text(min_size=1, max_size=30).filter(
-        lambda s: "/" not in s.strip() and s.isprintable()
-        and s == s.strip())
+    # printable, no "/", no edge whitespace, 1-30 chars — built from that
+    # alphabet, not filtered out of arbitrary text. Among printable
+    # characters only U+0020 is whitespace, so it may appear inside only
+    edge = st.characters(categories=("L", "M", "N", "P", "S"),
+                         exclude_characters="/")
+    name_st = st.one_of(edge, st.builds(
+        lambda a, mid, b: a + mid + b, edge,
+        st.text(st.one_of(edge, st.just(" ")), max_size=28), edge))
     member_st = st.tuples(name_st, st.binary(min_size=0, max_size=4096))
 
     @settings(max_examples=25, deadline=None)
@@ -197,6 +202,9 @@ def test_property_roundtrip_random_members():
            password=st.text(min_size=1, max_size=20),
            strength=st.sampled_from([1, 2, 3]))
     def roundtrip(members, password, strength):
+        for name, _ in members:
+            assert ("/" not in name and name.isprintable()
+                    and name == name.strip() and 1 <= len(name) <= 30)
         buf = io.BytesIO()
         wz.write_winzip_aes(buf, members, password, strength=strength,
                             salt_seed=b"prop")
