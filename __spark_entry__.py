@@ -134,34 +134,27 @@ def q_cdc_lww_latest(spark, sf_dir):
                     F.col("w.event_id").alias("last_event_id")))
 
 
-def q_cdc_lww_salted(spark, sf_dir):
-    """Same winners via the explicit two-stage salted reduction (hot-key
-    defense, BaseShardedExecutor analog) — must equal q_cdc_lww_latest."""
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "_salt", F.pmod(F.xxhash64("event_id"), F.lit(8)))
-    ver = F.struct("ts", "event_id")
-    pay = F.struct("ts", "event_id", "event_type", "value")
-    s1 = (ev.groupBy("user_id", "_salt").agg(F.max_by(pay, ver).alias("w")))
-    s2 = (s1.groupBy("user_id")
-          .agg(F.max_by("w", F.struct(F.col("w.ts"), F.col("w.event_id"))).alias("w")))
-    return s2.select("user_id",
-                     F.col("w.event_type").alias("last_type"),
-                     F.round("w.value", 4).alias("last_value"),
-                     F.col("w.event_id").alias("last_event_id"))
-
-
 def q_cdc_lww_checked(spark, sf_dir):
     """Gate form of the LWW reduction: the algebraic max_by winners PLUS an
-    in-query equality assertion against the explicit two-stage salted
-    reduction (the hot-key defense path) — the result is
-    ``plain ∪ (salted \\ plain) ∪ (plain \\ salted)``, which equals the
+    in-query equality assertion against the engine's own
+    ``lww.lww_reduce`` over the same events, with ``ts``/``event_id``
+    mapped onto its ``_op_ts``/``_event_seq`` version columns — the result
+    is ``plain ∪ (engine \\ plain) ∪ (plain \\ engine)``, which equals the
     plain winner set iff both reductions agree; any diff in either
     direction surfaces as extra rows and fails the row-count/value-hash
-    gate. Keeps BOTH reduction strategies exercised by one oracle entry."""
+    gate. So the oracle entry also checks the shipped reduction."""
+    from cdc_core_spark.lww import lww_reduce
     plain = q_cdc_lww_latest(spark, sf_dir)
-    salted = q_cdc_lww_salted(spark, sf_dir)
-    return (plain.unionByName(salted.exceptAll(plain))
-            .unionByName(plain.exceptAll(salted)))
+    ev = (_t(spark, sf_dir, "events")
+          .withColumnRenamed("ts", "_op_ts")
+          .withColumnRenamed("event_id", "_event_seq"))
+    engine = (lww_reduce(ev, ["user_id"], ["event_type", "value"])
+              .select("user_id",
+                      F.col("event_type").alias("last_type"),
+                      F.round("value", 4).alias("last_value"),
+                      F.col("_event_seq").alias("last_event_id")))
+    return (plain.unionByName(engine.exceptAll(plain))
+            .unionByName(plain.exceptAll(engine)))
 
 
 def q_cdc_merge_state(spark, sf_dir):
@@ -1973,20 +1966,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     correctness gate checks the leading entries of this dict, so this
     ordering is what puts every oracle inside its check window. Gate
     consolidations (one entry exercising two operator paths, each noted on
-    its q_ function): cdc_lww_latest also equality-checks the salted
-    reduction; cdc_op_dispatch folds in the distinct-delivery collapse;
-    search_q unions the page/top-k/point-lookup query-surface shapes;
-    anti_semi_setops unions the anti and semi shapes; grouping_sets unions
-    ROLLUP and CUBE; scalar_transformers includes the roundtrip identities;
-    reader_csv_json unions both format roundtrips; sampling_splits joins
-    the consistent split with the stratified sample; text_stats folds in
-    the fingerprint, PII scrub/count and repetition-ratio columns; windows
-    unions the running / tumbling / session window shapes (formerly three
-    entries — freed two slots for the temporal-join gates); asof_join
-    unions the backward / tolerance / forward as-of modes; reader_formats
-    unions the fixed-width / XML / Excel roundtrips and jdbc_roundtrip the
-    JDBC data + schema-generation parity (freed three slots for the
-    temporal_enrich, lineage_inspect and s3_events gates)."""
+    its q_ function): cdc_lww_latest also equality-checks the engine's
+    shipped ``lww.lww_reduce``; cdc_op_dispatch folds in the
+    distinct-delivery collapse; search_q unions the page/top-k/point-lookup
+    query-surface shapes; anti_semi_setops unions the anti and semi shapes;
+    grouping_sets unions ROLLUP and CUBE; scalar_transformers includes the
+    roundtrip identities; reader_csv_json unions both format roundtrips;
+    sampling_splits joins the consistent split with the stratified sample;
+    text_stats folds in the fingerprint, PII scrub/count and
+    repetition-ratio columns; windows unions the running / tumbling /
+    session window shapes (formerly three entries — freed two slots for the
+    temporal-join gates); asof_join unions the backward / tolerance /
+    forward as-of modes; reader_formats unions the fixed-width / XML / Excel
+    roundtrips and jdbc_roundtrip the JDBC data + schema-generation parity
+    (freed three slots for the temporal_enrich, lineage_inspect and
+    s3_events gates)."""
     return {
         # CDC core + sinks
         "cdc_lww_latest": q_cdc_lww_checked,

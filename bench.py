@@ -46,7 +46,6 @@ from cdc_core_spark.synth import DEFAULT_CACHE as CACHE  # one shared cache root
 # work is verification overhead, not operator cost)
 HEADLINE_QUERIES = [
     ("cdc_lww_latest", "q_cdc_lww_latest"),
-    ("cdc_lww_salted", "q_cdc_lww_salted"),
     ("cdc_merge_state", "q_cdc_merge_state"),
     ("cdc_running_window", "q_cdc_running_window"),
     ("tumbling_window", "q_tumbling_window"),

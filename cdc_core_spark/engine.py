@@ -469,10 +469,7 @@ class CdcEngine:
     # ------------------------------------------------------------------ replay
     def replay(self, events_path: str, source_df: DataFrame | None = None,
                schema_version: str = "1.0", epochs: list[int] | None = None,
-               compact_every: int | None = None, lease: bool = True,
-               transform=None,
-               background_compact: int | None = None,
-               refresh_stats: bool = False) -> None:
+               lease: bool = True, transform=None) -> None:
         """Resume-from-checkpoint replay loop. Skips epochs whose manifests are
         already committed (the ReceiverOffset committed-split analog).
 
@@ -492,63 +489,23 @@ class CdcEngine:
         the transformed stream — identical to the reference's ordering,
         where the pipeline runs before the DataStore ever sees a record.
 
-        ``compact_every`` re-bases the merge-on-read deltas every N applied
-        epochs (and read cost stays bounded by base + ≤N delta layers — at
-        10^10-event scale this is the knob that trades write amplification
-        against read fold depth). Compaction is itself a plain snapshot
-        commit, so a crash mid-compaction is invisible to correctness.
-
         ``lease`` guards the run with the single-writer lease and emits
         per-group liveness heartbeats (coordination.py — DistributedLock /
         HeartbeatThread analogs); a second driver on the same table fails
         fast with LockHeldError instead of computing doomed commits. The
         snapshot CAS remains the correctness arbiter either way.
 
-        ``background_compact=K`` runs incremental compaction
-        (``min_delta_files=K``) on a driver-side thread CONCURRENTLY with
-        the replay — the lake's optimistic commit rules are the only
-        coordination (additive epoch deltas and input-preserving rewrites
-        rebase over each other; the rewrite takes no lease). Unlike
-        ``compact_every``, ingest never waits for a rewrite: Spark
-        schedules both threads' jobs side by side. Measured on the bench
-        fixture (``OCC_PROBE.json``): rewrites land mid-replay with zero
-        conflicts, the racing replay wall matches or beats solo (the
-        background rewrites keep the merge-on-read fold shallow), and the
-        converged read is ~1.8× faster on the compacted end state. A
-        maintainer failure is re-raised AFTER the replay completes —
-        ingest is never sacrificed to a maintenance error.
-
-        ``refresh_stats=True`` runs ``refresh_stats()`` (churn-proportional
-        column statistics) after the replay's commits land."""
-        import threading
-
-        if background_compact is not None:
-            stop, errs = threading.Event(), []
-            th = threading.Thread(
-                target=self._bg_compact_loop,
-                args=(stop, errs, background_compact), daemon=True)
-            th.start()
-            try:
-                self.replay(events_path, source_df, schema_version, epochs,
-                            compact_every, lease,
-                            transform=transform)
-            finally:
-                stop.set()
-                th.join()
-            if errs:
-                raise RuntimeError(
-                    "background compaction failed (replay itself completed "
-                    "and committed)") from errs[0]
-            if refresh_stats:
-                self.refresh_stats()
-            return
-
+        Replay only ingests: one delta commit per run of DDL-free epochs,
+        so the merge-on-read fold depth a replay adds follows its DDL
+        boundaries. Maintenance is separate and explicit — ``compact()``
+        (may run concurrently from another thread; the lake's optimistic
+        commit rules rebase the two) and ``refresh_stats()``."""
         from cdc_core_spark import coordination as coord
         if lease:
             lock = coord.ProcessLock(self.root, owner=self.entity).acquire()
             try:
                 self._replay_locked(events_path, source_df, schema_version,
-                                    epochs, compact_every, transform=transform,
+                                    epochs, transform=transform,
                                     beat=lambda st, ep=None, err=None:
                                     (coord.write_heartbeat(self.root,
                                                            self.entity, st,
@@ -562,20 +519,17 @@ class CdcEngine:
                 lock.release()
         else:
             self._replay_locked(events_path, source_df, schema_version,
-                                epochs, compact_every, transform=transform,
+                                epochs, transform=transform,
                                 beat=lambda st, ep=None, err=None: None)
-        if refresh_stats:
-            self.refresh_stats()
 
     def refresh_stats(self) -> dict:
         """Churn-proportional column-statistics maintenance
         (``table_stats.refresh``: per-bucket HLL NDV sketches + null/min/
         max, recomputing only buckets whose files changed since the last
-        analyze — the Iceberg post-write ANALYZE step). Opt-in via
-        ``replay(refresh_stats=True)`` — it runs strictly AFTER the
-        replay's commits (reads table state + writes only ``_stats/``
-        sidecars, so it needs no lease and cannot perturb exactly-once
-        bookkeeping)."""
+        analyze — the Iceberg post-write ANALYZE step). Call it after a
+        replay's commits land; it reads table state and writes only
+        ``_stats/`` sidecars, so it needs no lease and cannot perturb
+        exactly-once bookkeeping."""
         from cdc_core_spark import table_stats
         return table_stats.refresh(self.spark, self.table)
 
@@ -654,7 +608,6 @@ class CdcEngine:
 
     def _replay_locked(self, events_path: str, source_df: DataFrame | None,
                        schema_version: str, epochs: list[int] | None,
-                       compact_every: int | None,
                        beat, transform=None) -> None:
         if (not self.table.exists()
                 or not self.table.latest_meta().props.get("initial_loaded")):
@@ -684,33 +637,19 @@ class CdcEngine:
             self._epoch_prestats(scope, todo)
 
         # Group consecutive DDL-free epochs into one job+commit each
-        # (apply_epoch_group). A DDL-carrying epoch starts a new group (its
-        # DDL must apply before its own and all later data); compact_every
-        # caps group length so the compaction cadence — and thus the delta
-        # fold depth bound — is preserved.
+        # (apply_epoch_group). A DDL-carrying epoch starts a new group: its
+        # DDL must apply before its own and all later data.
         groups: list[list[int]] = []
-        cur: list[int] = []
-        cap = compact_every or len(todo)
         for e in todo:
-            if cur and (schema_by_epoch[e] or len(cur) >= cap):
-                groups.append(cur)
-                cur = []
-            cur.append(e)
-        if cur:
-            groups.append(cur)
+            if not groups or schema_by_epoch[e]:
+                groups.append([])
+            groups[-1].append(e)
 
-        applied = 0
         for g in groups:
             batch = events.filter(F.col("checkpoint_epoch").isin(g))
             self.apply_epoch_group(batch, g, err_by_epoch, read_by_epoch,
                                    schema_rows=schema_by_epoch[g[0]])
-            prev_applied, applied = applied, applied + len(g)
             beat("running", ep=g[-1])
-            if compact_every and applied // compact_every > prev_applied // compact_every:
-                # incremental: only delta-bearing buckets re-base; a bucket
-                # the last `compact_every` epochs never touched is carried
-                # by reference instead of rewritten (state-invariant)
-                self.compact(min_delta_files=1)
         beat("idle", ep=todo[-1])
 
     # ------------------------------------------------------------- maintenance
@@ -748,22 +687,21 @@ class CdcEngine:
 
     def compact(self, n_buckets: int | str | None = None,
                 min_delta_files: int | None = None,
-                min_delta_bytes: int | None = None,
                 target_rows_per_bucket: int = 1_000_000) -> None:
         """Rewrite buckets into one base file set under the current schema —
         bounds small-file count and delta-fold depth, and re-materializes
         alias/widen normalization (the Iceberg rewrite_data_files analog).
+        This is the engine's one compaction entry point: ``replay`` never
+        compacts, so callers run it explicitly, as a separate maintenance
+        step or from a thread beside ingest (its commit is pinned to the
+        snapshot at entry and rebases over concurrent delta commits).
 
         ``min_delta_files`` makes the rewrite INCREMENTAL: only buckets whose
         delta-layer depth (file count from snapshot metadata — no data scan)
         reaches the threshold are rewritten; the rest carry forward by
         reference. This is the steady-state maintenance shape at 100 TB —
         compaction I/O follows where the churn went, not the table size
-        (Iceberg ``rewriteDataFiles`` with a file filter).
-        ``min_delta_bytes`` triggers on accumulated delta BYTES instead —
-        the write-amplification-aware variant (sizes ride the snapshot's
-        file records; the manifests' bytes_written column is the trend an
-        operator reads to pick the threshold). Default (both None)
+        (Iceberg ``rewriteDataFiles`` with a file filter). Default (None)
         rewrites everything.
 
         ``n_buckets`` RE-BUCKETS the table in the same atomic commit — the
@@ -801,36 +739,8 @@ class CdcEngine:
                        // target_rows_per_bucket) - 1).bit_length()))
         nb = n_buckets or self.n_buckets
         self.table.compact(self.spark, n_buckets=n_buckets,
-                           min_delta_files=min_delta_files,
-                           min_delta_bytes=min_delta_bytes)
+                           min_delta_files=min_delta_files)
         self.n_buckets = nb
-
-    def _bg_compact_loop(self, stop, errs: list,
-                         min_delta_files: int) -> None:
-        """Background maintainer driven by ``replay(background_compact=K)``:
-        incremental rewrites against the live table, each pass pinned to
-        the snapshot at its entry and rebased over whatever ingest commits
-        meanwhile (lake OCC). Goes straight at ``self.table`` — never
-        ``self.compact`` — so the replay thread's engine state
-        (``n_buckets`` sync) is untouched. Between passes it waits for
-        fresh ingest so an idle stream isn't rewritten in a hot loop.
-        Any failure is recorded for the caller, which re-raises AFTER the
-        replay finishes — a maintenance error must not kill ingest."""
-        try:
-            while not stop.is_set():
-                if not self.table.exists():   # initial load not published yet
-                    stop.wait(0.05)
-                    continue
-                v = self.table.latest_meta().version
-                self.table.compact(self.spark,
-                                   min_delta_files=min_delta_files)
-                deadline = time.monotonic() + 5.0
-                while (self.table.latest_meta().version <= v + 1
-                       and time.monotonic() < deadline
-                       and not stop.is_set()):
-                    stop.wait(0.05)
-        except Exception as e:               # re-raised by replay() post-run
-            errs.append(e)
 
     # ------------------------------------------------------------------- reads
     def read_final(self, columns: list[str] | None = None) -> DataFrame:
@@ -857,11 +767,12 @@ class CdcEngine:
         """Per-(epoch, partition) lineage ledger. ``bytes_written`` /
         ``files_written`` are the MOR delta commit's staged write volume —
         the write-amplification signal an operator trends against
-        ``events_applied`` to size ``compact_every``. A group commit stages
-        one layer per bucket for all its epochs, so a bucket's volume sits
-        on its row in the group's last epoch that applied events to it (0
-        on that bucket's other rows, and on initial-load, quarantine-only
-        and empty-epoch marker rows); per-bucket sums are exact."""
+        ``events_applied`` to pick ``compact(min_delta_files=)``. A group
+        commit stages one layer per bucket for all its epochs, so a bucket's
+        volume sits on its row in the group's last epoch that applied events
+        to it (0 on that bucket's other rows, and on initial-load,
+        quarantine-only and empty-epoch marker rows); per-bucket sums are
+        exact."""
         # default the write-volume fields: manifests committed by older
         # builds (or hand-written in tests) may predate them
         rows = [{"bytes_written": 0, "files_written": 0, **r}

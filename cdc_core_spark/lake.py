@@ -1915,21 +1915,16 @@ class SnapshotTable:
 
     def compact(self, spark: SparkSession, n_buckets: int | None = None,
                 min_delta_files: int | None = None,
-                min_delta_bytes: int | None = None,
                 base: Snapshot | None = None) -> None:
         """Re-base MOR delta layers into one base file set per bucket (the
-        Iceberg ``rewriteDataFiles`` analog). ``min_delta_files=K`` makes it
-        INCREMENTAL: buckets are selected by delta-layer file count from
-        snapshot metadata alone (no data scan) and only those are rewritten —
-        maintenance I/O follows the churn distribution, not table size.
-        ``min_delta_bytes=B`` selects by accumulated delta BYTES instead
-        (file records carry their staged size) — the better trigger when
-        churn is skewed: a hot bucket can pile megabytes into few files
-        while a cold one fragments into many tiny ones; byte-based
-        selection rewrites where the read-fold cost actually is. Both
-        thresholds given = union of the selections. ``n_buckets``
+        Iceberg ``rewriteDataFiles`` analog) — the table's one compaction
+        entry point; no write path compacts on its own. Three forms: a full
+        rewrite (default); ``min_delta_files=K``, INCREMENTAL: buckets are
+        selected by delta-layer file count from snapshot metadata alone (no
+        data scan) and only those are rewritten — maintenance I/O follows
+        the churn distribution, not table size; and ``n_buckets``, which
         re-buckets (necessarily full-table) in the same atomic commit.
-        State is invariant in all modes.
+        State is invariant in all forms.
 
         If the table carries a ``sort_order`` prop (a list of column names —
         the Iceberg table sort-order analog), compaction rewrites each
@@ -1958,26 +1953,11 @@ class SnapshotTable:
         nb = n_buckets or prev.n_buckets
         key_cols = prev.key_cols
 
-        if nb == prev.n_buckets and (min_delta_files is not None
-                                     or min_delta_bytes is not None):
+        if nb == prev.n_buckets and min_delta_files is not None:
             from collections import Counter
-            depth: Counter = Counter()
-            dbytes: Counter = Counter()
-            for f in prev.files:
-                if f.get("kind") == "delta":
-                    depth[f["bucket"]] += 1
-                    # records from pre-size builds lack "bytes": treat the
-                    # size as unknown-large so a byte-only trigger SELECTS
-                    # the bucket (counting 0 would skip it forever while
-                    # its fold depth grows unbounded); one rewrite brings
-                    # it into the sized world — self-healing
-                    dbytes[f["bucket"]] += f.get("bytes", float("inf"))
-            todo = sorted(
-                b for b in depth
-                if (min_delta_files is not None
-                    and depth[b] >= min_delta_files)
-                or (min_delta_bytes is not None
-                    and dbytes[b] >= min_delta_bytes))
+            depth = Counter(f["bucket"] for f in prev.files
+                            if f.get("kind") == "delta")
+            todo = sorted(b for b in depth if depth[b] >= min_delta_files)
             if not todo:
                 return
             df = (self.read(spark, buckets=todo, with_internal_cols=True,

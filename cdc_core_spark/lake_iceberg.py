@@ -485,24 +485,13 @@ class IcebergSnapshotTable:
                 .load(self.ident))
 
     # ---------------- maintenance ----------------
-    def compact(self, min_delta_files: int | None = None,
-                min_delta_bytes: int | None = None) -> None:
-        """rewrite_data_files. ``min_delta_files`` maps onto Iceberg's
+    def compact(self, min_delta_files: int | None = None) -> None:
+        """rewrite_data_files — the shim's one compaction entry point, as
+        ``SnapshotTable.compact`` is the local table's; no write path
+        compacts on its own. ``min_delta_files`` maps onto Iceberg's
         ``min-input-files`` (file-count trigger per rewrite group — same
-        throttling direction as SnapshotTable's). ``min_delta_bytes`` is
-        REFUSED: Iceberg's rewrite planner has no accumulated-bytes-per-
-        partition trigger, and the closest-looking option
-        (``min-file-size-bytes``) has the OPPOSITE tuning direction —
-        raising it compacts MORE (every file below the value becomes a
-        candidate), so silently mapping it would invert an operator's
-        intent on backend swap. Tune Iceberg via ``min-input-files`` /
-        ``target-file-size-bytes`` instead."""
-        if min_delta_bytes is not None:
-            raise ValueError(
-                "min_delta_bytes has no Iceberg rewrite_data_files "
-                "equivalent (min-file-size-bytes tunes in the OPPOSITE "
-                "direction) — use min_delta_files, or tune "
-                "target-file-size-bytes on the table")
+        throttling direction as SnapshotTable's); other tuning goes through
+        ``target-file-size-bytes`` on the table."""
         opts = []
         if min_delta_files is not None:
             opts.append(f"'min-input-files', '{int(min_delta_files)}'")

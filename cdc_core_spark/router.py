@@ -44,9 +44,8 @@ def route_replay(
 
     ``engines`` maps target-entity name → its ``CdcEngine``; ``sources``
     optionally maps the same names to initial-load DataFrames. Extra
-    ``replay_kw`` (``compact_every``, ``lease``, a caller
-    ``transform`` — composed AFTER the routing filter) pass through to each
-    engine's ``replay``.
+    ``replay_kw`` (``lease``, a caller ``transform`` — composed AFTER the
+    routing filter) pass through to each engine's ``replay``.
     """
     sources = sources or {}
     user_transform = replay_kw.pop("transform", None)

@@ -8,10 +8,10 @@ compacts. This probe measures the lake-native alternative on the real
 fixture, one Spark session, back to back:
 
   A. solo     — replay the fixture, nothing else running
-  B. racing   — the SHIPPED API: ``replay(background_compact=2)`` runs
-                incremental compaction on a maintainer thread against the
-                same table, each pass pinned to the snapshot at its entry
-                and rebased over whatever ingest committed meanwhile
+  B. racing   — a probe-local maintainer thread calls
+                ``compact(min_delta_files=2)`` against the same table while
+                the replay runs, each pass pinned to the snapshot at its
+                entry and rebased over whatever ingest committed meanwhile
 
 and reports: both replay walls, how many compactions landed mid-ingest,
 conflicts (must be 0 — additive deltas and input-preserving rewrites are
@@ -36,6 +36,7 @@ import json
 import os
 import shutil
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -66,21 +67,37 @@ def main() -> None:
         eng.initial_load(src, "1.0")
 
         tbl = SnapshotTable(os.path.join(root, "target"))
-        errs: list = []
-        t0 = time.monotonic()
-        if racing:
-            # the shipped API: replay + concurrent incremental rewrites,
-            # coordinated only by the lake's optimistic commit rules; a
-            # maintainer failure would re-raise here AFTER the replay
+        stop, errs = threading.Event(), []
+
+        def maintainer() -> None:
+            # concurrent incremental rewrites, coordinated only by the
+            # lake's optimistic commit rules; between passes wait for fresh
+            # ingest so an idle table is not rewritten in a hot loop
             try:
-                eng.replay(events_path, background_compact=2)
-            except RuntimeError as e:   # conflict budget is ZERO — surface
+                while not stop.is_set():
+                    v = tbl.latest_meta().version
+                    tbl.compact(spark, min_delta_files=2)
+                    deadline = time.monotonic() + 5.0
+                    while (tbl.latest_meta().version <= v + 1
+                           and time.monotonic() < deadline
+                           and not stop.is_set()):
+                        time.sleep(0.05)
+            except Exception as e:  # conflict budget is ZERO — surface it
                 errs.append(repr(e))
-        else:
+
+        th = threading.Thread(target=maintainer) if racing else None
+        t0 = time.monotonic()
+        if th:
+            th.start()
+        try:
             eng.replay(events_path)
+        finally:
+            if th:
+                stop.set()
+                th.join()
         replay_sec = time.monotonic() - t0
-        n_compact = [sum(1 for v in range(1, tbl.latest().version + 1)
-                         if tbl.snapshot(v).maintenance)]
+        n_compact = sum(1 for v in range(1, tbl.latest().version + 1)
+                        if tbl.snapshot(v).maintenance)
 
         t1 = time.monotonic()
         crc = int(state_crc(eng.read_final_with_sha()))
@@ -94,7 +111,7 @@ def main() -> None:
                     1 for f in snap.files if f.get("kind") == "delta"),
                 "total_files_at_end": len(snap.files),
                 "snapshot_versions": snap.version,
-                **({"compactions_landed_mid_ingest": n_compact[0],
+                **({"compactions_landed_mid_ingest": n_compact,
                     "commit_conflicts": len(errs),
                     "maintainer_errors": errs} if racing else {})}
 

@@ -190,7 +190,8 @@ def _engine_crash(tmp_path, request, crash, run):
     interrupted once by the crash, then rerun by a fresh engine (a
     restarted process). The rerun must reach the oracle state with an exact
     epoch ledger, no retained snapshot may reference a missing file, and
-    the orphan sweep must leave only referenced stage directories."""
+    the orphan sweep must leave only referenced stage directories. Returns
+    the rerun's engine."""
     from cdc_core_spark.engine import CdcEngine
     from tests.conftest import assert_final_equal
     spark, t1, registry = (request.getfixturevalue(n)
@@ -210,6 +211,7 @@ def _engine_crash(tmp_path, request, crash, run):
             referenced.add(f["path"].split(os.sep)[1])
     t.remove_orphan_files(grace_s=0)
     assert set(os.listdir(t.data_dir)) == referenced
+    return eng
 
 
 def _t1_epochs(t1) -> list[int]:
@@ -241,8 +243,21 @@ def _run_apply_epoch(eng, t1):
             eng.apply_epoch(events.filter(F.col("checkpoint_epoch") == e), e)
 
 
+def _run_compact(eng, t1):
+    """The grouped replay, then the one compaction entry point as an
+    explicit maintenance step: every delta-bearing bucket re-bases."""
+    _run_replay(eng, t1)
+    eng.compact(min_delta_files=1)
+
+
 def _replay(tmp_path, request, crash):
     _engine_crash(tmp_path, request, crash, _run_replay)
+
+
+def _compact(tmp_path, request, crash):
+    head = _engine_crash(tmp_path, request, crash, _run_compact).table.latest()
+    assert head.maintenance
+    assert not [f for f in head.files if f.get("kind") == "delta"]
 
 
 def _apply_epoch(tmp_path, request, crash):
@@ -259,8 +274,13 @@ def _apply_epoch(tmp_path, request, crash):
 # apply_epoch: 1 table create (the rerun finishes a half-created table),
 # 3 first epoch commit, 13 the last epoch's commit; its initial load and
 # mid-stream commits crash the same way as replay's 3 and 10.
+# compact: the replay's 22 calls, then 23 the compaction's only durable
+# call, its snapshot doc (Spark writes the rewritten files to a stage
+# directory). The rerun's replay commits nothing; its compaction redoes the
+# rewrite (before) or finds no delta left (after).
 REPLAY_KS = (1, 3, 5, 6, 9, 10, 22)
 APPLY_EPOCH_KS = (1, 3, 13)
+COMPACT_KS = (23,)
 
 PROTOCOLS = {"lease": (_lease, [1]), "sync": (_sync, range(1, 9)),
              "write_text_index": (_write_text_index, [1]),
@@ -268,7 +288,8 @@ PROTOCOLS = {"lease": (_lease, [1]), "sync": (_sync, range(1, 9)),
              "ivf_write": (_ivf_write, [1]),
              # sampled k: see the comment above
              "replay": (_replay, REPLAY_KS),
-             "apply_epoch": (_apply_epoch, APPLY_EPOCH_KS)}
+             "apply_epoch": (_apply_epoch, APPLY_EPOCH_KS),
+             "compact": (_compact, COMPACT_KS)}
 
 
 @pytest.mark.parametrize("protocol,k,when", [

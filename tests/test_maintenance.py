@@ -36,19 +36,6 @@ def test_expire_and_compact_preserve_state(spark, t1, registry, tmp_path):
     assert len(snap.files) <= max(n_files_before, 8)
 
 
-def test_compact_every_bounds_delta_depth(spark, t1, registry, tmp_path):
-    """replay(compact_every=3) re-bases mid-run: final state identical, and
-    at most the last (epochs % 3) epochs' delta layers remain un-based."""
-    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
-    src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
-    eng.replay(f'{t1["dir"]}/change_events', source_df=src, compact_every=3)
-    assert_final_equal(eng.read_final_with_sha().toPandas(), t1["expected"])
-    snap = eng.table.latest()
-    delta_commits = {f["path"].split("/")[1] for f in snap.files
-                     if f.get("kind") == "delta"}
-    assert len(delta_commits) <= 2  # 8 epochs, compacted after 3 and 6
-
-
 def test_old_snapshots_remain_readable(spark, t1, registry, tmp_path):
     """Time travel: every published snapshot stays readable (files are never
     deleted by commits — the snapshot log is an immutable chain)."""
@@ -579,41 +566,3 @@ def test_engine_zstd_level_rides_the_write(spark, tmp_path, monkeypatch):
 
     b1, b19 = state_bytes("1"), state_bytes("19")
     assert b19 < b1 * 0.97, (b1, b19)
-
-
-def test_compact_min_delta_bytes_rewrites_where_the_bytes_are(spark, tmp_path):
-    """Byte-triggered incremental compaction: selection follows accumulated
-    delta BYTES per bucket (from the snapshot's file sizes, no data scan),
-    so a hot bucket with few-but-fat delta layers is rewritten while cold
-    fragmented buckets carry forward; state is invariant."""
-    from tests.test_occ import _commit, _mk, _state
-
-    t = _mk(tmp_path)
-    # keys 0..3 hash to some buckets; pile many updates on key 0 (fat
-    # deltas) and a single tiny delta on the others
-    for i in range(6):
-        _commit(spark, t, [(0, 100 + i, False)], 100 + i, epoch=i)
-    _commit(spark, t, [(1, 10, False), (2, 20, False), (3, 30, False)],
-            900, epoch=9)
-    before = _state(spark, t)
-    snap = t.latest()
-    from collections import Counter
-    sizes = Counter()
-    for f in snap.files:
-        if f.get("kind") == "delta":
-            sizes[f["bucket"]] += f["bytes"]
-    hot = max(sizes, key=sizes.get)
-    thresh = sizes[hot]  # only the hottest bucket reaches it
-    assert sum(1 for b in sizes if sizes[b] >= thresh) == 1
-
-    t.compact(spark, min_delta_bytes=thresh)
-    after_files = t.latest().files
-    assert not any(f.get("kind") == "delta" and f["bucket"] == hot
-                   for f in after_files)          # hot bucket re-based
-    assert any(f.get("kind") == "delta" for f in after_files)  # cold kept
-    assert _state(spark, t) == before
-
-    # below-threshold second pass: metadata-only no-op
-    v = t.latest().version
-    t.compact(spark, min_delta_bytes=thresh * 1000)
-    assert t.latest().version == v

@@ -108,46 +108,6 @@ def test_compaction_thread_during_live_replay(spark, t1, registry, tmp_path):
     assert_final_equal(eng.read_final_with_sha().toPandas(), t1["expected"])
 
 
-def test_replay_background_compact_api(spark, t1, registry, tmp_path):
-    """The first-class form of the race above: replay(background_compact=K)
-    runs the maintainer thread itself. Full t1 replay (quarantine, group
-    commits, three schema episodes) with live incremental rewrites must
-    converge to the oracle with the exactly-once ledger intact."""
-    eng = CdcEngine(spark, str(tmp_path / "eng"), registry, n_buckets=8)
-    src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
-    eng.replay(f'{t1["dir"]}/change_events', source_df=src,
-               background_compact=2)
-    assert eng.table.committed_epochs() == set(range(8))
-    assert eng.table.latest().props["schema_version"] == "2.1"
-    assert_final_equal(eng.read_final_with_sha().toPandas(), t1["expected"])
-
-
-def test_background_compact_error_surfaces_after_replay(spark, t1, registry,
-                                                        tmp_path):
-    """The error contract: a failing maintainer must NOT kill ingest — the
-    replay runs to completion and commits everything, THEN the maintenance
-    failure is re-raised to the caller."""
-    eng = CdcEngine(spark, str(tmp_path / "eng"), registry, n_buckets=8)
-    src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
-    eng.initial_load(src, "1.0")
-
-    orig = eng.table.compact
-
-    def broken_compact(*a, **k):
-        raise OSError("disk quota exceeded (injected)")
-
-    eng.table.compact = broken_compact
-    try:
-        with pytest.raises(RuntimeError,
-                           match="background compaction failed"):
-            eng.replay(f'{t1["dir"]}/change_events', background_compact=2)
-    finally:
-        eng.table.compact = orig
-    # ingest was never sacrificed: every epoch committed, state converged
-    assert eng.table.committed_epochs() == set(range(8))
-    assert_final_equal(eng.read_final_with_sha().toPandas(), t1["expected"])
-
-
 def test_leaseless_double_replay_blocked_by_occ(spark, t1, registry,
                                                 tmp_path):
     """Belt-and-braces behind the lease: if TWO drivers replay the same

@@ -337,7 +337,8 @@ def test_manifest_write_volume_matches_staged_bytes(spark, t1, registry,
     """bytes_written/files_written in the manifests are the exact staged
     MOR-delta write volume: their totals must equal the byte/file counts of
     the delta files the snapshot references (write-amplification lineage an
-    operator trends against events_applied to size compact_every)."""
+    operator trends against events_applied to pick compact's
+    min_delta_files)."""
     eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     eng.replay(f'{t1["dir"]}/change_events', source_df=src)

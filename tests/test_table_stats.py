@@ -132,10 +132,12 @@ def test_string_bounds_truncated_iceberg_style(spark, t1, registry, tmp_path):
     assert _trunc_min("short") == "short" and _trunc_max("short") == "short"
 
 
-def test_engine_replay_refresh_stats_flag(spark, t1, registry, tmp_path):
-    """replay(refresh_stats=True) leaves stats current with the final
-    table version (first run = full analyze; reruns are churn-priced)."""
-    eng = _replayed(spark, t1, registry, tmp_path, refresh_stats=True)
+def test_engine_refresh_stats(spark, t1, registry, tmp_path):
+    """eng.refresh_stats() after a replay leaves stats current with the
+    final table version (first run = full analyze; reruns are
+    churn-priced)."""
+    eng = _replayed(spark, t1, registry, tmp_path)
+    eng.refresh_stats()
     st = table_stats.stats(spark, eng.table)
     assert st["table_version"] == eng.table.latest().version
     assert st["row_count"] == eng.table.read(spark).count()
@@ -144,7 +146,8 @@ def test_engine_replay_refresh_stats_flag(spark, t1, registry, tmp_path):
 def test_inspect_stats_table(spark, t1, registry, tmp_path):
     """inspect(spark, 'stats') — the Iceberg-inspection-table face of the
     stats doc: one row per analyzed column, numbers matching stats()."""
-    eng = _replayed(spark, t1, registry, tmp_path, refresh_stats=True)
+    eng = _replayed(spark, t1, registry, tmp_path)
+    eng.refresh_stats()
     df = eng.table.inspect(spark, "stats").toPandas().set_index("column")
     st = table_stats.stats(spark, eng.table)
     assert set(df.index) == set(st["columns"])
