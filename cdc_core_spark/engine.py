@@ -34,13 +34,18 @@ from pyspark.sql import functions as F
 
 from cdc_core_spark import fsutil
 from cdc_core_spark.lake import (SnapshotTable, bucket_expr,
-                                 field_projection, sql_type)
+                                 field_projection, ident, sql_type)
 from cdc_core_spark.lww import lww_reduce
 from cdc_core_spark.registry import SchemaDef, SchemaRegistry, validate_evolution
 
 OP_INSERT, OP_UPDATE, OP_DELETE = 3, 4, 5
 SCHEMA_OPS = (0, 1, 2)
 DATA_OPS = (OP_INSERT, OP_UPDATE, OP_DELETE)
+# the op-code sets as SQL ``IN`` lists, for expression-string predicates
+_IN_SCHEMA_OPS = f"IN ({', '.join(map(str, SCHEMA_OPS))})"
+_IN_DATA_OPS = f"IN ({', '.join(map(str, DATA_OPS))})"
+#: a data (non-DDL) event; a null op counts as data, so it reaches the DLQ
+_DATA_EVENT = f"NOT (coalesce(op, -1) {_IN_SCHEMA_OPS})"
 
 
 class WapAuditError(RuntimeError):
@@ -56,6 +61,12 @@ def _list_epochs(events_path: str) -> list[int] | None:
     if not dirs:
         return None
     return sorted(int(os.path.basename(d).split("=")[1]) for d in dirs)
+
+
+def _epoch_in(epochs: list[int]) -> str:
+    """SQL predicate selecting ``epochs`` of the event log (partition-pruned
+    like ``F.col("checkpoint_epoch").isin(epochs)``)."""
+    return f"checkpoint_epoch IN ({', '.join(str(int(e)) for e in epochs)})"
 
 
 def _manifest_row(epoch: int, partition_id: int, **vals) -> dict:
@@ -84,30 +95,25 @@ def valid_event_pred(key_cols: list[str] = ("repo", "path"),
     Null-safe by construction: a null op makes the raw conjunction NULL,
     which `filter(pred)` drops but `filter(~pred)` ALSO drops — the counting
     and quarantine paths would disagree. coalesce(False) pins null-op rows
-    to invalid on every consumer."""
-    pred = F.col("op").isin(*DATA_OPS)
-    for k in key_cols:
-        pred = pred & F.col(k).isNotNull()
-    pred = pred & F.col("op_ts").isNotNull() & F.col("event_seq").isNotNull()
+    to invalid on every consumer. Built as one SQL expression string."""
+    terms = [f"op {_IN_DATA_OPS}",
+             *[f"{ident(k)} IS NOT NULL" for k in key_cols],
+             "op_ts IS NOT NULL", "event_seq IS NOT NULL"]
     if content_col is not None:
-        pred = pred & ~((F.col("op") == OP_DELETE)
-                        & F.col(content_col).isNotNull())
-    return F.coalesce(pred, F.lit(False))
+        terms.append(f"NOT (op = {OP_DELETE} AND "
+                     f"{ident(content_col)} IS NOT NULL)")
+    return F.expr(f"coalesce({' AND '.join(terms)}, false)")
 
 
 def _error_reason(key_cols: list[str] = ("repo", "path")):
-    """DLQ reason tag, null-safe on op."""
-    null_key = F.lit(False)
-    for k in key_cols:
-        null_key = null_key | F.col(k).isNull()
-    return (
-        F.when(~F.coalesce(F.col("op").isin(*DATA_OPS), F.lit(False)),
-               F.lit("invalid_op"))
-        .when(null_key, F.lit("null_key"))
-        .when(F.col("op_ts").isNull() | F.col("event_seq").isNull(),
-              F.lit("null_version"))
-        .otherwise(F.lit("delete_with_content"))
-    )
+    """DLQ reason tag, null-safe on op: the first ``valid_event_pred``
+    term an event fails, as one SQL ``CASE`` expression string."""
+    null_key = " OR ".join(f"{ident(k)} IS NULL" for k in key_cols) or "false"
+    return F.expr(
+        f"CASE WHEN NOT coalesce(op {_IN_DATA_OPS}, false) THEN 'invalid_op' "
+        f"WHEN {null_key} THEN 'null_key' "
+        "WHEN op_ts IS NULL OR event_seq IS NULL THEN 'null_version' "
+        "ELSE 'delete_with_content' END")
 
 
 class CdcEngine:
@@ -232,21 +238,18 @@ class CdcEngine:
         # can tell a half-created table from a loaded one (a crash between
         # create() and commit would otherwise silently skip the initial load
         # on resume and lose every never-updated base row).
-        cols = []
-        present = set(source_df.columns)
-        for f in fields:
-            c = (F.col(f["name"]) if f["name"] in present else F.lit(None))
-            cols.append(c.cast(sql_type(f["type"])).alias(f["name"]))
         from pyspark.sql import Observation
         # a zero-row source (bootstrap purely from the change stream) plans
         # zero tasks, so its Observation never fires and .get would die in
         # the JVM — detect up front (take(1), trivial next to the load)
         empty_source = source_df.isEmpty()
         obs = Observation("initial_load")
-        df = (source_df.select(cols)
-              .withColumn("_op_ts", F.lit(-1).cast("bigint"))
-              .withColumn("_event_seq", F.lit(-1).cast("bigint"))
-              .withColumn("_deleted", F.lit(False))
+        # the bucket hashes the PROJECTED (declared-type) keys, so it is
+        # a column over the projection, not part of it
+        df = (source_df.selectExpr(
+                  *field_projection(set(source_df.columns), fields, {}),
+                  "CAST(-1 AS bigint) AS _op_ts",
+                  "CAST(-1 AS bigint) AS _event_seq", "false AS _deleted")
               .withColumn("_bucket", bucket_expr(sdef.key_cols(), self.n_buckets))
               .observe(obs, F.count(F.lit(1)).alias("n")))
 
@@ -289,16 +292,17 @@ class CdcEngine:
         null-fill added columns; attach the version columns (the storage
         bucket is computed on the WINNER set — attaching it per raw event
         here would be a dead expression). ``checkpoint_epoch`` passes
-        through as an int: winners reduce per (epoch, key) and store it."""
+        through as an int: winners reduce per (epoch, key) and store it.
+        One ``selectExpr`` of expression strings: one JVM call for the
+        whole projection."""
         # the projection itself is THE shared lake.field_projection — the
         # LWW merge depends on events being projected identically to stored
         # files, so the alias/coalesce/cast logic must have one definition
-        cols = field_projection(set(events.columns), sdef.fields, sdef.aliases)
-        cols.append(F.col("op").cast("int").alias("op"))
-        cols.append(F.col("op_ts").cast("bigint").alias("_op_ts"))
-        cols.append(F.col("event_seq").cast("bigint").alias("_event_seq"))
-        cols.append(F.col("checkpoint_epoch").cast("int"))
-        return events.select(cols)
+        return events.selectExpr(
+            *field_projection(set(events.columns), sdef.fields, sdef.aliases),
+            "CAST(op AS int) AS op", "CAST(op_ts AS bigint) AS _op_ts",
+            "CAST(event_seq AS bigint) AS _event_seq",
+            "CAST(checkpoint_epoch AS int) AS checkpoint_epoch")
 
     # ------------------------------------------------------------- epoch apply
     def _epoch_prestats(self, scope: DataFrame, epochs: list[int]):
@@ -319,7 +323,7 @@ class CdcEngine:
         valid-event manifest values as ``_manifest_row`` keywords."""
         schema_by_epoch: dict[int, list] = {e: [] for e in epochs}
         # a handful of rows: sorted here, not by a range-partitioned sort
-        ddl_rows = (scope.filter(F.col("op").isin(*SCHEMA_OPS))
+        ddl_rows = (scope.filter(f"op {_IN_SCHEMA_OPS}")
                     .select("checkpoint_epoch", "schema_version", "event_seq")
                     .collect())
         for r in sorted(ddl_rows, key=lambda r: (r["event_seq"] is not None,
@@ -339,16 +343,15 @@ class CdcEngine:
                   for f in self.table.latest_meta().fields
                   if f["name"] in key_cols}
         nb = bucket_expr(key_cols, self.n_buckets, cast_types=ktypes)
-        data = scope.filter(~F.coalesce(F.col("op"), F.lit(-1)).isin(*SCHEMA_OPS))
+        data = scope.filter(_DATA_EVENT)
         stat_rows = (data.withColumn("_bucket", nb).withColumn("_ok", vpred)
                      .groupBy("checkpoint_epoch", "_bucket", "_ok")
-                     .agg(F.count(F.lit(1)).alias("n"),
-                          F.count_distinct(*[F.col(k).cast(sql_type(ktypes[k]))
-                                             for k in key_cols])
-                          .alias("keys"),
-                          F.max(F.col("op_ts").cast("bigint")).alias("mts"),
-                          F.max(F.col("event_seq").cast("bigint"))
-                          .alias("mseq"))
+                     .agg(F.expr("count(1) AS n"),
+                          F.expr("count(DISTINCT " + ", ".join(
+                              f"CAST({ident(k)} AS {sql_type(ktypes[k])})"
+                              for k in key_cols) + ") AS keys"),
+                          F.expr("max(CAST(op_ts AS bigint)) AS mts"),
+                          F.expr("max(CAST(event_seq AS bigint)) AS mseq"))
                      .collect())
         err_by_epoch: dict[int, dict[int, int]] = {e: {} for e in epochs}
         read_by_epoch: dict[int, dict[int, dict]] = {e: {} for e in epochs}
@@ -428,14 +431,14 @@ class CdcEngine:
         key_cols = sdef.key_cols()
         payload_cols = [f["name"] for f in sdef.fields if f["name"] not in key_cols]
 
-        data = events.filter(~F.coalesce(F.col("op"), F.lit(-1)).isin(*SCHEMA_OPS))
+        data = events.filter(_DATA_EVENT)
         kc, cc = self._pred_args(events)
         valid = data.filter(valid_event_pred(kc, cc))
         ev = self._normalize_events(valid, sdef)
         winners = lww_reduce(ev, ["checkpoint_epoch"] + key_cols,
                              payload_cols + ["op"])
         delta = (winners.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
-                 .withColumn("_deleted", F.col("op") == OP_DELETE).drop("op"))
+                 .withColumn("_deleted", F.expr(f"op = {OP_DELETE}")).drop("op"))
 
         def manifests(new_files: list[dict]) -> list[dict]:
             wall_ms = int((time.monotonic() - t0) * 1000)
@@ -632,7 +635,7 @@ class CdcEngine:
             beat("idle")
             return
         beat("running")
-        scope = events.filter(F.col("checkpoint_epoch").isin(todo))
+        scope = events.filter(_epoch_in(todo))
         schema_by_epoch, read_by_epoch, err_by_epoch = \
             self._epoch_prestats(scope, todo)
 
@@ -646,7 +649,7 @@ class CdcEngine:
             groups[-1].append(e)
 
         for g in groups:
-            batch = events.filter(F.col("checkpoint_epoch").isin(g))
+            batch = events.filter(_epoch_in(g))
             self.apply_epoch_group(batch, g, err_by_epoch, read_by_epoch,
                                    schema_rows=schema_by_epoch[g[0]])
             beat("running", ep=g[-1])

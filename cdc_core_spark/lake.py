@@ -150,6 +150,14 @@ def sql_type(t: str) -> str:
     return _TYPES[t.lower()]
 
 
+def ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (a backtick inside it
+    doubled), so a plan piece built as an expression string references
+    exactly that column: spaces, dots and SQL syntax in a name stay part of
+    the name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def bucket_expr(key_cols: list[str], n_buckets: int,
                 cast_types: dict[str, str] | None = None):
     """Deterministic storage bucket of a key — xxhash64 over the full key so
@@ -162,9 +170,10 @@ def bucket_expr(key_cols: list[str], n_buckets: int,
     the write path buckets AFTER normalization casts, so an event file
     carrying a narrower type than the table schema would otherwise put
     stats and data in disagreeing buckets."""
-    cols = [F.col(c).cast(sql_type(cast_types[c])) if cast_types is not None
-            else F.col(c) for c in key_cols]
-    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
+    cols = ", ".join(
+        f"CAST({ident(c)} AS {sql_type(cast_types[c])})"
+        if cast_types is not None else ident(c) for c in key_cols)
+    return F.expr(f"CAST(pmod(xxhash64({cols}), {int(n_buckets)}) AS int)")
 
 
 @dataclass
@@ -747,7 +756,7 @@ class SnapshotTable:
         if not files:
             tmap = {f["name"]: f["type"] for f in fields}
             ddl = ", ".join(
-                [f'{n} {sql_type(tmap[n])}' for n in out_names]
+                [f'{ident(n)} {sql_type(tmap[n])}' for n in out_names]
                 + ([f"{c} {t}" for c, t in INTERNAL_COLS.items()] if with_internal_cols else [])
             )
             return spark.createDataFrame([], schema=ddl)
@@ -758,8 +767,8 @@ class SnapshotTable:
                        if f["name"] not in snap.key_cols]
             out = lww_reduce(out, snap.key_cols, payload + ["_deleted"])
         if not with_internal_cols:
-            out = out.filter(~F.col("_deleted"))
-        return out.select(*out_cols)
+            out = out.filter("NOT _deleted")
+        return out.selectExpr(*map(ident, out_cols))
 
     # ---------------- write / commit ----------------
     def commit_merge(self, df: DataFrame, touched_buckets: list[int],
@@ -2158,29 +2167,38 @@ def _sid_for(prev: Snapshot, fields: list[dict]) -> str:
 
 
 def field_projection(present: set[str], fields: list[dict],
-                     aliases: dict) -> list:
+                     aliases: dict) -> list[str]:
     """THE single definition of the schema-projection columns — alias-map
     rename (old writers → new name, coalesced), null-fill missing columns,
     cast to the declared type (covers widening). Shared by the read-side
     file normalization (``_normalize``) and the engine's write-side event
     projection (``CdcEngine._normalize_events``): the LWW merge depends on
     events being projected IDENTICALLY to stored files, so the logic must
-    not be able to drift between the two."""
+    not be able to drift between the two.
+
+    Returns one SQL expression string per field, ``CAST(<src> AS <type>)
+    AS <name>`` with ``<src>`` the present column, ``coalesce(<new>,
+    <old>...)`` over the present names of a renamed field, or ``NULL``.
+    Every name goes through ``ident`` (backtick-quoted, inner backticks
+    doubled), so a field name is never parsed as SQL or as a nested-field
+    path. Callers apply the strings, plus their own columns, in one
+    ``selectExpr``: one JVM call, where a ``Column`` per field costs ~35
+    py4j round trips."""
     inv: dict[str, list[str]] = {}
     for old, new in aliases.items():
         inv.setdefault(new, []).append(old)
     cols = []
     for f in fields:
-        name, typ = f["name"], sql_type(f["type"])
+        name = f["name"]
         candidates = ([name] if name in present else []) + \
             [o for o in inv.get(name, []) if o in present]
         if len(candidates) > 1:
-            c = F.coalesce(*[F.col(x) for x in candidates])
+            src = f"coalesce({', '.join(ident(x) for x in candidates)})"
         elif candidates:
-            c = F.col(candidates[0])
+            src = ident(candidates[0])
         else:
-            c = F.lit(None)
-        cols.append(c.cast(typ).alias(name))
+            src = "NULL"
+        cols.append(f"CAST({src} AS {sql_type(f['type'])}) AS {ident(name)}")
     return cols
 
 
@@ -2228,7 +2246,7 @@ def _read_group(spark: SparkSession, schemas: dict, sid: str,
     if flds is None:
         return spark.read.parquet(*paths)
     ddl = ", ".join(
-        [f'{f["name"]} {sql_type(f["type"])}' for f in flds]
+        [f'{ident(f["name"])} {sql_type(f["type"])}' for f in flds]
         + [f"{c} {t}" for c, t in INTERNAL_COLS.items()]
         + ([f"{EPOCH_COL} int"] if row_epoch else []))
     return spark.read.schema(ddl).parquet(*paths)
@@ -2259,8 +2277,9 @@ def _scan(spark: SparkSession, root: str, snap: Snapshot, files: list[dict],
                         fields if fields is not None else snap.fields,
                         snap.aliases, row_epoch)
         if tags:
-            df = df.select("*", *[F.lit(v).cast("bigint").alias(t)
-                                  for t, v in zip(tags, vals)])
+            df = df.selectExpr("*", *[
+                f"CAST({'NULL' if v is None else int(v)} AS bigint) AS {t}"
+                for t, v in zip(tags, vals)])
         out = df if out is None else out.unionByName(df)
     return out
 
@@ -2269,11 +2288,14 @@ def _normalize(df: DataFrame, fields: list[dict], aliases: dict,
                row_epoch: bool = False) -> DataFrame:
     """Project any historical file schema onto the current logical schema:
     rename via alias map, null-fill missing columns, cast (covers widening).
-    ``row_epoch`` keeps ``EPOCH_COL`` (NULL when absent)."""
+    ``row_epoch`` keeps ``EPOCH_COL`` (NULL when absent). One ``selectExpr``
+    of ``field_projection``'s strings plus the internal columns (a missing
+    ``_deleted`` reads as false)."""
     present = set(df.columns)
     cols = field_projection(present, fields, aliases)
     internal = {**INTERNAL_COLS, **({EPOCH_COL: "int"} if row_epoch else {})}
     for vc, typ in internal.items():
-        default = F.lit(False) if typ == "boolean" else F.lit(None)
-        cols.append((F.col(vc) if vc in present else default).cast(typ).alias(vc))
-    return df.select(cols)
+        src = (vc if vc in present
+               else "false" if typ == "boolean" else "NULL")
+        cols.append(f"CAST({src} AS {typ}) AS {vc}")
+    return df.selectExpr(*cols)

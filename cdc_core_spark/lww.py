@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_core_spark.lake import ident
+
 VERSION_ORDER = ("_op_ts", "_event_seq")
 
 
@@ -40,8 +42,14 @@ def lww_reduce(events: DataFrame, key_cols: list[str],
                payload_cols: list[str]) -> DataFrame:
     """Reduce to one winner row per key: the max-(op_ts, event_seq) event.
 
-    ``events`` must carry ``_op_ts``/``_event_seq`` version columns."""
-    ver = F.struct(*[F.col(c) for c in VERSION_ORDER])
-    pay = F.struct(*[F.col(c) for c in VERSION_ORDER + tuple(payload_cols)])
-    won = events.groupBy(*key_cols).agg(F.max_by(pay, ver).alias("_w"))
-    return won.select(*key_cols, "_w.*")
+    ``events`` must carry ``_op_ts``/``_event_seq`` version columns. The
+    aggregate is ONE expression string, ``max_by(struct(<versions>,
+    <payload>), struct(<versions>)) AS _w``, every name quoted by
+    ``lake.ident`` — one JVM call instead of a ``Column`` per struct
+    field — and the winner struct is expanded back to columns by name."""
+    ver = ", ".join(map(ident, VERSION_ORDER))
+    pay = ", ".join(map(ident, VERSION_ORDER + tuple(payload_cols)))
+    keys = [ident(k) for k in key_cols]
+    won = events.groupBy(*keys).agg(
+        F.expr(f"max_by(struct({pay}), struct({ver})) AS _w"))
+    return won.selectExpr(*keys, "_w.*")

@@ -27,7 +27,7 @@ from pyspark.sql.functions import pandas_udf
 
 
 def normalize_text(col, unicode_letters: bool = False) -> "F.Column":
-    """Canonicalize before hashing: lowercase, collapse whitespace, strip
+    r"""Canonicalize before hashing: lowercase, collapse whitespace, strip
     non-alphanumerics (keeps spaces).
 
     The default alphabet is ASCII ``[a-z0-9]`` — it mirrors the DuckDB SQL

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_core_spark.lake import SnapshotTable, bucket_expr
+from cdc_core_spark.lake import SnapshotTable, bucket_expr, ident, sql_type
 
 # reverse of lake.sql_type for deriving SnapshotTable field docs from a
 # DataFrame schema (doc-store keys are scalars by contract)
@@ -76,22 +76,30 @@ def shred_documents(df: DataFrame, schema_ddl: str) -> DataFrame:
 
 def find_document(spark: SparkSession, root: str, key: dict) -> DataFrame:
     """Keyed point read (MongoDbDataStore.findEntity analog), pruned to the
-    single bucket the key hashes to — one file group touched, not a scan."""
+    single bucket the key hashes to — one file group touched, not a scan.
+
+    The bucket comes from a probe typed exactly like the stored key
+    columns (xxhash64 is type-sensitive, so an inferred, wider probe type
+    would mis-bucket): ``SELECT CAST(k0 AS <type>) AS <key>, … FROM VALUES
+    (:k0, …)``, the key values bound as named SQL parameters in
+    ``key_cols`` order, hashed by the writers' ``bucket_expr``. The
+    optimizer folds the inline table to a local relation, so the probe's
+    ``collect`` runs no Spark job and starts no Python worker: a point
+    read's jobs are those of the returned frame's action (2 on a
+    merge-on-read bucket: scan and fold)."""
     from cdc_core_spark.query import find_by_key
-    from cdc_core_spark.lake import sql_type
     tbl = SnapshotTable(root)
     snap = tbl.latest()
     key_cols = snap.key_cols
-    # probe typed exactly like the stored key columns — xxhash64 is
-    # type-sensitive, so an inferred (wider) probe type would mis-bucket.
-    # DDL order must follow key_cols (not snap.fields declaration order):
-    # the value tuple below binds positionally, and a table whose field
-    # order differs from its key_cols order would otherwise hash swapped
-    # values and silently probe the wrong bucket
     tmap = {f["name"]: sql_type(f["type"]) for f in snap.fields}
-    ddl = ", ".join(f"{k} {tmap[k]}" for k in key_cols)
-    probe = spark.createDataFrame([tuple(key[k] for k in key_cols)], ddl)
-    b = probe.select(bucket_expr(key_cols, snap.n_buckets).alias("b")).first()["b"]
+    params = [f"k{i}" for i in range(len(key_cols))]
+    probe = spark.sql(
+        "SELECT " + ", ".join(f"CAST({p} AS {tmap[k]}) AS {ident(k)}"
+                              for p, k in zip(params, key_cols))
+        + f" FROM VALUES ({', '.join(':' + p for p in params)})"
+        + f" AS probe({', '.join(params)})",
+        args={p: key[k] for p, k in zip(params, key_cols)})
+    b = probe.select(bucket_expr(key_cols, snap.n_buckets)).collect()[0][0]
     # reuse the snapshot already loaded — read() without snap= would parse
     # the snapshot log + manifest-list sidecar a second time per point read
     return find_by_key(tbl.read(spark, buckets=[int(b)], snap=snap), key)
@@ -144,7 +152,6 @@ def upsert_documents(df: DataFrame, root: str, key_cols: list[str],
     # `touched`, and strand a stale duplicate that find_document's
     # correctly-typed probe then returns forever — a silent lost update.
     # find_document types its probe the same way (see above).
-    from cdc_core_spark.lake import sql_type
     tmap = {f["name"]: sql_type(f["type"]) for f in meta.fields}
     incoming = incoming.select(
         *[F.col(k).cast(tmap[k]).alias(k) for k in key_cols],

@@ -135,6 +135,19 @@ def test_no_row_python_udf_in_package_source():
     assert not hits, hits
 
 
+def test_package_source_compiles_without_warnings():
+    """Every package module compiles with warnings as errors: an invalid
+    escape in a string (a ``DeprecationWarning``, a ``SyntaxWarning`` from
+    Python 3.12) is a latent syntax error, not noise."""
+    import glob
+    import warnings
+    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)), "cdc_core_spark")
+    for f in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(f) as fh, warnings.catch_warnings():
+            warnings.simplefilter("error")
+            compile(fh.read(), f, "exec")
+
+
 def test_epoch_scan_is_partition_pruned(spark, t1):
     events = spark.read.parquet(os.path.join(t1["dir"], "change_events"))
     pruned = events.filter(F.col("checkpoint_epoch").isin([2, 3]))
@@ -218,3 +231,87 @@ def test_key_predicate_pushes_through_mor_fold(spark, tmp_path):
     assert "EqualTo(repo,r1)" in flat and "EqualTo(path,p7)" in flat, p
     assert "Not(EqualTo(_deleted,true))" in flat, p
     assert out.count() == 1
+
+
+#: py4j commands that BUILDING each plan may send (no action runs). The
+#: pieces are SQL expression strings, one JVM call each: measured 162
+#: (one-bucket read over 4 schema groups), 16 (event projection) and 34
+#: (LWW reduce), bounded at about twice that. Built from ``Column`` objects
+#: (a round trip per ``F.col``/``cast``/``alias``, each also capturing a
+#: call site) the same plans took 1809, 412 and 211.
+PLAN_PY4J_BOUNDS = {"read": 330, "normalize_events": 40, "lww_reduce": 70}
+#: a point read: the bucket scan and the merge-on-read fold; the bucket
+#: probe itself is folded to a local relation and runs no job
+FIND_DOCUMENT_JOBS = 2
+
+
+def _py4j_commands(monkeypatch, build):
+    """(result, py4j commands ``build()`` sent). Counts at
+    ``GatewayClient.send_command``, which PySpark's pinned-thread
+    ``ClientServer`` client inherits, and only on the calling thread: py4j
+    releases collected JVM objects from a thread of its own, at times set
+    by Python's GC."""
+    import threading
+    from py4j.java_gateway import GatewayClient
+    caller = threading.get_ident()
+    sent = [0]
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        sent[0] += threading.get_ident() == caller
+        return send(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(GatewayClient, "send_command", counting)
+        out = build()
+    return out, sent[0]
+
+
+def test_plan_building_py4j_cost(spark, t1, registry, tmp_path,
+                                 monkeypatch):
+    """PERF CONTRACT: building the read and apply plans costs a bounded,
+    small number of py4j round trips — measured on the PLAN only (counts
+    taken around actions drift run to run). Guards against plan pieces
+    going back to one ``Column`` per field."""
+    from cdc_core_spark.engine import CdcEngine
+    from cdc_core_spark.lww import lww_reduce
+    from cdc_core_spark.sinks import docstore
+
+    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=4)
+    eng.replay(os.path.join(t1["dir"], "change_events"),
+               source_df=spark.read.parquet(
+                   os.path.join(t1["dir"], "source_repos.parquet")))
+    snap = eng.table.latest()
+    groups = {f["schema_id"] for f in snap.files if f["bucket"] == 0}
+    assert len(groups) >= 2, groups
+
+    sdef = eng.current_schema
+    events = spark.read.parquet(os.path.join(t1["dir"], "change_events"))
+    payload = [f["name"] for f in sdef.fields
+               if f["name"] not in sdef.key_cols()] + ["op"]
+    ev = eng._normalize_events(events, sdef)
+    builds = {
+        "read": lambda: eng.table.read(spark, buckets=[0], snap=snap),
+        "normalize_events": lambda: eng._normalize_events(events, sdef),
+        "lww_reduce": lambda: lww_reduce(
+            ev, ["checkpoint_epoch"] + sdef.key_cols(), payload),
+    }
+    for name, build in builds.items():
+        build()  # first build pays one-time class lookups
+        _, sent = _py4j_commands(monkeypatch, build)
+        assert sent <= PLAN_PY4J_BOUNDS[name], \
+            f"building {name} sent {sent} py4j commands"
+
+    row = t1["expected"].iloc[0]
+    sc = spark.sparkContext
+    sc.setJobGroup("find_document", "find_document", False)
+    try:
+        got = docstore.find_document(
+            spark, eng.table.root,
+            {"repo": row["repo"], "path": row["path"]}).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("find_document")
+    finally:
+        sc.setJobGroup(None, None, False)
+    assert [r["content"] for r in got] == [row["content"]]
+    assert len(jobs) <= FIND_DOCUMENT_JOBS, \
+        f"find_document + collect took {len(jobs)} jobs: {jobs}"
