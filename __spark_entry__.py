@@ -807,7 +807,7 @@ def q_stream_engine_replay(spark, sf_dir):
     eng = CdcEngine(spark, root, _replay_registry(), n_buckets=8)
     eng.initial_load(_replay_initial(spark, sf_dir), schema_version="1.0")
 
-    # pad the adapter columns up to the streaming EVENT_DDL contract; the
+    # pad the adapter columns up to the engine's event_schema; the
     # in-band DDL events ride the odd-parity microbatch like the batch path
     def pad(df):
         return (df.withColumn("commit", F.lit(None).cast("string"))

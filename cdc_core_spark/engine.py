@@ -13,11 +13,15 @@ equivalent is a driver epoch loop:
         stage winners as a merge-on-read delta commit   (keyed upsert/delete)
         atomically commit snapshot + per-partition manifests  (exactly-once)
 
-Consecutive DDL-free epochs apply as one group — one Spark job, one delta
-layer, one snapshot (``apply_epoch_group``); a standalone ``apply_epoch`` is
-a group of one, so every commit takes the same path. Every logical manifest
-value comes from the one pre-stats scan (``_epoch_prestats``), never from
-reading the staged files back.
+Every pending epoch applies as ONE group — one Spark job, one delta layer,
+one snapshot (``apply_epoch_group``), in-band DDL included: each DDL segment
+of the group is projected with the schema in force for it, lifted to the
+group's final schema, and the schema change publishes in the same snapshot
+as the data. A standalone ``apply_epoch`` is a group of one, so every commit
+takes the same path. Every logical manifest value and every DDL row comes
+from the one pre-stats scan (``_epoch_prestats``), never from reading the
+staged files back. The event log is read through one schema derived from
+the registry (``event_schema``), never through a file footer.
 
 Idempotence: re-running an epoch is a no-op — winners carry the same version
 tuple as the target rows they produced, and LWW max_by of identical rows is
@@ -28,6 +32,7 @@ from __future__ import annotations
 
 import os
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,7 +41,8 @@ from cdc_core_spark import fsutil
 from cdc_core_spark.lake import (SnapshotTable, bucket_expr,
                                  field_projection, ident, sql_type)
 from cdc_core_spark.lww import lww_reduce
-from cdc_core_spark.registry import SchemaDef, SchemaRegistry, validate_evolution
+from cdc_core_spark.registry import (WIDENING, SchemaDef, SchemaEvolutionError,
+                                     SchemaRegistry, validate_evolution)
 
 OP_INSERT, OP_UPDATE, OP_DELETE = 3, 4, 5
 SCHEMA_OPS = (0, 1, 2)
@@ -46,6 +52,54 @@ _IN_SCHEMA_OPS = f"IN ({', '.join(map(str, SCHEMA_OPS))})"
 _IN_DATA_OPS = f"IN ({', '.join(map(str, DATA_OPS))})"
 #: a data (non-DDL) event; a null op counts as data, so it reaches the DLQ
 _DATA_EVENT = f"NOT (coalesce(op, -1) {_IN_SCHEMA_OPS})"
+
+
+#: the change-event envelope around an entity's payload columns: op code,
+#: version tuple, transaction id and the producer's schema version
+#: (AvroChangeRecord.java:42-99); ``checkpoint_epoch`` is the log partition
+_ENVELOPE = {"op": "bigint", "op_ts": "bigint", "event_seq": "bigint",
+             "txid": "bigint", "schema_version": "string"}
+
+
+def event_schema(registry: SchemaRegistry, entity: str,
+                 extra: dict[str, str] | None = None) -> str:
+    """The read schema of ``entity``'s change-event log as a DDL string:
+    every field name of every registered version (alias sources included)
+    at the widest type of the version chain, the envelope, any ``extra``
+    columns ({name: SQL type}) and ``checkpoint_epoch``. Reading through
+    it costs no footer-inference job, and a column some epoch files lack
+    reads NULL in those files instead of vanishing from the whole scan. A
+    file storing a narrower integer type (int32 under ``bigint``) reads
+    widened."""
+    types: dict[str, str] = {}
+    for sdef in registry.versions(entity):
+        fmap = sdef.field_map()
+        for name, f in [*fmap.items(),
+                        *[(old, fmap[new]) for old, new in sdef.aliases.items()
+                          if new in fmap]]:
+            have, t = types.get(name), f["type"].lower()
+            if have is None or (have, t) in WIDENING:
+                types[name] = t
+            elif have != t and (t, have) not in WIDENING:
+                raise SchemaEvolutionError(
+                    f"{entity}.{name} is {have} in one registered version "
+                    f"and {t} in another; no event schema reads both")
+    cols = [f"{ident(n)} {sql_type(t)}" for n, t in types.items()
+            if n not in _ENVELOPE]
+    cols += [f"{n} {t}" for n, t in _ENVELOPE.items()]
+    cols += [f"{ident(n)} {t}" for n, t in (extra or {}).items()]
+    return ", ".join(cols + ["checkpoint_epoch int"])
+
+
+class _Prestats(NamedTuple):
+    """Per-epoch inputs of ``apply_epoch_group``, from ``_epoch_prestats``:
+    ``ddl[e]`` the schema versions of epoch e's in-band DDL events in
+    event_seq order, ``read[e][b]`` bucket b's valid-event manifest values
+    as ``_manifest_row`` keywords, ``err[e][b]`` its malformed-event
+    count."""
+    ddl: dict[int, list[str]]
+    read: dict[int, dict[int, dict]]
+    err: dict[int, dict[int, int]]
 
 
 class WapAuditError(RuntimeError):
@@ -264,72 +318,88 @@ class CdcEngine:
                                 props={**base_props, "initial_loaded": True})
 
     # -------------------------------------------------------- schema evolution
-    def _apply_schema_ops(self, schema_rows: list) -> SchemaDef:
+    def _apply_schema_ops(self, epochs: list[int], ddl: dict[int, list[str]],
+                          cur: SchemaDef) -> list[tuple[SchemaDef, list[int]]]:
         """In-band DDL path (op codes 0/1/2, AvroChangeType.isSchemaChange,
-        entity/.../model/AvroChangeType.java:40-49): route to the registry and
-        apply as a metadata-only evolution commit before the data commit.
-        ``schema_rows`` are the DDL events ``_epoch_prestats`` collected for
-        all epochs at once (one scan job instead of one per epoch)."""
-        cur = self.current_schema
-        for row in schema_rows:
-            new = self.registry.get(self.entity, row["schema_version"])
-            if (new.major, new.minor) <= (cur.major, cur.minor):
-                continue  # replayed DDL — idempotent skip
-            validate_evolution(cur, new)
-            # merge, don't replace: props also carries the initial_loaded
-            # marker (and any future table-level flags)
-            self.table.commit_metadata(
-                [dict(f) for f in new.fields], dict(new.aliases), epoch=None,
-                props={**self.table.latest_meta().props,
-                       "schema_version": new.version})
-            cur = new
-        return cur
+        entity/.../model/AvroChangeType.java:40-49): cut ``epochs`` into
+        segments at the DDL-carrying epochs and return ``[(schema, segment
+        epochs), ...]``; the last segment's schema is the group's final
+        one. This only computes schemas — ``apply_epoch_group`` publishes
+        the change together with the data.
+
+        An epoch's DDL applies before its own data. Each DDL event names
+        its schema by version, looked up in the registry, and every step of
+        the chain passes ``validate_evolution``. ``cur`` is the table's
+        schema: it is in force for a first segment without DDL, and a DDL
+        at or below the schema in force is a replay and is skipped
+        (monotone + idempotent). The table can be ahead of its data only by
+        the first pending epoch's own DDL (a table whose DDL commit landed
+        before its data commit under the separate-publish protocol of
+        earlier builds), so a DDL segment's schema is always its DDL's
+        registry version, never a later one."""
+        segments: list[tuple[SchemaDef, list[int]]] = []
+        for e in epochs:
+            before = cur
+            for ver in ddl[e]:
+                new = self.registry.get(self.entity, ver)
+                if (new.major, new.minor) <= (cur.major, cur.minor):
+                    continue  # replayed DDL — idempotent skip
+                validate_evolution(cur, new)
+                cur = new
+            if segments and cur is before:
+                segments[-1][1].append(e)
+            else:
+                segments.append((cur, [e]))
+        return segments
 
     # ----------------------------------------------------------- event intake
-    def _normalize_events(self, events: DataFrame, sdef: SchemaDef) -> DataFrame:
-        """Project raw events onto the current schema: alias-map renamed
-        payload columns (old writers → new name), cast (covers widening),
-        null-fill added columns; attach the version columns (the storage
-        bucket is computed on the WINNER set — attaching it per raw event
-        here would be a dead expression). ``checkpoint_epoch`` passes
-        through as an int: winners reduce per (epoch, key) and store it.
-        One ``selectExpr`` of expression strings: one JVM call for the
-        whole projection."""
+    def _normalize_events(self, events: DataFrame, sdef: SchemaDef,
+                          final: SchemaDef | None = None) -> DataFrame:
+        """Project raw events onto the schema ``sdef`` in force for them:
+        alias-map renamed payload columns (old writers → new name), cast
+        (covers widening), null-fill added columns; attach the version
+        columns (the storage bucket is computed on the WINNER set —
+        attaching it per raw event here would be a dead expression).
+        ``checkpoint_epoch`` passes through as an int: winners reduce per
+        (epoch, key) and store it. When ``final`` differs, the projection
+        is then lifted onto it exactly as a read lifts a file written under
+        ``sdef`` (``lake._normalize``), so a group spanning DDL stores one
+        schema. Expression strings only: one JVM call per ``selectExpr``."""
         # the projection itself is THE shared lake.field_projection — the
         # LWW merge depends on events being projected identically to stored
         # files, so the alias/coalesce/cast logic must have one definition
-        return events.selectExpr(
+        out = events.selectExpr(
             *field_projection(set(events.columns), sdef.fields, sdef.aliases),
             "CAST(op AS int) AS op", "CAST(op_ts AS bigint) AS _op_ts",
             "CAST(event_seq AS bigint) AS _event_seq",
             "CAST(checkpoint_epoch AS int) AS checkpoint_epoch")
+        if final is None or final == sdef:
+            return out
+        return out.selectExpr(
+            *field_projection({f["name"] for f in sdef.fields},
+                              final.fields, final.aliases),
+            "op", "_op_ts", "_event_seq", "checkpoint_epoch")
 
     # ------------------------------------------------------------- epoch apply
-    def _epoch_prestats(self, scope: DataFrame, epochs: list[int]):
+    def _epoch_prestats(self, scope: DataFrame, epochs: list[int]) -> _Prestats:
         """The per-epoch inputs of ``apply_epoch_group`` for every epoch in
-        ``scope`` (events carrying ``checkpoint_epoch``), in one pass each
-        instead of one per epoch: the in-band DDL rows, and the lineage
-        pre-stats — every logical manifest value per (epoch, bucket) from
-        one scan column-pruned to key cols + op + versions + epoch. Valid
-        events give ``events_read``, ``events_applied`` (distinct keys: the
-        reduce keeps one winner per (epoch, key)) and the
-        ``(max_op_ts, max_event_seq)`` watermark (the max-op_ts event wins
-        its key, so these are the winners' maxima too); malformed ones give
-        the error counts. Malformed events are written to the DLQ here too:
-        malformed-ness is state-independent, so routing needs no per-epoch
-        loop, and the dynamic partition overwrite keeps re-runs idempotent
-        without clobbering other epochs' DLQ. Returns ``(schema_by_epoch,
-        read_by_epoch, err_by_epoch)``; ``read_by_epoch[e][b]`` holds the
-        valid-event manifest values as ``_manifest_row`` keywords."""
-        schema_by_epoch: dict[int, list] = {e: [] for e in epochs}
-        # a handful of rows: sorted here, not by a range-partitioned sort
-        ddl_rows = (scope.filter(f"op {_IN_SCHEMA_OPS}")
-                    .select("checkpoint_epoch", "schema_version", "event_seq")
-                    .collect())
-        for r in sorted(ddl_rows, key=lambda r: (r["event_seq"] is not None,
-                                                 r["event_seq"])):
-            schema_by_epoch[r["checkpoint_epoch"]].append(r)
-
+        ``scope`` (events carrying ``checkpoint_epoch``) from ONE
+        aggregate, column-pruned to key cols + op + versions + epoch: per
+        (epoch, bucket, valid) group, the in-band DDL rows (a ``FILTER``ed
+        ``collect_list`` of ``(event_seq, schema_version)``) and the
+        lineage pre-stats of the data events (``FILTER``ed, so a DDL event
+        never counts as an error). Valid events give ``events_read``,
+        ``events_applied`` (distinct keys: the reduce keeps one winner per
+        (epoch, key)) and the ``(max_op_ts, max_event_seq)`` watermark (the
+        max-op_ts event wins its key, so these are the winners' maxima
+        too); malformed ones give the error counts. The exact distinct-key
+        count costs the aggregate a second shuffle; it stays because
+        ``events_applied`` must be exact and the write job cannot report a
+        per-(epoch, bucket) count (``Observation`` metrics do not group,
+        and the footer read-back is gone). Malformed events are written to
+        the DLQ here too: malformed-ness is state-independent, so routing
+        needs no per-epoch loop, and the dynamic partition overwrite keeps
+        re-runs idempotent without clobbering other epochs' DLQ."""
         key_cols, cc = self._pred_args(scope)
         vpred = valid_event_pred(key_cols, cc)
         # bucket_expr is total on null keys (xxhash64 skips nulls); keys
@@ -343,72 +413,87 @@ class CdcEngine:
                   for f in self.table.latest_meta().fields
                   if f["name"] in key_cols}
         nb = bucket_expr(key_cols, self.n_buckets, cast_types=ktypes)
-        data = scope.filter(_DATA_EVENT)
-        stat_rows = (data.withColumn("_bucket", nb).withColumn("_ok", vpred)
+        stat_rows = (scope.withColumn("_bucket", nb).withColumn("_ok", vpred)
                      .groupBy("checkpoint_epoch", "_bucket", "_ok")
-                     .agg(F.expr("count(1) AS n"),
+                     .agg(F.expr(f"count(1) FILTER (WHERE {_DATA_EVENT}) AS n"),
                           F.expr("count(DISTINCT " + ", ".join(
                               f"CAST({ident(k)} AS {sql_type(ktypes[k])})"
                               for k in key_cols) + ") AS keys"),
                           F.expr("max(CAST(op_ts AS bigint)) AS mts"),
-                          F.expr("max(CAST(event_seq AS bigint)) AS mseq"))
+                          F.expr("max(CAST(event_seq AS bigint)) AS mseq"),
+                          F.expr("collect_list(named_struct("
+                                 "'seq', CAST(event_seq AS bigint), "
+                                 "'ver', schema_version)) "
+                                 f"FILTER (WHERE op {_IN_SCHEMA_OPS}) AS ddl"))
                      .collect())
-        err_by_epoch: dict[int, dict[int, int]] = {e: {} for e in epochs}
-        read_by_epoch: dict[int, dict[int, dict]] = {e: {} for e in epochs}
+        stats = _Prestats({e: [] for e in epochs}, {e: {} for e in epochs},
+                          {e: {} for e in epochs})
+        ddl_rows = []
         n_err = 0
         for r in stat_rows:
             e, b = r["checkpoint_epoch"], r["_bucket"]
+            ddl_rows += [(e, d["seq"], d["ver"]) for d in r["ddl"]]
+            if not r["n"]:
+                continue  # the group held DDL events only
             if r["_ok"]:
-                read_by_epoch[e][b] = {
+                stats.read[e][b] = {
                     "events_read": r["n"], "events_applied": r["keys"],
                     "max_op_ts": r["mts"], "max_event_seq": r["mseq"]}
             else:
-                err_by_epoch[e][b] = r["n"]
+                stats.err[e][b] = r["n"]
                 n_err += r["n"]
+        # a handful of rows: sorted here, not by a range-partitioned sort
+        for e, seq, ver in sorted(ddl_rows, key=lambda d: (
+                d[0], d[1] is not None, d[1] or 0)):
+            stats.ddl[e].append(ver)
         if n_err:
             # DLQ: original event + reason (reference: error messages
             # re-tagged mode=Error, MessageProcessor.sendError); the epoch
             # is the partition DIRECTORY, never a column in the files
-            (data.filter(~vpred).withColumn("error_reason", _error_reason(key_cols))
+            (scope.filter(_DATA_EVENT).filter(~vpred)
+             .withColumn("error_reason", _error_reason(key_cols))
              .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .options(**fsutil.parquet_write_options())
              .partitionBy("checkpoint_epoch").parquet(self.errors_dir))
-        return schema_by_epoch, read_by_epoch, err_by_epoch
+        return stats
 
     def apply_epoch(self, events: DataFrame, epoch: int) -> list[dict]:
         """Process one epoch end-to-end and atomically commit: a group of
         one through ``apply_epoch_group``, with its DDL rows, pre-stats and
-        DLQ write from the same helper the replay loop uses. This is the
-        path of streaming ``foreachBatch``, ``flow``, ``s3_events`` and
-        ``reprocess_errors``. ``epoch`` overrides any ``checkpoint_epoch``
-        the events carry (the stream envelope has one). Returns the
-        manifest rows written (one per touched storage bucket =
-        partition_id)."""
+        DLQ write from the same helper the replay loop uses, so a batch
+        carrying DDL publishes its schema change and its data as one
+        snapshot. This is the path of streaming ``foreachBatch``, ``flow``,
+        ``s3_events`` and ``reprocess_errors``. ``epoch`` overrides any
+        ``checkpoint_epoch`` the events carry (the stream envelope has
+        one). Returns the manifest rows written (one per touched storage
+        bucket = partition_id)."""
         self._sync_buckets()
         events = events.withColumn("checkpoint_epoch", F.lit(epoch))
-        schema_by_epoch, read_by_epoch, err_by_epoch = \
-            self._epoch_prestats(events, [epoch])
-        return self.apply_epoch_group(events, [epoch], err_by_epoch,
-                                      read_by_epoch,
-                                      schema_rows=schema_by_epoch[epoch])
+        return self.apply_epoch_group(events, [epoch],
+                                      self._epoch_prestats(events, [epoch]))
 
     def apply_epoch_group(self, events: DataFrame, epochs: list[int],
-                          err_by_epoch: dict[int, dict[int, int]],
-                          read_by_epoch: dict[int, dict[int, dict]],
-                          schema_rows: list) -> list[dict]:
+                          stats: _Prestats) -> list[dict]:
         """Apply one or more epochs in ONE Spark job + ONE atomic
         merge-on-read snapshot — the engine's only epoch-apply path
         (``events`` must carry ``checkpoint_epoch`` restricted to
-        ``epochs``; the per-(epoch, bucket) manifest values and the DDL
-        rows of the group's first epoch come from ``_epoch_prestats``).
+        ``epochs``; ``stats``, from ``_epoch_prestats``, holds their DDL
+        rows and per-(epoch, bucket) manifest values).
 
         Every Spark job pays a constant planning/scheduling cost that doesn't
         parallelize — measured ~1.2s/epoch at local[4] on the 20M-event
         fixture, the dominant N→4N scaling-efficiency loss when draining a
-        deep backlog of small epochs. Grouping DDL-free epoch runs amortizes
-        it (the reference acks a whole poll batch per ``receiver.commit()``,
+        deep backlog of small epochs. One group per call amortizes it (the
+        reference acks a whole poll batch per ``receiver.commit()``,
         MessageProcessor.java:195-214 — same batching, one level up).
+
+        In-band DDL does not split the group: ``_apply_schema_ops`` cuts it
+        into segments, each segment's events are projected with the schema
+        in force for them and lifted to the group's final schema (a union
+        of per-segment ``selectExpr``s over one scan), and a schema change
+        rides the data's snapshot (``commit_delta_grouped(new_fields=...)``)
+        — a crash leaves neither, and a concurrent schema change conflicts.
 
         Winners reduce per (epoch, key) and stage as ONE delta layer per
         commit (``_bucket=<b>``), each row keeping its epoch in the stored
@@ -421,20 +506,26 @@ class CdcEngine:
         the logical manifests are identical however the epochs are
         grouped. The physical write volume (bytes_written / files_written)
         is per bucket for the whole group: it rides the bucket's row in the
-        group's last epoch that applied events to it, 0 on the others.
-        In-band DDL may appear only at the FIRST epoch of a group (the
-        replay loop enforces this by starting a new group at every
-        DDL-carrying epoch)."""
+        group's last epoch that applied events to it, 0 on the others."""
         t0 = time.monotonic()
         self._sync_buckets()
-        sdef = self._apply_schema_ops(schema_rows)
-        key_cols = sdef.key_cols()
-        payload_cols = [f["name"] for f in sdef.fields if f["name"] not in key_cols]
+        base = self.table.latest()
+        segments = self._apply_schema_ops(
+            epochs, stats.ddl,
+            self.registry.get(self.entity, base.props["schema_version"]))
+        final = segments[-1][0]
+        key_cols = final.key_cols()
+        payload_cols = [f["name"] for f in final.fields
+                        if f["name"] not in key_cols]
 
-        data = events.filter(_DATA_EVENT)
         kc, cc = self._pred_args(events)
-        valid = data.filter(valid_event_pred(kc, cc))
-        ev = self._normalize_events(valid, sdef)
+        valid = events.filter(_DATA_EVENT).filter(valid_event_pred(kc, cc))
+        ev = None
+        for sdef, seg in segments:
+            part = self._normalize_events(
+                valid if len(segments) == 1 else valid.filter(_epoch_in(seg)),
+                sdef, final)
+            ev = part if ev is None else ev.unionByName(part)
         winners = lww_reduce(ev, ["checkpoint_epoch"] + key_cols,
                              payload_cols + ["op"])
         delta = (winners.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
@@ -448,7 +539,7 @@ class CdcEngine:
                 volume[f["bucket"]] = (nbytes + f["bytes"], nfiles + 1)
             rows = {}
             for e in epochs:
-                read, err = read_by_epoch.get(e, {}), err_by_epoch.get(e, {})
+                read, err = stats.read.get(e, {}), stats.err.get(e, {})
                 rows[e] = [_manifest_row(e, b, **read.get(b, {}),
                                          events_error=err.get(b, 0),
                                          wall_ms=wall_ms)
@@ -465,8 +556,16 @@ class CdcEngine:
             return [r for e in epochs
                     for r in rows[e] or [_manifest_row(e, -1, wall_ms=wall_ms)]]
 
+        evolve = {}
+        if final.version != base.props["schema_version"]:
+            # merge, don't replace: props also carries the initial_loaded
+            # marker (and any future table-level flags)
+            evolve = {"new_fields": [dict(f) for f in final.fields],
+                      "new_aliases": dict(final.aliases),
+                      "props": {**base.props, "schema_version": final.version}}
         snap = self.table.commit_delta_grouped(delta, epochs,
-                                               manifests=manifests)
+                                               manifests=manifests,
+                                               base=base, **evolve)
         return snap.manifests
 
     # ------------------------------------------------------------------ replay
@@ -491,16 +590,19 @@ class CdcEngine:
         manifest counts, DLQ routing, and exactly-once bookkeeping all see
         the transformed stream — identical to the reference's ordering,
         where the pipeline runs before the DataStore ever sees a record.
+        The log is read through ``event_schema``; a transform that reads
+        further log columns (the router's entity column) names them in an
+        ``event_columns`` attribute, ``{name: SQL type}``.
 
         ``lease`` guards the run with the single-writer lease and emits
-        per-group liveness heartbeats (coordination.py — DistributedLock /
+        liveness heartbeats (coordination.py — DistributedLock /
         HeartbeatThread analogs); a second driver on the same table fails
         fast with LockHeldError instead of computing doomed commits. The
         snapshot CAS remains the correctness arbiter either way.
 
-        Replay only ingests: one delta commit per run of DDL-free epochs,
-        so the merge-on-read fold depth a replay adds follows its DDL
-        boundaries. Maintenance is separate and explicit — ``compact()``
+        Replay only ingests: every pending epoch, in-band DDL included,
+        lands as ONE snapshot (``apply_epoch_group``), so a replay adds one
+        merge-on-read delta layer per bucket. Maintenance is separate and explicit — ``compact()``
         (may run concurrently from another thread; the lake's optimistic
         commit rules rebase the two) and ``refresh_stats()``."""
         from cdc_core_spark import coordination as coord
@@ -620,7 +722,11 @@ class CdcEngine:
                     "initial source_df given")
             self.initial_load(source_df, schema_version)
         self._sync_buckets()
-        events = self.spark.read.parquet(events_path)
+        # one schema from the registry, never a footer (see event_schema);
+        # a transform reading log columns outside it names them
+        events = self.spark.read.schema(event_schema(
+            self.registry, self.entity,
+            getattr(transform, "event_columns", None))).parquet(events_path)
         if transform is not None:
             # ingest pipeline hook — see replay() docstring; lazy, so it
             # fuses into every downstream epoch scan
@@ -635,24 +741,9 @@ class CdcEngine:
             beat("idle")
             return
         beat("running")
+        # every pending epoch is one group, DDL-carrying ones included
         scope = events.filter(_epoch_in(todo))
-        schema_by_epoch, read_by_epoch, err_by_epoch = \
-            self._epoch_prestats(scope, todo)
-
-        # Group consecutive DDL-free epochs into one job+commit each
-        # (apply_epoch_group). A DDL-carrying epoch starts a new group: its
-        # DDL must apply before its own and all later data.
-        groups: list[list[int]] = []
-        for e in todo:
-            if not groups or schema_by_epoch[e]:
-                groups.append([])
-            groups[-1].append(e)
-
-        for g in groups:
-            batch = events.filter(_epoch_in(g))
-            self.apply_epoch_group(batch, g, err_by_epoch, read_by_epoch,
-                                   schema_rows=schema_by_epoch[g[0]])
-            beat("running", ep=g[-1])
+        self.apply_epoch_group(scope, todo, self._epoch_prestats(scope, todo))
         beat("idle", ep=todo[-1])
 
     # ------------------------------------------------------------- maintenance
@@ -792,14 +883,15 @@ class CdcEngine:
         the directory, so the empty frame carries ONLY the minimal
         ``checkpoint_epoch int, error_reason string`` contract — callers
         selecting event columns must either guard on those two, or pass
-        ``empty_schema`` (the event DDL, e.g. ``streaming.stream.EVENT_DDL``)
+        ``empty_schema`` (the event DDL, e.g. ``event_schema(registry,
+        entity)``)
         so both paths stay column-compatible."""
         if not os.path.isdir(self.errors_dir):
             from pyspark.sql.types import (IntegerType, StringType,
                                            StructField, StructType)
             if empty_schema:
                 # append only the DLQ columns the caller's DDL doesn't carry
-                # (EVENT_DDL already ends in checkpoint_epoch — a blind
+                # (event_schema already ends in checkpoint_epoch — a blind
                 # concat would duplicate it and break name resolution).
                 # Parse with the real DDL parser, not string-splitting:
                 # parameterized/nested types (decimal(10,2),

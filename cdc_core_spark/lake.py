@@ -1099,6 +1099,9 @@ class SnapshotTable:
 
     def commit_delta_grouped(self, df: DataFrame, epochs: list[int],
                              manifests,
+                             new_fields: list[dict] | None = None,
+                             new_aliases: dict | None = None,
+                             props: dict | None = None,
                              base: Snapshot | None = None) -> Snapshot:
         """Merge-on-read commit: stage ``df`` (per-key LWW winners carrying
         ``_bucket`` + internal cols) as DELTA files and keep every existing
@@ -1119,7 +1122,7 @@ class SnapshotTable:
         parallelize; replaying a deep backlog of small epochs
         one-job-per-epoch pays it per epoch (measured ~1.2s/epoch at
         local[4] on the 20M-event fixture — the dominant scaling-efficiency
-        loss). Grouping DDL-free epoch runs into one job amortizes it, the
+        loss). Grouping every pending epoch into one job amortizes it, the
         same way the reference consumer acks a whole poll batch at once
         (``receiver.commit()`` per batch, not per message,
         MessageProcessor.java:195-214). A crash before publish leaves every
@@ -1133,14 +1136,24 @@ class SnapshotTable:
         table root) so the caller can record the write volume of the very
         same job.
 
+        ``new_fields`` / ``new_aliases`` / ``props`` publish a schema
+        evolution (and the table props naming it) in the SAME snapshot as
+        the data: ``df`` is then already projected onto ``new_fields``, its
+        files carry that schema's id, and a crash leaves neither the schema
+        change nor the data. This is how in-band DDL lands with the epochs
+        that carry it.
+
         Deltas are purely ADDITIVE, so a commit that loses the version CAS
         to a concurrent writer rebases automatically (new head's files +
         these delta files) — ingest never fails because maintenance or
         another entity's writer got there first. The only conflicts are
         structural: a concurrent re-bucket (these files' bucket ids are
-        stale) or a duplicate writer committing one of the same epochs."""
+        stale), a duplicate writer committing one of the same epochs, and,
+        when this commit also changes the schema or props, a concurrent
+        change to them (``commit_metadata``'s rule)."""
         prev = base if base is not None else self.latest()
-        sid = _sid_for(prev, prev.fields)
+        fields = new_fields if new_fields is not None else prev.fields
+        sid = _sid_for(prev, fields)
         stage_abs = os.path.join(self.root, "data",
                                  f"delta-{uuid.uuid4().hex[:12]}")
         new_files = self._stage_files(df, stage_abs,
@@ -1151,15 +1164,28 @@ class SnapshotTable:
         def rebuild(b: Snapshot) -> Snapshot:
             if b is not prev:
                 self._rebase_guard(prev, b, list(epochs), "delta rebase")
+                if new_fields is not None and (
+                        b.fields != prev.fields or b.aliases != prev.aliases
+                        or b.schemas.get(sid, fields) != fields):
+                    raise CommitConflictError(
+                        "delta rebase: schema changed concurrently while "
+                        "this commit also changes it")
+                if props is not None and b.props != prev.props:
+                    raise CommitConflictError(
+                        "delta rebase: table props changed concurrently "
+                        "while this commit also sets props")
             schemas_b = dict(b.schemas)
-            schemas_b.setdefault(sid, prev.fields)
+            schemas_b.setdefault(sid, fields)
             return Snapshot(version=b.version + 1,
                             epoch=epochs[-1] if epochs else None,
                             n_buckets=b.n_buckets, key_cols=b.key_cols,
-                            fields=b.fields, aliases=b.aliases,
+                            fields=fields if new_fields is not None
+                            else b.fields,
+                            aliases=new_aliases if new_aliases is not None
+                            else b.aliases,
                             schemas=schemas_b, files=b.files + new_files,
                             manifests=manifest_rows, parent=b.version,
-                            props=b.props)
+                            props=props if props is not None else b.props)
 
         return self._occ_publish(prev, stage_abs, rebuild)
 

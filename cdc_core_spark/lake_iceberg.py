@@ -29,11 +29,9 @@ Contract parity with ``lake.SnapshotTable``:
   touched-bucket set, byte-for-byte the SnapshotTable rule.
 * **commit_delta_grouped** (and ``commit_delta``, its group of one) →
   ``writeTo(...).append()`` with ``snapshot-property.cdc.epoch`` /
-  ``.cdc.manifests`` summary props — the exactly-once ledger rides Iceberg
-  snapshot summaries exactly as it rides our snapshot JSON docs. A group
-  commit carries every epoch's manifest rows in one snapshot;
-  ``committed_epochs`` folds per-row ``checkpoint_epoch`` exactly like
-  ``SnapshotTable._fold_epochs``.
+  ``.cdc.manifests`` summary props: the exactly-once ledger rides Iceberg
+  snapshot summaries as it rides our snapshot docs, every epoch's rows in
+  one snapshot, folded per ``checkpoint_epoch`` like ``_fold_epochs``.
 * **commit_merge** → ``overwritePartitions()`` (the bucket-pruned
   copy-on-write: only ``_bucket`` partitions present in ``df`` are
   replaced, the rest carried by reference).
@@ -104,8 +102,7 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 class _IcebergCommit:
-    """Minimal snapshot-result shape returned by the commit methods — the
-    fields the engine reads off ``SnapshotTable``'s return (``manifests``,
+    """The fields the engine reads off a commit's return (``manifests``,
     ``epoch``); ``version`` is the Iceberg snapshot id."""
 
     def __init__(self, version: int | None, epoch: int | None,
@@ -261,13 +258,10 @@ class IcebergSnapshotTable:
             "_bucket", bucket_expr(self.key_cols, self.n_buckets))
 
     def _last_snapshot_id(self) -> int | None:
-        """The table head observed right after this writer's commit — the
-        main-branch ref, not a committed_at sort over all snapshots. Note
-        the honest caveat: with CONCURRENT writers the head read here can
-        already be someone else's later snapshot; callers chaining
-        read_changes from the returned version should hold the writer
-        lease (as engine.replay does) or read the id from their own
-        changelog position."""
+        """The table head right after this writer's commit (the main ref,
+        not a committed_at sort). With CONCURRENT writers it can already be
+        someone else's snapshot: hold the writer lease (as engine.replay
+        does) when chaining read_changes from it."""
         try:
             row = (self.spark.table(f"{self.ident}.refs")
                    .filter(F.col("name") == "main")
@@ -288,16 +282,23 @@ class IcebergSnapshotTable:
             df, [] if epoch is None else [epoch], manifests, base=base)
 
     def commit_delta_grouped(self, df: DataFrame, epochs: list[int],
-                             manifests, base=None) -> _IcebergCommit:
-        """MOR delta: one atomic append snapshot for one epoch or a group
-        of them, with the last epoch + every epoch's manifest rows in the
-        snapshot summary (Transaction.newAppend + summary props);
-        per-epoch committedness is recovered from the manifest rows'
-        ``checkpoint_epoch`` (same fold rule as SnapshotTable). ``base``
-        (the lake's optimistic-concurrency pin) is accepted for parity and
-        unused: Iceberg's commit loop retries appends against the fresh
-        head natively (``commit.retry.*``), the exact behavior
-        ``SnapshotTable``'s delta rebase reimplements."""
+                             manifests, new_fields: list[dict] | None = None,
+                             new_aliases: dict | None = None,
+                             props: dict | None = None,
+                             base=None) -> _IcebergCommit:
+        """MOR delta: one append snapshot for one epoch or a group of them,
+        with the last epoch + every epoch's manifest rows in the snapshot
+        summary (Transaction.newAppend + summary props); per-epoch
+        committedness folds from the rows' ``checkpoint_epoch`` as in
+        SnapshotTable. A schema change (``new_fields``/``new_aliases``/
+        ``props``) runs as ``commit_metadata`` BEFORE the append — NOT
+        atomic here, unlike SnapshotTable's one snapshot: a crash between
+        leaves the schema ahead of its data, which the engine's rerun
+        absorbs as a replayed DDL. ``base`` is accepted for parity and
+        unused: Iceberg's commit loop retries appends natively
+        (``commit.retry.*``), what SnapshotTable's delta rebase does."""
+        if new_fields is not None or props is not None:
+            self.commit_metadata(new_fields or [], new_aliases, props=props)
         last = epochs[-1] if epochs else None
         self._writer(df, last, manifests).append()
         return _IcebergCommit(self._last_snapshot_id(), last, manifests)
@@ -335,9 +336,8 @@ class IcebergSnapshotTable:
                 "flag; with Iceberg, evolve the partition spec (ALTER TABLE "
                 "... REPLACE PARTITION FIELD) and rewrite_data_files "
                 "instead (module docstring, Scope)")
-        if new_fields or new_aliases:
-            self.commit_metadata(new_fields or [], new_aliases)
-        self._set_props(props)
+        if new_fields or new_aliases or props:
+            self.commit_metadata(new_fields or [], new_aliases, props=props)
         self._writer(df, epoch, manifests).overwritePartitions()
         return _IcebergCommit(self._last_snapshot_id(), epoch,
                               manifests if isinstance(manifests, list) else [])

@@ -90,3 +90,14 @@ def state_crc(final_df) -> int:
     ).first()
     # a legitimately empty converged state (every key deleted) sums to NULL
     return int(row["c"]) if row["c"] is not None else 0
+
+
+def row_crc(final_df) -> int:
+    """CRC over every column of the converged rows (one crc32 per row's
+    JSON form, summed): unlike ``state_crc`` it sees the payload columns,
+    so a column read as NULL, or under a wrong name, changes it."""
+    from cdc_core_spark.lake import ident
+    cols = ", ".join(map(ident, final_df.columns))
+    row = final_df.selectExpr(
+        f"sum(crc32(to_json(struct({cols})))) AS c").first()
+    return int(row["c"]) if row["c"] is not None else 0

@@ -114,10 +114,12 @@ def search(df: DataFrame, q: Q, max_results: int | None = None) -> DataFrame:
 def find_by_key(df: DataFrame, key: dict) -> DataFrame:
     """Keyed point lookup (AbstractDataStore.find): conjunctive equality on
     the key columns — with a bucketed/partitioned layout Catalyst prunes to
-    the single file group."""
+    the single file group. Key names are quoted (``lake.ident``): a dot or
+    space stays part of the name."""
+    from cdc_core_spark.lake import ident
     cond = None
     for c, v in key.items():
-        p = F.col(c) == F.lit(v)
+        p = F.col(ident(c)) == F.lit(v)
         cond = p if cond is None else (cond & p)
     return df.filter(cond)
 

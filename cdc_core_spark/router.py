@@ -27,8 +27,9 @@ import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from cdc_core_spark.engine import CdcEngine
+from cdc_core_spark.engine import CdcEngine, event_schema
 
 
 def route_replay(
@@ -50,8 +51,19 @@ def route_replay(
     sources = sources or {}
     user_transform = replay_kw.pop("transform", None)
 
+    # the log is read through schemas, never footer-inferred: each engine
+    # reads its event_schema plus the entity column, the unroutable scan
+    # the union of those
+    routing = {entity_col: "string"}
+
     if unroutable_dir is not None:
-        events = spark.read.parquet(events_path)
+        cols = {}
+        for eng in engines.values():
+            for f in StructType.fromDDL(
+                    event_schema(eng.registry, eng.entity, routing)).fields:
+                cols.setdefault(f.name, f)
+        events = (spark.read.schema(StructType(list(cols.values())))
+                  .parquet(events_path))
         known = list(engines)
         bad = events.filter(
             F.col(entity_col).isNull() | ~F.col(entity_col).isin(known))
@@ -65,6 +77,7 @@ def route_replay(
         def routed(df, _n=name):
             out = df.filter(F.col(entity_col) == _n)
             return user_transform(out) if user_transform is not None else out
+        routed.event_columns = routing
 
         eng.replay(events_path, source_df=sources.get(name),
                    transform=routed, **replay_kw)

@@ -68,10 +68,10 @@ def read_documents(spark: SparkSession, root: str) -> DataFrame:
 def shred_documents(df: DataFrame, schema_ddl: str) -> DataFrame:
     """Open the JSON doc back into typed columns (the read-side projection a
     document store serves; SchemaHelper JSON-shred analog)."""
-    key_cols = [c for c in df.columns if c != "doc"]
-    return df.select(*key_cols,
+    keys = [F.col(ident(c)) for c in df.columns if c != "doc"]
+    return df.select(*keys,
                      F.from_json("doc", schema_ddl).alias("_d")).select(
-        *key_cols, "_d.*")
+        *keys, "_d.*")
 
 
 def find_document(spark: SparkSession, root: str, key: dict) -> DataFrame:
@@ -121,16 +121,19 @@ def upsert_documents(df: DataFrame, root: str, key_cols: list[str],
     it; grow via ``SnapshotTable.compact(n_buckets=...)``).
     """
     spark = df.sparkSession
+    # every name is quoted (lake.ident): a dot or space stays part of it
+    keys = [F.col(ident(k)) for k in key_cols]
     payload = [c for c in df.columns
                if c not in key_cols and c != deleted_col]
-    doc = F.to_json(F.struct(*payload)) if payload else F.lit("{}")
+    doc = (F.to_json(F.struct(*[F.col(ident(c)) for c in payload]))
+           if payload else F.lit("{}"))
     # coalesce: a NULL delete flag means "not a delete" — under three-valued
     # logic an un-coalesced NULL would fail BOTH filter(~_del) and any
     # filter(_del), so the row would vanish from the replace set while its
     # key still anti-joined the stored doc away: a silent delete
     incoming = df.select(
-        *key_cols, doc.alias("doc"),
-        (F.coalesce(F.col(deleted_col), F.lit(False)) if deleted_col
+        *keys, doc.alias("doc"),
+        (F.coalesce(F.col(ident(deleted_col)), F.lit(False)) if deleted_col
          else F.lit(False)).alias("_del"))
 
     tbl = SnapshotTable(root)
@@ -154,7 +157,7 @@ def upsert_documents(df: DataFrame, root: str, key_cols: list[str],
     # find_document types its probe the same way (see above).
     tmap = {f["name"]: sql_type(f["type"]) for f in meta.fields}
     incoming = incoming.select(
-        *[F.col(k).cast(tmap[k]).alias(k) for k in key_cols],
+        *[F.col(ident(k)).cast(tmap[k]).alias(k) for k in key_cols],
         *[c for c in incoming.columns if c not in key_cols])
     # lazy localCheckpoint: the incoming lineage (often an upstream LWW
     # shuffle) feeds the touched-bucket collect, the anti-join probe AND the
@@ -167,7 +170,7 @@ def upsert_documents(df: DataFrame, root: str, key_cols: list[str],
 
     survivors = (tbl.read(spark, buckets=touched, snap=meta)
                  .withColumn("_bucket", bucket_expr(key_cols, nb))
-                 .join(incoming.select(*key_cols), on=key_cols,
+                 .join(incoming.select(*keys), on=key_cols,
                        how="left_anti"))
     state = survivors.unionByName(
         incoming.filter(~F.col("_del")).drop("_del"))
@@ -183,5 +186,6 @@ def delete_documents(spark: SparkSession, root: str, key_cols: list[str],
                      keys_df: DataFrame) -> None:
     """Keyed bulk delete (MongoDbDataStore delete analog): one bucket-pruned
     anti-join commit without the deleted keys."""
-    tomb = keys_df.select(*key_cols).withColumn("_deleted_flag", F.lit(True))
+    tomb = (keys_df.select(*[F.col(ident(k)) for k in key_cols])
+            .withColumn("_deleted_flag", F.lit(True)))
     upsert_documents(tomb, root, key_cols, deleted_col="_deleted_flag")

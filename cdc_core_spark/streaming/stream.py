@@ -21,13 +21,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_core_spark import fsutil
-from cdc_core_spark.engine import CdcEngine
+from cdc_core_spark import fsutil, synth
+from cdc_core_spark.engine import CdcEngine, event_schema
+from cdc_core_spark.registry import SchemaRegistry
 
-EVENT_DDL = ("op bigint, repo string, path string, commit string, lang string, "
-             "language string, content string, size_bytes bigint, rev bigint, "
-             "op_ts bigint, event_seq bigint, txid bigint, schema_version string, "
-             "checkpoint_epoch int")
+#: the event-log read schema of the synthetic ``source_repos`` entity
+#: (``engine.event_schema`` over ``synth.registry_docs``): the default of
+#: ``build_stream_source`` and the schema of the registry-less streaming
+#: operators below. ``stream_ingest`` reads through its engine's own
+#: entity's schema.
+EVENT_DDL = event_schema(SchemaRegistry.from_docs(synth.registry_docs()),
+                         "source_repos")
 
 
 def kafka_source_options(bootstrap_servers: str, topic: str,
@@ -86,18 +90,20 @@ def build_stream_source(spark, source: str = "files",
                         events_path: str | None = None,
                         max_files_per_trigger: int = 1,
                         kafka_options: dict[str, str] | None = None,
-                        queue_options: dict[str, str] | None = None):
+                        queue_options: dict[str, str] | None = None,
+                        event_ddl: str = EVENT_DDL):
     """Build the streaming envelope DataFrame for either source kind — the
     foreachBatch body downstream is source-agnostic (the reference's
     BaseKafkaConsumer / BaseChronicleConsumer duality collapses into this
-    option). ``kafka`` decodes the record value from the Avro wire format
-    (AvroChangeRecord.parse analog); requires the spark-sql-kafka connector
-    jar at runtime — absent from this container, so the branch is
-    unit-tested up to source resolution."""
+    option). ``files`` reads the event log through ``event_ddl`` (an
+    ``engine.event_schema``). ``kafka`` decodes the record value from the
+    Avro wire format (AvroChangeRecord.parse analog); requires the
+    spark-sql-kafka connector jar at runtime — absent from this container,
+    so the branch is unit-tested up to source resolution."""
     if source == "files":
         if events_path is None:
             raise ValueError("events_path is required for the files source")
-        return _read_event_stream(spark, events_path,
+        return _read_event_stream(spark, events_path, event_ddl,
                                   max_files_per_trigger=max_files_per_trigger)
     if source == "kafka":
         from cdc_core_spark.functions.avro_codec import from_avro_envelope
@@ -160,14 +166,16 @@ def stream_ingest(engine: CdcEngine, events_path: str | None, checkpoint_dir: st
                   kafka_options: dict[str, str] | None = None,
                   queue_options: dict[str, str] | None = None):
     """Tail the event stream (file source, Kafka, or a named queue connector)
-    and apply each microbatch through the engine. ``availableNow`` drains the
-    backlog and stops (test/backfill mode); disable it for a continuous
-    tail."""
-    stream = build_stream_source(engine.spark, source=source,
-                                 events_path=events_path,
-                                 max_files_per_trigger=max_files_per_trigger,
-                                 kafka_options=kafka_options,
-                                 queue_options=queue_options)
+    and apply each microbatch through the engine. The file source reads
+    through the engine entity's ``event_schema``. ``availableNow`` drains
+    the backlog and stops (test/backfill mode); disable it for a
+    continuous tail."""
+    stream = build_stream_source(
+        engine.spark, source=source, events_path=events_path,
+        max_files_per_trigger=max_files_per_trigger,
+        kafka_options=kafka_options, queue_options=queue_options,
+        event_ddl=(event_schema(engine.registry, engine.entity)
+                   if source == "files" else EVENT_DDL))
     epoch_base = stream_epoch_base(engine, checkpoint_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -189,13 +197,14 @@ def stream_ingest(engine: CdcEngine, events_path: str | None, checkpoint_dir: st
 
 
 def _read_event_stream(spark: SparkSession, events_path: str,
+                       event_ddl: str = EVENT_DDL,
                        max_files_per_trigger: int | None = None) -> DataFrame:
     """THE event-log stream source (shared by ``build_stream_source`` and
-    every streaming operator below, so the schema / basePath / epoch-subdir
-    glob contract is defined once): a file stream over the partitioned
-    event-log directory."""
+    every streaming operator below, so the basePath / epoch-subdir glob
+    contract is defined once): a file stream over the partitioned
+    event-log directory, read through ``event_ddl``."""
     reader = (spark.readStream
-              .schema(EVENT_DDL)
+              .schema(event_ddl)
               .option("basePath", events_path))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -1,4 +1,7 @@
-"""Verify driver: synthesize t1 fixture -> CdcEngine.replay -> RESULT line."""
+"""Verify driver: synthesize t1 fixture -> CdcEngine.replay -> RESULT line.
+
+``state_crc`` hashes repo|path|content_sha256; ``row_crc`` every column
+of the converged rows (``oracle.row_crc``)."""
 import os, sys
 from pyspark.sql import SparkSession, functions as F
 
@@ -23,8 +26,9 @@ eng.replay(os.path.join(fx, "change_events"), source_df=src, epochs=epochs)
 
 final = eng.read_final_with_sha()
 rows = final.count()
-from cdc_core_spark.oracle import state_crc
+from cdc_core_spark.oracle import row_crc, state_crc
 crc = state_crc(final)
+rcrc = row_crc(eng.read_final())
 lang_col = "language" if "language" in final.columns else "lang"
 langs = final.select(lang_col).distinct().count()
 max_rev = final.selectExpr("max(rev) AS m").first()["m"]
@@ -39,7 +43,8 @@ if eps and eps == list(range(eps[0], eps[-1] + 1)):
 else:
     eps_str = str(eps)
 ver = eng.table.latest().props["schema_version"]
-print(f"RESULT rows={rows} state_crc={crc} langs={langs} max_rev={max_rev} "
+print(f"RESULT rows={rows} state_crc={crc} row_crc={rcrc} langs={langs} "
+      f"max_rev={max_rev} "
       f"manifest_rows={manifest_rows} errors={errors} "
       f"epochs_committed={eps_str} schema_version={ver}")
 spark.stop()

@@ -222,7 +222,8 @@ def _t1_epochs(t1) -> list[int]:
 
 def _run_replay(eng, t1):
     """Grouped replay under the writer lease (lease, heartbeats, renewals,
-    the initial load, DDL commits and group commits all publish)."""
+    the initial load and the one group commit, schema changes included,
+    all publish)."""
     src = eng.spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     eng.replay(f'{t1["dir"]}/change_events', source_df=src)
 
@@ -264,23 +265,25 @@ def _apply_epoch(tmp_path, request, crash):
     _engine_crash(tmp_path, request, crash, _run_apply_epoch)
 
 
-# The two delta protocols make 22 (replay) and 13 (apply_epoch) durable
+# The two delta protocols make 8 (replay) and 10 (apply_epoch) durable
 # calls on t1 with 4 buckets, and each case replays t1 up to twice, so k is
 # sampled to fit the Tier-1 budget: one of each kind of write.
-# replay: 1 lease acquire, 3 initial-load commit, 5 lease renew, 6 first
-# group commit, 9 DDL commit, 10 the group commit right after it, 22 the
-# final renew; heartbeats (4, 7, ...) sit just before a renew and unwind
-# the same way.
+# replay: 1 lease acquire, 3 initial-load commit, 5 lease renew, 6 the one
+# group commit (all eight epochs, with the three in-band schema changes in
+# the same snapshot), 8 the final renew; the table create (2) crashes like
+# apply_epoch's 1, and the heartbeats (4, 7) sit just before a renew and
+# unwind the same way.
 # apply_epoch: 1 table create (the rerun finishes a half-created table),
-# 3 first epoch commit, 13 the last epoch's commit; its initial load and
-# mid-stream commits crash the same way as replay's 3 and 10.
-# compact: the replay's 22 calls, then 23 the compaction's only durable
+# 3 first epoch commit, 6 the first DDL-carrying epoch's schema+data
+# commit, 10 the last epoch's commit; its initial load and the other epoch
+# commits crash the same way as replay's 3 and 6.
+# compact: the replay's 8 calls, then 9 the compaction's only durable
 # call, its snapshot doc (Spark writes the rewritten files to a stage
 # directory). The rerun's replay commits nothing; its compaction redoes the
 # rewrite (before) or finds no delta left (after).
-REPLAY_KS = (1, 3, 5, 6, 9, 10, 22)
-APPLY_EPOCH_KS = (1, 3, 13)
-COMPACT_KS = (23,)
+REPLAY_KS = (1, 3, 5, 6, 8)
+APPLY_EPOCH_KS = (1, 3, 6, 10)
+COMPACT_KS = (9,)
 
 PROTOCOLS = {"lease": (_lease, [1]), "sync": (_sync, range(1, 9)),
              "write_text_index": (_write_text_index, [1]),
@@ -297,6 +300,40 @@ PROTOCOLS = {"lease": (_lease, [1]), "sync": (_sync, range(1, 9)),
     for k in ks for when in ("before", "after")])
 def test_crash_at_publish_then_rerun(protocol, k, when, tmp_path, request):
     PROTOCOLS[protocol][0](tmp_path, request, crash_at(k, when))
+
+
+@pytest.mark.parametrize("ahead", ["1.1", "2.1"])
+def test_rerun_over_separate_schema_commit(ahead, tmp_path, request):
+    """Tables written before schema changes rode the data commit published
+    each in-band DDL as its own ``commit_metadata`` ahead of the data. A
+    crash between the two leaves the schema ahead of the committed
+    epochs: "1.1" is that state (epochs 0-2 committed, epoch 3's DDL
+    published, its data not). "2.1" is a table whose every later schema
+    change landed without data: all pending DDL then reads as replayed and
+    every pending epoch is projected under 2.1, which on t1 gives the same
+    rows. Either way the rerun must reach the oracle's full-row state with
+    an exact epoch ledger, in one more snapshot."""
+    from cdc_core_spark.engine import CdcEngine
+    from tests.conftest import assert_final_equal
+    spark, t1, registry = (request.getfixturevalue(n)
+                           for n in ("spark", "t1", "registry"))
+    root = str(tmp_path / "e")
+    eng = CdcEngine(spark, root, registry, n_buckets=4)
+    eng.replay(f'{t1["dir"]}/change_events', epochs=[0, 1, 2],
+               source_df=spark.read.parquet(
+                   f'{t1["dir"]}/source_repos.parquet'))
+    new = registry.get("source_repos", ahead)
+    eng.table.commit_metadata(
+        [dict(f) for f in new.fields], dict(new.aliases),
+        props={**eng.table.latest().props, "schema_version": ahead})
+    v = eng.table.latest().version
+
+    eng = CdcEngine(spark, root, registry, n_buckets=4)
+    _run_replay(eng, t1)
+    assert_final_equal(eng.read_final_with_sha().toPandas(), t1["expected"])
+    assert eng.table.committed_epochs() == set(_t1_epochs(t1))
+    assert eng.table.latest().version == v + 1
+    assert eng.table.latest().props["schema_version"] == "2.1"
 
 
 def test_durable_writes_live_only_in_fsutil():

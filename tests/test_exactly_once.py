@@ -105,12 +105,12 @@ def test_delete_tombstone_blocks_late_duplicate(spark, registry, tmp_path):
 
 
 def test_group_commit_equivalence(spark, t1, registry, tmp_path):
-    """Group-commit (several epochs per job+snapshot) must be bit-identical
-    to one epoch per job+snapshot, where each epoch arrives on its own
-    through the standalone ``apply_epoch`` (the streaming / flow /
-    s3_events path): same converged state, same per-(epoch, bucket)
-    manifest values, same committed-epoch set — with fewer snapshots
-    published."""
+    """Group-commit (every pending epoch in one job+snapshot, in-band DDL
+    included) must be bit-identical to one epoch per job+snapshot, where
+    each epoch arrives on its own through the standalone ``apply_epoch``
+    (the streaming / flow / s3_events path): same converged rows, same
+    per-(epoch, bucket) manifest values, same committed-epoch set — with
+    ONE data commit and one live delta file per bucket."""
     evdir = f'{t1["dir"]}/change_events'
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     b = CdcEngine(spark, str(tmp_path / "b"), registry, n_buckets=8)
@@ -127,22 +127,26 @@ def test_group_commit_equivalence(spark, t1, registry, tmp_path):
             "events_applied", "events_error", "max_op_ts", "max_event_seq"]
     mb = (b.manifests_df().toPandas()[cols]
           .sort_values(cols).reset_index(drop=True))
-    for other in (b, c):
-        assert_final_equal(other.read_final_with_sha().toPandas(),
-                           t1["expected"])
+    got_b = b.read_final_with_sha().toPandas()
+    assert_final_equal(got_b, t1["expected"])
+    # full rows, every column, between the two paths — not only the CRC
+    assert_final_equal(c.read_final_with_sha().toPandas(), got_b)
     mc = (c.manifests_df().toPandas()[cols]
           .sort_values(cols).reset_index(drop=True))
     assert mc.equals(mb)
     assert c.table.committed_epochs() == b.table.committed_epochs()
     assert len(b.table._snapshot_paths()) < len(c.table._snapshot_paths())
-    # one delta layer per group commit, not per epoch: no bucket holds
-    # more live delta files than the grouped replay made data commits
-    groups = sum(any(m["checkpoint_epoch"] >= 0 for m in
-                     b.table._load_snapshot(p).manifests)
-                 for p in b.table._snapshot_paths())
+    # exactly one data commit for the whole replay, and so one live delta
+    # file per bucket
+    data_commits = sum(any(m["checkpoint_epoch"] >= 0 for m in
+                           b.table._load_snapshot(p).manifests)
+                       for p in b.table._snapshot_paths())
+    assert data_commits == 1
     per_bucket = collections.Counter(
         f["bucket"] for f in b.table.latest().files if f.get("kind") == "delta")
-    assert per_bucket and max(per_bucket.values()) <= groups < len(epochs)
+    assert set(per_bucket) == set(range(8))
+    assert set(per_bucket.values()) == {1}
+    assert b.table.latest().props["schema_version"] == "2.1"
 
     # resume semantics: rerunning the grouped replay is a full no-op
     v_before = b.table.latest().version

@@ -108,3 +108,33 @@ def test_replay_and_read_with_names_needing_quotes(spark, tmp_path):
     assert won.columns == [KEY, "_op_ts", "_event_seq", RENAMED, INJ, "op"]
     assert {r[KEY]: (r[RENAMED], r["op"]) for r in won.collect()} == {
         "k1": ("s1c", 4), "k2": ("r2", 4), "k3": (None, 5), "k4": ("s4", 3)}
+
+
+def test_docstore_key_with_a_dot_round_trips(spark, tmp_path):
+    """The document store names its key columns quoted: a ``k.id`` key
+    upserts, replaces, deletes and reads back through ``find_document``
+    and ``find_by_key`` (unquoted, ``F.col("k.id")`` asks for field ``id``
+    of a struct ``k`` and the plan fails to resolve)."""
+    from cdc_core_spark.query import find_by_key
+    from cdc_core_spark.sinks import docstore
+
+    root = str(tmp_path / "docs")
+    cols = f"{ident(KEY)} string, {ident(SPACE)} string"
+    docstore.upsert_documents(spark.createDataFrame(
+        [("d1", "v1"), ("d2", "v2"), ("d3", "v3")], cols), root, [KEY],
+        n_buckets=4)
+    docstore.upsert_documents(spark.createDataFrame(
+        [("d1", "v1b")], cols), root, [KEY])
+    docstore.delete_documents(spark, root, [KEY],
+                              spark.createDataFrame([("d3",)], [KEY]))
+
+    def doc(k):
+        return [r["doc"] for r in
+                docstore.find_document(spark, root, {KEY: k}).collect()]
+
+    assert doc("d1") == ['{"a b":"v1b"}']
+    assert doc("d2") == ['{"a b":"v2"}']
+    assert doc("d3") == []
+    every = docstore.read_documents(spark, root)
+    assert [r[KEY] for r in find_by_key(every, {KEY: "d2"}).collect()] == ["d2"]
+    assert sorted(r[KEY] for r in every.collect()) == ["d1", "d2"]

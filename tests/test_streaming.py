@@ -16,13 +16,24 @@ from tests.conftest import assert_final_equal
 
 
 def test_stream_ingest_converges(spark, t1, registry, tmp_path):
+    """The stream converges to the oracle, and every micro-batch —
+    including those carrying in-band DDL — publishes ONE snapshot: the
+    schema change lands with the batch's data."""
     eng = CdcEngine(spark, str(tmp_path / "eng"), registry, n_buckets=8)
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     eng.initial_load(src, "1.0")
+    loaded = eng.table.latest().version
     stream_ingest(eng, f'{t1["dir"]}/change_events', str(tmp_path / "ckpt"),
                   max_files_per_trigger=1, available_now=True)
     got = eng.read_final_with_sha().toPandas()
     assert_final_equal(got, t1["expected"])
+    snaps = [eng.table.snapshot(v)
+             for v in range(loaded + 1, eng.table.latest().version + 1)]
+    assert len(snaps) == len(glob.glob(
+        f'{t1["dir"]}/change_events/checkpoint_epoch=*'))
+    # no metadata-only snapshot: every one carries a batch's manifests
+    assert all(s.manifests for s in snaps)
+    assert snaps[-1].props["schema_version"] == "2.1"
 
 
 def test_windowed_op_counts_with_watermark(spark, t1, tmp_path):
