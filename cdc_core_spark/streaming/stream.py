@@ -182,8 +182,8 @@ def stream_ingest(engine: CdcEngine, events_path: str | None, checkpoint_dir: st
         epoch = epoch_base + int(batch_id)
         if epoch in engine.table.committed_epochs():
             return  # redelivered batch after restart — exactly-once skip
-        if batch_df.isEmpty():
-            return
+        # an empty batch still commits: apply_epoch records its epoch with
+        # the empty-epoch marker row, as replay does for an empty epoch
         engine.apply_epoch(batch_df, epoch)
 
     q = (stream.writeStream

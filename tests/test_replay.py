@@ -176,15 +176,17 @@ def test_manifest_lineage(spark, t1, registry, tmp_path):
 
 
 #: Spark jobs of a standalone apply_epoch on t1 at default AQE (8 buckets,
-#: 8 shuffle partitions): the pre-stats aggregate that also collects the
-#: DDL rows, the DLQ write, and the grouped delta write. Measured: 7 on
-#: epoch 1 and on the first DDL-carrying epoch.
-STANDALONE_EPOCH_JOBS = 7
+#: 8 shuffle partitions): the DDL probe, then the lineage aggregate and the
+#: DLQ write on the worker thread (its jobs inherit the caller's job group)
+#: beside the grouped delta write. Measured: 8 on epoch 1 and on the first
+#: DDL-carrying epoch.
+STANDALONE_EPOCH_JOBS = 8
 
 #: Spark jobs of a whole t1 replay onto a loaded table at default AQE (8
-#: buckets): one pre-stats aggregate, the DLQ write and ONE group commit,
-#: in-band DDL included; no event-log schema inference. Measured: 7.
-REPLAY_JOBS = 7
+#: buckets): the DDL probe, the lineage aggregate and the DLQ write (both
+#: on the worker, in the caller's job group) and ONE group commit, in-band
+#: DDL included; no event-log schema inference. Measured: 8.
+REPLAY_JOBS = 8
 
 
 def _jobs_of(spark, group, fn):
@@ -200,12 +202,13 @@ def _jobs_of(spark, group, fn):
 
 def test_epoch_apply_job_counts(spark, t1, registry, tmp_path):
     """PERF CONTRACT, two parts. (1) With the epoch's inputs pre-counted
-    (``_epoch_prestats``), the grouped merge-on-read write is exactly ONE
-    Spark action — the staged delta write; every logical manifest value
-    comes from the pre-stats. (2) A standalone ``apply_epoch`` — the streaming, flow and
-    s3_events path — launches no more jobs than measured on the single
-    apply path. Guards the per-commit job floor against regressions that
-    sneak extra jobs into the epoch path."""
+    (``_epoch_prestats``'s probe and its resolved lineage worker), the
+    grouped merge-on-read write is exactly ONE Spark action — the staged
+    delta write; every logical manifest value comes from the pre-stats.
+    (2) A standalone ``apply_epoch`` — the streaming, flow and s3_events
+    path — launches exactly the measured jobs, the worker's included: a
+    worker job outside the caller's job group would show as a missing
+    one, an extra job on the epoch path as one too many."""
     from pyspark.sql import functions as F
 
     eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
@@ -214,6 +217,7 @@ def test_epoch_apply_job_counts(spark, t1, registry, tmp_path):
     events = spark.read.parquet(f'{t1["dir"]}/change_events')
     batch = events.filter(F.col("checkpoint_epoch") == 0)
     stats = eng._epoch_prestats(batch, [0])
+    stats.lineage.result()  # its jobs ran outside the window below
 
     # AQE splits one action into a job per shuffle stage; count ACTIONS by
     # disabling it for the window (the contract is one action per group)
@@ -234,21 +238,22 @@ def test_epoch_apply_job_counts(spark, t1, registry, tmp_path):
         jobs = _jobs_of(spark, f"standalone_epoch_{e}", lambda: eng.apply_epoch(
             events.filter(F.col("checkpoint_epoch") == e), e))
         if e in (1, ddl_epoch):
-            assert len(jobs) <= STANDALONE_EPOCH_JOBS, \
+            assert len(jobs) == STANDALONE_EPOCH_JOBS, \
                 f"standalone apply_epoch {e} took {len(jobs)} jobs: {jobs}"
 
 
 def test_replay_job_count(spark, t1, registry, tmp_path):
     """PERF CONTRACT: a replay of all eight t1 epochs, three in-band DDL
-    episodes among them, is one group: its Spark jobs are one pre-stats
-    aggregate, the DLQ write and one delta commit — no job per DDL
-    segment and no event-log schema inference."""
+    episodes among them, is one group: its Spark jobs are the DDL probe,
+    the lineage aggregate and the DLQ write (on the worker, in the
+    caller's job group) and one delta commit — no job per DDL segment and
+    no event-log schema inference."""
     eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
     eng.initial_load(spark.read.parquet(f'{t1["dir"]}/source_repos.parquet'))
     v = eng.table.latest().version
     jobs = _jobs_of(spark, "replay", lambda: eng.replay(
         f'{t1["dir"]}/change_events', lease=False))
-    assert len(jobs) <= REPLAY_JOBS, f"replay took {len(jobs)} jobs: {jobs}"
+    assert len(jobs) == REPLAY_JOBS, f"replay took {len(jobs)} jobs: {jobs}"
     assert eng.table.latest().version == v + 1   # one snapshot, DDL with it
     assert eng.table.latest().props["schema_version"] == "2.1"
 
@@ -470,3 +475,103 @@ def test_fold_keeps_null_payload_of_winner(spark, tmp_path):
     got = t.read(spark).toPandas()
     assert len(got) == 1
     assert got["content"].isna().all()   # null wins, not "old"
+
+
+def _no_work_left(spark):
+    """Nothing the apply started outlives it: no running Spark job and no
+    live lineage worker thread."""
+    import threading
+
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert not [t for t in threading.enumerate()
+                if t.name == "cdc-lineage" and t.is_alive()]
+
+
+@pytest.mark.parametrize("entry", ["apply_epoch", "replay"])
+def test_dlq_write_error_aborts_the_publish(spark, t1, registry, tmp_path,
+                                            monkeypatch, entry):
+    """The DLQ write runs on the lineage worker beside the stage write; when
+    it raises, the error reaches the caller, nothing publishes (ledger and
+    head snapshot unchanged), nothing keeps running, and a rerun reaches
+    the oracle."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+
+    from cdc_core_spark.oracle import is_valid_event
+
+    ev = t1["fx"].change_events
+    data = ev[~ev["op"].isin([0, 1, 2])]
+    bad_epoch = int(data[~is_valid_event(data)]["checkpoint_epoch"].min())
+    log = f'{t1["dir"]}/change_events'
+    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=4)
+    eng.initial_load(spark.read.parquet(f'{t1["dir"]}/source_repos.parquet'))
+    events = spark.read.parquet(log)
+
+    def apply(epochs):
+        for e in epochs:
+            eng.apply_epoch(events.filter(F.col("checkpoint_epoch") == e), e)
+
+    if entry == "apply_epoch":
+        apply(range(bad_epoch))
+    head, done = eng.table.latest().version, eng.table.committed_epochs()
+
+    write_parquet = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path == eng.errors_dir:
+            raise OSError("DLQ write failed")
+        return write_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(OSError, match="DLQ write failed"):
+        if entry == "apply_epoch":
+            apply([bad_epoch])
+        else:
+            eng.replay(log)
+    _no_work_left(spark)
+    assert eng.table.latest().version == head
+    assert eng.table.committed_epochs() == done
+
+    monkeypatch.undo()
+    if entry == "apply_epoch":
+        apply(range(bad_epoch, 8))
+    else:
+        eng.replay(log)
+    assert_final_equal(eng.read_final_with_sha().toPandas(), t1["expected"])
+    assert eng.errors_df().count() == expected_quarantine_count(ev)
+
+
+def test_stage_write_error_joins_the_worker(spark, t1, registry, tmp_path,
+                                            monkeypatch):
+    """When the stage write raises, the lineage worker (here slowed inside
+    its DLQ write) has finished before the error reaches the caller."""
+    import time
+
+    from pyspark.sql import DataFrameWriter
+
+    from cdc_core_spark.lake import SnapshotTable
+
+    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=4)
+    eng.initial_load(spark.read.parquet(f'{t1["dir"]}/source_repos.parquet'))
+    head = eng.table.latest().version
+    dlq_done = []
+    write_parquet = DataFrameWriter.parquet
+
+    def slow_dlq(self, path, *args, **kwargs):
+        if path == eng.errors_dir:
+            time.sleep(2)
+            write_parquet(self, path, *args, **kwargs)
+            dlq_done.append(path)
+            return None
+        return write_parquet(self, path, *args, **kwargs)
+
+    def failing_stage(self, *args, **kwargs):
+        raise OSError("stage write failed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", slow_dlq)
+    monkeypatch.setattr(SnapshotTable, "_stage_files", failing_stage)
+    with pytest.raises(OSError, match="stage write failed"):
+        eng.replay(f'{t1["dir"]}/change_events', lease=False)
+    assert dlq_done == [eng.errors_dir]
+    _no_work_left(spark)
+    assert eng.table.latest().version == head

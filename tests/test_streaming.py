@@ -458,3 +458,58 @@ def test_s3_event_ingest_malformed_and_missing_routing(spark, tmp_path):
     s3_event_ingest(eng, str(ndir2), str(tmp_path / "ck_d"),
                     resolver=resolver, on_missing="skip")
     assert {r["path"] for r in eng.read_final().collect()} == {"p1", "pA"}
+
+
+def test_empty_micro_batch_commits_the_marker(spark, t1, registry, tmp_path):
+    """A zero-row epoch file mid-stream is an empty micro-batch: it goes
+    through ``apply_epoch`` and commits the empty-epoch marker row
+    (``partition_id = -1``) that replay commits for an empty epoch, adds
+    no file, and is skipped when a restart redelivers it."""
+    import shutil
+    import time
+
+    import pyarrow.parquet as pq
+
+    t1_file = f'{t1["dir"]}/change_events/checkpoint_epoch={{}}/part-0.parquet'
+    evdir = tmp_path / "events"
+    ckpt = str(tmp_path / "ckpt")
+    t0 = int(time.time()) - 1000
+
+    def add_file(epoch, src):
+        """Epoch ``epoch``'s one file, a copy of ``src`` (a path) or
+        ``src`` itself (an arrow table), its mtime after every earlier
+        file's (the file stream takes files in mtime order)."""
+        dst = evdir / f"checkpoint_epoch={epoch}" / "part-0.parquet"
+        os.makedirs(dst.parent)
+        if isinstance(src, str):
+            shutil.copy(src, dst)
+        else:
+            pq.write_table(src, dst)
+        os.utime(dst, (t0 + 100 * epoch, t0 + 100 * epoch))
+
+    eng = CdcEngine(spark, str(tmp_path / "eng"), registry, n_buckets=4)
+    eng.initial_load(spark.read.parquet(f'{t1["dir"]}/source_repos.parquet'))
+    add_file(0, t1_file.format(0))
+    add_file(1, pq.read_schema(t1_file.format(0)).empty_table())
+    stream_ingest(eng, str(evdir), ckpt, max_files_per_trigger=1)
+
+    head = eng.table.latest()
+    parent = eng.table.snapshot(head.parent)
+    assert head.epoch == 1
+    assert [(m["checkpoint_epoch"], m["partition_id"], m["events_read"])
+            for m in head.manifests] == [(1, -1, 0)]
+    assert head.files == parent.files and head.props == parent.props
+    assert {0, 1} <= set(eng.table.committed_epochs())
+
+    # a restart redelivers the last batch: the empty epoch is skipped
+    for f in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", f))
+    stream_ingest(eng, str(evdir), ckpt, max_files_per_trigger=1)
+    assert os.path.exists(os.path.join(ckpt, "commits", "1"))  # it re-ran
+    assert eng.table.latest().version == head.version
+
+    # the stream goes on past the empty epoch
+    add_file(2, t1_file.format(1))
+    stream_ingest(eng, str(evdir), ckpt, max_files_per_trigger=1)
+    assert eng.table.latest().epoch == 2
+    assert eng.table.latest().files != head.files
