@@ -1036,8 +1036,9 @@ def q_docstore_upsert(spark, sf_dir):
     implementation (Mongo, keyed whole-document replaceOne:
     MongoDbDataStore.java:243 replaceOne, :267 upsertEntity): the initial
     snapshot is loaded as JSON docs, then the LWW winner set replaces/
-    deletes keyed documents (anti-join-union set-based merge, atomic
-    versioned publish), and the store is read back and shredded. Must
+    deletes keyed documents (one merge-on-read delta layer whose tombstone
+    rows delete, atomic versioned publish), and the store is read back,
+    LWW-folded, and shredded. Must
     converge to the same external-store state as the RDBMS sink, so it
     shares _WRITEBACK_SQL."""
     from cdc_core_spark.sinks import docstore

@@ -2028,15 +2028,16 @@ class SnapshotTable:
           — committed with ``maintenance=True``, state-preserving by
           construction): a physical rewrite, not a logical change —
           contributes no rows and is skipped;
-        * **logical rewrite** (a docstore upsert, or an engine epoch an
-          older copy-on-write build committed, via ``commit_merge`` without
-          the maintenance flag): its changes are folded into rewritten base
-          files and CANNOT be recovered incrementally, so skipping would
-          silently lose data downstream — this RAISES by default. Pass
+        * **logical rewrite** (an incremental-rollup refresh, or a
+          docstore upsert or engine epoch an older copy-on-write build
+          committed, via ``commit_merge`` without the maintenance flag):
+          its changes are folded into rewritten base files and CANNOT be
+          recovered incrementally, so skipping would silently lose data
+          downstream — this RAISES by default. Pass
           ``on_logical_rewrite="skip"`` only when the consumer re-reads
-          full state across such commits. Engine epochs always commit MOR
-          deltas; tables written by older builds in copy-on-write mode can
-          still carry such commits.
+          full state across such commits. Engine epochs and docstore
+          upserts always commit MOR deltas; tables written by older builds
+          in copy-on-write mode can still carry such commits.
 
         A ``rollback()`` commit in range ALWAYS raises under the default
         (and under ``strict``) regardless of its file delta — its "changes"
@@ -2138,7 +2139,7 @@ class ChangelogCursor:
     ``None`` when nothing new was committed; a MAINTENANCE-rewrite-only
     window (pure compaction) advances the cursor and returns an empty frame,
     so consumers never re-deliver across it. A LOGICAL rewrite in the window
-    (docstore upsert, or an older build's copy-on-write epoch) raises
+    (rollup refresh, or an older build's copy-on-write commit) raises
     through ``poll`` rather than silently dropping its changes — see
     ``read_changes``; pass ``on_logical_rewrite="skip"`` to opt out.
 

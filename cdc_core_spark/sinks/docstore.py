@@ -12,12 +12,14 @@ No document database ships in this container, so the store is a keyed
 table of ``(key_cols..., doc: string<json>)`` rows on ``lake.SnapshotTable``
 — which supplies the three properties a document sink needs at scale:
 
-1. **Bucket-pruned upserts.** A batch only rewrites the hash buckets its
-   keys land in (``existing-touched ANTI-JOIN incoming  UNION  incoming``,
-   committed via ``commit_merge(touched_buckets)``); untouched buckets are
-   carried forward by reference. Cost is O(touched buckets), NOT O(table) —
-   the property that makes keyed upserts viable against a 100-TB doc table.
-   Replace semantics come free: the new doc is the whole document.
+1. **Merge-on-read upserts.** A batch stages its rows as one delta layer
+   (``commit_delta_grouped``, the engine's own write path): every
+   existing file is carried forward by reference, so cost is O(batch),
+   NOT O(table) — the property that makes keyed upserts viable against a
+   100-TB doc table. Reads LWW-fold the deltas per key, so replace-whole
+   semantics come from the fold (the new doc is the whole document) and a
+   delete is a tombstone row the reads filter out; ``compact()`` folds
+   the layers back into base files.
 2. **Atomic versioned publish** — the snapshot CAS; a crash mid-write is
    invisible (unreferenced orphan files, never a torn state).
 3. **Keyed point reads prune to one bucket** (``find_document``) — the
@@ -31,6 +33,8 @@ identical final state (replace is absorbing).
 """
 
 from __future__ import annotations
+
+import secrets
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,24 +121,26 @@ def upsert_documents(df: DataFrame, root: str, key_cols: list[str],
     tombstones remove the doc (matched or not — removing an absent key is
     a no-op, as in replaceOne+delete bulk writes).
 
+    The batch publishes as one merge-on-read delta layer pinned to the
+    snapshot it read. Its version tuple is ``(version + 1, one random
+    63-bit draw)``: every row sorts after everything that snapshot holds
+    (rows of older stores carry ``(-1, -1)``), and two upserts pinned to
+    the same snapshot still differ, so every read folds the same winner.
+    Concurrent upserts both commit (deltas rebase); on the same key one of
+    the two docs wins.
+
     ``n_buckets`` applies on first use only (afterwards the snapshot owns
     it; grow via ``SnapshotTable.compact(n_buckets=...)``).
     """
-    spark = df.sparkSession
-    # every name is quoted (lake.ident): a dot or space stays part of it
-    keys = [F.col(ident(k)) for k in key_cols]
     payload = [c for c in df.columns
                if c not in key_cols and c != deleted_col]
     doc = (F.to_json(F.struct(*[F.col(ident(c)) for c in payload]))
            if payload else F.lit("{}"))
-    # coalesce: a NULL delete flag means "not a delete" — under three-valued
-    # logic an un-coalesced NULL would fail BOTH filter(~_del) and any
-    # filter(_del), so the row would vanish from the replace set while its
-    # key still anti-joined the stored doc away: a silent delete
-    incoming = df.select(
-        *keys, doc.alias("doc"),
-        (F.coalesce(F.col(ident(deleted_col)), F.lit(False)) if deleted_col
-         else F.lit(False)).alias("_del"))
+    # coalesce: a NULL delete flag means "not a delete" — an un-coalesced
+    # NULL would store a NULL tombstone flag, which the read filter
+    # (NOT _deleted) drops like a delete: a silent delete
+    deleted = (F.coalesce(F.col(ident(deleted_col)), F.lit(False))
+               if deleted_col else F.lit(False))
 
     tbl = SnapshotTable(root)
     if not tbl.exists():
@@ -143,49 +149,31 @@ def upsert_documents(df: DataFrame, root: str, key_cols: list[str],
         tbl = SnapshotTable.create(root, fields=fields, key_cols=key_cols,
                                    n_buckets=n_buckets,
                                    props={"store": "documents"})
-    # full latest() (not latest_meta): the probe read and the commit below
-    # are PINNED to this one snapshot, closing the read→commit race — the
-    # lake-level OCC rebases or conflicts if a concurrent writer lands
+    # full latest() (not latest_meta): the commit is pinned to this
+    # snapshot, whose file list it extends; a concurrent writer rebases
     meta = tbl.latest()
-    nb = meta.n_buckets
     # normalize incoming key types to the TABLE'S declared types BEFORE
     # hashing: xxhash64 hashes int 7 and bigint 7 differently (the
     # bucket_expr contract), so a type-drifted batch (rev int from JSON vs
-    # the stored bigint) would mis-bucket, miss the stored doc's bucket in
-    # `touched`, and strand a stale duplicate that find_document's
-    # correctly-typed probe then returns forever — a silent lost update.
+    # the stored bigint) would land in another bucket than the stored doc
+    # and leave a duplicate the fold never meets — a stale doc that
+    # find_document's correctly-typed probe then returns forever.
     # find_document types its probe the same way (see above).
     tmap = {f["name"]: sql_type(f["type"]) for f in meta.fields}
-    incoming = incoming.select(
+    delta = df.select(
         *[F.col(ident(k)).cast(tmap[k]).alias(k) for k in key_cols],
-        *[c for c in incoming.columns if c not in key_cols])
-    # lazy localCheckpoint: the incoming lineage (often an upstream LWW
-    # shuffle) feeds the touched-bucket collect, the anti-join probe AND the
-    # commit_merge stage write — unmaterialized it would run 3x per upsert
-    incoming = (incoming.withColumn("_bucket", bucket_expr(key_cols, nb))
-                .localCheckpoint(eager=False))
-    # O(touched buckets) driver list — the justified collect (cf. engine.py)
-    touched = sorted(r["_bucket"] for r in
-                     incoming.select("_bucket").distinct().collect())
-
-    survivors = (tbl.read(spark, buckets=touched, snap=meta)
-                 .withColumn("_bucket", bucket_expr(key_cols, nb))
-                 .join(incoming.select(*keys), on=key_cols,
-                       how="left_anti"))
-    state = survivors.unionByName(
-        incoming.filter(~F.col("_del")).drop("_del"))
-    # replace semantics need no version tuple; constant internal cols keep
-    # the SnapshotTable read contract (tombstone filter) satisfied
-    state = (state.withColumn("_op_ts", F.lit(-1).cast("bigint"))
-             .withColumn("_event_seq", F.lit(-1).cast("bigint"))
-             .withColumn("_deleted", F.lit(False)))
-    tbl.commit_merge(state, touched, epoch=None, manifests=[], base=meta)
+        doc.alias("doc"),
+        F.lit(meta.version + 1).cast("bigint").alias("_op_ts"),
+        F.lit(secrets.randbits(63)).cast("bigint").alias("_event_seq"),
+        deleted.alias("_deleted"))
+    delta = delta.withColumn("_bucket", bucket_expr(key_cols, meta.n_buckets))
+    tbl.commit_delta_grouped(delta, [], manifests=[], base=meta)
 
 
 def delete_documents(spark: SparkSession, root: str, key_cols: list[str],
                      keys_df: DataFrame) -> None:
-    """Keyed bulk delete (MongoDbDataStore delete analog): one bucket-pruned
-    anti-join commit without the deleted keys."""
+    """Keyed bulk delete (MongoDbDataStore delete analog): one upsert of
+    tombstone rows, which reads filter out."""
     tomb = (keys_df.select(*[F.col(ident(k)) for k in key_cols])
             .withColumn("_deleted_flag", F.lit(True)))
     upsert_documents(tomb, root, key_cols, deleted_col="_deleted_flag")

@@ -204,13 +204,7 @@ def _engine_crash(tmp_path, request, crash, run):
     assert_final_equal(eng.read_final_with_sha().toPandas(), t1["expected"])
     t = eng.table
     assert t.committed_epochs() == set(_t1_epochs(t1))
-    referenced = set()
-    for p in t._snapshot_paths():
-        for f in t._load_snapshot(p).files:
-            assert os.path.exists(os.path.join(t.root, f["path"])), f
-            referenced.add(f["path"].split(os.sep)[1])
-    t.remove_orphan_files(grace_s=0)
-    assert set(os.listdir(t.data_dir)) == referenced
+    _referenced_stages_after_sweep(t)
     return eng
 
 
@@ -265,6 +259,53 @@ def _apply_epoch(tmp_path, request, crash):
     _engine_crash(tmp_path, request, crash, _run_apply_epoch)
 
 
+def _referenced_stages_after_sweep(t) -> None:
+    """Every file any retained snapshot references exists, and the orphan
+    sweep leaves exactly the referenced stage directories."""
+    referenced = set()
+    for p in t._snapshot_paths():
+        for f in t._load_snapshot(p).files:
+            assert os.path.exists(os.path.join(t.root, f["path"])), f
+            referenced.add(f["path"].split(os.sep)[1])
+    t.remove_orphan_files(grace_s=0)
+    assert set(os.listdir(t.data_dir)) == referenced
+
+
+def _docstore(tmp_path, request, crash):
+    """The document store's three publishes: the first upsert creates the
+    store and commits a batch, the second replaces two docs, inserts one
+    and deletes one through ``deleted_col``. Interrupted once, both
+    upserts are rerun from scratch; the docs read back the same through a
+    scan and through the one-bucket point read."""
+    from cdc_core_spark.lake import SnapshotTable
+    from cdc_core_spark.sinks import docstore
+    spark = request.getfixturevalue("spark")
+    root = str(tmp_path / "docs")
+    first = spark.createDataFrame([(i, f"v{i}") for i in range(12)],
+                                  "k long, body string")
+    second = spark.createDataFrame(
+        [(1, "w1", False), (5, "w5", None), (3, None, True), (20, "w20", False)],
+        "k long, body string, gone boolean")
+
+    def run():
+        docstore.upsert_documents(first, root, ["k"], n_buckets=4)
+        docstore.upsert_documents(second, root, ["k"], deleted_col="gone")
+
+    with crash:
+        run()
+    run()
+    body = {i: f"v{i}" for i in range(12) if i != 3}
+    body.update({1: "w1", 5: "w5", 20: "w20"})
+    want = {k: '{"body":"%s"}' % v for k, v in body.items()}
+    assert {r["k"]: r["doc"] for r in
+            docstore.read_documents(spark, root).collect()} == want
+    for k in (1, 3, 5, 7, 20):
+        got = [r["doc"] for r in
+               docstore.find_document(spark, root, {"k": k}).collect()]
+        assert got == ([want[k]] if k in want else []), (k, got)
+    _referenced_stages_after_sweep(SnapshotTable(root))
+
+
 # The two delta protocols make 8 (replay) and 10 (apply_epoch) durable
 # calls on t1 with 4 buckets, and each case replays t1 up to twice, so k is
 # sampled to fit the Tier-1 budget: one of each kind of write.
@@ -281,9 +322,13 @@ def _apply_epoch(tmp_path, request, crash):
 # call, its snapshot doc (Spark writes the rewritten files to a stage
 # directory). The rerun's replay commits nothing; its compaction redoes the
 # rewrite (before) or finds no delta left (after).
+# docstore: every call, all three — 1 the store's create, 2 the first
+# upsert's delta, 3 the second upsert's delta (replacements and a
+# tombstone).
 REPLAY_KS = (1, 3, 5, 6, 8)
 APPLY_EPOCH_KS = (1, 3, 6, 10)
 COMPACT_KS = (9,)
+DOCSTORE_KS = (1, 2, 3)
 
 PROTOCOLS = {"lease": (_lease, [1]), "sync": (_sync, range(1, 9)),
              "write_text_index": (_write_text_index, [1]),
@@ -292,7 +337,8 @@ PROTOCOLS = {"lease": (_lease, [1]), "sync": (_sync, range(1, 9)),
              # sampled k: see the comment above
              "replay": (_replay, REPLAY_KS),
              "apply_epoch": (_apply_epoch, APPLY_EPOCH_KS),
-             "compact": (_compact, COMPACT_KS)}
+             "compact": (_compact, COMPACT_KS),
+             "docstore": (_docstore, DOCSTORE_KS)}
 
 
 @pytest.mark.parametrize("protocol,k,when", [
@@ -347,3 +393,15 @@ def test_durable_writes_live_only_in_fsutil():
             for i, line in enumerate(p.read_text().splitlines(), 1)
             if pat.search(line)]
     assert not hits, "durable-write code outside fsutil:\n" + "\n".join(hits)
+
+
+def test_sinks_write_no_copy_on_write_commits():
+    """Keyed sink writes publish merge-on-read deltas, the engine's one
+    keyed-write path: no module under ``sinks/`` calls ``commit_merge``
+    (copy-on-write stays with initial load and maintenance)."""
+    sinks = Path(fsutil.__file__).resolve().parent / "sinks"
+    hits = [f"{p.name}:{i}: {line.strip()}"
+            for p in sorted(sinks.rglob("*.py"))
+            for i, line in enumerate(p.read_text().splitlines(), 1)
+            if re.search(r"\bcommit_merge\b", line)]
+    assert not hits, "copy-on-write commit in a sink:\n" + "\n".join(hits)

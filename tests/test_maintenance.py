@@ -206,6 +206,12 @@ def test_read_changes_raises_on_logical_rewrite(spark, t1, registry, tmp_path):
                           on_logical_rewrite="skip").count() == 0
     assert ChangelogCursor(t, from_version=base_v,
                            on_logical_rewrite="skip").poll(spark) is not None
+    # the maintenance flag, not an epoch, marks a rewrite logical: an
+    # epoch-less copy-on-write commit (a rollup refresh) raises the same way
+    mid_v = t.latest().version
+    t.commit_merge(df, list(range(snap.n_buckets)), epoch=None, manifests=[])
+    with pytest.raises(ValueError, match="LOGICAL rewrite"):
+        t.read_changes(spark, mid_v)
 
 
 def test_expire_snapshots_frees_files_keeps_ledger(spark, t1, registry, tmp_path):

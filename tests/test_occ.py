@@ -192,8 +192,8 @@ def test_cow_merge_rebases_over_disjoint_bucket_delta(spark, tmp_path):
 
 def test_docstore_concurrent_disjoint_upserts(spark, tmp_path):
     """Two doc-store writers upserting keys in DIFFERENT buckets at the
-    same time: the CAS loser's copy-on-write commit rebases over the
-    winner's untouched buckets — both documents land, no error, no lock."""
+    same time: the CAS loser's delta commit rebases over the winner's —
+    both documents land, no error, no lock."""
     from cdc_core_spark.sinks.docstore import (read_documents,
                                                upsert_documents)
     root = str(tmp_path / "docs")
@@ -217,6 +217,47 @@ def test_docstore_concurrent_disjoint_upserts(spark, tmp_path):
     assert not errs, errs
     docs = {r["k"]: r["doc"] for r in read_documents(spark, root).collect()}
     assert docs == {0: '{"body":"a2"}', 1: '{"body":"b2"}'}
+
+
+def test_docstore_concurrent_same_key_upserts(spark, tmp_path):
+    """Two doc-store writers upserting the SAME key at the same time: both
+    commit (deltas are additive, so the CAS loser rebases), and since each
+    carries its own version tuple every read folds the same one doc —
+    before and after compaction."""
+    from cdc_core_spark.sinks.docstore import (find_document, read_documents,
+                                               upsert_documents)
+    root = str(tmp_path / "docs")
+    seed = spark.createDataFrame([(0, "a"), (1, "b")], "k long, body string")
+    upsert_documents(seed, root, ["k"], n_buckets=NB)
+
+    barrier, errs = threading.Barrier(2, timeout=120), []
+
+    def writer(body):
+        try:
+            df = spark.createDataFrame([(0, body)], "k long, body string")
+            barrier.wait()
+            upsert_documents(df, root, ["k"], n_buckets=NB)
+        except Exception as e:          # surfaced below, never swallowed
+            errs.append(e)
+
+    ts = [threading.Thread(target=writer, args=(b,)) for b in ("x", "y")]
+    [x.start() for x in ts]
+    [x.join(timeout=300) for x in ts]
+    assert not any(x.is_alive() for x in ts) and not errs, errs
+    assert SnapshotTable(root).latest().version == 3   # create, seed, 2 upserts
+
+    def reads():
+        every = [(r["k"], r["doc"]) for r in read_documents(spark, root)
+                 .filter("k = 0").collect()]
+        point = [(r["k"], r["doc"]) for r in
+                 find_document(spark, root, {"k": 0}).collect()]
+        return every, point
+
+    every, point = reads()
+    assert every == point and len(every) == 1, (every, point)
+    assert every[0][1] in ('{"body":"x"}', '{"body":"y"}')
+    SnapshotTable(root).compact(spark)
+    assert reads() == (every, point)
 
 
 def test_rebucket_conflicts_with_any_concurrent_commit(spark, tmp_path):

@@ -250,12 +250,12 @@ def test_docstore_upsert_idempotent_and_crash_invisible(spark, tmp_path):
     assert got == before  # fell back to the previous committed snapshot
 
 
-def test_docstore_upsert_rewrites_only_touched_buckets(spark, tmp_path):
-    """The 100-TB property: a batch commit rewrites only the buckets its
-    keys hash into; every other bucket's files are carried forward BY
-    REFERENCE (same file paths in the new snapshot), and the point read
-    prunes to one bucket."""
-    from cdc_core_spark.lake import SnapshotTable
+def test_docstore_upsert_stages_one_delta_in_its_bucket(spark, tmp_path):
+    """The 100-TB property: an upsert stages merge-on-read delta files for
+    its own keys only — a one-key batch writes one bucket — and every
+    existing file is carried forward BY REFERENCE (same paths in the new
+    snapshot); the point read prunes to one bucket and folds the delta."""
+    from cdc_core_spark.lake import SnapshotTable, bucket_expr
     from cdc_core_spark.sinks import docstore
 
     root = str(tmp_path / "docs")
@@ -264,20 +264,17 @@ def test_docstore_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         "repo string, path string, content string")
     docstore.upsert_documents(wide, root, ["repo", "path"], n_buckets=16)
     tbl = SnapshotTable(root)
-    files_before = {f["path"]: f["bucket"] for f in tbl.latest().files}
+    files_before = {f["path"] for f in tbl.latest().files}
 
     one = spark.createDataFrame([("r7", "p7.py", "body-7b")],
                                 "repo string, path string, content string")
     docstore.upsert_documents(one, root, ["repo", "path"])
     snap = tbl.latest()
-    files_after = {f["path"]: f["bucket"] for f in snap.files}
-    changed_buckets = {b for p, b in files_after.items()
-                       if p not in files_before}
-    assert len(changed_buckets) == 1          # only the touched bucket rewrote
-    carried = {p for p in files_after if p in files_before}
-    untouched_before = {p for p, b in files_before.items()
-                        if b not in changed_buckets}
-    assert carried == untouched_before        # the rest carried by reference
+    staged = [f for f in snap.files if f["path"] not in files_before]
+    key_bucket = one.select(bucket_expr(["repo", "path"], 16)).first()[0]
+    assert staged and all(f.get("kind") == "delta" for f in staged)
+    assert {f["bucket"] for f in staged} == {key_bucket}
+    assert files_before <= {f["path"] for f in snap.files}   # by reference
     # state correct: replaced doc visible, count unchanged
     assert docstore.read_documents(spark, root).count() == 200
     got = docstore.shred_documents(
@@ -288,8 +285,8 @@ def test_docstore_upsert_rewrites_only_touched_buckets(spark, tmp_path):
 
 def test_docstore_null_delete_flag_is_not_a_delete(spark, tmp_path):
     """A NULL value in deleted_col means 'not a delete' — under three-valued
-    logic an un-coalesced NULL would vanish from the replace set while its
-    key still anti-joined the stored doc away: a silent delete."""
+    logic an un-coalesced NULL tombstone flag fails the read filter
+    (``NOT _deleted``) and hides the new doc: a silent delete."""
     from cdc_core_spark.sinks import docstore
 
     root = str(tmp_path / "docs")
@@ -336,13 +333,11 @@ def test_find_document_key_order_independent_of_field_order(spark, tmp_path):
     assert hit.count() == 1
 
 
-def test_docstore_upsert_is_a_logical_rewrite_for_cdc_out(spark, tmp_path):
-    """A docstore upsert rewrites touched buckets copy-on-write WITHOUT an
-    epoch — read_changes must still classify it as a logical rewrite (the
-    maintenance flag, not epoch presence, is the discriminator) and refuse
-    to silently skip its changes."""
-    import pytest
-
+def test_docstore_upsert_is_readable_as_change_data(spark, tmp_path):
+    """A docstore upsert commits a merge-on-read delta, so CDC-out reads
+    it incrementally: ``read_changes`` returns exactly the batch's rows,
+    a replaced or inserted doc as ``upsert`` and a tombstone as
+    ``delete``."""
     from cdc_core_spark.lake import SnapshotTable
     from cdc_core_spark.sinks import docstore
 
@@ -350,12 +345,17 @@ def test_docstore_upsert_is_a_logical_rewrite_for_cdc_out(spark, tmp_path):
     docstore.upsert_documents(_doc_rows(spark), root, ["repo", "path"])
     t = SnapshotTable(root)
     v1 = t.latest().version
-    batch = spark.createDataFrame([("r1", "a.py", "body-a2")],
-                                  "repo string, path string, content string")
-    docstore.upsert_documents(batch, root, ["repo", "path"])
-    with pytest.raises(ValueError, match="LOGICAL rewrite"):
-        t.read_changes(spark, v1)
-    assert t.read_changes(spark, v1, on_logical_rewrite="skip").count() == 0
+    batch = spark.createDataFrame(
+        [("r1", "a.py", "body-a2", False),
+         ("r9", "z.py", "body-z", False),
+         ("r2", "c.go", None, True)],
+        "repo string, path string, content string, deleted boolean")
+    docstore.upsert_documents(batch, root, ["repo", "path"],
+                              deleted_col="deleted")
+    got = sorted((r["repo"], r["path"], r["_change_op"])
+                 for r in t.read_changes(spark, v1).collect())
+    assert got == [("r1", "a.py", "upsert"), ("r2", "c.go", "delete"),
+                   ("r9", "z.py", "upsert")]
 
 
 def test_read_journal_rejects_wrong_ts_col(spark, tmp_path):
