@@ -345,8 +345,7 @@ class CdcEngine:
             n = 0 if empty_source else int(obs.get["n"])
             return [_manifest_row(-1, -1, events_read=n, events_applied=n)]
 
-        self.table.commit_merge(df, list(range(self.n_buckets)), epoch=None,
-                                manifests=manifest,
+        self.table.commit_merge(df, list(range(self.n_buckets)), manifest,
                                 props={**base_props, "initial_loaded": True})
 
     # -------------------------------------------------------- schema evolution
@@ -836,8 +835,7 @@ class CdcEngine:
                               with_internal_cols=True, snap=snap)
               .filter(~old_tomb)
               .withColumn("_bucket", bucket_expr(self._key_cols(), self.n_buckets)))
-        self.table.commit_merge(df, todo, epoch=None, manifests=[],
-                                maintenance=True, base=snap)
+        self.table.commit_merge(df, todo, manifests=[], base=snap)
 
     def compact(self, n_buckets: int | str | None = None,
                 min_delta_files: int | None = None,

@@ -14,11 +14,13 @@ the reference implements by hand):
    see the last published snapshot.
 2. **Bucketed layout + merge-on-read deltas** — rows are hash-bucketed by
    key ``pmod(xxhash64(repo, path), n_buckets)``; every engine epoch commit
-   appends bucket-tagged DELTA files (``commit_delta_grouped``) that reads
-   LWW-fold over the base, and a copy-on-write rewrite (``commit_merge``:
-   initial load, compaction, maintenance) only rewrites the buckets it
-   touches and carries the rest forward by reference. At 10^10-event scale
-   this is what bounds commit I/O to the touched subset.
+   and every other keyed write (document store, rollup refresh) appends
+   bucket-tagged DELTA files (``commit_delta_grouped``) that reads
+   LWW-fold over the base; base files come only from ``commit_merge`` —
+   the initial load and the maintenance rewrites (compaction, tombstone
+   expiry), which rewrite the buckets they touch and carry the rest
+   forward by reference. At 10^10-event scale this is what bounds commit
+   I/O to the touched subset.
 3. **Metadata-only schema evolution** — each commit records the schema its
    files were written under (``schema_id``); column add / rename / widen
    changes only snapshot metadata, and reads normalize every file group to
@@ -44,8 +46,9 @@ SnapshotTable call     Iceberg operation                           notes
 (group form            + snapshot-summary props for the manifest   = Iceberg
 ``commit_delta_        rows; one epoch or a group of epochs is     v2 MOR
 grouped``)             the same single append transaction
-``commit_merge``       ``newRewrite()/RewriteFiles`` (replace      CoW merge
-                       touched-bucket files, carry rest)
+``commit_merge``       ``newRewrite()/RewriteFiles`` (replace      initial
+                       touched-bucket files, carry rest)           load +
+                                                                   maint.
 ``commit_metadata``    ``updateSchema().addColumn/renameColumn/``  metadata-
                        ``updateColumn`` (widen)                    only, same
 ``read``               ``IcebergGenerics/scan`` via Spark's        MOR fold →
@@ -85,13 +88,14 @@ Commit concurrency follows Iceberg's optimistic model (commit-retry +
 validation, ``CommitFailedException``/``ValidationException``): every
 commit flavor CASes on the next version and, on losing to a concurrent
 writer, REBASES when provably safe — additive MOR deltas over anything
-structural-compatible, maintenance rewrites over commits that didn't take
+structural-compatible, base-file rewrites over commits that didn't take
 their input files, metadata evolutions over data commits — and raises
-``CommitConflictError`` otherwise (copy-on-write over changed buckets,
-re-bucket racing anything, duplicate epochs, two schema changes). Pass
-``base=`` to pin a read-compute-commit pipeline to one snapshot; the
-payoff at 100 TB is that compaction/retention run concurrently with
-ingest instead of behind the reference's distributed locks.
+``CommitConflictError`` otherwise (a rewrite whose input files are gone,
+re-bucket racing anything, duplicate epochs, two schema or props
+changes). Pass ``base=`` to pin a read-compute-commit pipeline to one
+snapshot; the payoff at 100 TB is that compaction/retention run
+concurrently with ingest instead of behind the reference's distributed
+locks.
 
 The mapping above is executable, not just prose: ``lake_iceberg.
 IcebergSnapshotTable`` routes each call to the real Iceberg operation when
@@ -142,7 +146,7 @@ class CommitConflictError(RuntimeError):
     ``ValidationException`` / ``CommitFailedException`` analog). The staged
     data files were already cleaned up; recompute against fresh state and
     retry the whole operation. Commits that CAN rebase safely — additive
-    MOR deltas over anything, maintenance rewrites over commits that didn't
+    MOR deltas over anything, base-file rewrites over commits that didn't
     take their input files — retry internally and never raise this."""
 
 
@@ -772,21 +776,26 @@ class SnapshotTable:
 
     # ---------------- write / commit ----------------
     def commit_merge(self, df: DataFrame, touched_buckets: list[int],
-                     epoch: int | None, manifests,
-                     new_fields: list[dict] | None = None,
-                     new_aliases: dict | None = None,
-                     props: dict | None = None,
+                     manifests, props: dict | None = None,
                      n_buckets: int | None = None,
-                     maintenance: bool = False,
-                     sort_cols: list[str] | None = None,
                      base: Snapshot | None = None) -> Snapshot:
-        """Copy-on-write commit: stage new files for ``touched_buckets`` from
-        ``df`` (must carry ``_bucket``), carry all other buckets forward by
-        reference, publish atomically. ``manifests`` may be a
-        list, or a zero-arg callable evaluated after the stage write and
-        before the publish (same contract as ``commit_delta`` — lets callers
-        derive manifest stats from ``df.observe`` metrics of the write job
-        instead of paying a separate counting scan).
+        """Copy-on-write rewrite: stage new BASE files for
+        ``touched_buckets`` from ``df`` (must carry ``_bucket``), drop the
+        files those buckets held, carry every other file forward by
+        reference, publish atomically. Three callers write base files this
+        way: the initial load (into an empty table, so it consumes no
+        files) and the two maintenance rewrites, ``compact`` and
+        ``CdcEngine.expire_tombstones``. Logical changes publish as
+        merge-on-read deltas (``commit_delta_grouped``). ``manifests`` may
+        be a list, or a zero-arg callable evaluated after the stage write
+        and before the publish (same contract as ``commit_delta`` — lets
+        callers derive manifest stats from ``df.observe`` metrics of the
+        write job instead of paying a separate counting scan).
+
+        A commit that consumes files, or re-buckets, is a state-preserving
+        maintenance rewrite: its snapshot carries ``maintenance=True``
+        (``read_changes`` skips it) and its files are clustered by the
+        table's ``sort_order`` / ``zorder`` prop.
 
         ``n_buckets`` re-buckets the table: ``df`` must carry ``_bucket``
         computed with the NEW count and ``touched_buckets`` must cover its
@@ -799,19 +808,30 @@ class SnapshotTable:
         the caller computed ``df`` FROM. This closes the read→commit race
         (a concurrent delta landing between a maintenance job's read and
         its publish must not be dropped from the rewritten buckets) and
-        arms the optimistic-concurrency rebase: on losing the version CAS,
-        a ``maintenance`` rewrite re-parents over the interloper, keeping
-        every file it didn't consume (the LWW fold is commit-order-free,
-        so a fresh delta layers exactly over the new base), while a
-        copy-on-write commit whose touched buckets changed underneath —
-        or a re-bucket racing anything, or two concurrent schema changes —
+        arms the optimistic-concurrency rebase, one rule for every caller:
+        each file this commit consumed must still be live in the new head,
+        and every other file of the head rides forward (the LWW fold is
+        commit-order-free, so a fresh delta layers exactly over the new
+        base). A re-bucket racing anything, a concurrent props change
+        while this commit sets props, or a key or bucket-count change
         raises ``CommitConflictError`` instead of losing data."""
         prev = base if base is not None else self.latest()
         if prev.props.get("sort_order") and prev.props.get("zorder"):
             raise ValueError(
                 "table props carry BOTH sort_order and zorder — they are "
                 "competing clustering layouts; keep exactly one")
-        if maintenance and sort_cols is None:
+        rebucket = n_buckets is not None and n_buckets != prev.n_buckets
+        out_buckets = n_buckets if n_buckets is not None else prev.n_buckets
+        if rebucket and set(touched_buckets) != set(range(out_buckets)):
+            raise ValueError("re-bucketing must rewrite every new bucket")
+        touched = set(touched_buckets)
+        # the input set this commit folds/replaces — what a rebase must
+        # verify is still live (nobody else rewrote it) and what it
+        # removes from the new head's file list
+        consumed = {f["path"] for f in prev.files if f["bucket"] in touched}
+        maintenance = rebucket or bool(consumed)
+        sort_cols = None
+        if maintenance:
             # EVERY maintenance rewrite (compact, tombstone expiry) honors
             # the clustering prop, or it would silently un-cluster what
             # compaction paid for; hot-path commits stay sort-free. The
@@ -835,16 +855,7 @@ class SnapshotTable:
                     # input, nothing on the hot path
                     from cdc_core_spark.zorder import zorder_column
                     sort_cols = [zorder_column(df, cols)]
-        rebucket = n_buckets is not None and n_buckets != prev.n_buckets
-        out_buckets = n_buckets if n_buckets is not None else prev.n_buckets
-        if rebucket and set(touched_buckets) != set(range(out_buckets)):
-            raise ValueError("re-bucketing must rewrite every new bucket")
-        fields = new_fields or prev.fields
-        aliases = new_aliases or prev.aliases
-        schemas = dict(prev.schemas)
-        sid = _sid_for(prev, fields)
-        if sid not in schemas:
-            schemas[sid] = fields
+        sid = _sid_for(prev, prev.fields)
 
         stage_abs = os.path.join(self.root, "data",
                                  f"commit-{uuid.uuid4().hex[:12]}")
@@ -853,22 +864,11 @@ class SnapshotTable:
             new_files = self._stage_files(df, stage_abs,
                                           len(touched_buckets), sid, None,
                                           sort_cols=sort_cols, snap=prev)
-        touched = set(touched_buckets)
         manifest_rows = manifests() if callable(manifests) else manifests
-        our_epochs = [epoch] if epoch is not None else []
-        # the input set this commit folded/replaced — what a maintenance
-        # rebase must verify is still live (nobody else rewrote it) and
-        # what it removes from the new head's file list
-        consumed = {f["path"] for f in prev.files if f["bucket"] in touched}
 
         def rebuild(b: Snapshot) -> Snapshot:
-            if b is prev:
-                carried = [] if rebucket else [
-                    f for f in prev.files if f["bucket"] not in touched]
-                out_fields, out_aliases, schemas_b = fields, aliases, schemas
-                out_props = props if props is not None else prev.props
-            else:
-                self._rebase_guard(prev, b, our_epochs, "merge rebase")
+            if b is not prev:
+                self._rebase_guard(prev, b, [], "merge rebase")
                 if rebucket:
                     raise CommitConflictError(
                         "re-bucket rebase: a re-bucket drops every "
@@ -878,57 +878,23 @@ class SnapshotTable:
                     raise CommitConflictError(
                         "merge rebase: table props changed concurrently "
                         "while this commit also sets props")
-                if new_fields is not None and (b.fields != prev.fields
-                                               or b.aliases != prev.aliases):
+                gone = consumed - {f["path"] for f in b.files}
+                if gone:
                     raise CommitConflictError(
-                        "merge rebase: schema changed concurrently while "
-                        "this commit also changes it")
-                if maintenance:
-                    # state-preserving rewrite: valid as long as every
-                    # file it folded is still referenced by the new head;
-                    # anything committed since (delta layers, other
-                    # buckets' rewrites, a schema evolution) is kept —
-                    # the LWW fold is commit-order-free, so interloper
-                    # deltas layer exactly over the rewritten base
-                    gone = consumed - {f["path"] for f in b.files}
-                    if gone:
-                        raise CommitConflictError(
-                            f"maintenance rebase: {len(gone)} input "
-                            "file(s) this rewrite folded were removed by "
-                            "a concurrent rewrite")
-                    carried = [f for f in b.files
-                               if f["path"] not in consumed]
-                    out_fields = new_fields if new_fields is not None else b.fields
-                    out_aliases = new_aliases if new_aliases is not None else b.aliases
-                else:
-                    # copy-on-write: output buckets were computed FROM the
-                    # touched buckets' state at `prev` — any concurrent
-                    # change there (even an additive delta: it lives in
-                    # carried-from-prev files this commit drops) is lost
-                    # if rebased, so it conflicts
-                    if b.fields != prev.fields or b.aliases != prev.aliases:
-                        raise CommitConflictError(
-                            "merge rebase: schema changed concurrently "
-                            "under a copy-on-write commit")
-                    b_touched = {f["path"] for f in b.files
-                                 if f["bucket"] in touched}
-                    if b_touched != consumed:
-                        raise CommitConflictError(
-                            "merge rebase: a concurrent commit changed "
-                            "bucket(s) this copy-on-write commit rewrites "
-                            "— rebasing would drop its files")
-                    carried = [f for f in b.files
-                               if f["bucket"] not in touched]
-                    out_fields, out_aliases = fields, aliases
-                schemas_b = dict(b.schemas)
-                schemas_b.setdefault(sid, fields)
-                out_props = props if props is not None else b.props
-            return Snapshot(version=b.version + 1, epoch=epoch,
+                        f"maintenance rebase: {len(gone)} input "
+                        "file(s) this rewrite folded were removed by "
+                        "a concurrent rewrite")
+            carried = [] if rebucket else [f for f in b.files
+                                           if f["path"] not in consumed]
+            schemas_b = dict(b.schemas)
+            schemas_b.setdefault(sid, prev.fields)
+            return Snapshot(version=b.version + 1, epoch=None,
                             n_buckets=out_buckets, key_cols=b.key_cols,
-                            fields=out_fields, aliases=out_aliases,
+                            fields=b.fields, aliases=b.aliases,
                             schemas=schemas_b, files=carried + new_files,
                             manifests=manifest_rows, parent=b.version,
-                            props=out_props, maintenance=maintenance)
+                            props=props if props is not None else b.props,
+                            maintenance=maintenance)
 
         return self._occ_publish(prev, stage_abs, rebuild)
 
@@ -1109,8 +1075,10 @@ class SnapshotTable:
         read path LWW-folds base+deltas; ``compact()`` re-bases. This is the
         scale-correct CDC sink shape (the reference applies per-row upserts
         to a mutable store — MergeOnRead mirrors that without rewriting the
-        table per batch; CopyOnWrite via ``commit_merge`` remains for
-        compaction and maintenance).
+        table per batch). Every logical keyed write takes this path —
+        engine epochs, document-store upserts, rollup refreshes;
+        ``commit_merge`` writes base files for the initial load and
+        maintenance only).
 
         GROUP COMMIT: the winners of SEVERAL epochs stage in ONE write job
         as ONE ``_bucket=<b>`` layer and publish as a single atomic
@@ -1998,13 +1966,12 @@ class SnapshotTable:
             df = (self.read(spark, buckets=todo, with_internal_cols=True,
                             snap=prev)
                   .withColumn("_bucket", bucket_expr(key_cols, nb)))
-            self.commit_merge(df, todo, epoch=None, manifests=[],
-                              maintenance=True, base=prev)
+            self.commit_merge(df, todo, manifests=[], base=prev)
             return
         df = (self.read(spark, with_internal_cols=True, snap=prev)
               .withColumn("_bucket", bucket_expr(key_cols, nb)))
-        self.commit_merge(df, list(range(nb)), epoch=None, manifests=[],
-                          n_buckets=nb, maintenance=True, base=prev)
+        self.commit_merge(df, list(range(nb)), manifests=[], n_buckets=nb,
+                          base=prev)
 
     # ---------------- incremental changelog read ----------------
     def read_changes(self, spark: SparkSession, from_version: int,
@@ -2025,19 +1992,19 @@ class SnapshotTable:
         it carries:
 
         * **maintenance rewrite** (compaction, re-bucket, tombstone expiry
-          — committed with ``maintenance=True``, state-preserving by
-          construction): a physical rewrite, not a logical change —
-          contributes no rows and is skipped;
-        * **logical rewrite** (an incremental-rollup refresh, or a
-          docstore upsert or engine epoch an older copy-on-write build
-          committed, via ``commit_merge`` without the maintenance flag):
-          its changes are folded into rewritten base files and CANNOT be
-          recovered incrementally, so skipping would silently lose data
-          downstream — this RAISES by default. Pass
-          ``on_logical_rewrite="skip"`` only when the consumer re-reads
-          full state across such commits. Engine epochs and docstore
-          upserts always commit MOR deltas; tables written by older builds
-          in copy-on-write mode can still carry such commits.
+          — ``commit_merge`` flags every commit that consumes files
+          ``maintenance``; state-preserving by construction): a physical
+          rewrite, not a logical change — contributes no rows and is
+          skipped;
+        * **logical rewrite** (an engine epoch, docstore upsert or
+          rollup refresh an older copy-on-write build committed, without
+          the maintenance flag): its changes are folded into rewritten
+          base files and CANNOT be recovered incrementally, so skipping
+          would silently lose data downstream — this RAISES by default.
+          Pass ``on_logical_rewrite="skip"`` only when the consumer
+          re-reads full state across such commits. This build commits
+          every logical change as a MOR delta, so only tables written by
+          older builds carry such commits.
 
         A ``rollback()`` commit in range ALWAYS raises under the default
         (and under ``strict``) regardless of its file delta — its "changes"
@@ -2139,7 +2106,7 @@ class ChangelogCursor:
     ``None`` when nothing new was committed; a MAINTENANCE-rewrite-only
     window (pure compaction) advances the cursor and returns an empty frame,
     so consumers never re-deliver across it. A LOGICAL rewrite in the window
-    (rollup refresh, or an older build's copy-on-write commit) raises
+    (an older build's copy-on-write epoch, upsert or rollup refresh) raises
     through ``poll`` rather than silently dropping its changes — see
     ``read_changes``; pass ``on_logical_rewrite="skip"`` to opt out.
 

@@ -33,8 +33,9 @@ Contract parity with ``lake.SnapshotTable``:
   snapshot summaries as it rides our snapshot docs, every epoch's rows in
   one snapshot, folded per ``checkpoint_epoch`` like ``_fold_epochs``.
 * **commit_merge** → ``overwritePartitions()`` (the bucket-pruned
-  copy-on-write: only ``_bucket`` partitions present in ``df`` are
-  replaced, the rest carried by reference).
+  copy-on-write of the initial load and maintenance: only ``_bucket``
+  partitions present in ``df`` are replaced, the rest carried by
+  reference).
 * **commit_metadata** → Iceberg DDL (``ADD COLUMN`` / ``RENAME COLUMN`` /
   ``ALTER COLUMN TYPE``) — metadata-only evolution, no data rewrite.
 * **committed_epochs** → scan of the ``.snapshots`` metadata table's
@@ -304,42 +305,37 @@ class IcebergSnapshotTable:
         return _IcebergCommit(self._last_snapshot_id(), last, manifests)
 
     def commit_merge(self, df: DataFrame, touched_buckets: list[int],
-                     epoch: int | None, manifests,
-                     new_fields: list[dict] | None = None,
-                     new_aliases: dict | None = None,
-                     props: dict | None = None,
+                     manifests, props: dict | None = None,
                      n_buckets: int | None = None,
-                     maintenance: bool = False,
-                     sort_cols: list[str] | None = None,
                      base=None) -> _IcebergCommit:
-        """Copy-on-write merge: dynamic partition overwrite replaces exactly
-        the ``_bucket`` partitions present in ``df`` and carries the rest —
-        the Iceberg form of SnapshotTable's touched-bucket rewrite (the
-        identity-partition layout makes the two partition sets identical;
-        ``touched_buckets`` is accepted for signature parity and the frame's
-        own partitions are the authority, as with overwritePartitions).
-        DDL rides ahead of the data commit via ``commit_metadata``.
+        """Copy-on-write base-file rewrite (initial load, maintenance):
+        dynamic partition overwrite replaces exactly the ``_bucket``
+        partitions present in ``df`` and carries the rest — the Iceberg form
+        of SnapshotTable's touched-bucket rewrite (the identity-partition
+        layout makes the two partition sets identical; ``touched_buckets``
+        is accepted for signature parity and the frame's own partitions are
+        the authority, as with overwritePartitions). Props ride ahead of the
+        data commit as table properties.
 
         ``base`` (the lake's optimistic-concurrency pin) is accepted for
         parity; the conflict rules it arms map onto Iceberg's NATIVE
         validation rather than adapter code: overwrite/rewrite commits
         validate concurrently-changed partitions per the table's
-        ``write.*.isolation-level`` (serializable = the lake's CoW
-        conflict; snapshot = its maintenance rebase), retries come from
-        ``commit.retry.*``, and a failed validation surfaces as
-        ``ValidationException`` — the ``CommitConflictError`` analog.
-        ``sort_cols`` parity: clustering belongs to the table's
-        ``write.sort-order`` (SORT ORDERED BY), not a per-commit flag."""
+        ``write.*.isolation-level`` (snapshot = the lake's one rebase
+        rule), retries come from ``commit.retry.*``, and a failed
+        validation surfaces as ``ValidationException`` — the
+        ``CommitConflictError`` analog. Clustering belongs to the table's
+        ``write.sort-order`` (SORT ORDERED BY), as the lake derives it from
+        the ``sort_order`` prop, not from a per-commit flag."""
         if n_buckets is not None and n_buckets != self.n_buckets:
             raise NotImplementedError(
                 "re-bucketing via commit_merge(n_buckets=) is a lake-path "
                 "flag; with Iceberg, evolve the partition spec (ALTER TABLE "
                 "... REPLACE PARTITION FIELD) and rewrite_data_files "
                 "instead (module docstring, Scope)")
-        if new_fields or new_aliases or props:
-            self.commit_metadata(new_fields or [], new_aliases, props=props)
-        self._writer(df, epoch, manifests).overwritePartitions()
-        return _IcebergCommit(self._last_snapshot_id(), epoch,
+        self._set_props(props)
+        self._writer(df, None, manifests).overwritePartitions()
+        return _IcebergCommit(self._last_snapshot_id(), None,
                               manifests if isinstance(manifests, list) else [])
 
     # ---------------- reads ----------------

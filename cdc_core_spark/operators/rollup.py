@@ -26,17 +26,22 @@ re-scanning the base table per refresh:
   one knowingly non-O(delta) path (documented cost: one filtered pass of
   the source per refresh, prunable when the table's ``sort_order`` clusters
   the group column) — omit min/max specs to stay strictly incremental.
-* **Exactly-once / resumable.** Each refresh commits the new rollup state
-  and the consumed source version atomically in one snapshot
-  (``props["rollup_base_version"]``); re-running a refresh for an
+* **Exactly-once / resumable.** Each refresh commits the new state of
+  the groups it touched and the consumed source version atomically in one
+  snapshot (``props["rollup_base_version"]``); re-running a refresh for an
   already-consumed version is a no-op, and a crash between reading the
   changelog and publishing leaves the previous consistent state. The spec
   itself is persisted in table props, so ``load()`` needs no re-declaration.
-* **MOR upstream required.** ``read_changes`` raises on logical
-  copy-on-write rewrites by design (their changes are folded into rewritten
-  base files and cannot be recovered incrementally) — engine epochs always
-  commit MOR deltas, so only a hand-made logical ``commit_merge`` (or an
-  older copy-on-write build's epoch) upstream trips it; maintenance rewrites
+* **Merge-on-read state.** The rollup is written like any keyed table:
+  each refresh stages one delta holding only its affected groups,
+  versioned ``(source version, 0)``, and a group whose count falls to 0
+  stages as a tombstone. So ``rollup.table.read_changes`` serves the
+  rollup's own change data (changed groups as ``upsert``, emptied ones
+  as ``delete``) to downstream consumers.
+* **Logical copy-on-write upstream raises.** ``read_changes`` raises on
+  logical copy-on-write rewrites (their changes are folded into rewritten
+  base files and cannot be recovered incrementally); only tables written
+  by older copy-on-write builds carry them. Maintenance rewrites
   (compaction, re-bucket, tombstone expiry) are state-preserving and skip
   cleanly mid-range.
 
@@ -148,8 +153,11 @@ class IncrementalRollup:
     version; every later ``refresh()`` folds only the changes since the
     last consumed version (see module docstring for the algorithm and its
     scale shape). The rollup state is itself a SnapshotTable keyed by the
-    group columns — time-travelable, atomically published, bucket-pruned
-    on its own merge path.
+    group columns — time-travelable, atomically published, bucket-pruned,
+    written through the same merge-on-read delta commit as engine epochs.
+    Each refresh adds one delta layer to the buckets it touches, and reads
+    fold every layer until ``rollup.table.compact(spark)`` re-bases them —
+    the same unbounded fold depth as the document store's upserts.
     """
 
     def __init__(self, source: SnapshotTable, table: SnapshotTable,
@@ -185,7 +193,7 @@ class IncrementalRollup:
         r = cls(source, table, group_cols, spec)
         v0 = table.latest()
         state = r._full_state(spark, src_snap, v0)
-        r._commit(state, list(range(n_buckets)), src_snap.version, v0)
+        r._commit(state, src_snap.version, v0)
         return r
 
     @classmethod
@@ -359,9 +367,12 @@ class IncrementalRollup:
 
     def _merge_delta(self, spark: SparkSession, delta: DataFrame,
                      to_snap: Snapshot, to_v: int, roll: Snapshot) -> Snapshot:
-        """Copy-on-write merge of signed deltas into the rollup's touched
-        buckets: union(old bucket rows, delta rows) → one groupBy re-fold,
-        min/max overridden by affected-group recompute, empty groups drop."""
+        """Fold signed deltas into the groups they touch and stage only
+        those groups: union(old rows of the touched buckets, delta rows) →
+        one groupBy re-fold kept to the delta's groups, min/max replaced by
+        the affected-group recompute; a group whose count falls to 0 stages
+        as a tombstone. Unaffected groups sharing a touched bucket are
+        read, never rewritten."""
         group_types = {f["name"]: f["type"] for f in roll.fields
                        if f["name"] in self.group_cols}
         delta = delta.localCheckpoint(eager=False)
@@ -372,36 +383,27 @@ class IncrementalRollup:
         if not touched:
             # nothing changed in range (e.g. maintenance-only commits):
             # still advance the consumed version so refresh stays O(1)
-            return self._commit(
-                self.table.read(spark, buckets=[], snap=roll), [], to_v,
-                roll)
+            return self._commit(None, to_v, roll)
 
-        acc = self._acc_cols(roll)
         stype = self._stored_types(roll)
-        mm = [f"{a['op']}_{a['col']}" for a in self._minmax()]
-        mm = list(dict.fromkeys(mm))
-        inv = [c for c in acc if c not in mm]
-
+        mm = {f"{a['op']}_{a['col']}": a for a in self._minmax()}
+        inv = [c for c in self._acc_cols(roll) if c not in mm]
         old = self.table.read(spark, buckets=touched, snap=roll)
-        old_c = old.select(*self.group_cols, *inv,
-                           *[F.col(c).alias(f"_old_{c}") for c in mm])
-        delta_c = delta.select(*self.group_cols, *inv,
-                               *[F.lit(None).cast(stype[c])
-                                 .alias(f"_old_{c}") for c in mm])
-        merged = (old_c.unionByName(delta_c)
+        merged = (old.select(*self.group_cols, *inv,
+                             F.lit(False).alias("_aff"))
+                  .unionByName(delta.select(*self.group_cols, *inv,
+                                            F.lit(True).alias("_aff")))
                   .groupBy(*self.group_cols)
-                  .agg(*[F.sum(c).cast(stype[c]).alias(c)
-                         for c in inv],
-                       # unaffected groups: exactly one old row, delta NULLs
-                       # — min() passes the carried extreme through
-                       *[F.min(f"_old_{c}").alias(f"_old_{c}") for c in mm]))
+                  .agg(*[F.sum(c).cast(stype[c]).alias(c) for c in inv],
+                       F.max("_aff").alias("_aff"))
+                  .filter("_aff"))
 
         if mm:
             # affected-group recompute: the one non-O(delta) path (module
             # docstring) — group-predicate-pushed scan of current state
             aff = delta.select(*self.group_cols)
             cur = {c: to_snap.aliases.get(c, c) for c in dict.fromkeys(
-                self.group_cols + [a["col"] for a in self._minmax()])}
+                self.group_cols + [a["col"] for a in mm.values()])}
             state_now = self.source.read(
                 spark, snap=to_snap, columns=list(dict.fromkeys(cur.values())))
             # alias renamed source columns back to the spec's creation names
@@ -414,32 +416,34 @@ class IncrementalRollup:
             rec = (state_now.join(F.broadcast(aff), cond, "inner")
                    .drop(*[aff[g] for g in self.group_cols])
                    .groupBy(*self.group_cols)
-                   .agg(*[getattr(F, a["op"])(a["col"])
-                          .alias(f"{a['op']}_{a['col']}")
-                          for a in self._minmax()],
-                        F.lit(True).alias("_recomputed")))
+                   .agg(*[getattr(F, a["op"])(a["col"]).alias(c)
+                          for c, a in mm.items()]))
             jcond = None
             for g in self.group_cols:
                 c = merged[g].eqNullSafe(rec[g])
                 jcond = c if jcond is None else jcond & c
-            joined = merged.join(F.broadcast(rec), jcond, "left")
-            sel = [merged[g] for g in self.group_cols] + \
-                  [merged[c] for c in inv]
-            for c in mm:
-                # a recompute match REPLACES the carried value even when the
-                # recomputed extreme is NULL (group now all-NULL) — coalesce
-                # would resurrect a stale extreme
-                sel.append(F.when(F.col("_recomputed"), rec[c])
-                           .otherwise(merged[f"_old_{c}"]).alias(c))
-            merged = joined.select(*sel)
-        else:
-            merged = merged.select(*self.group_cols, *inv)
+            # an emptied group has no recompute row: its extremes read
+            # NULL, and it stages as a tombstone anyway
+            merged = merged.join(F.broadcast(rec), jcond, "left").select(
+                *[merged[g] for g in self.group_cols],
+                *[merged[c] for c in inv], *[rec[c] for c in mm])
+        return self._commit(merged, to_v, roll)
 
-        new_rows = merged.filter(F.col("cnt") > 0)
-        return self._commit(new_rows, touched, to_v, roll)
-
-    def _commit(self, state: DataFrame, touched: list[int],
-                base_version: int, roll: Snapshot) -> Snapshot:
+    def _commit(self, state: DataFrame | None, base_version: int,
+                roll: Snapshot) -> Snapshot:
+        """Publish ``state`` (the new rows of the groups it holds) as one
+        merge-on-read delta, versioned ``(base_version, 0)`` so each
+        refresh out-versions the last, with ``rollup_base_version`` in the
+        same snapshot. ``state=None`` advances the version alone through a
+        metadata-only commit."""
+        props = {**roll.props, "rollup_base_version": base_version}
+        # base=roll: the whole refresh (old-state read, merge, commit) is
+        # pinned to one rollup snapshot; a concurrent refresher changed the
+        # props this commit sets, so the loser conflicts
+        # (CommitConflictError) instead of splicing two refreshes
+        if state is None:
+            return self.table.commit_metadata(roll.fields, roll.aliases,
+                                              props=props, base=roll)
         group_types = {f["name"]: f["type"] for f in roll.fields
                        if f["name"] in self.group_cols}
         # every staged file must PHYSICALLY match the stored schema: state
@@ -448,22 +452,17 @@ class IncrementalRollup:
         # schema_id, so without this cast a read would merge int32/int64
         # files under whichever schema the first-listed file carries
         stype = self._stored_types(roll)
-        state = state.select(*[F.col(f["name"]).cast(stype[f["name"]])
-                               .alias(f["name"]) for f in roll.fields])
         df = (state
-              .withColumn("_op_ts", F.lit(base_version).cast("bigint"))
-              .withColumn("_event_seq", F.lit(0).cast("bigint"))
-              .withColumn("_deleted", F.lit(False))
+              .select(*[F.col(f["name"]).cast(stype[f["name"]])
+                        .alias(f["name"]) for f in roll.fields],
+                      F.lit(base_version).cast("bigint").alias("_op_ts"),
+                      F.lit(0).cast("bigint").alias("_event_seq"),
+                      (F.col("cnt") <= 0).alias("_deleted"))
               .withColumn("_bucket",
                           bucket_expr(self.group_cols, roll.n_buckets,
                                       cast_types=group_types)))
-        props = dict(roll.props)
-        props["rollup_base_version"] = base_version
-        # base=roll: the whole refresh (old-state read, merge, commit) is
-        # pinned to one rollup snapshot; a concurrent refresher conflicts
-        # (CommitConflictError) instead of silently splicing two refreshes
-        return self.table.commit_merge(df, touched, epoch=None, manifests=[],
-                                       props=props, base=roll)
+        return self.table.commit_delta_grouped(df, [], [], props=props,
+                                               base=roll)
 
     # ---------------- read ----------------
 

@@ -42,3 +42,18 @@ def assert_final_equal(got_pdf, expected_pdf):
         neq = (m[c + "_g"].astype("Int64").fillna(-9)
                != m[c + "_e"].astype("Int64").fillna(-9))
         assert not neq.any(), m[neq][["repo", "path", c + "_g", c + "_e"]].head()
+
+
+def as_older_logical_rewrite(table, epoch=None, manifests=()):
+    """Rewrite ``table``'s head snapshot doc, a compaction, into the logical
+    copy-on-write commit older builds wrote when an engine epoch, docstore
+    upsert or rollup refresh rewrote its buckets: the same file swap, with
+    ``maintenance`` false and the epoch and manifests it applied."""
+    import json
+    path = table._doc_path(table.latest().version)
+    with open(path) as fh:
+        doc = json.load(fh)
+    assert doc["maintenance"] and isinstance(doc["files"], list)
+    doc.update(maintenance=False, epoch=epoch, manifests=list(manifests))
+    with open(path, "w") as fh:
+        json.dump(doc, fh)

@@ -89,7 +89,7 @@ def test_only_pure_delta_appends_pick(spark, tmp_path):
     # files bypass the LWW fold once the target has no deltas
     t2 = _mk(tmp_path / "cow")
     t2.commit_merge(_delta_df(spark, [(9, 90, False)], 300),
-                    touched_buckets=list(range(4)), epoch=0, manifests=[])
+                    touched_buckets=list(range(4)), manifests=[])
     assert all(f.get("kind", "base") == "base" for f in t2.latest().files)
     with pytest.raises(ValueError, match="non-delta"):
         t2.cherry_pick(1)

@@ -259,6 +259,65 @@ def _apply_epoch(tmp_path, request, crash):
     _engine_crash(tmp_path, request, crash, _run_apply_epoch)
 
 
+def _rollup(tmp_path, request, crash):
+    """The rollup's create, then two refreshes, each after one source
+    commit (the second empties group "b", so its refresh stages a
+    tombstone). A restarted driver lets the source writer finish its
+    epochs, loads the rollup (re-creating it when create never
+    finalized) and refreshes once: the rollup equals a direct GROUP BY at
+    the source head with an exact base version, and the orphan sweep
+    leaves only referenced stage directories."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from cdc_core_spark.lake import SnapshotTable, bucket_expr
+    from cdc_core_spark.operators.rollup import (IncrementalRollup,
+                                                 RollupStateError)
+    spark = request.getfixturevalue("spark")
+    src = SnapshotTable.create(
+        str(tmp_path / "src"), key_cols=["k"], n_buckets=4,
+        fields=[{"name": "k", "type": "long"}, {"name": "g", "type": "string"},
+                {"name": "v", "type": "long"}])
+    batches = [[(1, "a", 10, False), (2, "b", 20, False), (3, "a", 5, False)],
+               [(1, "a", 11, False), (4, "c", 7, False)],
+               [(2, "b", 20, True), (4, "a", 8, False)]]
+
+    def commit(e):
+        df = spark.createDataFrame(
+            batches[e], "k long, g string, v long, _deleted boolean")
+        src.commit_delta(
+            df.withColumn("_op_ts", F.lit(100 * (e + 1)).cast("bigint"))
+            .withColumn("_event_seq", F.col("k"))
+            .withColumn("_bucket", bucket_expr(["k"], 4)),
+            epoch=e, manifests=[])
+
+    root = str(tmp_path / "roll")
+    spec = [{"op": "count"}, {"op": "sum", "col": "v"},
+            {"op": "max", "col": "v"}]
+    commit(0)
+    with crash:
+        r = IncrementalRollup.create(spark, src, root, ["g"], spec)
+        for e in (1, 2):
+            commit(e)
+            r.refresh(spark)
+    for e in (1, 2):
+        if e not in src.committed_epochs():
+            commit(e)
+    try:
+        r = IncrementalRollup.load(src, root)
+    except (RollupStateError, FileNotFoundError):
+        shutil.rmtree(root, ignore_errors=True)
+        r = IncrementalRollup.create(spark, src, root, ["g"], spec)
+    r.refresh(spark)
+    want = {row["g"]: tuple(row[1:]) for row in src.read(spark).groupBy("g")
+            .agg(F.count(F.lit(1)), F.sum("v"), F.max("v")).collect()}
+    assert {row["g"]: (row["cnt"], row["sum_v"], row["max_v"])
+            for row in r.read(spark).collect()} == want
+    assert r.base_version == src.latest().version
+    _referenced_stages_after_sweep(r.table)
+
+
 def _referenced_stages_after_sweep(t) -> None:
     """Every file any retained snapshot references exists, and the orphan
     sweep leaves exactly the referenced stage directories."""
@@ -325,10 +384,17 @@ def _docstore(tmp_path, request, crash):
 # docstore: every call, all three — 1 the store's create, 2 the first
 # upsert's delta, 3 the second upsert's delta (replacements and a
 # tombstone).
+# rollup: 6 calls — 1 the rollup table's create, 2 the initial aggregate's
+# delta (with the first rollup_base_version), 3 and 5 the source commits,
+# 4 and 6 the two refreshes' deltas. Sampled: 2 (before it the rollup
+# never finalized and is re-created; after it the crash cuts off both
+# source commits) and 6 (the refresh with the tombstone); 4 unwinds like
+# 6, and 1 like 2's before.
 REPLAY_KS = (1, 3, 5, 6, 8)
 APPLY_EPOCH_KS = (1, 3, 6, 10)
 COMPACT_KS = (9,)
 DOCSTORE_KS = (1, 2, 3)
+ROLLUP_KS = (2, 6)
 
 PROTOCOLS = {"lease": (_lease, [1]), "sync": (_sync, range(1, 9)),
              "write_text_index": (_write_text_index, [1]),
@@ -338,7 +404,8 @@ PROTOCOLS = {"lease": (_lease, [1]), "sync": (_sync, range(1, 9)),
              "replay": (_replay, REPLAY_KS),
              "apply_epoch": (_apply_epoch, APPLY_EPOCH_KS),
              "compact": (_compact, COMPACT_KS),
-             "docstore": (_docstore, DOCSTORE_KS)}
+             "docstore": (_docstore, DOCSTORE_KS),
+             "rollup": (_rollup, ROLLUP_KS)}
 
 
 @pytest.mark.parametrize("protocol,k,when", [
@@ -395,13 +462,24 @@ def test_durable_writes_live_only_in_fsutil():
     assert not hits, "durable-write code outside fsutil:\n" + "\n".join(hits)
 
 
-def test_sinks_write_no_copy_on_write_commits():
-    """Keyed sink writes publish merge-on-read deltas, the engine's one
-    keyed-write path: no module under ``sinks/`` calls ``commit_merge``
-    (copy-on-write stays with initial load and maintenance)."""
-    sinks = Path(fsutil.__file__).resolve().parent / "sinks"
-    hits = [f"{p.name}:{i}: {line.strip()}"
-            for p in sorted(sinks.rglob("*.py"))
-            for i, line in enumerate(p.read_text().splitlines(), 1)
-            if re.search(r"\bcommit_merge\b", line)]
-    assert not hits, "copy-on-write commit in a sink:\n" + "\n".join(hits)
+def test_no_logical_copy_on_write_commits():
+    """Every logical keyed write (engine epochs, document store, rollup
+    refreshes) publishes merge-on-read deltas: ``commit_merge`` is called
+    only where base files are written — the engine's initial load and the
+    two maintenance rewrites, compaction and tombstone expiry. A new
+    copy-on-write writer anywhere in the package fails here."""
+    import ast
+
+    pkg = Path(fsutil.__file__).resolve().parent
+    calls = []
+    for p in sorted(pkg.rglob("*.py")):
+        for fn in ast.walk(ast.parse(p.read_text())):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                calls += [(str(p.relative_to(pkg)), fn.name)
+                          for node in ast.walk(fn)
+                          if isinstance(node, ast.Call)
+                          and isinstance(node.func, ast.Attribute)
+                          and node.func.attr == "commit_merge"]
+    assert sorted(calls) == [("engine.py", "expire_tombstones"),
+                             ("engine.py", "initial_load"),
+                             ("lake.py", "compact"), ("lake.py", "compact")]

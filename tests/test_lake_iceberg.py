@@ -142,7 +142,7 @@ def test_merge_overwrites_only_touched_buckets(spark, ice):
                      epoch=0, manifests=[])
     # merge frame holds ONLY pa's bucket content
     ice.commit_merge(_rows(spark, [("r", pa, "v2", 200, 3, False)]),
-                     touched_buckets=[b1], epoch=1, manifests=[])
+                     touched_buckets=[b1], manifests=[])
     got = {(r["repo"], r["path"]): r["content"] for r in ice.read().collect()}
     assert got == {("r", pa): "v2", ("r", pb): "w1"}
 
@@ -163,8 +163,7 @@ def test_rebucket_flag_rejected_loudly(spark):
     t.key_cols = ["repo"]
     t.n_buckets = 4
     with pytest.raises(NotImplementedError, match="REPLACE PARTITION FIELD"):
-        t.commit_merge(spark.range(1), [0], epoch=None, manifests=[],
-                       n_buckets=8)
+        t.commit_merge(spark.range(1), [0], manifests=[], n_buckets=8)
 
 
 def test_expire_keep_last_zero_rejected(spark):
@@ -178,9 +177,10 @@ def test_expire_keep_last_zero_rejected(spark):
 def test_commit_signature_parity_with_lake():
     """Jar-independent: every keyword the engine/sinks/maintenance paths can
     pass to a SnapshotTable commit method must be accepted by the shim too
-    (extras like ``base``/``sort_cols`` are parity no-ops documented in the
-    shim's docstrings) — otherwise the 'mechanical swap' claim breaks with
-    a TypeError the first time a maintenance job pins ``base=``."""
+    (extras like ``base`` are parity no-ops documented in the shim's
+    docstrings) — otherwise the 'mechanical swap' claim breaks with a
+    TypeError the first time a maintenance job pins ``base=``. The shim
+    takes no keyword the lake lacks either, so it cannot grow its own."""
     import inspect
 
     from cdc_core_spark.lake import SnapshotTable
@@ -193,6 +193,8 @@ def test_commit_signature_parity_with_lake():
             getattr(IcebergSnapshotTable, name)).parameters) - {"self"}
         missing = lake_kw - shim_kw
         assert not missing, f"{name}: shim missing kwargs {sorted(missing)}"
+        assert shim_kw == lake_kw, f"{name}: shim-only kwargs " \
+            f"{sorted(shim_kw - lake_kw)}"
 
 
 def test_wap_branch_stage_audit_publish(spark, ice):

@@ -175,14 +175,15 @@ def test_read_changes_rebuilds_state_incrementally(spark, t1, registry, tmp_path
 
 def test_read_changes_raises_on_logical_rewrite(spark, t1, registry, tmp_path):
     """A logical copy-on-write commit — an epoch committed by rewriting its
-    buckets (as older copy-on-write builds applied epochs) — folds its
+    buckets, as older copy-on-write builds applied epochs — folds its
     changes into rewritten base files, so silently skipping it would lose
     data for every CDC-out consumer. Default raises with remediation;
     on_logical_rewrite='skip' is the explicit opt-out; a pure-maintenance
-    rewrite (compact, epoch=None) still skips silently."""
+    rewrite (compact) still skips silently."""
     import pytest
 
-    from cdc_core_spark.lake import ChangelogCursor, bucket_expr
+    from cdc_core_spark.lake import ChangelogCursor
+    from tests.conftest import as_older_logical_rewrite
 
     eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
@@ -191,10 +192,10 @@ def test_read_changes_raises_on_logical_rewrite(spark, t1, registry, tmp_path):
     base_v = t.latest().version
     # rewrite EVERY bucket under epoch 2, so the commit genuinely removes
     # files (a merge that only adds files stays incrementally readable)
-    snap = t.latest()
-    df = (t.read(spark, with_internal_cols=True)
-          .withColumn("_bucket", bucket_expr(snap.key_cols, snap.n_buckets)))
-    t.commit_merge(df, list(range(snap.n_buckets)), epoch=2, manifests=[])
+    t.compact(spark)
+    assert t.read_changes(spark, base_v).count() == 0
+    as_older_logical_rewrite(t, epoch=2, manifests=[
+        {"checkpoint_epoch": 2, "partition_id": 0}])
 
     with pytest.raises(ValueError, match="LOGICAL rewrite"):
         t.read_changes(spark, base_v)
@@ -207,9 +208,11 @@ def test_read_changes_raises_on_logical_rewrite(spark, t1, registry, tmp_path):
     assert ChangelogCursor(t, from_version=base_v,
                            on_logical_rewrite="skip").poll(spark) is not None
     # the maintenance flag, not an epoch, marks a rewrite logical: an
-    # epoch-less copy-on-write commit (a rollup refresh) raises the same way
+    # epoch-less copy-on-write commit (an older build's rollup refresh)
+    # raises the same way
     mid_v = t.latest().version
-    t.commit_merge(df, list(range(snap.n_buckets)), epoch=None, manifests=[])
+    t.compact(spark)
+    as_older_logical_rewrite(t)
     with pytest.raises(ValueError, match="LOGICAL rewrite"):
         t.read_changes(spark, mid_v)
 

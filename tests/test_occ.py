@@ -150,46 +150,6 @@ def test_incremental_compact_rebases_and_keeps_other_buckets(spark, tmp_path):
     assert _state(spark, t1) == {0: 99, **{k: k * 10 + 2 for k in range(1, 8)}}
 
 
-def test_cow_merge_conflicts_when_touched_bucket_changed(spark, tmp_path):
-    """A copy-on-write commit computed from stale touched-bucket state
-    must conflict (rebasing would drop the interloper's delta), and its
-    staged files must be cleaned up."""
-    t1, t2 = _mk(tmp_path), SnapshotTable(str(tmp_path))
-    _commit(spark, t1, [(k, k, False) for k in range(8)], 100, epoch=0)
-
-    base = t1.latest()
-    touched = sorted({f["bucket"] for f in base.files})
-    cow = (t1.read(spark, snap=base, with_internal_cols=True)
-           .withColumn("v", F.col("v") + 1)
-           .withColumn("_bucket", bucket_expr(["k"], NB)))
-    _commit(spark, t2, [(1, 500, False)], 200, epoch=1)  # hits some bucket
-    before = _state(spark, t2)
-    with pytest.raises(CommitConflictError, match="copy-on-write"):
-        t1.commit_merge(cow, touched, epoch=None, manifests=[], base=base)
-    # nothing changed, and the loser's staged files are gone
-    assert _state(spark, t2) == before
-    assert _stage_dirs(tmp_path) == _referenced_stages(t2)
-
-
-def test_cow_merge_rebases_over_disjoint_bucket_delta(spark, tmp_path):
-    """A copy-on-write commit whose touched buckets were NOT changed by
-    the interloper rebases cleanly — concurrent writers on disjoint key
-    ranges (e.g. two doc-store upsert jobs) both land, neither retries
-    its Spark work. Keys 0 and 1 hash to buckets 0 and 2 under NB=4."""
-    t1, t2 = _mk(tmp_path), SnapshotTable(str(tmp_path))
-    _commit(spark, t1, [(0, 5, False), (1, 10, False)], 100, epoch=0)
-
-    base = t1.latest()
-    cow = (t1.read(spark, snap=base, with_internal_cols=True)
-           .filter("k = 1").withColumn("v", F.col("v") + 1)
-           .withColumn("_bucket", bucket_expr(["k"], NB)))
-    _commit(spark, t2, [(0, 6, False)], 200, epoch=1)   # bucket 0 only
-    snap = t1.commit_merge(cow, [2], epoch=None, manifests=[], base=base)
-
-    assert snap.parent == base.version + 1              # rebased, not raced
-    assert _state(spark, t1) == {0: 6, 1: 11}           # both writes kept
-
-
 def test_docstore_concurrent_disjoint_upserts(spark, tmp_path):
     """Two doc-store writers upserting keys in DIFFERENT buckets at the
     same time: the CAS loser's delta commit rebases over the winner's —
@@ -261,6 +221,9 @@ def test_docstore_concurrent_same_key_upserts(spark, tmp_path):
 
 
 def test_rebucket_conflicts_with_any_concurrent_commit(spark, tmp_path):
+    """A re-bucket drops every file, so it conflicts with any interloper.
+    A whole-table rewrite that consumed no files — the initial load into
+    a fresh table — rebases instead and keeps the interloper's delta."""
     t1, t2 = _mk(tmp_path), SnapshotTable(str(tmp_path))
     _commit(spark, t1, [(k, k, False) for k in range(8)], 100, epoch=0)
     base = t1.latest()
@@ -268,6 +231,16 @@ def test_rebucket_conflicts_with_any_concurrent_commit(spark, tmp_path):
     with pytest.raises(CommitConflictError, match="re-bucket"):
         t1.compact(spark, n_buckets=8, base=base)
     assert _state(spark, t2)[9] == 90   # interloper survived
+
+    fresh = _mk(tmp_path / "load")
+    other = SnapshotTable(str(tmp_path / "load"))
+    base = fresh.latest()
+    _commit(spark, other, [(9, 90, False)], 200, epoch=0)
+    load = _delta_df(spark, [(k, k, False) for k in range(8)], -1)
+    snap = fresh.commit_merge(load, list(range(NB)), manifests=[],
+                              props={"initial_loaded": True}, base=base)
+    assert snap.parent == base.version + 1 and not snap.maintenance
+    assert _state(spark, fresh) == {**{k: k for k in range(8)}, 9: 90}
 
 
 @DELTA_ENTRIES
@@ -316,9 +289,14 @@ def test_two_compactions_same_files_conflict(spark, tmp_path):
     _commit(spark, t1, [(1, 11, False)], 200, epoch=1)
     base = t1.latest()
     t2.compact(spark)
+    staged = _stage_dirs(tmp_path)
     with pytest.raises(CommitConflictError, match="maintenance rebase"):
         t1.compact(spark, base=base)
     assert _state(spark, t1) == {**{k: k for k in range(8)}, 1: 11}
+    # the loser's staged files are gone: only the winner's rewrite and the
+    # files older snapshots reference remain
+    assert _stage_dirs(tmp_path) == staged
+    assert _referenced_stages(t1) <= staged
 
 
 def test_threaded_contention_all_commits_land(spark, tmp_path):

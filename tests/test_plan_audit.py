@@ -223,7 +223,7 @@ def test_key_predicate_pushes_through_mor_fold(spark, tmp_path):
                   F.col("id").alias("_event_seq"),
                   F.lit(False).alias("_deleted"))
           .withColumn("_bucket", bucket_expr(["repo", "path"], 4)))
-    tbl.commit_merge(df, list(range(4)), epoch=0, manifests=[])
+    tbl.commit_merge(df, list(range(4)), manifests=[])
     out = tbl.read(spark).filter((F.col("repo") == "r1")
                                  & (F.col("path") == "p7"))
     p = plan(out)

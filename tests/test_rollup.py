@@ -152,6 +152,32 @@ def test_rollup_idempotent_resume_and_maintenance(spark, tmp_path):
     assert _as_map2(r2.read(spark)) == before
 
 
+def test_rollup_refresh_is_readable_as_change_data(spark, tmp_path):
+    """A refresh commits one merge-on-read delta holding only the groups
+    it changed, so CDC-out reads the rollup incrementally: a changed group
+    comes back as an ``upsert`` with its new accumulators and an emptied
+    group as a ``delete``; every file the refresh adds is a delta and every
+    earlier file stays live."""
+    t = _mk_src(spark, str(tmp_path / "s"),
+                [(1, "a", 10, False), (2, "b", 20, False), (3, "c", 5, False)],
+                ts=100)
+    r = IncrementalRollup.create(spark, t, str(tmp_path / "r"), ["g"], SPEC5)
+    before = r.table.latest()
+    t.commit_delta(_rows(spark, [(1, "a", 11, False), (3, "c", 5, True)], 200),
+                   epoch=1, manifests=[])
+    snap = r.refresh(spark)
+
+    got = {(row["g"], row["_change_op"], row["cnt"], row["sum_v"])
+           for row in r.table.read_changes(spark, before.version).collect()}
+    assert got == {("a", "upsert", 1, 11), ("c", "delete", 0, 0)}
+    old = {f["path"] for f in before.files}
+    new = [f for f in snap.files if f["path"] not in old]
+    assert old <= {f["path"] for f in snap.files}
+    assert new and all(f.get("kind") == "delta" for f in new)
+    assert _as_map2(r.read(spark)) == {"a": (1, 11, 11.0, 11, 11),
+                                       "b": (1, 20, 20.0, 20, 20)}
+
+
 def _as_map2(df):
     return {r["g"]: tuple(round(v, 6) if isinstance(v, float) else v
                           for v in r[1:]) for r in df.collect()}
@@ -160,17 +186,18 @@ def _as_map2(df):
 def test_rollup_cow_upstream_raises(spark, tmp_path):
     """A logical copy-on-write commit upstream cannot be read incrementally:
     refresh must surface read_changes' error, not silently lose changes."""
+    from tests.conftest import as_older_logical_rewrite
+
     t = _mk_src(spark, str(tmp_path / "s"), [(1, "a", 10, False)], ts=100)
     r = IncrementalRollup.create(spark, t, str(tmp_path / "r"), ["g"], SPEC5)
-    # a cow engine epoch rewrites the touched buckets' base files: rewrite
-    # EVERY bucket so the commit genuinely removes files (a merge that only
-    # adds files is a pure-additive append and stays incrementally readable)
-    df = _rows(spark, [(1, "a", 10, False), (2, "a", 3, False)], 200)
-    t.commit_merge(df, touched_buckets=[0, 1, 2, 3],
-                   epoch=1, manifests=[{"checkpoint_epoch": 1,
-                                        "partition_id": 0,
-                                        "events_read": 1, "events_applied": 1,
-                                        "events_error": 0, "max_event_seq": 2}])
+    # an older copy-on-write build's engine epoch rewrote the touched
+    # buckets' files: a compaction's doc carrying that epoch is the same
+    # commit (it genuinely removes files — a merge that only adds files is
+    # a pure-additive append and stays incrementally readable)
+    t.compact(spark)
+    as_older_logical_rewrite(t, epoch=1, manifests=[
+        {"checkpoint_epoch": 1, "partition_id": 0, "events_read": 1,
+         "events_applied": 1, "events_error": 0, "max_event_seq": 2}])
     with pytest.raises(ValueError, match="LOGICAL rewrite"):
         r.refresh(spark)
 

@@ -328,7 +328,7 @@ def test_find_document_key_order_independent_of_field_order(spark, tmp_path):
              .withColumn("_event_seq", F.lit(-1).cast("bigint"))
              .withColumn("_deleted", F.lit(False))
              .withColumn("_bucket", bucket_expr(["repo", "path"], 16)))
-    tbl.commit_merge(state, list(range(16)), epoch=None, manifests=[])
+    tbl.commit_merge(state, list(range(16)), manifests=[])
     hit = docstore.find_document(spark, root, {"repo": "r1", "path": "p1.py"})
     assert hit.count() == 1
 

@@ -42,7 +42,7 @@ def _mk_table(spark, root: str, n_rows: int, props: dict) -> SnapshotTable:
                   F.col("id").alias("_event_seq"),
                   F.lit(False).alias("_deleted"))
           .withColumn("_bucket", bucket_expr(KEYS, 4)))
-    tbl.commit_merge(df, list(range(4)), epoch=0, manifests=[])
+    tbl.commit_merge(df, list(range(4)), manifests=[])
     return tbl
 
 

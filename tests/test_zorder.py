@@ -40,7 +40,7 @@ def _mk_grid(spark, root: str, props: dict) -> SnapshotTable:
                   F.col("id").alias("_event_seq"),
                   F.lit(False).alias("_deleted"))
           .withColumn("_bucket", bucket_expr(KEYS, 2)))
-    tbl.commit_merge(df, [0, 1], epoch=0, manifests=[])
+    tbl.commit_merge(df, [0, 1], manifests=[])
     return tbl
 
 
